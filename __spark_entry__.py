@@ -47,7 +47,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # OCR pipeline family
 # --------------------------------------------------------------------------
 
-_NORM_SQL = "lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
+_NORM_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 
 _ROUNDTRIP_ORACLE = f"""
 SELECT CAST(doc_id AS VARCHAR) AS doc_id, {_NORM_SQL} AS extracted_text
@@ -1466,7 +1466,7 @@ def _vis_sql(expr: str) -> str:
         f"regexp_replace({expr}, '(?s)<[^>]*>', ' ', 'g'),"
         "'&nbsp;', ' '), '&amp;', '&'), '&lt;', '<'), '&gt;', '>'),"
         " '&quot;', '\"'), '&#39;', ''''),"
-        " '\s+', ' ', 'g'))"
+        " '\\s+', ' ', 'g'))"
     )
 
 

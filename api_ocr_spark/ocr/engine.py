@@ -217,9 +217,12 @@ def _extract_words(ink: np.ndarray, binary: np.ndarray) -> list[dict]:
                 chars.append(ch)
                 confs.append(conf)
             text = "".join(chars)
-            # sum/len, not np.mean: identical IEEE result for these sizes
-            # (sequential float64 adds; numpy pairwise summation starts at
-            # 128 elements) without the per-word array allocation
+            # sum/len, not np.mean: no per-word array allocation. NOT
+            # provably bit-identical to np.mean — numpy's unrolled
+            # multi-accumulator summation changes the add order from 8
+            # elements on — so exactness at the round(., 2) / CONF_FLOOR
+            # boundaries rests on the media sweep (all ocr_* + media_manifest
+            # oracle queries at sf0.01 and sf0.1, 0 mismatches)
             conf = (sum(confs) / len(confs)) if confs else 0.0
             if conf <= CONF_FLOOR or not text.strip():
                 continue

@@ -114,22 +114,21 @@ def caption_pairs(docs: DataFrame, mode: str = "basico") -> DataFrame:
         )
     )
     # one OCR row per media span via the FUSED render→encode→decode→OCR
-    # stage (pipeline._make_render_ocr_udf): byte-identical to building the
-    # media store and joining it back (same encode_media bytes feed the
-    # same decoder), but the synthesized PNG/JPEG payloads live and die
-    # inside one Python worker instead of crossing the media join's two
-    # byte-carrying exchanges (guide §8: don't shuffle heavy payloads to
-    # make light decisions).
-    from .pipeline import _make_render_ocr_udf
-    from .pipeline import OCR_SCHEMA as _OCR_SCHEMA
+    # span stage (pipeline._ocr_udf over synthesized payloads):
+    # byte-identical to building the media store and joining it back (same
+    # encode_media bytes feed the same decoder), but the synthesized
+    # PNG/JPEG payloads live and die inside one Python worker instead of
+    # crossing the media join's two byte-carrying exchanges (guide §8:
+    # don't shuffle heavy payloads to make light decisions).
+    from .pipeline import SPAN_OUT_SCHEMA, _ocr_udf
 
     media_rows = neighbored.select(
         "doc_id", "doc_num", "offset", "chunk", "media_ref")
     n_parts = 2 * media_rows.sparkSession.sparkContext.defaultParallelism
     ocr = (
         media_rows.repartition(n_parts, F.xxhash64("media_ref"))
-        .mapInPandas(_make_render_ocr_udf(mode), schema=_OCR_SCHEMA)
-        .select("media_ref", _tokens(F.col("ocr_text")).alias("ocr_tokens"))
+        .mapInPandas(_ocr_udf(mode, SPAN_OUT_SCHEMA), schema=SPAN_OUT_SCHEMA)
+        .select("media_ref", _tokens(F.col("text")).alias("ocr_tokens"))
     )
 
     scored = (

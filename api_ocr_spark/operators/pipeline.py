@@ -1,14 +1,21 @@
 """The distributed extraction pipeline (SURVEY.md §3.1 Spark lifecycle):
 
-  documents → flat spans → media join → salted repartition →
-  mapInPandas(decode → route → preprocess → OCR) →
-  union passthrough text spans → offset-ordered two-level reassembly.
+  documents → flat spans → salted repartition →
+  mapInPandas(render → encode → decode → route → preprocess → OCR, text
+  rows passed through) → offset-ordered two-level reassembly.
 
-Beyond the media join, the only shuffles are the reassembly's two grouped
-exchanges — level 1 on (doc_id, salt) with map-side partial aggregation,
-level 2 on doc_id over already-collapsed partial arrays (skew-proof by
-construction). The OCR stage streams Arrow batches (generator mapInPandas —
-a partition is never materialized), mirroring the reference's memory hygiene
+That is extract_documents' one plan: the source is scanned once, nothing is
+cached, and the only shuffles are the span spread and the reassembly's two
+grouped exchanges — level 1 on (doc_id, salt) with map-side partial
+aggregation, level 2 on doc_id over already-collapsed partial arrays
+(skew-proof by construction). Over a stored media table (extract_from_spans,
+the checkpoint job, streaming) media spans join the store instead and the
+text spans are unioned back before the same reassembly.
+
+Every span, stored or synthesized, goes through one batch function,
+:func:`ocr_span_batch`, and one per-row kernel, :func:`_ocr_row`. The stage
+streams Arrow batches (generator mapInPandas — a partition is never
+materialized), mirroring the reference's memory hygiene
 (/root/reference/main.py:207-209 del/gc) as bounded batch sizes.
 """
 
@@ -17,6 +24,7 @@ from __future__ import annotations
 import time
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -56,196 +64,91 @@ SPAN_OUT_SCHEMA = StructType(
 )
 
 
-def _make_ocr_udf(mode: str):
+def _ocr_row(payload, mode: str) -> tuple:
+    """One media span: payload → encoded bytes → decode → run_mode →
+    (text, route, n_words, mean_conf, ocr_ms, n_bytes). A stored payload is
+    the span's bytes; a synthesized one is its (doc_num, offset, chunk),
+    rendered and encoded by the media-store rules inside the same try (so
+    the work matches a store read, and the bytes never cross Arrow). The
+    engine's only error row: a failure becomes route `error:<Type>` with
+    empty text, never a task failure."""
+    from ..imaging.png import decode_gray_auto
+    from ..sources.interleave import encode_media, media_fmt, render_span
+    from .modes import run_mode
+
+    t0 = time.perf_counter()
+    n_bytes = 0
+    try:
+        if isinstance(payload, tuple):
+            doc_num, offset, chunk = int(payload[0]), int(payload[1]), payload[2]
+            data = encode_media(render_span(doc_num, offset, chunk)[0],
+                                media_fmt(doc_num, offset))
+        else:
+            data = bytes(payload)
+        n_bytes = len(data)
+        result = run_mode(decode_gray_auto(data), mode)
+        text = result.get("text", "")
+        route = result.get("route", mode)
+        n_words = len(text.split())
+        mean_conf = round(float(result.get("mean_conf", 0.0)), 2)
+    except Exception as exc:  # noqa: BLE001 — error rows, never task failures
+        text, route = "", f"error:{type(exc).__name__}"
+        n_words, mean_conf = 0, 0.0
+    return text, route, n_words, mean_conf, round((time.perf_counter() - t0) * 1e3, 3), n_bytes
+
+
+_OCR_FIELDS = ("text", "route", "n_words", "mean_conf", "ocr_ms", "n_bytes")
+
+
+def ocr_span_batch(pdf: pd.DataFrame, mode: str, pid: int = -1) -> pd.DataFrame:
+    """One Arrow batch of spans → one row per span: doc_id, offset, kind,
+    media_ref, then :func:`_ocr_row`'s fields, then partition_id.
+
+    Media rows read their payload from a `bytes` column when the batch has
+    one (a media store), else synthesize it from (doc_num, offset, chunk).
+    Rows of kind 'text' (batches without a `kind` column are all media)
+    pass through vectorized — no per-row Python; n_words uses split()
+    semantics, so it agrees with the media rows on multi-space/empty
+    chunks."""
+    is_text = (pdf["kind"].to_numpy() == "text") if "kind" in pdf else np.zeros(len(pdf), bool)
+    parts = []
+    if is_text.any():
+        tp = pdf if is_text.all() else pdf[is_text]
+        parts.append(pd.DataFrame({
+            "doc_id": tp["doc_id"], "offset": tp["offset"].astype("int64"),
+            "kind": tp["kind"], "media_ref": tp["media_ref"], "text": tp["chunk"],
+            "route": "text",
+            "n_words": tp["chunk"].str.split().str.len().fillna(0).astype("int64"),
+            "mean_conf": 0.0, "ocr_ms": 0.0, "n_bytes": 0, "partition_id": pid,
+        }))
+    if not parts or not is_text.all():
+        mp = pdf[~is_text] if parts else pdf
+        payloads = mp["bytes"].tolist() if "bytes" in mp else list(zip(
+            mp["doc_num"].tolist(), mp["offset"].tolist(), mp["chunk"].tolist()))
+        ocr = list(zip(*(_ocr_row(p, mode) for p in payloads))) or [()] * len(_OCR_FIELDS)
+        parts.append(pd.DataFrame({
+            "doc_id": mp["doc_id"].tolist(), "offset": mp["offset"].astype("int64").tolist(),
+            "kind": "media", "media_ref": mp["media_ref"].tolist(),
+            **dict(zip(_OCR_FIELDS, ocr)), "partition_id": pid,
+        }))
+    return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
+
+
+def _ocr_udf(mode: str, schema: StructType):
+    """mapInPandas body: :func:`ocr_span_batch` per batch, projected onto
+    `schema` — OCR_SCHEMA (media rows, the text column named ocr_text) or
+    SPAN_OUT_SCHEMA (media and passthrough text rows)."""
+    cols = schema.fieldNames()
+    names = {"text": "ocr_text"} if "ocr_text" in cols else {}
+
     def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
-        from ..imaging import png as png_codec
-        from . import modes as mode_lib
-
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
         for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "offset", "media_ref", "ocr_text", "route",
-                "n_words", "mean_conf", "ocr_ms", "n_bytes", "partition_id")}
-            # plain-list iteration: pandas Series item access is the slow path
-            for doc_id, offset, media_ref, data in zip(
-                pdf["doc_id"].tolist(), pdf["offset"].tolist(),
-                pdf["media_ref"].tolist(), pdf["bytes"].tolist(),
-            ):
-                t0 = time.perf_counter()
-                try:
-                    gray = png_codec.decode_gray_auto(bytes(data))
-                    result = mode_lib.run_mode(gray, mode)
-                    text = result.get("text", "")
-                    route = result.get("route", mode)
-                    n_words = len(text.split())
-                    mean_conf = float(result.get("mean_conf", 0.0))
-                except Exception as exc:  # noqa: BLE001 — error rows, never task failures
-                    text, route = "", f"error:{type(exc).__name__}"
-                    n_words, mean_conf = 0, 0.0
-                rows["doc_id"].append(doc_id)
-                rows["offset"].append(int(offset))
-                rows["media_ref"].append(media_ref)
-                rows["ocr_text"].append(text)
-                rows["route"].append(route)
-                rows["n_words"].append(n_words)
-                rows["mean_conf"].append(round(mean_conf, 2))
-                rows["ocr_ms"].append(round((time.perf_counter() - t0) * 1e3, 3))
-                rows["n_bytes"].append(len(data) if data is not None else 0)
-                rows["partition_id"].append(pid)
-            yield pd.DataFrame(rows)
+            yield ocr_span_batch(pdf, mode, pid).rename(columns=names)[cols]
 
     return ocr_batches
-
-
-def _make_render_ocr_udf(mode: str):
-    """Fused render→encode→decode→OCR over MEDIA span rows (doc_id, doc_num,
-    offset, chunk, media_ref): the synthetic twin of the media-store OCR
-    stage. PNG bytes live and die inside one Python worker — they never
-    cross an Arrow boundary."""
-
-    def render_ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        from ..config import RENDER_SEED_MULT, SCENARIO_MULT
-        from ..imaging import png as png_codec
-        from ..imaging.render import SCENARIOS, render_text_image
-        from ..sources.interleave import encode_media, media_fmt
-        from . import modes as mode_lib
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        cols = ("doc_id", "offset", "media_ref", "ocr_text", "route",
-                "n_words", "mean_conf", "ocr_ms", "n_bytes", "partition_id")
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for doc_id, doc_num, offset, chunk, media_ref in zip(
-                pdf["doc_id"].tolist(), pdf["doc_num"].tolist(),
-                pdf["offset"].tolist(), pdf["chunk"].tolist(),
-                pdf["media_ref"].tolist(),
-            ):
-                t0 = time.perf_counter()
-                n_bytes = 0
-                try:
-                    scenario = SCENARIOS[
-                        (int(doc_num) * SCENARIO_MULT + int(offset)) % len(SCENARIOS)
-                    ]
-                    seed = int(doc_num) * RENDER_SEED_MULT + int(offset)
-                    img = render_text_image(str(chunk), scenario, seed=seed)
-                    data = encode_media(img, media_fmt(int(doc_num), int(offset)))
-                    n_bytes = len(data)
-                    gray = png_codec.decode_gray_auto(data)
-                    result = mode_lib.run_mode(gray, mode)
-                    text = result.get("text", "")
-                    route = result.get("route", mode)
-                    n_words = len(text.split())
-                    mean_conf = round(float(result.get("mean_conf", 0.0)), 2)
-                except Exception as exc:  # noqa: BLE001 — error rows, never task failures
-                    text, route = "", f"error:{type(exc).__name__}"
-                    n_words, mean_conf = 0, 0.0
-                rows["doc_id"].append(doc_id)
-                rows["offset"].append(int(offset))
-                rows["media_ref"].append(media_ref)
-                rows["ocr_text"].append(text)
-                rows["route"].append(route)
-                rows["n_words"].append(n_words)
-                rows["mean_conf"].append(mean_conf)
-                rows["ocr_ms"].append(round((time.perf_counter() - t0) * 1e3, 3))
-                rows["n_bytes"].append(n_bytes)
-                rows["partition_id"].append(pid)
-            yield pd.DataFrame(rows)
-
-    return render_ocr_batches
-
-
-def _make_span_udf(mode: str):
-    """Unified span stage (the fused synthetic path): media rows are
-    rendered → PNG-encoded → decoded → OCR'd inside ONE Python worker (the
-    byte round trip keeps the work equivalent to a real media store read,
-    but the PNG bytes never cross an Arrow boundary); text rows pass
-    through untouched."""
-
-    def span_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        from ..config import RENDER_SEED_MULT, SCENARIO_MULT
-        from ..imaging import png as png_codec
-        from ..imaging.render import SCENARIOS, render_text_image
-        from ..sources.interleave import encode_media, media_fmt
-        from . import modes as mode_lib
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        cols = ("doc_id", "offset", "kind", "media_ref", "text", "route",
-                "n_words", "mean_conf", "ocr_ms", "partition_id")
-        def passthrough(tp: pd.DataFrame) -> pd.DataFrame:
-            # text rows pass through VECTORIZED — no per-row Python (they
-            # are ~2/3 of all spans). n_words uses split() semantics
-            # (str.split with no pattern collapses whitespace runs and
-            # drops empties) so metrics agree with the media path and the
-            # 'persist' strategy on multi-space/empty chunks.
-            return pd.DataFrame(
-                {
-                    "doc_id": tp["doc_id"],
-                    "offset": tp["offset"].astype("int64"),
-                    "kind": tp["kind"],
-                    "media_ref": tp["media_ref"],
-                    "text": tp["chunk"],
-                    "route": "text",
-                    "n_words": tp["chunk"].str.split().str.len().fillna(0).astype("int64"),
-                    "mean_conf": 0.0,
-                    "ocr_ms": 0.0,
-                    "partition_id": pid,
-                }
-            )
-
-        for pdf in batches:
-            media_mask = pdf["kind"].to_numpy() == "media"
-            n_media = int(media_mask.sum())
-            if n_media == 0:
-                # homogeneous text batch (the common case: the span-spread
-                # stage sorts within partitions by kind): pure column work
-                yield passthrough(pdf)
-                continue
-            text_out = passthrough(pdf[~media_mask]) if n_media < len(pdf) else None
-            mp = pdf if n_media == len(pdf) else pdf[media_mask]
-            rows = {k: [] for k in cols}
-            for doc_id, doc_num, offset, chunk, media_ref in zip(
-                mp["doc_id"].tolist(), mp["doc_num"].tolist(),
-                mp["offset"].tolist(), mp["chunk"].tolist(),
-                mp["media_ref"].tolist(),
-            ):
-                t0 = time.perf_counter()
-                try:
-                    scenario = SCENARIOS[
-                        (int(doc_num) * SCENARIO_MULT + int(offset)) % len(SCENARIOS)
-                    ]
-                    seed = int(doc_num) * RENDER_SEED_MULT + int(offset)
-                    img = render_text_image(str(chunk), scenario, seed=seed)
-                    data = encode_media(img, media_fmt(int(doc_num), int(offset)))
-                    gray = png_codec.decode_gray_auto(data)
-                    result = mode_lib.run_mode(gray, mode)
-                    text = result.get("text", "")
-                    route = result.get("route", mode)
-                    n_words = len(text.split())
-                    mean_conf = round(float(result.get("mean_conf", 0.0)), 2)
-                except Exception as exc:  # noqa: BLE001 — error rows, never task failures
-                    text, route = "", f"error:{type(exc).__name__}"
-                    n_words, mean_conf = 0, 0.0
-                rows["doc_id"].append(doc_id)
-                rows["offset"].append(int(offset))
-                rows["kind"].append("media")
-                rows["media_ref"].append(media_ref)
-                rows["text"].append(text)
-                rows["route"].append(route)
-                rows["n_words"].append(n_words)
-                rows["mean_conf"].append(mean_conf)
-                rows["ocr_ms"].append(round((time.perf_counter() - t0) * 1e3, 3))
-                rows["partition_id"].append(pid)
-            media_out = pd.DataFrame(rows)
-            yield media_out if text_out is None else pd.concat(
-                [text_out, media_out], ignore_index=True)
-
-    return span_batches
 
 
 def ocr_media_spans(
@@ -271,30 +174,21 @@ def ocr_media_spans(
         # (by bytes) but compute-heavy shuffle into too few partitions
         salt_partitions = 2 * joined.sparkSession.sparkContext.defaultParallelism
     joined = joined.repartition(salt_partitions, F.xxhash64("media_ref"))
-    return joined.mapInPandas(_make_ocr_udf(mode), schema=OCR_SCHEMA)
+    return joined.mapInPandas(_ocr_udf(mode, OCR_SCHEMA), schema=OCR_SCHEMA)
 
 
-# strategy='auto' crossover: below this corpus size the persist's
-# materialization overhead exceeds what the cache saves (measured: 5k docs →
-# unified ~4.0s vs persist ~5.0s at 32 cores; 120k docs → persist 1623 vs
-# unified 1390 docs/s at 16 cores). The probe that decides is a
-# limit(N).count() — it stops scanning after N rows, so the decision job is
-# O(crossover), never a full pass over an arbitrary source plan.
-AUTO_PERSIST_MIN_DOCS = 50_000
-
-# Persisted flat-spans stages handed out by extract_documents. These are
-# STRONG references on purpose: once the Python DataFrame is GC'd the JVM
-# CacheManager entry can no longer be unpersisted from here, so a weakref
-# registry would leak the cached blocks for the session's lifetime. Instead
-# extract_documents drains this list on entry (see below) — a long-lived
-# session is bounded to ONE corpus worth of cache — and release_persisted()
-# stays available for explicit reclamation (bench.py calls it per query).
+# Cached relations handed out by the set-join and similarity stages (dedup,
+# similarity). These are STRONG references on purpose: once the Python
+# DataFrame is GC'd the JVM CacheManager entry can no longer be unpersisted
+# from here, so a weakref registry would leak the cached blocks for the
+# session's lifetime. release_persisted() reclaims them explicitly (bench.py
+# calls it per query).
 _PERSISTED: list = []
 
 
 def release_persisted() -> int:
-    """Unpersist every cached flat-spans stage handed out so far (safe after
-    the caller's terminal action; lazily re-computed if a plan is re-run).
+    """Unpersist every cached stage handed out so far (safe after the
+    caller's terminal action; lazily re-computed if a plan is re-run).
     Returns the number of stages released."""
     n = 0
     while _PERSISTED:
@@ -306,32 +200,37 @@ def release_persisted() -> int:
             pass
     return n
 
-NORMALIZE = "regexp_replace(trim(x), '\\\\s+', ' ')"
-
 
 def _norm(col):
     """Whitespace-normalize: newlines/multi-space → single space, trim."""
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
-def reassemble_two_level(flat: DataFrame, ocr_out: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Skew-proof reassembly (SURVEY.md §4.3.1) — the DEFAULT for
-    extract_documents/extract_from_spans: a media-heavy document's
-    collect_list would land on ONE reducer (an aggregation key AQE cannot
-    split). Level 1 partially collects per (doc_id, salt) — a heavy doc
-    spreads over `salt_buckets` reducers; level 2 flattens the (already
-    ~salt_buckets× smaller) partial arrays and sorts once. Output is
-    identical to :func:`reassemble` (asserted in tests)."""
+def _stored_union(flat: DataFrame, ocr_out: DataFrame) -> DataFrame:
+    """Passthrough text spans of `flat` ∪ OCR'd media rows (OCR_SCHEMA) as
+    (doc_id, offset, kind, text, media_ref); media text whitespace-normalized."""
     text_rows = flat.filter(F.col("kind") == "text").select(
         "doc_id", "offset", F.lit("text").alias("kind"),
         F.col("chunk").alias("text"), F.col("media_ref"))
     media_rows = ocr_out.select(
         "doc_id", "offset", F.lit("media").alias("kind"),
         _norm(F.col("ocr_text")).alias("text"), F.col("media_ref"))
-    return _two_level_agg(text_rows.unionByName(media_rows), salt_buckets)
+    return text_rows.unionByName(media_rows)
 
 
-def _two_level_agg(unioned: DataFrame, salt_buckets: int) -> DataFrame:
+def reassemble_two_level(flat: DataFrame, ocr_out: DataFrame, salt_buckets: int = 16) -> DataFrame:
+    """Skew-proof reassembly (SURVEY.md §4.3.1) over a stored-media OCR
+    stage (extract_from_spans, extract_documents with a media table, the
+    checkpoint job): a media-heavy document's collect_list would land on ONE
+    reducer (an aggregation key AQE cannot split). Level 1 partially
+    collects per (doc_id, salt) — a heavy doc spreads over `salt_buckets`
+    reducers; level 2 flattens the (already ~salt_buckets× smaller) partial
+    arrays and sorts once. Output is identical to :func:`reassemble`
+    (asserted in tests)."""
+    return _two_level_agg(_stored_union(flat, ocr_out), salt_buckets)
+
+
+def _two_level_agg(unioned: DataFrame, salt_buckets: int = 16) -> DataFrame:
     """Salted two-level collect_list over (doc_id, offset, kind, text,
     media_ref) rows → (doc_id, spans, extracted_text).
 
@@ -357,38 +256,11 @@ def _two_level_agg(unioned: DataFrame, salt_buckets: int) -> DataFrame:
     )
 
 
-def reassemble_unified(span_out: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Two-level reassembly directly over the unified span stage's output
-    (no union: text and media rows already share one stream). Media text is
-    whitespace-normalized JVM-side, text rows pass through verbatim."""
-    rows = span_out.select(
-        "doc_id", "offset", "kind",
-        F.when(F.col("kind") == "media", _norm(F.col("text")))
-         .otherwise(F.col("text")).alias("text"),
-        "media_ref",
-    )
-    return _two_level_agg(rows, salt_buckets)
-
-
 def reassemble(flat: DataFrame, ocr_out: DataFrame) -> DataFrame:
-    """Union passthrough text spans with OCR'd media spans and rebuild each
-    document as an offset-ordered span array (the engine's signature
-    aggregation, SURVEY.md §2.4) plus the concatenated extracted_text."""
-    text_rows = flat.filter(F.col("kind") == "text").select(
-        "doc_id",
-        "offset",
-        F.lit("text").alias("kind"),
-        F.col("chunk").alias("text"),
-        F.col("media_ref"),
-    )
-    media_rows = ocr_out.select(
-        "doc_id",
-        "offset",
-        F.lit("media").alias("kind"),
-        _norm(F.col("ocr_text")).alias("text"),
-        F.col("media_ref"),
-    )
-    unioned = text_rows.unionByName(media_rows)
+    """Single-level reference for :func:`reassemble_two_level`: one
+    collect_list per doc_id rebuilds each document as an offset-ordered span
+    array (the engine's signature aggregation, SURVEY.md §2.4) plus the
+    concatenated extracted_text. No plan uses it; tests compare against it."""
     ordered = F.array_sort(F.collect_list(F.struct("offset", "kind", "text", "media_ref")))
     spans = F.transform(
         ordered,
@@ -397,7 +269,7 @@ def reassemble(flat: DataFrame, ocr_out: DataFrame) -> DataFrame:
             s.media_ref.alias("media_ref"), s.offset.alias("offset"),
         ),
     )
-    return unioned.groupBy("doc_id").agg(
+    return _stored_union(flat, ocr_out).groupBy("doc_id").agg(
         spans.alias("spans"),
         F.concat_ws(" ", F.transform(ordered, lambda s: s.text)).alias("extracted_text"),
     )
@@ -413,67 +285,38 @@ def extract_documents(
     """End-to-end: documents(doc_id, text) → interleaved spans → media render
     (if no media table given) → OCR → reassembled spans + extracted_text.
 
-    Single-scan fused path (media=None), the PERSISTED FLAT-SPANS design:
-    the source table is scanned once into a persisted (memory-and-disk)
-    flat-spans stage; the text-passthrough branch and the media branch both
-    read the cache, so text spans stay entirely JVM-side (no Arrow round
-    trip) while media rows flow through ONE fused Arrow UDF
-    (render→encode→decode→OCR — PNG bytes never cross an Arrow boundary).
-    Verified in PLANS.md: exactly one parquet scan under one
-    InMemoryRelation. At 100 TB the persist is a local-disk materialization
-    of the chunked spans — strictly cheaper than re-reading the source
-    table over the storage network, which is what a two-branch unpersisted
-    plan degenerates to (Catalyst pushes each branch's filter below the
-    shared exchange, so there is no ReusedExchange to rely on).
+    Without a media table this is the single-scan unified span stage: the
+    source is scanned once, every span goes through ONE Arrow UDF — media
+    rows are rendered → encoded → decoded → OCR'd inside the worker (their
+    bytes never cross an Arrow boundary), text rows pass through vectorized
+    — and the two-level reassembly reads that one stream. Nothing is cached
+    and no job runs until the caller's action. With a media table, media
+    spans join the store (:func:`ocr_media_spans`).
 
-    `strategy="unified"` keeps the alternative single-stage plan (ALL spans
-    through one UDF, text rows vectorized-passthrough): zero persist
-    footprint, one extra Arrow round trip for text — the right trade when
-    executor disk, not storage bandwidth, is the constraint, and measurably
-    faster on SMALL corpora where the persist's materialization overhead
-    dominates. `strategy="auto"` (default) picks by corpus size:
-    persist at >= AUTO_PERSIST_MIN_DOCS documents, unified below."""
-    from pyspark import StorageLevel
-
-    # Drain caches from PREVIOUS extractions so repeated calls in one session
-    # can't accumulate MEMORY_AND_DISK blocks unboundedly. Unpersist is
-    # always correctness-safe (a still-pending earlier plan lazily
-    # recomputes); interleaving extract→extract→collect-first-result is the
-    # only pattern that pays, and it pays recompute, not wrong answers.
-    release_persisted()
-
+    `strategy` is accepted for callers written against the former
+    persist/unified choice and selects nothing: every value runs this plan."""
     from ..sources.interleave import flat_spans
 
     flat = flat_spans(documents)
-    if media is None:
-        if salt_partitions is None:
-            salt_partitions = 2 * flat.sparkSession.sparkContext.defaultParallelism
-        if strategy == "auto":
-            # bounded probe: limit(N).count() short-circuits at N rows, so
-            # the decision costs O(AUTO_PERSIST_MIN_DOCS) on ANY source plan
-            # (a bare count() would be a full pass on non-parquet sources)
-            probe = documents.limit(AUTO_PERSIST_MIN_DOCS).count()
-            strategy = "persist" if probe >= AUTO_PERSIST_MIN_DOCS else "unified"
-        if strategy == "unified":
-            # sortWithinPartitions makes Arrow batches kind-homogeneous, so
-            # the UDF's text fast path sees whole batches (no masking)
-            spans = flat.repartition(
-                salt_partitions, F.xxhash64("doc_id", "offset")
-            ).sortWithinPartitions("kind")
-            out = spans.mapInPandas(_make_span_udf(mode), schema=SPAN_OUT_SCHEMA)
-            return reassemble_unified(out)
-        flat = flat.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED.append(flat)  # reclaimable via release_persisted()
-        media_rows = (
-            flat.filter(F.col("kind") == "media")
-            .select("doc_id", "doc_num", "offset", "chunk", "media_ref")
-            .repartition(salt_partitions, F.xxhash64("media_ref"))
-        )
-        ocr_out = media_rows.mapInPandas(_make_render_ocr_udf(mode), schema=OCR_SCHEMA)
+    if media is not None:
+        media_spans = flat.filter(F.col("kind") == "media")
+        ocr_out = ocr_media_spans(media_spans, media, mode=mode, salt_partitions=salt_partitions)
         return reassemble_two_level(flat, ocr_out)
-    media_spans = flat.filter(F.col("kind") == "media")
-    ocr_out = ocr_media_spans(media_spans, media, mode=mode, salt_partitions=salt_partitions)
-    return reassemble_two_level(flat, ocr_out)
+    if salt_partitions is None:
+        salt_partitions = 2 * flat.sparkSession.sparkContext.defaultParallelism
+    # sortWithinPartitions makes Arrow batches kind-homogeneous, so most
+    # batches take the vectorized text path or the media loop whole
+    spans = flat.repartition(
+        salt_partitions, F.xxhash64("doc_id", "offset")
+    ).sortWithinPartitions("kind")
+    out = spans.mapInPandas(_ocr_udf(mode, SPAN_OUT_SCHEMA), schema=SPAN_OUT_SCHEMA)
+    # media text is whitespace-normalized JVM-side; text rows are verbatim
+    return _two_level_agg(out.select(
+        "doc_id", "offset", "kind",
+        F.when(F.col("kind") == "media", _norm(F.col("text")))
+         .otherwise(F.col("text")).alias("text"),
+        "media_ref",
+    ))
 
 
 def extract_from_spans(

@@ -133,28 +133,27 @@ def encode_media(img, fmt: str) -> bytes:
     return png_codec.encode_gray(img)
 
 
-def _render_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # imports inside the UDF body: executed on executors/Python workers
+def render_span(doc_num: int, offset: int, chunk: str):
+    """(grayscale image, scenario) of one media span — the span-synthesis
+    rule shared by the media store (build_media) and the fused OCR stage
+    (operators/pipeline), so both encode the same bytes."""
     from ..imaging.render import SCENARIOS, render_text_image
 
+    scenario = SCENARIOS[(doc_num * SCENARIO_MULT + offset) % len(SCENARIOS)]
+    img = render_text_image(str(chunk), scenario, seed=doc_num * RENDER_SEED_MULT + offset)
+    return img, scenario
+
+
+def _render_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    cols = ("media_ref", "bytes", "fmt", "scenario", "truth_text", "width", "height")
     for pdf in batches:
-        with_span = "doc_id" in pdf.columns
-        cols = ("media_ref", "bytes", "fmt", "scenario", "truth_text", "width", "height")
-        if with_span:
-            cols = ("doc_id", "offset") + cols
         out = {k: [] for k in cols}
-        doc_ids = pdf["doc_id"].tolist() if with_span else None
-        for i, (doc_num, offset, chunk, media_ref) in enumerate(zip(
+        for doc_num, offset, chunk, media_ref in zip(
             pdf["doc_num"].tolist(), pdf["offset"].tolist(),
             pdf["chunk"].tolist(), pdf["media_ref"].tolist(),
-        )):
-            scenario = SCENARIOS[(int(doc_num) * SCENARIO_MULT + int(offset)) % len(SCENARIOS)]
-            seed = int(doc_num) * RENDER_SEED_MULT + int(offset)
-            img = render_text_image(str(chunk), scenario, seed=seed)
+        ):
+            img, scenario = render_span(int(doc_num), int(offset), chunk)
             fmt = media_fmt(int(doc_num), int(offset))
-            if with_span:
-                out["doc_id"].append(doc_ids[i])
-                out["offset"].append(int(offset))
             out["media_ref"].append(media_ref)
             out["bytes"].append(encode_media(img, fmt))
             out["fmt"].append(fmt)
@@ -214,35 +213,3 @@ def build_media_manifest(documents: DataFrame) -> DataFrame:
         "media_ref", fmt.alias("fmt"), scenario.alias("scenario"),
         F.lower(F.col("chunk")).alias("truth_text"),
     )
-
-
-MEDIA_SPAN_SCHEMA = StructType(
-    [StructField("doc_id", StringType()), StructField("offset", IntegerType())]
-    + MEDIA_SCHEMA.fields
-)
-
-
-def render_media_spans(flat: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Render the media spans of an ALREADY-BUILT flat-spans DataFrame,
-    keyed by (doc_id, offset) — the fused path for extract_documents.
-
-    Taking `flat` (not `documents`) lets the caller share ONE flat-spans
-    stage between the text-passthrough branch and this render branch: both
-    subtrees hang off the same repartition(doc_id) exchange, which Catalyst
-    deduplicates into a ReusedExchange — the source table is scanned ONCE
-    (at 100 TB a second full scan is the difference that matters)."""
-    fs = flat.filter(F.col("kind") == "media")
-    fs = fs.select("doc_id", "doc_num", "offset", "chunk", "media_ref")
-    if partitions is None:
-        partitions = 2 * fs.sparkSession.sparkContext.defaultParallelism
-    fs = fs.repartition(partitions, F.xxhash64("media_ref"))
-    return fs.mapInPandas(_render_batches, schema=MEDIA_SPAN_SCHEMA)
-
-
-def build_media_spans(documents: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Like build_media but keyed by (doc_id, offset) — the renderer already
-    knows which span each image belongs to, so the synthesized pipeline
-    skips the media_ref join (and its two PNG-byte exchanges). The
-    production path over a real media store (extract_from_spans) keeps the
-    join."""
-    return render_media_spans(flat_spans(documents), partitions=partitions)

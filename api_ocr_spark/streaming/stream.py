@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.pipeline import OCR_SCHEMA, _make_ocr_udf
+from ..operators.pipeline import OCR_SCHEMA, _ocr_udf
 
 STREAM_INPUT_SCHEMA = (
     "doc_id string, offset int, media_ref string, bytes binary, event_time timestamp"
@@ -32,7 +32,7 @@ def stream_ocr(spark: SparkSession, input_dir: str, mode: str = "documento_compl
         .parquet(input_dir)
     )
     return src.select("doc_id", "offset", "media_ref", "bytes").mapInPandas(
-        _make_ocr_udf(mode), schema=OCR_SCHEMA
+        _ocr_udf(mode, OCR_SCHEMA), schema=OCR_SCHEMA
     )
 
 

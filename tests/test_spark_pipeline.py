@@ -229,7 +229,7 @@ def test_streaming_checkboxes_matches_batch(spark, tmp_path):
     mode='checkboxes' reproduces the batch stage exactly on the same
     rendered checkbox forms — the second mode proven through streaming
     (test_streaming_matches_batch covers 'basico'); both paths run the
-    identical _make_ocr_udf, so a divergence would mean the mode dispatch
+    identical _ocr_udf, so a divergence would mean the mode dispatch
     leaks execution-context state."""
     from api_ocr_spark.imaging import png as png_codec
     from api_ocr_spark.imaging.render import render_form
@@ -393,6 +393,72 @@ def test_extraction_strategies_equal(spark, docs, golden):
     for s in ("unified", "auto"):
         assert base.exceptAll(outs[s]).count() == 0
         assert outs[s].count() == N_DOCS
+
+
+def test_extract_documents_runs_no_job_while_building(spark, docs):
+    """Building the extraction plan is lazy: no size probe, no cache fill —
+    the first job is the caller's action."""
+    sc = spark.sparkContext
+    group = "extract-documents-build-only"
+    sc.setJobGroup(group, "build extract_documents without an action")
+    try:
+        pipeline.extract_documents(docs, mode="basico")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_span_batch_kernel_payloads_errors_and_passthrough():
+    """The one batch function behind every OCR stage, called on pandas
+    batches with no Spark: a synthesized span and the media store's bytes
+    for the same span OCR identically (PNG and JPEG), a corrupt payload is
+    an error row, and text rows pass through unchanged."""
+    import pandas as pd
+
+    spans = [  # (doc_num, offset, chunk); (0, 0) is stored as JPEG
+        (0, 0, "spark window merge table column vector stream value"),
+        (7, 2, "the agg key query a scan batch data"),
+        (1, 2, "fast row"),
+        (5, 1, "customer sort order slow line part hash group"),
+    ]
+    assert {interleave.media_fmt(d, o) for d, o, _ in spans} == {"png", "jpeg"}
+    synth = pd.DataFrame({
+        "doc_id": [str(d) for d, _, _ in spans],
+        "doc_num": [d for d, _, _ in spans],
+        "offset": [o for _, o, _ in spans],
+        "chunk": [c for _, _, c in spans],
+        "media_ref": [f"m-{d}-{o}" for d, o, _ in spans],
+    })
+    store = next(interleave._render_batches(iter([synth])))  # build_media's bytes
+    stored = synth[["doc_id", "offset", "media_ref"]].assign(bytes=store["bytes"])
+
+    cols = ["doc_id", "offset", "text", "route", "n_words", "mean_conf"]
+    a = pipeline.ocr_span_batch(synth, "documento_completo")
+    b = pipeline.ocr_span_batch(stored, "documento_completo")
+    assert a[cols].to_dict("records") == b[cols].to_dict("records")
+    assert [" ".join(t.split()) for t in a["text"]] == synth["chunk"].tolist()
+    assert (a["kind"] == "media").all() and (a["n_bytes"] > 0).all()
+
+    corrupt = stored.assign(bytes=[b"not a png"] * len(stored))
+    bad = pipeline.ocr_span_batch(corrupt, "documento_completo")
+    assert bad["route"].str.startswith("error:").all()
+    assert (bad["text"] == "").all() and (bad["n_words"] == 0).all()
+
+    text = pd.DataFrame({
+        "doc_id": ["3", "3", "4"], "doc_num": [3, 3, 4], "offset": [1, 2, 0],
+        "kind": ["text", "text", "text"], "chunk": ["a  scan\tbatch", "", "row"],
+        "media_ref": [None, None, None],
+    })
+    mixed = pd.concat([text, synth.iloc[:1].assign(kind="media")], ignore_index=True)
+    out = pipeline.ocr_span_batch(mixed, "documento_completo", pid=7)
+    passed = out[out["kind"] == "text"]
+    assert passed[["doc_id", "offset", "text"]].values.tolist() == \
+        text[["doc_id", "offset", "chunk"]].values.tolist()
+    assert passed["route"].eq("text").all() and passed["media_ref"].isna().all()
+    assert passed["n_words"].tolist() == [3, 0, 1]
+    assert out.loc[out["kind"] == "media", "text"].tolist() == a["text"].tolist()[:1]
+    assert (out["partition_id"] == 7).all()
 
 
 def test_interleave_stats_span_mix(spark):

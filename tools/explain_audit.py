@@ -32,8 +32,8 @@ CHECKS = {
     "ocr_documento_completo": [
         ("Arrow-batched python stages", r"MapInPandas|ArrowEvalPython"),
         ("offset-ordered reassembly agg", r"(ObjectHashAggregate|SortAggregate|HashAggregate)"),
-        ("source scanned once (persisted flat-spans stage or unified span stage)",
-         ("single_scan", None)),
+        ("source scanned once (unified span stage)", ("single_scan", None)),
+        ("no cached relation (nothing persisted)", ("absent", r"InMemoryRelation")),
     ],
     "ann_cosine_topk": [
         ("broadcast of query side", r"Broadcast"),
@@ -533,23 +533,8 @@ def main():
             elif isinstance(pat, tuple) and pat[0] == "single_scan":
                 # exactly ONE distinct parquet-scan node id in the whole plan
                 # text (formatted explain prints each node twice — tree +
-                # detail — under the same id; the persisted flat-spans
-                # stage's InMemoryRelation reprint repeats the SAME scan id
-                # per consumer). Counting distinct ids, not cache-marker
-                # presence, catches a regression that adds a second scan
-                # under or beside the cache.
-                scan_ids = set(re.findall(r"\((\d+)\) Scan parquet", txt))
-                if "InMemoryRelation" in txt:
-                    # cached subtree: the cache materializes ONCE, so the one
-                    # scan must live inside the InMemoryRelation reprint —
-                    # any scan id appearing BEFORE the first cache marker is
-                    # a real second source pass (regression)
-                    before_cache = txt.split("InMemoryRelation", 1)[0]
-                    outside = set(re.findall(r"\((\d+)\) Scan parquet", before_cache))
-                    inside = scan_ids - outside
-                    ok = len(outside) == 0 and len(inside) == 1
-                else:
-                    ok = len(scan_ids) == 1
+                # detail — under the same id)
+                ok = len(set(re.findall(r"\((\d+)\) Scan parquet", txt))) == 1
             else:
                 ok = re.search(pat, txt) is not None
             results.append((label, ok))
