@@ -22,11 +22,11 @@ Exactness contract (what makes this oracle-checkable):
 - ties rank by caption offset ascending (the preceding span wins).
 
 Scale shape (100 TB): candidate discovery is lag/lead over a window keyed
-by doc_id — the spans table's natural partitioning, one exchange; the OCR
-join + salting reuses pipeline.ocr_media_spans (xxhash64(media_ref)
-spread, AQE skew split); scoring joins candidates to OCR output on
-media_ref and the final argmax window runs on that same key, so Catalyst
-plans join -> window without an extra exchange. Media spans are never
+by doc_id — the spans table's natural partitioning, one exchange; OCR is
+the engine's one span stage (pipeline.ocr_spans, xxhash64(doc_id, offset)
+spread); scoring joins candidates to OCR output on media_ref and the final
+argmax window runs on that same key, so Catalyst plans join -> window
+without an extra exchange. Media spans are never
 adjacent under the synthesis rule ((d+o)%3==0 forbids neighbors), but the
 kind=='text' guard keeps the operator correct for arbitrary interleaves.
 """
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.interleave import flat_spans
-from .pipeline import _norm
+from .pipeline import _norm, ocr_spans
 
 # Perfect discriminator for rationals with denominator <= MAX_UNION (=16):
 # min gap between distinct such fractions is 1/(16*15) = 1/240 > 1/10000.
@@ -114,22 +114,15 @@ def caption_pairs(docs: DataFrame, mode: str = "basico") -> DataFrame:
         )
     )
     # one OCR row per media span via the FUSED render→encode→decode→OCR
-    # span stage (pipeline._ocr_udf over synthesized payloads):
+    # span stage (pipeline.ocr_spans over synthesized payloads):
     # byte-identical to building the media store and joining it back (same
     # encode_media bytes feed the same decoder), but the synthesized
     # PNG/JPEG payloads live and die inside one Python worker instead of
     # crossing the media join's two byte-carrying exchanges (guide §8:
     # don't shuffle heavy payloads to make light decisions).
-    from .pipeline import SPAN_OUT_SCHEMA, _ocr_udf
-
-    media_rows = neighbored.select(
-        "doc_id", "doc_num", "offset", "chunk", "media_ref")
-    n_parts = 2 * media_rows.sparkSession.sparkContext.defaultParallelism
-    ocr = (
-        media_rows.repartition(n_parts, F.xxhash64("media_ref"))
-        .mapInPandas(_ocr_udf(mode, SPAN_OUT_SCHEMA), schema=SPAN_OUT_SCHEMA)
-        .select("media_ref", _tokens(F.col("text")).alias("ocr_tokens"))
-    )
+    media_rows = neighbored.select("doc_id", "doc_num", "offset", "kind", "chunk", "media_ref")
+    ocr = ocr_spans(media_rows, mode).select(
+        "media_ref", _tokens(F.col("text")).alias("ocr_tokens"))
 
     scored = (
         candidates.join(ocr, "media_ref")

@@ -1,16 +1,17 @@
 """The distributed extraction pipeline (SURVEY.md §3.1 Spark lifecycle):
 
-  documents → flat spans → salted repartition →
-  mapInPandas(render → encode → decode → route → preprocess → OCR, text
-  rows passed through) → offset-ordered two-level reassembly.
+  flat spans → salted repartition → mapInPandas(render → encode → decode →
+  route → preprocess → OCR, text rows passed through) → offset-ordered
+  two-level reassembly.
 
-That is extract_documents' one plan: the source is scanned once, nothing is
-cached, and the only shuffles are the span spread and the reassembly's two
-grouped exchanges — level 1 on (doc_id, salt) with map-side partial
-aggregation, level 2 on doc_id over already-collapsed partial arrays
-(skew-proof by construction). Over a stored media table (extract_from_spans,
-the checkpoint job, streaming) media spans join the store instead and the
-text spans are unioned back before the same reassembly.
+Every extraction path runs that one span stage, :func:`ocr_spans`, and one
+reassembly, :func:`reassemble_spans`: extract_documents, extract_from_spans,
+the checkpoint job and caption mining. Without a media store the source is
+scanned once, nothing is cached, and the only shuffles are the span spread
+and the reassembly's two grouped exchanges — level 1 on (doc_id, salt) with
+map-side partial aggregation, level 2 on doc_id over already-collapsed
+partial arrays (skew-proof by construction). With a media store, media spans
+left-join it and text spans are unioned in before the same stage.
 
 Every span, stored or synthesized, goes through one batch function,
 :func:`ocr_span_batch`, and one per-row kernel, :func:`_ocr_row`. The stage
@@ -32,21 +33,6 @@ from pyspark.sql.types import (
     DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
-OCR_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("offset", IntegerType()),
-        StructField("media_ref", StringType()),
-        StructField("ocr_text", StringType()),
-        StructField("route", StringType()),
-        StructField("n_words", IntegerType()),
-        StructField("mean_conf", DoubleType()),
-        StructField("ocr_ms", DoubleType()),
-        StructField("n_bytes", IntegerType()),
-        StructField("partition_id", IntegerType()),
-    ]
-)
-
 # unified span stage output: OCR'd media rows AND passthrough text rows
 SPAN_OUT_SCHEMA = StructType(
     [
@@ -59,6 +45,7 @@ SPAN_OUT_SCHEMA = StructType(
         StructField("n_words", IntegerType()),
         StructField("mean_conf", DoubleType()),
         StructField("ocr_ms", DoubleType()),
+        StructField("n_bytes", IntegerType()),
         StructField("partition_id", IntegerType()),
     ]
 )
@@ -134,47 +121,56 @@ def ocr_span_batch(pdf: pd.DataFrame, mode: str, pid: int = -1) -> pd.DataFrame:
     return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
 
 
-def _ocr_udf(mode: str, schema: StructType):
-    """mapInPandas body: :func:`ocr_span_batch` per batch, projected onto
-    `schema` — OCR_SCHEMA (media rows, the text column named ocr_text) or
-    SPAN_OUT_SCHEMA (media and passthrough text rows)."""
-    cols = schema.fieldNames()
-    names = {"text": "ocr_text"} if "ocr_text" in cols else {}
+def _ocr_udf(mode: str):
+    """mapInPandas body: :func:`ocr_span_batch` per batch (SPAN_OUT_SCHEMA)."""
 
     def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
         for pdf in batches:
-            yield ocr_span_batch(pdf, mode, pid).rename(columns=names)[cols]
+            yield ocr_span_batch(pdf, mode, pid)
 
     return ocr_batches
 
 
-def ocr_media_spans(
-    media_spans: DataFrame,
-    media: DataFrame,
+def ocr_spans(
+    flat: DataFrame,
     mode: str = "documento_completo",
+    media: DataFrame | None = None,
     salt_partitions: int | None = None,
-    broadcast_media: bool = False,
 ) -> DataFrame:
-    """media spans (doc_id, offset, media_ref) ⋈ media store → OCR stage.
+    """The span stage: flat spans (doc_id, offset, kind, media_ref, plus
+    chunk for text spans and doc_num for synthesized media) → one
+    SPAN_OUT_SCHEMA row per span.
+
+    Without `media`, media rows are rendered → encoded → decoded → OCR'd
+    inside the worker (their bytes never cross an Arrow boundary). With a
+    media store (media_ref, bytes), media spans LEFT-join it — a span whose
+    store row is missing gets null bytes and comes out as an `error:` row,
+    never silently dropped — and text spans are unioned in beside them
+    rather than joined, so their null media_ref never lands on one join
+    partition.
 
     Salting (SURVEY.md §4.3.1): span rows are independent until reassembly,
-    so any placement is correct — repartition on xxhash64(media_ref) spreads
-    a media-heavy document across all partitions instead of pinning it to
-    one hash bucket. AQE's skew-join split covers the join itself.
-    """
-    m = media.select("media_ref", "bytes")
-    if broadcast_media:
-        m = F.broadcast(m)
-    joined = media_spans.select("doc_id", "offset", "media_ref").join(m, "media_ref")
-    if not salt_partitions:
+    so any placement is correct — repartition on xxhash64(doc_id, offset)
+    spreads a media-heavy document across all partitions instead of pinning
+    it to one hash bucket."""
+    if media is not None:
+        is_media = F.col("kind") == "media"
+        flat = flat.filter(is_media).join(
+            media.select("media_ref", "bytes"), "media_ref", "left"
+        ).unionByName(flat.filter(~is_media), allowMissingColumns=True)
+    if salt_partitions is None:
         # explicit count: AQE's bytes-based coalescing would fold this small
         # (by bytes) but compute-heavy shuffle into too few partitions
-        salt_partitions = 2 * joined.sparkSession.sparkContext.defaultParallelism
-    joined = joined.repartition(salt_partitions, F.xxhash64("media_ref"))
-    return joined.mapInPandas(_ocr_udf(mode, OCR_SCHEMA), schema=OCR_SCHEMA)
+        salt_partitions = 2 * flat.sparkSession.sparkContext.defaultParallelism
+    # sortWithinPartitions makes Arrow batches kind-homogeneous, so most
+    # batches take the vectorized text path or the media loop whole
+    spans = flat.repartition(
+        salt_partitions, F.xxhash64("doc_id", "offset")
+    ).sortWithinPartitions("kind")
+    return spans.mapInPandas(_ocr_udf(mode), schema=SPAN_OUT_SCHEMA)
 
 
 # Cached relations handed out by the set-join and similarity stages (dedup,
@@ -206,73 +202,58 @@ def _norm(col):
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
-def _stored_union(flat: DataFrame, ocr_out: DataFrame) -> DataFrame:
-    """Passthrough text spans of `flat` ∪ OCR'd media rows (OCR_SCHEMA) as
-    (doc_id, offset, kind, text, media_ref); media text whitespace-normalized."""
-    text_rows = flat.filter(F.col("kind") == "text").select(
-        "doc_id", "offset", F.lit("text").alias("kind"),
-        F.col("chunk").alias("text"), F.col("media_ref"))
-    media_rows = ocr_out.select(
-        "doc_id", "offset", F.lit("media").alias("kind"),
-        _norm(F.col("ocr_text")).alias("text"), F.col("media_ref"))
-    return text_rows.unionByName(media_rows)
+def _span_rows(out: DataFrame) -> DataFrame:
+    """:func:`ocr_spans` output as (doc_id, offset, kind, text, media_ref):
+    media text whitespace-normalized JVM-side, text rows verbatim."""
+    return out.select(
+        "doc_id", "offset", "kind",
+        F.when(F.col("kind") == "media", _norm(F.col("text")))
+         .otherwise(F.col("text")).alias("text"),
+        "media_ref",
+    )
 
 
-def reassemble_two_level(flat: DataFrame, ocr_out: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Skew-proof reassembly (SURVEY.md §4.3.1) over a stored-media OCR
-    stage (extract_from_spans, extract_documents with a media table, the
-    checkpoint job): a media-heavy document's collect_list would land on ONE
-    reducer (an aggregation key AQE cannot split). Level 1 partially
-    collects per (doc_id, salt) — a heavy doc spreads over `salt_buckets`
-    reducers; level 2 flattens the (already ~salt_buckets× smaller) partial
-    arrays and sorts once. Output is identical to :func:`reassemble`
-    (asserted in tests)."""
-    return _two_level_agg(_stored_union(flat, ocr_out), salt_buckets)
-
-
-def _two_level_agg(unioned: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Salted two-level collect_list over (doc_id, offset, kind, text,
-    media_ref) rows → (doc_id, spans, extracted_text).
+def reassemble_spans(out: DataFrame, salt_buckets: int = 16) -> DataFrame:
+    """Skew-proof reassembly (SURVEY.md §4.3.1) of :func:`ocr_spans` output
+    → (doc_id, spans, extracted_text): a media-heavy document's collect_list
+    would land on ONE reducer (an aggregation key AQE cannot split), so
+    level 1 partially collects per (doc_id, salt) and level 2 flattens the
+    partial arrays and sorts once. Output is identical to :func:`reassemble`
+    (asserted in tests).
 
     Salt is OFFSET-BLOCK based (floor(offset/32) % buckets), not a per-span
     hash: a document with <= 32 spans lands in ONE level-1 group (the
     two-level pass degenerates to a cheap flatten for the common case),
     while a media-heavy document spreads one 32-span block per reducer —
     the skew case that motivates the salting."""
-    unioned = unioned.withColumn(
+    rows = _span_rows(out).withColumn(
         "salt", F.pmod(F.floor(F.col("offset") / F.lit(32)), F.lit(salt_buckets)))
-    partial = unioned.groupBy("doc_id", "salt").agg(
+    partial = rows.groupBy("doc_id", "salt").agg(
         F.collect_list(F.struct("offset", "kind", "text", "media_ref")).alias("part"))
-    ordered = F.array_sort(F.flatten(F.collect_list("part")))
+    return partial.groupBy("doc_id").agg(*_ordered_spans(F.flatten(F.collect_list("part"))))
+
+
+def _ordered_spans(collected):
+    """(spans, extracted_text) aggregate columns from a collected array of
+    (offset, kind, text, media_ref) structs, sorted by offset."""
+    ordered = F.array_sort(collected)
     spans = F.transform(
         ordered,
         lambda s: F.struct(
             s.kind.alias("kind"), s.text.alias("text"),
             s.media_ref.alias("media_ref"), s.offset.alias("offset")),
     )
-    return partial.groupBy("doc_id").agg(
-        spans.alias("spans"),
-        F.concat_ws(" ", F.transform(ordered, lambda s: s.text)).alias("extracted_text"),
-    )
+    return (spans.alias("spans"),
+            F.concat_ws(" ", F.transform(ordered, lambda s: s.text)).alias("extracted_text"))
 
 
-def reassemble(flat: DataFrame, ocr_out: DataFrame) -> DataFrame:
-    """Single-level reference for :func:`reassemble_two_level`: one
+def reassemble(out: DataFrame) -> DataFrame:
+    """Single-level reference for :func:`reassemble_spans`: one
     collect_list per doc_id rebuilds each document as an offset-ordered span
     array (the engine's signature aggregation, SURVEY.md §2.4) plus the
     concatenated extracted_text. No plan uses it; tests compare against it."""
-    ordered = F.array_sort(F.collect_list(F.struct("offset", "kind", "text", "media_ref")))
-    spans = F.transform(
-        ordered,
-        lambda s: F.struct(
-            s.kind.alias("kind"), s.text.alias("text"),
-            s.media_ref.alias("media_ref"), s.offset.alias("offset"),
-        ),
-    )
-    return _stored_union(flat, ocr_out).groupBy("doc_id").agg(
-        spans.alias("spans"),
-        F.concat_ws(" ", F.transform(ordered, lambda s: s.text)).alias("extracted_text"),
-    )
+    return _span_rows(out).groupBy("doc_id").agg(*_ordered_spans(
+        F.collect_list(F.struct("offset", "kind", "text", "media_ref"))))
 
 
 def extract_documents(
@@ -282,41 +263,16 @@ def extract_documents(
     salt_partitions: int | None = None,
     strategy: str = "auto",
 ) -> DataFrame:
-    """End-to-end: documents(doc_id, text) → interleaved spans → media render
-    (if no media table given) → OCR → reassembled spans + extracted_text.
-
-    Without a media table this is the single-scan unified span stage: the
-    source is scanned once, every span goes through ONE Arrow UDF — media
-    rows are rendered → encoded → decoded → OCR'd inside the worker (their
-    bytes never cross an Arrow boundary), text rows pass through vectorized
-    — and the two-level reassembly reads that one stream. Nothing is cached
-    and no job runs until the caller's action. With a media table, media
-    spans join the store (:func:`ocr_media_spans`).
+    """End-to-end: documents(doc_id, text) → interleaved spans →
+    :func:`ocr_spans` → :func:`reassemble_spans`. Without a media table the
+    source is scanned once, nothing is cached and no job runs until the
+    caller's action.
 
     `strategy` is accepted for callers written against the former
     persist/unified choice and selects nothing: every value runs this plan."""
     from ..sources.interleave import flat_spans
 
-    flat = flat_spans(documents)
-    if media is not None:
-        media_spans = flat.filter(F.col("kind") == "media")
-        ocr_out = ocr_media_spans(media_spans, media, mode=mode, salt_partitions=salt_partitions)
-        return reassemble_two_level(flat, ocr_out)
-    if salt_partitions is None:
-        salt_partitions = 2 * flat.sparkSession.sparkContext.defaultParallelism
-    # sortWithinPartitions makes Arrow batches kind-homogeneous, so most
-    # batches take the vectorized text path or the media loop whole
-    spans = flat.repartition(
-        salt_partitions, F.xxhash64("doc_id", "offset")
-    ).sortWithinPartitions("kind")
-    out = spans.mapInPandas(_ocr_udf(mode, SPAN_OUT_SCHEMA), schema=SPAN_OUT_SCHEMA)
-    # media text is whitespace-normalized JVM-side; text rows are verbatim
-    return _two_level_agg(out.select(
-        "doc_id", "offset", "kind",
-        F.when(F.col("kind") == "media", _norm(F.col("text")))
-         .otherwise(F.col("text")).alias("text"),
-        "media_ref",
-    ))
+    return reassemble_spans(ocr_spans(flat_spans(documents), mode, media, salt_partitions))
 
 
 def extract_from_spans(
@@ -341,6 +297,4 @@ def extract_from_spans(
         F.col("s.text").alias("chunk"),
         F.col("s.media_ref").alias("media_ref"),
     )
-    media_spans = flat.filter(F.col("kind") == "media")
-    ocr_out = ocr_media_spans(media_spans, media, mode=mode, salt_partitions=salt_partitions)
-    return reassemble_two_level(flat, ocr_out)
+    return reassemble_spans(ocr_spans(flat, mode, media, salt_partitions))

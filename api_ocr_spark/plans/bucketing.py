@@ -1,7 +1,7 @@
 """Bucketed (co-located) joins: pre-shuffle heavy tables ONCE at write time.
 
 At 100 TB the media store is joined by `media_ref` by every extraction run
-(ocr_media_spans, backfills, re-OCR passes, PDF generation). Hash-bucketing
+(pipeline.ocr_spans, backfills, re-OCR passes, PDF generation). Hash-bucketing
 both sides on the join key at WRITE time makes every subsequent join
 exchange-free: Spark's bucketed scan exposes the bucket hash-partitioning,
 so SortMergeJoin runs with NO Exchange on either side — the shuffle is paid

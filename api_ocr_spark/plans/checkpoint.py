@@ -72,11 +72,11 @@ def run_with_checkpoint(
     `max_buckets` caps how many *new* buckets this invocation processes —
     the kill-at-50% test uses it to simulate a dying job. `media` is an
     optional external media store (media_ref, bytes) — the production
-    shape; when omitted, media is synthesized from the documents. Returns a
-    summary {processed: [...], skipped: [...]}.
+    shape; when omitted, media spans are rendered inside the span stage.
+    Returns a summary {processed: [...], skipped: [...]}.
     """
-    from ..operators.pipeline import ocr_media_spans, reassemble_two_level
-    from ..sources.interleave import build_media, flat_spans
+    from ..operators.pipeline import ocr_spans, reassemble_spans
+    from ..sources.interleave import flat_spans
 
     done = completed_buckets(spark, base_dir, run_group)
     docs_b = documents.withColumn("bucket", _bucket_of(F.col("doc_id").cast("string"), n_buckets))
@@ -92,12 +92,9 @@ def run_with_checkpoint(
             break
         subset = docs_b.filter(F.col("bucket") == b).drop("bucket")
         t0 = time.perf_counter()
-        flat = flat_spans(subset)
-        media_b = media if media is not None else build_media(subset)
-        ocr_out = ocr_media_spans(
-            flat.filter(F.col("kind") == "media"), media_b, mode=mode
-        ).cache()
-        result = reassemble_two_level(flat, ocr_out)
+        spans_out = ocr_spans(flat_spans(subset), mode, media).cache()
+        media_out = spans_out.filter(F.col("kind") == "media")
+        result = reassemble_spans(spans_out)
         # per-bucket directory overwrite: reprocessing REPLACES (exactly-once
         # even when a previous attempt died between this commit and lineage)
         bucket_out = os.path.join(out_path, f"bucket={b}")
@@ -106,7 +103,7 @@ def run_with_checkpoint(
         # /root/reference/metrics.py:17-35: endpoint→mode+route, image
         # size→byte stats, error→error-route counts, timing→ocr_ms)
         metrics = (
-            ocr_out.groupBy("partition_id", "route")
+            media_out.groupBy("partition_id", "route")
             .agg(
                 F.count("*").alias("n_spans"),
                 F.sum(F.when(F.col("route").startswith("error:"), 1).otherwise(0)).alias("n_errors"),
@@ -125,8 +122,8 @@ def run_with_checkpoint(
         # count from the committed bucket directory only — O(bucket), not a
         # rescan of every previous bucket, and no second pipeline execution
         n_docs = spark.read.parquet(bucket_out).count()
-        n_media = ocr_out.count()
-        ocr_out.unpersist()
+        n_media = media_out.count()
+        spans_out.unpersist()
         wall_ms = round((time.perf_counter() - t0) * 1e3, 1)
         lineage = spark.createDataFrame(
             [(run_group, run_id, b, n_docs, n_media, wall_ms, "done")],

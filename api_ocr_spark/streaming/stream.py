@@ -8,8 +8,10 @@ continuously-fed media store is the natural streaming extension: new
 stage runs stateless per micro-batch; a watermarked tumbling-window count
 tracks late-arriving spans.
 
-The OCR stage is identical code to the batch path (operators/pipeline) —
-mapInPandas is streaming-compatible, so batch/streaming share one kernel.
+The OCR stage is identical code to the batch path: the same mapInPandas
+body as operators/pipeline.ocr_spans, emitting the same SPAN_OUT_SCHEMA rows
+(`text`, `kind`='media', `n_bytes`, ...). Only the span spread differs — a
+stream cannot sort, so the rows go to the UDF unrepartitioned.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.pipeline import OCR_SCHEMA, _ocr_udf
+from ..operators.pipeline import SPAN_OUT_SCHEMA, _ocr_udf
 
 STREAM_INPUT_SCHEMA = (
     "doc_id string, offset int, media_ref string, bytes binary, event_time timestamp"
@@ -31,9 +33,8 @@ def stream_ocr(spark: SparkSession, input_dir: str, mode: str = "documento_compl
         .option("maxFilesPerTrigger", 4)
         .parquet(input_dir)
     )
-    return src.select("doc_id", "offset", "media_ref", "bytes").mapInPandas(
-        _ocr_udf(mode, OCR_SCHEMA), schema=OCR_SCHEMA
-    )
+    media_spans = src.select("doc_id", "offset", "media_ref", "bytes")
+    return media_spans.mapInPandas(_ocr_udf(mode), schema=SPAN_OUT_SCHEMA)
 
 
 def stream_ocr_with_window_metrics(

@@ -12,6 +12,10 @@ Launch (local smoke):
       jobs/run_extraction.py --documents /root/testdata/sf0.001/documents.parquet \
       --output /tmp/extract_out --buckets 4
 
+With --media, media spans read their bytes from that store (media_ref,
+bytes); a span whose store row is missing or corrupt is an error row in the
+metrics table. Without it, media spans are rendered from the documents.
+
 Resume after a kill: re-run with the same --output and --run-group; completed
 buckets are skipped via the lineage anti-join (plans/checkpoint.py).
 """
@@ -27,9 +31,8 @@ from pyspark.sql import SparkSession
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--documents", required=True, help="parquet path or table of documents")
-    ap.add_argument("--spans-table", default=None,
-                    help="optional: input_hint-shaped spans table (with --media)")
-    ap.add_argument("--media", default=None, help="media store parquet/table")
+    ap.add_argument("--media", default=None,
+                    help="media store parquet (media_ref, bytes); default: render media in the job")
     ap.add_argument("--output", required=True, help="output base dir (output/lineage/metrics)")
     ap.add_argument("--mode", default="documento_completo")
     ap.add_argument("--buckets", type=int, default=16)
@@ -51,6 +54,7 @@ def main() -> None:
     from api_ocr_spark.plans.checkpoint import run_with_checkpoint
 
     documents = spark.read.parquet(args.documents)
+    media = spark.read.parquet(args.media) if args.media else None
     summary = run_with_checkpoint(
         spark,
         documents,
@@ -60,6 +64,7 @@ def main() -> None:
         mode=args.mode,
         n_buckets=args.buckets,
         max_buckets=args.max_buckets,
+        media=media,
     )
     print(json.dumps({"run_id": args.run_id, **summary}))
     spark.stop()

@@ -53,10 +53,9 @@ def test_two_level_reassembly_equals_plain(spark, sf_dir):
     docs = tables.load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 15)
     flat = interleave.flat_spans(docs)
     media = interleave.build_media(docs)
-    ocr = pipeline.ocr_media_spans(
-        flat.filter(F.col("kind") == "media"), media, mode="basico").cache()
-    a = pipeline.reassemble(flat, ocr)
-    b = pipeline.reassemble_two_level(flat, ocr, salt_buckets=8)
+    ocr = pipeline.ocr_spans(flat, "basico", media=media).cache()
+    a = pipeline.reassemble(ocr)
+    b = pipeline.reassemble_spans(ocr, salt_buckets=8)
     cols = ["doc_id", "extracted_text"]
     assert a.select(cols).exceptAll(b.select(cols)).count() == 0
     assert a.count() == b.count()
@@ -73,8 +72,10 @@ def test_two_level_reassembly_heavy_doc(spark):
     docs = spark.createDataFrame([(77, heavy)], "doc_id long, text string")
     flat = interleave.flat_spans(docs)
     media = interleave.build_media(docs)
-    ocr = pipeline.ocr_media_spans(
-        flat.filter(F.col("kind") == "media"), media, mode="basico")
-    out = pipeline.reassemble_two_level(flat, ocr, salt_buckets=8).collect()[0]
+    ocr = pipeline.ocr_spans(flat, "basico", media=media).cache()
+    assert pipeline.reassemble(ocr).collect() == \
+        pipeline.reassemble_spans(ocr, salt_buckets=8).collect()
+    out = pipeline.reassemble_spans(ocr, salt_buckets=8).collect()[0]
     assert [s.offset for s in out.spans] == list(range(60))
     assert out.extracted_text == " ".join(heavy.split())
+    ocr.unpersist()

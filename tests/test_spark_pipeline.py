@@ -216,10 +216,9 @@ def test_streaming_matches_batch(spark, docs, tmp_path):
     in_dir = os.path.join(str(tmp_path), "stream_in")
     joined.write.parquet(in_dir)
     st.run_stream_to_memory(spark, in_dir, table_name="t_stream", mode="basico")
-    got = spark.table("t_stream").select("doc_id", "offset", "ocr_text")
-    batch = pipeline.ocr_media_spans(
-        flat.filter(F.col("kind") == "media"), media, mode="basico"
-    ).select("doc_id", "offset", "ocr_text")
+    got = spark.table("t_stream").select("doc_id", "offset", "text")
+    batch = pipeline.ocr_spans(flat, "basico", media=media).filter(
+        F.col("kind") == "media").select("doc_id", "offset", "text")
     assert got.count() == batch.count()
     assert got.exceptAll(batch).count() == 0
 
@@ -244,11 +243,12 @@ def test_streaming_checkboxes_matches_batch(spark, tmp_path):
         media_rows.append((f"cbx{i}", bytes(png_codec.encode_gray(img))))
     media = spark.createDataFrame(media_rows, "media_ref string, bytes binary")
     spans = spark.createDataFrame(
-        [(str(9000 + i), 0, f"cbx{i}") for i in range(4)],
-        "doc_id string, offset int, media_ref string")
+        [(str(9000 + i), 0, "media", f"cbx{i}") for i in range(4)],
+        "doc_id string, offset int, kind string, media_ref string")
 
-    cmp_cols = ["doc_id", "offset", "ocr_text", "route", "n_words", "mean_conf"]
-    batch = pipeline.ocr_media_spans(spans, media, mode="checkboxes").select(*cmp_cols)
+    cmp_cols = ["doc_id", "offset", "text", "route", "n_words", "mean_conf"]
+    batch = pipeline.ocr_spans(spans, "checkboxes", media=media).filter(
+        F.col("kind") == "media").select(*cmp_cols)
 
     joined = (
         spans.join(media, "media_ref")
@@ -273,8 +273,7 @@ def test_skewed_doc_distribution(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     flat = interleave.flat_spans(docs)
     media = interleave.build_media(docs)
-    out = pipeline.ocr_media_spans(
-        flat.filter(F.col("kind") == "media"), media, mode="basico", salt_partitions=8)
+    out = pipeline.ocr_spans(flat, "basico", media=media, salt_partitions=8)
     per_part = out.groupBy("partition_id").count().collect()
     counts = [r["count"] for r in per_part]
     assert len(counts) >= 4  # heavy doc did not collapse into one partition
