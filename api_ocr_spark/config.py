@@ -25,4 +25,3 @@ MAX_SIZE_MB_DOCUMENTO = 1.4      # main.py:61
 MAX_DIMENSION_SEGMENTADO = 1100  # main.py:59
 WORD_CONF_FLOOR = 30             # ocr/engine.py:111
 TABLE_ROUTE_MIN_HLINES = 10      # main.py:291
-ALLOWED_EXTENSIONS = {".jpg", ".jpeg", ".png", ".tiff", ".bmp", ".pdf"}  # config.py:15

@@ -6,7 +6,7 @@ to the reference's routing classes (/root/reference/main.py:291,1041) and
 exercise specific preprocessing kernels:
 
   plain   clean render                         → binarize only
-  skewed  integer per-row shear (±1..7°)       → correct_skew
+  skewed  integer per-row shear (±1..7°)       → deskew_binary_ink
   noisy   seeded sub-threshold gray noise      → remove_noise / binarize margin
   shadow  horizontal illumination gradient     → remove_shadows / adaptive threshold
   ruled   >10 full-width horizontal rules      → table route (Hough census)

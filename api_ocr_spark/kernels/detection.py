@@ -13,109 +13,6 @@ from __future__ import annotations
 import numpy as np
 
 
-def label_components(mask: np.ndarray) -> tuple[np.ndarray, int]:
-    """4-connected component labeling via row-run union-find.
-
-    Stand-in for cv2.findContours + boundingRect: downstream code only uses
-    component bounding boxes / areas, which labels provide directly.
-    """
-    h, w = mask.shape
-    labels = np.zeros((h, w), dtype=np.int32)
-    parent: list[int] = [0]  # parent[0] unused sentinel
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    def union(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    next_label = 1
-    prev_runs: list[tuple[int, int, int]] = []  # (start, end, label) of prior row
-    ink = mask > 0
-    for y in range(h):
-        row = ink[y]
-        if not row.any():
-            prev_runs = []
-            continue
-        d = np.diff(row.astype(np.int8))
-        starts = list(np.nonzero(d == 1)[0] + 1)
-        ends = list(np.nonzero(d == -1)[0] + 1)
-        if row[0]:
-            starts.insert(0, 0)
-        if row[-1]:
-            ends.append(w)
-        cur_runs: list[tuple[int, int, int]] = []
-        pi = 0
-        for s, e in zip(starts, ends):
-            lbl = 0
-            for (ps, pe, pl) in prev_runs:
-                if ps < e and s < pe:  # 4-connectivity overlap
-                    if lbl == 0:
-                        lbl = pl
-                    else:
-                        union(lbl, pl)
-            if lbl == 0:
-                lbl = next_label
-                parent.append(lbl)
-                next_label += 1
-            labels[y, s:e] = lbl
-            cur_runs.append((s, e, lbl))
-        prev_runs = cur_runs
-        _ = pi
-    # flatten unions and compact label ids
-    if next_label > 1:
-        roots = np.array([find(i) for i in range(next_label)], dtype=np.int32)
-        uniq, remap = np.unique(roots[1:], return_inverse=True)
-        lut = np.zeros(next_label, dtype=np.int32)
-        lut[1:] = remap + 1
-        labels = lut[labels]
-        return labels, len(uniq)
-    return labels, 0
-
-
-def component_stats(labels: np.ndarray, n: int) -> list[dict]:
-    """Per-component {bbox:(x,y,w,h), area} from a label image — one pass
-    over the ink pixels (scatter-min/max), not one scan per component."""
-    if n == 0:
-        return []
-    ys, xs = np.nonzero(labels)
-    ls = labels[ys, xs]
-    area = np.bincount(ls, minlength=n + 1)
-    x0 = np.full(n + 1, np.iinfo(np.int64).max)
-    y0 = np.full(n + 1, np.iinfo(np.int64).max)
-    x1 = np.full(n + 1, -1)
-    y1 = np.full(n + 1, -1)
-    np.minimum.at(x0, ls, xs)
-    np.minimum.at(y0, ls, ys)
-    np.maximum.at(x1, ls, xs)
-    np.maximum.at(y1, ls, ys)
-    return [
-        {
-            "bbox": (int(x0[i]), int(y0[i]), int(x1[i] - x0[i] + 1), int(y1[i] - y0[i] + 1)),
-            "area": int(area[i]),
-        }
-        for i in range(1, n + 1)
-    ]
-
-
-def max_run_lengths(ink: np.ndarray, axis: int) -> np.ndarray:
-    """Per row (axis=1) or column (axis=0): longest contiguous ink run.
-    Fully vectorized via the segmented-cumsum trick: running run length =
-    cumsum - cummax(cumsum at zeros)."""
-    a = (ink if axis == 1 else ink.T).astype(np.int32)
-    cs = np.cumsum(a, axis=1)
-    resets = np.where(a == 0, cs, 0)
-    running = cs - np.maximum.accumulate(resets, axis=1)
-    return running.max(axis=1)
-
-
 def connected_components_stats(mask: np.ndarray) -> list[dict]:
     """4-connected component {bbox, area} stats straight from row runs —
     no label image is materialized. Run extraction is one flat vectorized

@@ -1,15 +1,16 @@
 """Pure-numpy preprocessing kernels.
 
 Re-implements the semantics of the reference's OpenCV kernel library
-(/root/reference/preprocessing/enhance.py) without OpenCV: grayscale
-conversion, Otsu / adaptive-mean / Sauvola binarization
-(enhance.py:75-118), shadow removal (enhance.py:121-128), denoise
-(enhance.py:43-63), skew correction (enhance.py:17-40), and the composed
-`deskew_and_clean` chain (enhance.py:142-162).
+(/root/reference/preprocessing/enhance.py) without OpenCV: Otsu /
+adaptive-mean / Sauvola binarization (enhance.py:75-118), shadow removal
+(enhance.py:121-128), denoise (enhance.py:43-63) and skew correction
+(enhance.py:17-40). The reference's composed `deskew_and_clean` chain
+(enhance.py:142-162) is `ocr/engine.best_deskew` here.
 
 Skew model: the renderer applies a discrete per-row shear
-shift(y)=round(tan(deg)*(y-h/2)); `correct_skew` searches the same discrete
-family, so deskew is an exact inverse (SURVEY.md §5 determinism pinning).
+shift(y)=round(tan(deg)*(y-h/2)); `deskew_binary_ink` searches the same
+discrete family, so deskew is an exact inverse (SURVEY.md §5 determinism
+pinning).
 These run inside Arrow-batched `mapInPandas` stages — a Python-level loop per
 image whose inner work is vectorized numpy — never per-row Python UDFs.
 """
@@ -21,25 +22,6 @@ import numpy as np
 BINARY_INK = 255  # binarized images are {0,255} with ink=255 (inverted),
                   # matching the reference's THRESH_BINARY_INV usage in
                   # detection (/root/reference/preprocessing/detection.py:17)
-
-
-def to_gray(img: np.ndarray) -> np.ndarray:
-    """HxW or HxWx3 → HxW uint8 (ITU-R BT.601 luma).
-    Integer arithmetic (77·R + 150·G + 29·B + 128) >> 8 — classic 8-bit
-    fixed-point BT.601 weights with rounding; max intermediate 65 408 fits
-    uint16, so the conversion never touches a float64 temporary (3 bytes/px
-    in, 2 bytes/px working set, vs 24 bytes/px for a float matmul).
-    Rounding note: this differs by up to ±1/pixel both from a truncating
-    float 0.299/0.587/0.114 dot product and from cv2's 15-bit fixed-point
-    ((4899·R+9617·G+1868·B)>>14) — acceptable here because the fixture
-    corpus is grayscale end-to-end (the RGB branch is only reachable via
-    the public API) and no cv2 parity contract exists in this container."""
-    if img.ndim == 2:
-        return img.astype(np.uint8, copy=False)
-    r = img[..., 0].astype(np.uint16)
-    g = img[..., 1].astype(np.uint16)
-    b = img[..., 2].astype(np.uint16)
-    return ((77 * r + 150 * g + 29 * b + 128) >> 8).astype(np.uint8)
 
 
 def _box_sum(a: np.ndarray, win: int) -> np.ndarray:
@@ -437,9 +419,9 @@ def deskew_binary_ink(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
     """One-pass deskew: (deskewed_gray, binary, ink_mask, angle) with exactly
     one extra binarization when a shear is applied and zero when not — the
-    shared primitive behind correct_skew/deskew_and_clean and the pipeline
-    modes. The bool ink mask is computed ONCE here and handed to every
-    downstream consumer (skew estimate, rule scans, band segmentation):
+    shared primitive behind engine.best_deskew and the pipeline modes. The
+    bool ink mask is computed ONCE here and handed to every downstream
+    consumer (skew estimate, rule scans, band segmentation):
     full-image passes dominate per-image cost under many-core memory-bus
     contention, so each eliminated binary>0 re-pass is ~2 bytes/px off the
     bus."""
@@ -453,14 +435,6 @@ def deskew_binary_ink(
     t2 = otsu_threshold(sheared)
     ink2 = sheared <= t2
     return sheared, np.where(ink2, _U255, _U0), ink2, deg
-
-
-def deskew_binary(
-    gray: np.ndarray, min_abs_deg: float = 0.5
-) -> tuple[np.ndarray, np.ndarray, float]:
-    """Compat wrapper over deskew_binary_ink (drops the ink mask)."""
-    img, binary, _, deg = deskew_binary_ink(gray, min_abs_deg)
-    return img, binary, deg
 
 
 def skew_candidates(binary: np.ndarray, k: int = 3) -> list[float]:
@@ -477,29 +451,7 @@ def skew_candidates(binary: np.ndarray, k: int = 3) -> list[float]:
     return [degs[i] for i in order]
 
 
-def correct_skew(gray: np.ndarray, min_abs_deg: float = 0.5) -> tuple[np.ndarray, float]:
-    """Deskew a grayscale image; rotation applied only when |angle|>0.5°
-    exactly like the reference gate (enhance.py:33-35). Returns (img, angle)."""
-    img, _, deg = deskew_binary(gray, min_abs_deg)
-    return img, deg
-
-
-def deskew_and_clean(gray: np.ndarray, method: str = "otsu") -> np.ndarray:
-    """Composed chain mirroring /root/reference/preprocessing/enhance.py:142-162:
-    skew → shadows → denoise → binarize. Contrast scaling (convertScaleAbs
-    α=1.3) is folded into the threshold margin. The engine hot path binarizes
-    with Otsu: the fixture contract guarantees global ink/background
-    separability in every scenario (ink ≤ 90 < 110 ≤ bg, imaging/render.py),
-    and Otsu is exactly invertible there; 'auto' (sauvola/adaptive by mean,
-    the reference's rule at enhance.py:153-156) remains available for
-    non-fixture inputs."""
-    img, binary, _ = deskew_binary(gray)
-    if method == "otsu":
-        return binary
-    return binarize(img, method)
-
-
-# ------------------------------------------------------- resize / compression
+# ------------------------------------------------------------------ resize
 
 def resize_nearest(img: np.ndarray, new_h: int, new_w: int) -> np.ndarray:
     """Nearest-neighbor resize (stands in for cv2.resize INTER_AREA/CUBIC)."""
@@ -544,54 +496,6 @@ def resize_area(img: np.ndarray, new_h: int, new_w: int) -> np.ndarray:
     if np.issubdtype(np.asarray(img).dtype, np.integer):
         return np.clip(np.rint(out), 0, 255).astype(np.uint8)
     return out
-
-
-_CUBIC_A = -0.75  # cv2's Catmull-Rom-family coefficient for INTER_CUBIC
-
-
-def _cubic_weights(t: np.ndarray) -> np.ndarray:
-    """Keys cubic-convolution kernel with a = -0.75 (cv2's choice), evaluated
-    at the 4 taps for fractional offsets t in [0,1): returns (len(t), 4)."""
-    a = _CUBIC_A
-    d = np.stack([t + 1.0, t, 1.0 - t, 2.0 - t], axis=1)  # |x| of the taps
-    w = np.where(
-        d <= 1.0,
-        (a + 2.0) * d**3 - (a + 3.0) * d**2 + 1.0,
-        a * d**3 - 5.0 * a * d**2 + 8.0 * a * d - 4.0 * a,
-    )
-    return w
-
-
-def _cubic_resample_axis(a: np.ndarray, new_n: int, axis: int) -> np.ndarray:
-    a0 = np.moveaxis(np.asarray(a, np.float64), axis, 0)
-    n = a0.shape[0]
-    scale = n / new_n
-    # cv2 pixel-center convention: src x of output j is (j+0.5)*scale - 0.5
-    x = (np.arange(new_n) + 0.5) * scale - 0.5
-    x0 = np.floor(x).astype(np.int64)
-    w = _cubic_weights(x - x0)  # (new_n, 4)
-    taps = np.clip(x0[:, None] + np.arange(-1, 3)[None, :], 0, n - 1)
-    gathered = a0[taps]  # (new_n, 4, ...)
-    out = np.einsum("jk,jk...->j...", w, gathered)
-    return np.moveaxis(out, 0, axis)
-
-
-def resize_cubic(img: np.ndarray, new_h: int, new_w: int) -> np.ndarray:
-    """cv2.INTER_CUBIC-equivalent resample (the reference's upscale path):
-    separable Keys cubic convolution, a = -0.75, replicated borders."""
-    out = _cubic_resample_axis(_cubic_resample_axis(img, new_h, 0), new_w, 1)
-    if np.issubdtype(np.asarray(img).dtype, np.integer):
-        return np.clip(np.rint(out), 0, 255).astype(np.uint8)
-    return out
-
-
-def resize_reference(img: np.ndarray, new_h: int, new_w: int) -> np.ndarray:
-    """The reference's resize rule (preprocessing/enhance.py:66-72): shrink
-    with INTER_AREA, grow with INTER_CUBIC (per total pixel count)."""
-    h, w = img.shape[:2]
-    if new_h * new_w <= h * w:
-        return resize_area(img, new_h, new_w)
-    return resize_cubic(img, new_h, new_w)
 
 
 def cap_max_dimension(img: np.ndarray, max_dim: int, mode: str = "ladder") -> np.ndarray:

@@ -118,7 +118,10 @@ def get_text_data(
         return _extract_words(binary > 0, binary)
     if not preprocess:
         # already-binary ROIs pass through; gray ROIs binarize with Otsu —
-        # the engine-wide global-threshold choice (see deskew_and_clean)
+        # the engine-wide global-threshold choice: the fixture contract
+        # guarantees global ink/background separability in every scenario
+        # (ink ≤ 90 < 110 ≤ bg, imaging/render.py), and Otsu is exactly
+        # invertible there
         b = gray if _is_binary(gray) else enhance.binarize(gray, "otsu")
         return _extract_words(b > 0, b)
     _, _, words = best_deskew(gray)
@@ -128,9 +131,9 @@ def get_text_data(
 def best_deskew(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray, list[dict]]:
     """Confidence-validated deskew: (deskewed_gray, binary, words).
 
-    Pass 1 uses the guarded profile estimate (enhance.deskew_binary); if the
-    extraction is a perfect template match (the common case — every corpus
-    page), that's it. Otherwise the FULL candidate grid is probed and each
+    Pass 1 uses the guarded profile estimate (enhance.deskew_binary_ink);
+    if the extraction is a perfect template match (the common case — every
+    corpus page), that's it. Otherwise the FULL candidate grid is probed and each
     candidate validated by recognition confidence, plus an illumination rung
     (remove_shadows) — the reference's degradation-ladder idiom applied to
     preprocessing (main.py:660-696). All pipeline modes deskew through this,

@@ -91,13 +91,6 @@ def merge_pair(symbols: Column, lhs: str, rhs: str, merged: str) -> Column:
     )
 
 
-def apply_merges(symbols: Column, merges: list[tuple]) -> Column:
-    """Chain every learned rule (in learning order) over a symbol array."""
-    for lhs, rhs, merged, _cnt in merges:
-        symbols = merge_pair(symbols, lhs, rhs, merged)
-    return symbols
-
-
 def adjacent_pairs(symbols: Column) -> Column:
     """array<struct<lhs,rhs>> of adjacent symbol pairs (empty if < 2)."""
     n = F.size(symbols)

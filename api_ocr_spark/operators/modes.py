@@ -51,7 +51,7 @@ def run_basico(gray: np.ndarray) -> dict:
 def run_segmentado(
     gray: np.ndarray, detectar_tablas: bool = True, _pre: tuple | None = None
 ) -> dict:
-    """deskew_and_clean → segment_regions (+ tables via containment anti-join)
+    """best_deskew → segment_regions (+ tables via containment anti-join)
     → sort (y,x) → per-region OCR → re-join (/root/reference/main.py:495-559).
     The reference's bounded 3-way concurrency is superseded by Spark task
     parallelism (SURVEY.md §2.12). `_pre` carries (deskewed, binary, tables)
@@ -169,7 +169,7 @@ def run_documento_completo(gray: np.ndarray, optimizar_para: str = "auto") -> di
 
 
 def run_checkboxes(gray: np.ndarray) -> dict:
-    """deskew_and_clean → detect_checkboxes → words/lines → QA pairs + a
+    """best_deskew → detect_checkboxes → words/lines → QA pairs + a
     separate full-text pass (/root/reference/main.py:1155-1303; the reference
     OCRs the same image twice with different PSM — here one engine pass feeds
     both, SURVEY.md §3.2)."""

@@ -173,9 +173,8 @@ def sample_video_frames(media: DataFrame, fps: float = 1.0) -> DataFrame:
     baseline-JPEG codec, then re-encodes as PNG for the frame column. The
     requested output `fps` downsamples the native rate (every
     round(native/fps)-th frame, always including frame 0). Unparseable or
-    inter-frame-codec payloads yield zero rows (quarantine-by-absence, as
-    pdf_words_table does); sample_video_frames_stub marks the pyav swap-in
-    for those."""
+    inter-frame-codec payloads yield zero rows (quarantine-by-absence);
+    sample_video_frames_stub marks the pyav swap-in for those."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..imaging import avi as avi_codec

@@ -29,8 +29,6 @@ from pyspark.sql.types import (
 
 from ..config import CHUNK_WORDS, MEDIA_MOD, RENDER_SEED_MULT, SCENARIO_MULT
 
-SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
-
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_ref", StringType()),
@@ -84,12 +82,6 @@ def build_documents_spans(documents: DataFrame) -> DataFrame:
     """The input_hint-shaped interleaved table: media spans carry null text
     (their content exists only as rendered pixels in the media table)."""
     fs = flat_spans(documents)
-    span = F.struct(
-        F.col("kind"),
-        F.when(F.col("kind") == "text", F.col("chunk")).alias("text"),
-        F.col("media_ref"),
-        F.col("offset"),
-    )
     ordered = F.transform(
         F.array_sort(F.collect_list(F.struct("offset", "kind", "chunk", "media_ref"))),
         lambda s: F.struct(
@@ -99,7 +91,6 @@ def build_documents_spans(documents: DataFrame) -> DataFrame:
             s.offset.alias("offset"),
         ),
     )
-    _ = span
     return fs.groupBy("doc_id").agg(ordered.alias("spans"))
 
 

@@ -252,3 +252,34 @@ def test_jpeg_adversarial_sof_dims_raise_not_crash():
     data[i + 5 : i + 9] = (0x2000).to_bytes(2, "big") + (0x2000).to_bytes(2, "big")
     outcomes = _decode_both_paths(bytes(data))
     assert all(o == "ValueError" for o in outcomes), outcomes
+
+
+def test_jpeg_codec_roundtrip_properties():
+    from api_ocr_spark.imaging import jpeg
+    rng = np.random.default_rng(1)
+    img = rng.integers(0, 256, (37, 61)).astype(np.uint8)  # non-multiple-of-8 dims
+    prev_psnr = 0.0
+    for q in (15, 50, 75, 95):
+        data = jpeg.encode_gray_jpeg(img, q)
+        dec = jpeg.decode_gray_jpeg(data)
+        assert dec.shape == img.shape and dec.dtype == np.uint8
+        mse = float(((dec.astype(float) - img) ** 2).mean())
+        psnr = 10 * np.log10(255**2 / max(mse, 1e-9))
+        assert psnr > prev_psnr  # quality is monotone in PSNR
+        prev_psnr = psnr
+    # constant image survives exactly (DC-only blocks)
+    flat = np.full((16, 24), 131, np.uint8)
+    assert np.array_equal(jpeg.decode_gray_jpeg(jpeg.encode_gray_jpeg(flat, 75)), flat)
+
+
+def test_ocr_exact_through_jpeg_roundtrip():
+    """Lossy JPEG at qualities 95 and 85 preserves the binarized ink mask of
+    rendered pages — measured property backing the jpg media-store path."""
+    from api_ocr_spark.imaging import jpeg
+    from api_ocr_spark.kernels import enhance as enh
+    from api_ocr_spark.ocr import engine as eng
+    page = render.render_text_image("the quick brown fox 12:30 jumps", "noisy", 7)
+    for q in (95, 85):
+        dec = jpeg.decode_gray_jpeg(jpeg.encode_gray_jpeg(page, q))
+        assert eng.ocr_image(dec) == eng.ocr_image(page), q
+        assert np.array_equal(enh.binarize_otsu(dec) > 0, enh.binarize_otsu(page) > 0)

@@ -115,52 +115,8 @@ def test_resize_area_matches_fractional_box_mean():
     assert out.dtype == np.uint8 and (out == 173).all()
 
 
-def _cubic_1d_naive(row, new_n):
-    """Direct per-pixel evaluation of the same Keys a=-0.75 kernel (cv2's
-    INTER_CUBIC parameter — which does NOT have exact linear precision;
-    only a=-0.5 does, so the reference here is the kernel definition, not
-    an analytic polynomial)."""
-    n = len(row)
-    a = -0.75
-
-    def k(x):
-        x = abs(x)
-        if x <= 1:
-            return (a + 2) * x**3 - (a + 3) * x**2 + 1
-        if x < 2:
-            return a * x**3 - 5 * a * x**2 + 8 * a * x - 4 * a
-        return 0.0
-
-    out = np.empty(new_n)
-    scale = n / new_n
-    for j in range(new_n):
-        x = (j + 0.5) * scale - 0.5
-        x0 = int(np.floor(x))
-        acc = 0.0
-        for tap in range(x0 - 1, x0 + 3):
-            acc += k(x - tap) * row[min(max(tap, 0), n - 1)]
-        out[j] = acc
-    return out
-
-
-def test_resize_cubic_matches_kernel_definition():
-    rng = np.random.default_rng(5)
-    row = rng.random(23) * 255
-    got = enhance.resize_cubic(row.reshape(1, -1), 1, 37).ravel()
-    assert np.allclose(got, _cubic_1d_naive(row, 37), atol=1e-9)
-    got_dn = enhance.resize_cubic(row.reshape(1, -1), 1, 11).ravel()
-    assert np.allclose(got_dn, _cubic_1d_naive(row, 11), atol=1e-9)
-    # partition of unity: constant image is reproduced exactly at any ratio
-    const = np.full((16, 16), 99, np.uint8)
-    assert (enhance.resize_cubic(const, 23, 9) == 99).all()
-
-
 def test_resize_reference_dispatch_and_cap_area_mode():
     img = np.random.default_rng(0).integers(0, 256, (100, 200)).astype(np.uint8)
-    small = enhance.resize_reference(img, 50, 100)   # shrink -> area
-    assert np.array_equal(small, enhance.resize_area(img, 50, 100))
-    big = enhance.resize_reference(img, 200, 400)    # grow -> cubic
-    assert np.array_equal(big, enhance.resize_cubic(img, 200, 400))
     capped = enhance.cap_max_dimension(img, 120, mode="area")
     assert max(capped.shape) <= 120
     # aspect preserved within rounding
@@ -187,7 +143,7 @@ def test_skew_recovery_pixel_exact_short():
     truth = enhance.binarize_otsu(base) > 0
     for deg in render.SKEW_DEGREES:
         skewed = render._apply_skew(base, deg)
-        recovered, _ = enhance.correct_skew(skewed)
+        recovered, _, _, _ = enhance.deskew_binary_ink(skewed)
         rec_ink = enhance.binarize_otsu(recovered) > 0
         ys, xs = np.nonzero(rec_ink)
         tys, txs = np.nonzero(truth)
@@ -198,7 +154,7 @@ def test_skew_recovery_pixel_exact_short():
 
 def test_correct_skew_noop_below_half_degree():
     img = render.render_text_image("plain text here", "plain", 0)
-    out, deg = enhance.correct_skew(img)
+    out, _, _, deg = enhance.deskew_binary_ink(img)
     assert deg == 0.0 and out is img
 
 
@@ -255,9 +211,8 @@ def test_label_components_and_stats():
     m = np.zeros((10, 10), np.uint8)
     m[1:3, 1:3] = 255  # blob A 2x2
     m[6:9, 5:9] = 255  # blob B 3x4
-    labels, n = detection.label_components(m)
-    assert n == 2
-    stats = sorted(detection.component_stats(labels, n), key=lambda s: s["area"])
+    stats = sorted(detection.connected_components_stats(m), key=lambda s: s["area"])
+    assert len(stats) == 2
     assert stats[0] == {"bbox": (1, 1, 2, 2), "area": 4}
     assert stats[1] == {"bbox": (5, 6, 4, 3), "area": 12}
 
@@ -268,8 +223,7 @@ def test_label_components_u_shape_merges():
     m[0:4, 0] = 255
     m[0:4, 4] = 255
     m[4, :] = 255
-    _, n = detection.label_components(m)
-    assert n == 1
+    assert len(detection.connected_components_stats(m)) == 1
 
 
 def test_rule_rows_and_cols():
