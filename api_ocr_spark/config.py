@@ -23,5 +23,4 @@ MAX_DIMENSION_BASIC_RETRY = 850  # main.py:56
 MAX_DIMENSION_DOCUMENTO = 1300   # main.py:60
 MAX_SIZE_MB_DOCUMENTO = 1.4      # main.py:61
 MAX_DIMENSION_SEGMENTADO = 1100  # main.py:59
-WORD_CONF_FLOOR = 30             # ocr/engine.py:111
 TABLE_ROUTE_MIN_HLINES = 10      # main.py:291

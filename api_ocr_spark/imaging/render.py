@@ -7,8 +7,8 @@ exercise specific preprocessing kernels:
 
   plain   clean render                         → binarize only
   skewed  integer per-row shear (±1..7°)       → deskew_binary_ink
-  noisy   seeded sub-threshold gray noise      → remove_noise / binarize margin
-  shadow  horizontal illumination gradient     → remove_shadows / adaptive threshold
+  noisy   seeded sub-threshold gray noise      → Otsu binarize margin
+  shadow  horizontal illumination gradient     → remove_shadows / Otsu margin
   ruled   >10 full-width horizontal rules      → table route (Hough census)
   boxed   text enclosed in a rectangle border  → detect_tables largest-table crop
   checkbox squares/circles + labels            → checkbox pipeline

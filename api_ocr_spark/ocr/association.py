@@ -125,75 +125,3 @@ def build_question_answer_pairs(checkboxes: list[dict], lines: list[dict]) -> li
         if cb.get("text")
     ]
 
-
-def associate_checkboxes_with_text(
-    checkboxes: list[dict], text_regions: list[dict], max_distance: int = 100
-) -> list[dict]:
-    """Nearest-ABOVE text region per checkbox — exact port of
-    /root/reference/preprocessing/checkbox.py:157-190: candidate regions
-    must have center-y strictly above the checkbox center-y, vertical
-    distance strictly < max_distance; first-in-input-order wins ties
-    (strict <). Adds 'associated_text' ('' when none) and
-    'distance_to_text' (-1 when none). Mutates and returns, like the
-    reference."""
-    for cb in checkboxes:
-        cb_center_y = cb["bbox"][1] + cb["bbox"][3] // 2
-        best_match = None
-        best_dist = float("inf")
-        for tr in text_regions:
-            tr_center_y = tr["bbox"][1] + tr["bbox"][3] // 2
-            if tr_center_y < cb_center_y:
-                dist = cb_center_y - tr_center_y
-                if dist < max_distance and dist < best_dist:
-                    best_dist = dist
-                    best_match = tr.get("text", "")
-        cb["associated_text"] = best_match if best_match else ""
-        cb["distance_to_text"] = best_dist if best_dist != float("inf") else -1
-    return checkboxes
-
-
-def associate_checkboxes_with_text_advanced(
-    checkboxes: list[dict],
-    text_lines: list[dict],
-    max_horizontal_distance: int = 150,
-    max_vertical_distance: int = 50,
-    consider_right: bool = True,
-) -> list[dict]:
-    """Multi-criteria nearest-line association — exact port of
-    /root/reference/preprocessing/checkbox.py:193-279 (dead code in the
-    reference service, implemented for API parity): same-line left/right by
-    horizontal distance, else above/below by vertical_dist + 0.5*horizontal
-    within 2x the vertical window; confianza = max(0, 100 - score/2).
-    Faithful quirk kept: the reference never actually uses
-    max_horizontal_distance in the body."""
-    _ = max_horizontal_distance  # declared but unused in the reference body
-    for cb in checkboxes:
-        cb_x, cb_y, cb_w, cb_h = cb["bbox"]
-        cb_center_x = cb_x + cb_w // 2
-        cb_center_y = cb_y + cb_h // 2
-        best_match, best_score, best_side = None, float("inf"), None
-        for line in text_lines:
-            lx, ly, lw, lh = line["bbox"]
-            l_center_x = lx + lw // 2
-            l_center_y = ly + lh // 2
-            horizontal_dist = abs(cb_center_x - l_center_x)
-            vertical_dist = abs(cb_center_y - l_center_y)
-            if vertical_dist < max_vertical_distance:
-                if lx + lw < cb_x and horizontal_dist < best_score:
-                    best_score, best_match, best_side = horizontal_dist, line["text"], "left"
-                if consider_right and cb_x + cb_w < lx and horizontal_dist < best_score:
-                    best_score, best_match, best_side = horizontal_dist, line["text"], "right"
-            elif ly + lh < cb_y and vertical_dist < max_vertical_distance * 2:
-                score = vertical_dist + horizontal_dist * 0.5
-                if score < best_score:
-                    best_score, best_match, best_side = score, line["text"], "above"
-            elif cb_y + cb_h < ly and vertical_dist < max_vertical_distance * 2:
-                score = vertical_dist + horizontal_dist * 0.5
-                if score < best_score:
-                    best_score, best_match, best_side = score, line["text"], "below"
-        cb["associated_text"] = best_match if best_match else ""
-        cb["association_confidence"] = (
-            max(0, min(100, 100 - best_score / 2)) if best_match else 0
-        )
-        cb["association_side"] = best_side
-    return checkboxes

@@ -122,7 +122,7 @@ def get_text_data(
         # guarantees global ink/background separability in every scenario
         # (ink ≤ 90 < 110 ≤ bg, imaging/render.py), and Otsu is exactly
         # invertible there
-        b = gray if _is_binary(gray) else enhance.binarize(gray, "otsu")
+        b = gray if _is_binary(gray) else enhance.binarize_otsu(gray)
         return _extract_words(b > 0, b)
     _, _, words = best_deskew(gray)
     return words

@@ -486,10 +486,7 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     localCheckpoint(eager) — mandatory for iterative Spark algorithms: it
     cuts the exponentially-growing lineage AND gives the convergence test a
     materialized frame. At 10^12 docs the same loop runs with the labels
-    frame persisted on cluster storage; for diameter-robustness at that
-    scale use neardup_clusters_star below (alternating large-star/
-    small-star, O(log²) rounds regardless of diameter — property-tested
-    equal to this function).
+    frame persisted on cluster storage.
 
     Raises RuntimeError if not converged within max_iter (never observed:
     diameter-bound)."""
@@ -528,91 +525,6 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         if changed == 0:
             return labels
     raise RuntimeError(f"neardup_clusters did not converge in {max_iter} rounds")
-
-
-def neardup_clusters_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
-    """Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014) — the diameter-robust twin of neardup_clusters:
-    min-label propagation needs graph-diameter rounds (fine for near-dup
-    chains, ruinous for a 10^6-node path), star contraction converges in
-    O(log² n) rounds on ANY topology. Same output contract:
-    (doc_id, cluster_id = min doc_id of the component) — property-tested
-    identical to neardup_clusters, including on long-path graphs.
-
-    Per round, two edge rewrites, each one groupBy + one equi-join (all
-    map-side-partial, no collect):
-      large-star: every node u links its LARGER neighbors to
-                  m(u) = min({u} ∪ N(u));
-      small-star: with edges directed big→small, every node u links its
-                  (smaller) neighbors and itself to m(u).
-    Convergence = the canonical (big→small, distinct) edge set is stable
-    (checked by count + two independent xxhash64 checksums — collision-safe
-    in practice and bounded by max_iter regardless). At convergence the
-    edges form stars: every node points directly at its component min."""
-    raw = pairs.select(F.col("doc_a").cast("long").alias("u"),
-                       F.col("doc_b").cast("long").alias("v"))
-    e = raw.filter(F.col("u") != F.col("v"))
-    # Node set from the RAW pairs (before the u != v filter): a doc appearing
-    # only in self-pairs must still come out self-labeled, exactly as
-    # neardup_clusters emits it — deriving nodes from the filtered edges
-    # silently dropped such docs (a contract divergence on degenerate input).
-    nodes = (
-        raw.select(F.col("u").alias("doc_id"))
-        .unionByName(raw.select(F.col("v").alias("doc_id")))
-        .distinct()
-    )
-
-    def canonical(edges: DataFrame) -> DataFrame:
-        return (
-            edges.filter(F.col("u") != F.col("v"))
-            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .distinct()
-        )
-
-    def signature(edges: DataFrame):
-        # bit_xor (not SUM — ANSI long overflow on summed 64-bit hashes):
-        # order-insensitive and exact over the DISTINCT canonical edge set
-        row = edges.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h1"),
-            F.bit_xor(F.xxhash64("v", "u", F.lit(7))).alias("h2"),
-        ).collect()[0]
-        return (row.n, row.h1, row.h2)
-
-    def large_star(edges: DataFrame) -> DataFrame:
-        bi = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = bi.groupBy("u").agg(F.min("v").alias("mn")).select(
-            "u", F.least("u", "mn").alias("m"))
-        return (
-            bi.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-
-    def small_star(edges: DataFrame) -> DataFrame:
-        d = canonical(edges)  # u > v for every row
-        m = d.groupBy("u").agg(F.min("v").alias("m"))
-        to_min = d.join(m, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
-        self_link = m.select("u", F.col("m").alias("v"))
-        return to_min.unionByName(self_link)
-
-    cur = canonical(e).localCheckpoint(eager=True)
-    sig = signature(cur)
-    for _ in range(max_iter):
-        nxt = canonical(small_star(large_star(cur))).localCheckpoint(eager=True)
-        nsig = signature(nxt)
-        cur = nxt
-        if nsig == sig:
-            # stars: each non-root points straight at its component min
-            labels = cur.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
-            roots = nodes.join(
-                cur.select(F.col("u").alias("doc_id")), "doc_id", "left_anti"
-            ).select("doc_id", F.col("doc_id").alias("cluster_id"))
-            return labels.unionByName(roots)
-        sig = nsig
-    raise RuntimeError(f"neardup_clusters_star did not converge in {max_iter} rounds")
 
 
 def contamination_flags(documents: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:

@@ -25,8 +25,6 @@ from ..kernels import checkbox as cbk
 from ..kernels import detection, enhance
 from ..ocr import association, engine
 
-MODES = ("basico", "segmentado", "tabla", "documento_completo", "checkboxes")
-
 
 def _bbox_overlaps(a, b) -> bool:
     ax, ay, aw, ah = a

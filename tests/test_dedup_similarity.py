@@ -247,11 +247,27 @@ def _clusters(df):
     return sorted((r.doc_id, r.cluster_id) for r in df.collect())
 
 
-def test_star_cc_equals_label_propagation(spark):
-    """Property: neardup_clusters_star (large-star/small-star) produces the
-    SAME (doc_id, cluster_id=component min) labeling as min-label
-    propagation — on seeded random graphs, on a long path (the diameter
-    case star contraction exists for), and on real near-dup pairs."""
+def _union_find_clusters(edges):
+    """Driver-side connected components: (doc_id, component min) per node."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return sorted((n, find(n)) for n in parent)
+
+
+def test_neardup_clusters_equals_union_find(spark, corpus):
+    """neardup_clusters labels every doc with its component min — the same
+    labeling a driver-side union-find gives — on seeded random graphs, a
+    long path, duplicate/reversed edges, a self-pair and real near-dup
+    pairs."""
     import numpy as np
 
     cases = []
@@ -262,22 +278,15 @@ def test_star_cc_equals_label_propagation(spark):
         cases.append(sorted(es))
     cases.append([(i, i + 1) for i in range(60)])       # 61-node path, diameter 60
     cases.append([(0, 1), (1, 0), (2, 3), (3, 2)])      # duplicate/reversed edges
-    cases.append([(0, 1), (7, 7)])                      # self-pair-only doc: must
-    # still be emitted self-labeled (round-4 advisory: star dropped it when
-    # nodes came from the u != v-filtered edge set)
+    cases.append([(0, 1), (7, 7)])                      # self-pair-only doc stays
     for edges in cases:
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        # label propagation needs ~diameter rounds (80 covers the path case
-        # — the very cost profile the star variant exists to avoid)
-        lp = _clusters(dedup.neardup_clusters(pairs, max_iter=80))
-        star = _clusters(dedup.neardup_clusters_star(pairs))
-        assert lp == star, edges[:8]
-
-
-def test_star_cc_on_corpus_pairs(corpus):
+        # label propagation needs ~diameter rounds (80 covers the path case)
+        got = _clusters(dedup.neardup_clusters(pairs, max_iter=80))
+        assert got == _union_find_clusters(edges), edges[:8]
     pairs = dedup.ngram_jaccard_pairs(corpus, threshold=0.3)
-    assert _clusters(dedup.neardup_clusters(pairs)) == \
-        _clusters(dedup.neardup_clusters_star(pairs))
+    edges = [(r.doc_a, r.doc_b) for r in pairs.collect()]
+    assert _clusters(dedup.neardup_clusters(pairs)) == _union_find_clusters(edges)
 
 
 def test_lsh_hyperplanes_match_duckdb_derivation():
@@ -318,9 +327,9 @@ def test_lsh_bucket_table_matches_literal_form(vectors):
     planes = similarity.lsh_hyperplanes(64)
     lit = {r.vec_id: r.b for r in
            q.withColumn("b", similarity.lsh_bucket(F.col("qvec"), planes)).collect()}
-    tab = {r.vec_id: r.bucket for r in
-           similarity.lsh_buckets_table(vectors, dim=64).collect()}
-    assert lit == tab
+    arrow = {r.vec_id: r.bucket for r in
+             similarity._bucket_arrow(q, planes).collect()}
+    assert lit == arrow
 
 
 def test_ivf_table_matches_literal_assignments(vectors):

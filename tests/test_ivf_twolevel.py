@@ -25,7 +25,10 @@ def clustered(spark):
 
 
 def test_ivf_assign_groups_clusters(clustered):
-    assigned, centroids = similarity.ivf_assign(clustered, n_centroids=4, iters=4)
+    # the table-codebook quantizer that ivf_ann_topk, semdedup and
+    # hard_negatives run (the literal ivf_assign is its equality reference
+    # in test_dedup_similarity)
+    assigned, centroids = similarity.ivf_assign_table(clustered, n_centroids=4, iters=4)
     rows = assigned.select("vec_id", "centroid_id").collect()
     # vectors from the same ground-truth cluster land in the same centroid
     by_truth = {}
@@ -34,7 +37,7 @@ def test_ivf_assign_groups_clusters(clustered):
     for truth, cids in by_truth.items():
         dominant = max(set(cids), key=cids.count)
         assert cids.count(dominant) / len(cids) >= 0.9, truth
-    assert len(centroids) == 4
+    assert centroids.count() == 4
 
 
 def test_ivf_topk_recall_on_clustered(clustered):

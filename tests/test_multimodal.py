@@ -1,5 +1,5 @@
-"""Multimodal binary-column operators: real image ops, stubbed audio/video
-plumbing (schema + batch shape + determinism)."""
+"""Multimodal binary-column operators: image metadata through the engine's
+own codecs, on the mixed PNG/JPEG media store and on a corrupt payload."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,208 +28,3 @@ def test_image_metadata_corrupt_row(spark):
     df = spark.createDataFrame([("bad", b"not a png")], "media_ref string, bytes binary")
     r = multimodal.image_metadata(df).collect()[0]
     assert r.format == "unknown" and r.width == -1 and r.n_bytes == 9
-
-
-def test_image_resize_caps_dimension(media):
-    out = multimodal.image_resize(media, max_dim=100).collect()
-    for r in out:
-        assert max(r.width, r.height) <= 100
-    # bytes are decodable PNGs
-    from api_ocr_spark.imaging import png
-
-    img = png.decode_gray(bytes(out[0].bytes))
-    assert img.shape == (out[0].height, out[0].width)
-
-
-def test_decode_audio_real_wav(spark):
-    """REAL audio path: hand-built PCM WAVs (16-bit mono, 8-bit, stereo)
-    decode to exact feature values; junk quarantines to sample_rate=-1."""
-    import numpy as np
-
-    from api_ocr_spark.imaging import wav
-
-    t = np.arange(3200)
-    sine = (np.sin(2 * np.pi * 440 * t / 16000) * 20000).astype(np.int16)
-    stereo = np.stack([sine, -sine], axis=1).reshape(-1)  # L/R cancel to 0
-    import struct
-    pcm = stereo.astype("<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 2, 16000, 64000, 4, 16)
-    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm)
-    stereo_wav = b"RIFF" + struct.pack("<I", len(body)) + body
-
-    df = spark.createDataFrame(
-        [("mono", bytearray(wav.encode_wav(sine, 16000))),
-         ("stereo", bytearray(stereo_wav)),
-         ("junk", bytearray(b"not audio at all"))],
-        "media_ref string, bytes binary")
-    got = {r.media_ref: r for r in multimodal.decode_audio(df).collect()}
-    m = got["mono"]
-    assert m.sample_rate == 16000 and m.n_samples == 3200
-    assert abs(m.duration_s - 0.2) < 1e-9
-    expect_rms = float(np.sqrt(((sine.astype(np.float32) / 32768.0) ** 2).mean()))
-    assert abs(m.rms - expect_rms) < 1e-4
-    assert m.zero_crossings > 100  # 440 Hz over 0.2 s ≈ 176 crossings
-    s = got["stereo"]
-    assert s.sample_rate == 16000 and s.n_samples == 3200
-    assert s.rms == 0.0  # L/R average cancels exactly
-    j = got["junk"]
-    assert j.sample_rate == -1 and j.n_samples == 0
-
-
-def test_sample_video_frames_real_mjpeg(spark):
-    """REAL video path: an MJPEG-AVI built from engine-JPEG frames samples
-    back at the requested fps through the engine's own JPEG decode."""
-    import numpy as np
-
-    from api_ocr_spark.imaging import avi, jpeg, png
-    from api_ocr_spark.imaging.render import render_text_image
-
-    imgs = [render_text_image(f"video frame {i}", "plain", seed=i)
-            for i in range(6)]
-    frames = [jpeg.encode_gray_jpeg(im, 90) for im in imgs]
-    data = avi.encode_mjpeg_avi(frames, fps=10,
-                                width=imgs[0].shape[1], height=imgs[0].shape[0])
-    df = spark.createDataFrame(
-        [("vid", bytearray(data)), ("junk", bytearray(b"not a video"))],
-        "media_ref string, bytes binary")
-    rows = multimodal.sample_video_frames(df, fps=5.0).collect()
-    assert {r.media_ref for r in rows} == {"vid"}  # junk yields zero rows
-    idxs = sorted(r.frame_idx for r in rows)
-    assert idxs == [0, 2, 4]  # native 10 fps sampled at 5 fps => every 2nd
-    for r in rows:
-        assert abs(r.ts_s - r.frame_idx / 10.0) < 1e-9
-        dec = png.decode_gray(bytes(r.frame_png))
-        assert np.array_equal(dec, jpeg.decode_gray_jpeg(frames[r.frame_idx]))
-
-
-def test_image_dhash_compression_invariant(spark):
-    """dHash collides on identical renders, stays within hamming 6 across
-    JPEG re-encodes of the same page, and separates different page text
-    (measured floor 19 bits) — thresholds from the calibration sweep in
-    the operator docstring."""
-    from api_ocr_spark.imaging import jpeg, png
-    from api_ocr_spark.imaging.render import render_text_image
-
-    base = render_text_image("hello perceptual world", "plain", seed=1)
-    other = render_text_image("invoice total due 1234", "plain", seed=1)
-    rows = [
-        ("base_png", bytearray(png.encode_gray(base))),
-        ("base_png_again", bytearray(png.encode_gray(base))),
-        ("base_q90", bytearray(jpeg.encode_gray_jpeg(base, 90))),
-        ("base_q50", bytearray(jpeg.encode_gray_jpeg(base, 50))),
-        ("other_png", bytearray(png.encode_gray(other))),
-        ("junk", bytearray(b"not an image")),
-    ]
-    df = spark.createDataFrame(rows, "media_ref string, bytes binary")
-    got = {r.media_ref: r for r in multimodal.image_dhash(df).collect()}
-
-    def ham(a, b):
-        return bin((got[a].dhash ^ got[b].dhash) & ((1 << 64) - 1)).count("1")
-
-    assert got["junk"].decode_ok is False
-    assert all(got[k].decode_ok for k in got if k != "junk")
-    assert got["base_png"].dhash == got["base_png_again"].dhash
-    assert ham("base_png", "base_q90") <= 6
-    assert ham("base_png", "base_q50") <= 6
-    assert ham("base_png", "other_png") >= 19
-    assert ham("base_q90", "other_png") >= 13  # 19 floor minus 6 re-encode
-
-
-def test_image_neardup_pairs_banded(spark):
-    """Banded near-dup join finds every same-page compression twin and no
-    cross-page pair; junk rows are quarantined out of the candidate set."""
-    from api_ocr_spark.imaging import jpeg, png
-    from api_ocr_spark.imaging.render import render_text_image
-
-    a = render_text_image("hello perceptual world", "plain", seed=1)
-    b = render_text_image("completely different content here", "plain", seed=1)
-    rows = [
-        ("a_png", bytearray(png.encode_gray(a))),
-        ("a_q90", bytearray(jpeg.encode_gray_jpeg(a, 90))),
-        ("a_q50", bytearray(jpeg.encode_gray_jpeg(a, 50))),
-        ("b_png", bytearray(png.encode_gray(b))),
-        ("b_q75", bytearray(jpeg.encode_gray_jpeg(b, 75))),
-        ("junk", bytearray(b"never decodes")),
-    ]
-    df = spark.createDataFrame(rows, "media_ref string, bytes binary")
-    pairs = {(r.ref_a, r.ref_b): r.hamming
-             for r in multimodal.image_neardup_pairs(df).collect()}
-    a_refs, b_refs = {"a_png", "a_q90", "a_q50"}, {"b_png", "b_q75"}
-    for x, y in pairs:
-        assert x < y
-        assert ({x, y} <= a_refs) or ({x, y} <= b_refs)  # no cross-page pair
-        assert "junk" not in (x, y)
-    # all three a-side pairs and the b-side pair surface (hamming <= 6,
-    # so <= 3 differing bits per side of the worst split still leaves a
-    # clean 16-bit lane for these measured distances)
-    assert ("a_png", "a_q90") in pairs and ("a_png", "a_q50") in pairs
-    assert ("a_q50", "a_q90") in pairs
-    assert ("b_png", "b_q75") in pairs
-    assert all(h <= 6 for h in pairs.values())
-
-
-def test_audio_stub_raises_without_fake(media):
-    from py4j.protocol import Py4JJavaError
-
-    with pytest.raises(Exception) as exc_info:
-        multimodal.decode_audio_stub(media, fake=False).count()
-    assert "NotImplementedError" in str(exc_info.value) or isinstance(
-        exc_info.value, Py4JJavaError)
-
-
-def test_audio_stub_fake_deterministic(media):
-    a = multimodal.decode_audio_stub(media, fake=True).orderBy("media_ref").collect()
-    b = multimodal.decode_audio_stub(media, fake=True).orderBy("media_ref").collect()
-    assert [(r.media_ref, r.rms) for r in a] == [(r.media_ref, r.rms) for r in b]
-    for r in a:
-        assert r.sample_rate == 16000 and r.n_samples == 1600
-        assert r.duration_s == 0.1 and r.rms > 0
-
-
-def test_video_stub_fake_frames(media):
-    frames = multimodal.sample_video_frames_stub(media, fps=2.0, fake=True).collect()
-    assert frames
-    from api_ocr_spark.imaging import png
-
-    by_ref = {}
-    for r in frames:
-        by_ref.setdefault(r.media_ref, []).append(r)
-        img = png.decode_gray(bytes(r.frame_png))
-        assert img.ndim == 2 and img.size > 0
-    for ref, rs in by_ref.items():
-        idxs = sorted(r.frame_idx for r in rs)
-        assert idxs == list(range(len(idxs)))  # dense frame indices
-        assert all(abs(r.ts_s - r.frame_idx / 2.0) < 1e-9 for r in rs)
-
-
-def test_image_neardup_clusters_keeper_contract(spark):
-    """Pairs resolve to components with the lexicographic-min ref as
-    cluster_id and exactly one keeper; singletons self-cluster; junk is
-    quarantined out."""
-    from api_ocr_spark.imaging import jpeg, png
-    from api_ocr_spark.imaging.render import render_text_image
-
-    a = render_text_image("hello perceptual world", "plain", seed=1)
-    b = render_text_image("completely different content here", "plain", seed=1)
-    c = render_text_image("a third unrelated page", "plain", seed=2)
-    rows = [
-        ("a_png", bytearray(png.encode_gray(a))),
-        ("a_q90", bytearray(jpeg.encode_gray_jpeg(a, 90))),
-        ("a_q50", bytearray(jpeg.encode_gray_jpeg(a, 50))),
-        ("b_png", bytearray(png.encode_gray(b))),
-        ("b_q75", bytearray(jpeg.encode_gray_jpeg(b, 75))),
-        ("solo", bytearray(png.encode_gray(c))),
-        ("junk", bytearray(b"never decodes")),
-    ]
-    df = spark.createDataFrame(rows, "media_ref string, bytes binary")
-    got = {r.media_ref: r for r in
-           multimodal.image_neardup_clusters(df).collect()}
-    assert set(got) == {"a_png", "a_q90", "a_q50", "b_png", "b_q75", "solo"}
-    for ref in ("a_png", "a_q90", "a_q50"):
-        assert got[ref].cluster_id == "a_png"
-    for ref in ("b_png", "b_q75"):
-        assert got[ref].cluster_id == "b_png"
-    assert got["solo"].cluster_id == "solo" and got["solo"].keep
-    keepers = sorted(r.media_ref for r in got.values() if r.keep)
-    assert keepers == ["a_png", "b_png", "solo"]

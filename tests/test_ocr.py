@@ -292,40 +292,3 @@ def test_estructurar_texto_ocr_shape():
     # time '12:30' (\b splits at the colon) — faithful semantics
     assert d["dias"] == ["lunes", "lunes 12"]
     assert d["fechas"] == ["5 de enero de 2024"]
-
-
-def test_associate_checkboxes_with_text_nearest_above():
-    cbs = [{"bbox": (10, 200, 18, 18)}, {"bbox": (10, 20, 18, 18)}]
-    trs = [
-        {"bbox": (5, 100, 60, 14), "text": "far above"},    # center 107, dist 102
-        {"bbox": (5, 150, 60, 14), "text": "near above"},   # center 157, dist 52
-        {"bbox": (5, 240, 60, 14), "text": "below"},        # center below cb0
-    ]
-    out = association.associate_checkboxes_with_text(cbs, trs)
-    # cb0 center 209: 'near above' wins (dist 52); 'far above' at 102 >= 100
-    assert out[0]["associated_text"] == "near above"
-    assert out[0]["distance_to_text"] == 52
-    # cb1 center 29: nothing above → '' / -1 (reference defaults)
-    assert out[1]["associated_text"] == "" and out[1]["distance_to_text"] == -1
-
-
-def test_associate_checkboxes_with_text_advanced_sides():
-    cb = {"bbox": (100, 100, 18, 18)}  # center (109,109)
-    left = {"bbox": (40, 102, 40, 14), "text": "left"}      # same line, fully left (center 60, dist 49)
-    right = {"bbox": (130, 102, 60, 14), "text": "right"}   # same line, fully right (center 160, dist 51)
-    above = {"bbox": (95, 30, 60, 14), "text": "above"}     # case-2 score 72 + 16*0.5 = 80
-    out = association.associate_checkboxes_with_text_advanced([dict(cb)], [left, right, above])
-    assert out[0]["associated_text"] == "left" and out[0]["association_side"] == "left"
-    assert out[0]["association_confidence"] == max(0, min(100, 100 - 49 / 2))
-    # without the left candidate, right (51) beats above (80) — the
-    # reference compares raw scores across cases
-    out = association.associate_checkboxes_with_text_advanced([dict(cb)], [right, above])
-    assert out[0]["association_side"] == "right"
-    # consider_right=False → falls through to 'above'
-    out = association.associate_checkboxes_with_text_advanced(
-        [dict(cb)], [right, above], consider_right=False)
-    assert out[0]["association_side"] == "above"
-    # nothing in range → '' and confidence 0
-    out = association.associate_checkboxes_with_text_advanced(
-        [dict(cb)], [{"bbox": (95, 600, 60, 14), "text": "far"}])
-    assert out[0]["associated_text"] == "" and out[0]["association_confidence"] == 0

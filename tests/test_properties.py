@@ -117,42 +117,3 @@ def test_composite_transforms_roundtrip():
             img = render._apply_noise(img, nprng)
         got = engine.ocr_image(png.decode_gray(png.encode_gray(img)))
         assert got.replace("\n", " ") == text, (combo, seed, text)
-
-
-@settings(max_examples=60, deadline=None)
-@given(st.lists(st.integers(min_value=-32768, max_value=32767),
-                min_size=0, max_size=400),
-       st.sampled_from([8000, 16000, 44100]))
-def test_wav_roundtrip_lossless(samples, rate):
-    """PCM16 WAV encode→decode is exact: int16/32768 is representable in
-    float32, so w*32768 recovers the source bit-for-bit (incl. empty and
-    odd-length payloads exercising the word-align padding path)."""
-    from api_ocr_spark.imaging import wav
-
-    src = np.asarray(samples, dtype=np.int16)
-    w, r = wav.decode_wav(wav.encode_wav(src, rate))
-    assert r == rate and w.size == src.size
-    assert np.array_equal((w * 32768.0).astype(np.int16), src)
-
-
-@settings(max_examples=25, deadline=None)
-@given(st.lists(st.binary(min_size=2, max_size=300).map(lambda b: b"\xff\xd8" + b),
-                min_size=1, max_size=8),
-       st.sampled_from([1, 5, 10, 30]))
-def test_avi_container_roundtrip(frames, fps):
-    """MJPEG-AVI container encode→decode returns the exact frame byte
-    strings and fps for arbitrary (even odd-length) payloads — the
-    container layer is codec-agnostic, so random bytes after an SOI marker
-    are a valid container test."""
-    from api_ocr_spark.imaging import avi
-
-    data = avi.encode_mjpeg_avi(frames, fps=fps)
-    back, got_fps = avi.decode_mjpeg_avi(data)
-    assert back == frames
-    assert got_fps == float(fps)
-    # truncation raises, never returns garbage (cutting 3 bytes guarantees
-    # the final idx1 chunk's declared size overruns the buffer — a halfway
-    # cut could land exactly on a chunk boundary and legitimately succeed)
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        avi.decode_mjpeg_avi(data[:-3])

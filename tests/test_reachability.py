@@ -1,10 +1,12 @@
-"""Every package module is reached from an entry point, or is named here.
+"""Every package module and top-level definition is reached from an entry
+point, or is named here.
 
 The engine's entry points are the oracle queries (`__spark_entry__.py`),
 the extraction job (`jobs/`), the benchmarks (`bench.py`, `perfbench/`) and
-the operator tools (`tools/`). A module none of them imports is code that
-only tests run: it gets wired in under an oracle or deleted, and the few
-kept on purpose are listed in KEPT_UNREACHED with the reason.
+the operator tools (`tools/`). A module or definition none of them reaches
+is code that only tests run: it gets wired in under an oracle or deleted,
+and the few kept on purpose are listed in KEPT_UNREACHED and
+KEPT_UNREACHED_DEFS with the reason.
 """
 
 import ast
@@ -21,12 +23,34 @@ KEPT_UNREACHED = {
     "ocr.postprocess": "python twins of the Catalyst text extractors in functions/text.py",
 }
 
+KEPT_UNREACHED_DEFS = {
+    "operators.pipeline.reassemble": "one-shuffle reassembly the two-level reassemble_spans is checked against",
+    "operators.similarity.lsh_bucket": "literal-expression bucketer the Arrow bucketer is checked against",
+    "operators.similarity.ivf_assign": "literal-codebook quantizer ivf_assign_table is checked against",
+    "operators.similarity.ivf_topk": "literal-codebook top-k ivf_topk_table is checked against",
+    "functions.html.classify_blocks": "python boilerplate classifier the Catalyst twin is checked against",
+    "functions.html.html_boilerpipe": "python boilerplate extractor the Catalyst twin is checked against",
+    "imaging.render.render_checkbox_form": "renders the checkbox-form fixtures of the checkbox-mode tests",
+}
+
 
 def _py_files(d):
     for dirpath, _, names in os.walk(d):
         for n in sorted(names):
             if n.endswith(".py"):
                 yield os.path.join(dirpath, n)
+
+
+def _entry_paths():
+    paths = [os.path.join(ROOT, f) for f in ENTRY_FILES]
+    for d in ENTRY_DIRS:
+        paths.extend(_py_files(os.path.join(ROOT, d)))
+    return paths
+
+
+def _parse(path):
+    with open(path) as f:
+        return ast.parse(f.read(), path)
 
 
 def _package_modules():
@@ -49,10 +73,8 @@ def _imported(path, modules):
     """
     rel = os.path.relpath(path, ROOT)[:-3].split(os.sep)
     pkg_parts = rel[:-1]
-    with open(path) as f:
-        tree = ast.parse(f.read(), path)
     found = set()
-    for node in ast.walk(tree):
+    for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Import):
             bases = [a.name for a in node.names]
             names = []
@@ -78,12 +100,65 @@ def _imported(path, modules):
 
 def test_only_named_modules_are_unreached_from_entry_points():
     modules = _package_modules()
-    todo = [os.path.join(ROOT, f) for f in ENTRY_FILES]
-    for d in ENTRY_DIRS:
-        todo.extend(_py_files(os.path.join(ROOT, d)))
+    todo = _entry_paths()
     reached = set()
     while todo:
         for mod in _imported(todo.pop(), modules) - reached:
             reached.add(mod)
             todo.append(modules[mod])
     assert set(modules) - reached == set(KEPT_UNREACHED)
+
+
+def _names(node):
+    """Every bare name a node mentions: variables, attributes, imported names."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def _defined_name(stmt):
+    """The name a top-level def, class or single-name assignment binds."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return stmt.name
+    if isinstance(stmt, ast.Assign) and len(stmt.targets) == 1 \
+            and isinstance(stmt.targets[0], ast.Name):
+        return stmt.targets[0].id
+    if isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name):
+        return stmt.target.id
+    return None
+
+
+def test_only_named_definitions_are_unreached_from_entry_points():
+    """Names are matched bare: a name mentioned by reached code reaches
+    every top-level definition of that name, whatever module defines it,
+    so a name shared between modules can only over-count reach."""
+    defs = {}  # bare name -> [(dotted definition, node)]
+    live = set()
+    for path in _entry_paths():
+        live |= _names(_parse(path))
+    for mod, path in _package_modules().items():
+        if mod in KEPT_UNREACHED:
+            continue
+        for stmt in _parse(path).body:
+            name = _defined_name(stmt)
+            if name is None:
+                if not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                    live |= _names(stmt)
+            else:
+                defs.setdefault(name, []).append((f"{mod}.{name}", stmt))
+    todo = list(live & set(defs))
+    while todo:
+        for _, node in defs[todo.pop()]:
+            for name in _names(node) - live:
+                live.add(name)
+                if name in defs:
+                    todo.append(name)
+    unreached = {dotted for name, ds in defs.items() if name not in live
+                 for dotted, _ in ds}
+    assert unreached == set(KEPT_UNREACHED_DEFS)

