@@ -168,13 +168,13 @@ def ngram_jaccard_pairs(
     return out.select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard")
 
 
-def minhash_signatures(documents: DataFrame, num_hashes: int = 32) -> DataFrame:
-    """MinHash signatures: min over shingles of the md5-derived permutation
-    family hᵢ(x) = (aᵢ·x + bᵢ) mod (2³¹−1) (minhash_perm_constants) — pure
-    64-bit integer arithmetic both here and in the DuckDB oracle, so the
-    signatures are engine-identical. One groupBy (map-side partial min);
-    signature is an array column ordered by permutation index."""
-    sh = doc_shingle_hashes(documents)
+def minhash_signatures(sh: DataFrame, num_hashes: int = 32) -> DataFrame:
+    """MinHash signatures of a `doc_shingle_hashes` frame: min over shingles
+    of the md5-derived permutation family hᵢ(x) = (aᵢ·x + bᵢ) mod (2³¹−1)
+    (minhash_perm_constants) — pure 64-bit integer arithmetic both here and
+    in the DuckDB oracle, so the signatures are engine-identical. One
+    groupBy (map-side partial min); signature is an array column ordered by
+    permutation index."""
     perms = minhash_perm_constants(num_hashes)
     mins = [
         F.min(F.pmod(F.lit(a) * F.col("shingle") + F.lit(b), F.lit(MINHASH_PRIME))).alias(f"h{i}")
@@ -192,30 +192,20 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     verify: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-dup candidates: band the signature (rows = hashes/bands
     per band), meet within (band_id, band_hash) buckets, optionally verify
     with exact Jaccard on candidate pairs only (linear + bucket joins — the
     scale path; no quadratic shingle join).
 
-    `materialize` localCheckpoints the hashed-shingle frame: the plan
-    references it from FIVE subtrees (two band-join sides, two verify sides,
-    sizes), and Spark re-executes the shingle scan per branch otherwise
-    (measured ~40% of query wall). The production analogue is checkpointing
+    The hashed-shingle frame is localCheckpointed: the plan references it
+    from FIVE subtrees (two band-join sides, two verify sides, sizes), and
+    Spark re-executes the shingle scan per branch otherwise (measured ~40%
+    of query wall). The production analogue is checkpointing
     shingles/signatures to cluster storage before the joins."""
     rows = num_hashes // bands
-    if materialize:
-        sh0 = doc_shingle_hashes(documents).localCheckpoint(eager=False)
-        perms = minhash_perm_constants(num_hashes)
-        mins = [
-            F.min(F.pmod(F.lit(a) * F.col("shingle") + F.lit(b), F.lit(MINHASH_PRIME))).alias(f"h{i}")
-            for i, (a, b) in enumerate(perms)
-        ]
-        sig = sh0.groupBy("doc_id").agg(*mins).select(
-            "doc_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("signature"))
-    else:
-        sig = minhash_signatures(documents, num_hashes)
+    sh = doc_shingle_hashes(documents).localCheckpoint(eager=False)
+    sig = minhash_signatures(sh, num_hashes)
 
     def band_key(b: int):
         # polynomial fold of the band's r signature values (each < 2^31, so
@@ -254,9 +244,8 @@ def minhash_lsh_pairs(
     if not verify:
         return cand
     # exact-Jaccard verification restricted to candidate pairs (hashed
-    # shingles: identity-equality is all Jaccard needs); reuses the
-    # materialized shingle frame when available
-    sh = sh0 if materialize else doc_shingle_hashes(documents)
+    # shingles: identity-equality is all Jaccard needs) over the same
+    # materialized shingle frame
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingle"))
     sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingle"))

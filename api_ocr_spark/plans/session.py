@@ -32,7 +32,7 @@ def get_spark(
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 32)
     b = (

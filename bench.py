@@ -1,26 +1,29 @@
 """Benchmark harness.
 
 Default: run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS, default: every core] and
+print ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Measurements are ADMISSION-GATED (tools/gate.py): every timed attempt is
-bracketed by a whole-box BLAS probe; an attempt whose pre- OR post-probe
-exceeds the gate is discarded as contaminated, and each query reports the
-min of its clean runs plus n_clean — so a round-over-round delta in
-BENCH_r{N}.json is a code comparison, not a weather report. The output also
-carries the commit hash, the per-query probe history, fresh-JVM re-runs
-of the 3 slowest non-flagship queries (in-suite vs isolated shipped side
-by side — controls for accumulated-session inflation the probe can't
-see), and measured IVF recall@5 against the exact brute-force top-k. The
-JSON is also written to BENCH/bench_latest.json and appended to
-BENCH/bench_history.jsonl so a truncated stdout capture cannot lose the
-round's evidence. Full run ~4-6 min; `--no-isolate` gets the ~2 min form.
+Measurements are ADMISSION-GATED (tools/gate.py): after the warm-up the
+run calibrates itself (the median of 5 probes, `quiet_ms`), then every timed
+attempt is bracketed by a BLAS probe; an attempt whose pre- OR post-probe
+exceeds GATE_RATIO x quiet_ms is discarded as contaminated, and each query
+reports the min of its clean runs plus n_clean — so a round-over-round delta
+in BENCH_r{N}.json is a code comparison, not a weather report. The output
+also carries the commit hash, quiet_ms, the per-query probe history,
+fresh-JVM re-runs of the 3 slowest non-flagship queries (in-suite vs
+isolated shipped side by side — controls for accumulated-session inflation
+the probe can't see), and measured IVF recall@5 against the exact
+brute-force top-k. The JSON is also written to BENCH/bench_latest.json and
+appended to BENCH/bench_history.jsonl so a truncated stdout capture cannot
+lose the round's evidence. `--no-isolate` skips the fresh-JVM re-runs
+(~8 min at sf0.1 on 4 cores).
 
-`--cores N --flagship-only` runs just the flagship extraction (used by
-tools/scaling_run_one.py to measure N-vs-4N throughput scaling in separate
-JVMs; that harness does its own gating around the whole child process, so
-gating is skipped inside it).
+`--cores K --flagship-only --multiply M` runs just the flagship extraction
+over an M-times replicated corpus, once and ungated: tools/scaling.py runs
+it in separate JVMs at N and 4N cores and gates around the whole child
+process.
 """
 
 from __future__ import annotations
@@ -34,7 +37,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from tools.gate import GATE_MS_DEFAULT, commit_hash, probe_ms  # noqa: E402
+from tools import gate  # noqa: E402
 
 HEADLINE = [
     "ocr_documento_completo",
@@ -99,10 +102,9 @@ HEADLINE = [
 def child_env() -> dict:
     """Environment for a child bench process. get_spark pins
     OPENBLAS/OMP/MKL threads to 1 in os.environ (for the executor workers it
-    forks); a child inheriting that env loads numpy PINNED and its admission
-    probe runs single-threaded — ~230 ms vs the multithreaded ~15 ms the
-    25 ms gate is calibrated for, so every child attempt read as
-    contaminated.
+    forks); a child inheriting that env would load numpy PINNED and probe
+    on one core only, while an unpinned probe sees contention on other
+    cores.
     Children must start with the pinning vars ABSENT — their own get_spark
     re-pins before any executor worker is forked, and their driver-side
     numpy (imported before get_spark runs) stays multithreaded like ours."""
@@ -117,30 +119,31 @@ def materialize(df) -> int:
     return df.count()
 
 
-def timed_clean(run_fn, gate_ms: float, target_clean: int = 2,
+def timed_clean(run_fn, quiet: float, target_clean: int = 2,
                 max_attempts: int = 4, post_fn=None):
-    """Run `run_fn` until `target_clean` admission-clean attempts (pre- and
-    post-probe both under the gate) or `max_attempts`. Returns
-    (best_clean_sec, n_clean, probe_history, last_result); if no attempt was
-    clean, best falls back to the fastest contaminated attempt (contention
-    only ever ADDS time, so min is the least-wrong summary). `post_fn` runs
-    UNTIMED after each attempt's post-probe (cache cleanup stays out of both
-    the measurement and the probe bracket)."""
+    """Run `run_fn` until `target_clean` admission-clean attempts
+    (gate.admitted against the run's `quiet` probe median) or
+    `max_attempts`. Returns (best_clean_sec, n_clean, probe_history,
+    last_result); if no attempt was clean, best falls back to the fastest
+    contaminated attempt (contention only ever ADDS time, so min is the
+    least-wrong summary). `post_fn` runs UNTIMED after each attempt's
+    post-probe (cache cleanup stays out of both the measurement and the
+    probe bracket)."""
     clean: list[float] = []
     allt: list[float] = []
     probes: list[list[float]] = []
     result = None
     for _ in range(max_attempts):
-        pre = probe_ms()
+        pre = gate.probe_ms()
         t0 = time.perf_counter()
         result = run_fn()
         el = time.perf_counter() - t0
-        post = probe_ms()
+        post = gate.probe_ms()
         if post_fn is not None:
             post_fn()
         probes.append([round(pre, 1), round(post, 1)])
         allt.append(el)
-        if pre <= gate_ms and post <= gate_ms:
+        if gate.admitted(pre, post, quiet):
             clean.append(el)
             if len(clean) >= target_clean:
                 break
@@ -151,10 +154,10 @@ def timed_clean(run_fn, gate_ms: float, target_clean: int = 2,
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int,
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     ap.add_argument("--flagship-only", action="store_true")
     ap.add_argument("--queries", nargs="*", default=None)
-    ap.add_argument("--gate-ms", type=float, default=GATE_MS_DEFAULT)
     ap.add_argument("--clean-runs", type=int, default=2,
                     help="clean attempts per query (min wins)")
     ap.add_argument("--max-attempts", type=int, default=4,
@@ -188,6 +191,8 @@ def main() -> None:
         .repartition(args.cores)
     )
     materialize(extract_documents(warm_docs, mode="documento_completo"))
+    # calibrate after the warm-up, in the state every pre-probe will see
+    quiet = gate.quiet_ms()
 
     timings: dict[str, float] = {}
     counts: dict[str, int] = {}
@@ -195,8 +200,8 @@ def main() -> None:
     probes: dict[str, list] = {}
     if args.multiply > 1:
         # flagship over a k-replicated corpus (doc_ids remapped to stay
-        # unique). Single ungated run by design: tools/scaling_run_one.py
-        # gates around this whole process.
+        # unique). Single ungated run by design: tools/scaling.py gates
+        # around this whole process.
         docs = spark.read.parquet(os.path.join(args.sf_dir, "documents.parquet"))
         base = docs.count()
         multiplied = docs.crossJoin(
@@ -228,7 +233,7 @@ def main() -> None:
             except Exception:  # noqa: BLE001 — cleanup is best-effort
                 pass
 
-        best, nc, ph, cnt = timed_clean(run, args.gate_ms, args.clean_runs,
+        best, nc, ph, cnt = timed_clean(run, quiet, args.clean_runs,
                                         max_attempts=args.max_attempts,
                                         post_fn=post)
         timings[name] = round(best, 3)
@@ -250,8 +255,9 @@ def main() -> None:
             pass
 
     snapshot({"queries": timings, "counts": counts, "n_clean": n_clean,
-              "probes_ms": probes, "gate_ms": args.gate_ms,
-              "commit": commit_hash(), "docs": n_docs, "cores": args.cores},
+              "probes_ms": probes, "quiet_ms": round(quiet, 1),
+              "gate_ratio": gate.GATE_RATIO, "commit": gate.commit_hash(),
+              "docs": n_docs, "cores": args.cores},
              "suite")
     in_suite = dict(timings)
     isolated: dict[str, dict] = {}
@@ -271,7 +277,7 @@ def main() -> None:
             child = subprocess.run(
                 [sys.executable, os.path.abspath(__file__),
                  "--cores", str(args.cores), "--sf-dir", args.sf_dir,
-                 "--queries", name, "--gate-ms", str(args.gate_ms),
+                 "--queries", name,
                  "--clean-runs", str(args.clean_runs), "--max-attempts", "6",
                  "--no-isolate"],
                 capture_output=True, text=True, env=child_env(),
@@ -300,8 +306,9 @@ def main() -> None:
         "counts": counts,
         "n_clean": n_clean,
         "probes_ms": probes,
-        "gate_ms": args.gate_ms,
-        "commit": commit_hash(),
+        "quiet_ms": round(quiet, 1),
+        "gate_ratio": gate.GATE_RATIO,
+        "commit": gate.commit_hash(),
         "total_sec": round(sum(timings.values()), 3),
         "docs": n_docs,
         "cores": args.cores,

@@ -11,6 +11,7 @@ KEPT_UNREACHED_DEFS with the reason.
 
 import ast
 import os
+import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "api_ocr_spark"
@@ -162,3 +163,18 @@ def test_only_named_definitions_are_unreached_from_entry_points():
     unreached = {dotted for name, ds in defs.items() if name not in live
                  for dotted, _ in ds}
     assert unreached == set(KEPT_UNREACHED_DEFS)
+
+
+DOCUMENTED_IN = ("CLAUDE.md", "README.md", os.path.join(".claude", "skills", "verify", "SKILL.md"))
+
+
+def test_documented_commands_exist():
+    """Every `python <file>.py` command the docs tell a reader to run names a
+    file in the repo, so a deleted tool cannot linger in the docs."""
+    missing = []
+    for doc in DOCUMENTED_IN:
+        with open(os.path.join(ROOT, doc)) as f:
+            for script in re.findall(r"\bpython3? ([\w./-]+\.py)\b", f.read()):
+                if not os.path.isfile(os.path.join(ROOT, script)):
+                    missing.append(f"{doc}: {script}")
+    assert missing == []

@@ -9,11 +9,12 @@ from __future__ import annotations
 
 import cProfile
 import io
+import os
 import pstats
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from api_ocr_spark.config import RENDER_SEED_MULT, SCENARIO_MULT  # noqa: E402
 from api_ocr_spark.imaging import png as png_codec  # noqa: E402

@@ -1,17 +1,16 @@
-"""Scaling-efficiency evidence (BASELINE.md): run the flagship extraction at
-several parallelism levels in separate JVMs on the same input and report
-throughput at each, plus N→4N efficiency at BOTH the spec protocol
-(local[8] → local[32]) and the bandwidth-isolated pair (local[4] →
-local[16]). efficiency = (throughput_4N / throughput_N) / 4.
+"""Admission-gated N→4N throughput scaling of the flagship extraction
+(BASELINE.md: efficiency >= 0.8 between two parallelism levels).
 
-Usage: python tools/scaling.py [--cores 4,8,16,32] [--sf-dir /root/testdata/sf0.1]
-Prints one JSON line; pass --write to regenerate BENCH/BASELINE.md (the
-checked-in report also carries hand-written bus-saturation evidence — prefer
-tools/scaling_run_one.py per level, which admission-gates on box health and
-accumulates BENCH/scaling_runs.jsonl for min-of-clean-runs reporting).
+N = max(1, cpu_count // 4). Each run is `bench.py --cores K --flagship-only
+--multiply REPLICATE` in its own JVM, bracketed by this process's probes and
+admitted by gate.admitted against this process's quiet_ms(). The levels
+interleave N, 4N, 4N, N, N, 4N so slow drift lands on both. Every run appends
+a row to BENCH/scaling_runs.jsonl, and one JSON line is printed: per level
+the best clean docs/s and n_clean, and efficiency = (dps_4N / dps_N) / 4,
+null when either level has no clean run.
 
-Never run anything else concurrently: CPU/memory-bandwidth contention
-corrupts the efficiency number (host bursts >40% observed; gate each run).
+Usage: python tools/scaling.py [--sf-dir /root/testdata/sf0.1]
+Never run anything else while it runs (~18 min on 4 cores at sf0.1).
 """
 
 from __future__ import annotations
@@ -21,119 +20,69 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+import bench  # noqa: E402
+from tools import gate  # noqa: E402
+
+# fixed before any measurement: x4 sf0.1 takes ~4 min on 1 core and ~1 min
+# on 4, so per-job fixed cost (JVM, warm-up, planning) stays small
+REPLICATE = 4
+REPS = 3
+LOG = os.path.join(REPO, "BENCH", "scaling_runs.jsonl")
 
 
-def run_bench(cores: int, sf_dir: str, multiply: int) -> dict:
+def run_one(cores: int, sf_dir: str, quiet: float) -> dict:
+    pre = gate.probe_ms()
     out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py"),
-         "--cores", str(cores), "--sf-dir", sf_dir, "--flagship-only",
-         "--multiply", str(multiply)],
-        capture_output=True, text=True, check=True, cwd=REPO,
-    )
-    line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
+        [sys.executable, os.path.join(REPO, "bench.py"), "--cores", str(cores),
+         "--sf-dir", sf_dir, "--flagship-only", "--multiply", str(REPLICATE)],
+        capture_output=True, text=True, check=True, cwd=REPO, env=bench.child_env())
+    post = gate.probe_ms()
+    b = json.loads([ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1])
+    sec = b["queries"]["ocr_documento_completo"]
+    return {"cores": cores, "multiply": REPLICATE, "sec": sec, "docs": b["docs"],
+            "docs_per_sec": round(b["docs"] / sec, 2),
+            "probe_pre_ms": round(pre, 1), "probe_post_ms": round(post, 1),
+            "quiet_ms": round(quiet, 1),
+            "status": "ok" if gate.admitted(pre, post, quiet) else "contended",
+            "commit": gate.commit_hash(), "ts": round(time.time(), 1)}
 
 
-def write_report(runs: dict, sf_dir: str) -> dict:
-    def eff(lo: int, hi: int):
-        if lo not in runs or hi not in runs:
-            return None
-        return round(runs[hi]["docs_per_sec"] / runs[lo]["docs_per_sec"] / (hi / lo), 3)
-
-    eff_8_32 = eff(8, 32)
-    eff_4_16 = eff(4, 16)
-    cores = sorted(runs)
-    docs = runs[cores[0]]["docs"]
-    result = {
-        "sf_dir": sf_dir,
-        "docs": docs,
-        **{f"local[{c}]": {"sec": r["sec"], "docs_per_sec": r["docs_per_sec"]}
-           for c, r in sorted(runs.items())},
-        "efficiency_8_to_32": eff_8_32,
-        "efficiency_4_to_16": eff_4_16,
-        "target": 0.8,
-    }
-    rows = "\n".join(
-        f"| local[{c}] | {r['sec']:.2f} | {r['docs_per_sec']:.2f} |"
-        for c, r in sorted(runs.items())
-    )
-
-    def verdict(e):
-        return "n/a" if e is None else f"{e:.3f} ({'PASS' if e >= 0.8 else 'FAIL'})"
-
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(
-            f"""# BENCH/BASELINE — measured numbers
-
-Flagship: interleaved-document extraction (documento_completo mode), full
-pipeline (span synthesis → media render → decode → route → preprocess →
-glyph OCR → reassembly), {docs} documents at {sf_dir}.
-
-Scaling evidence protocol (BASELINE.md): identical job, identical input,
-each parallelism level in its own JVM — the sandbox stand-in for N and 4N
-executors. Both N→4N pairs are reported: the spec protocol local[8]→local[32]
-and the bandwidth-isolated pair local[4]→local[16].
-
-| parallelism | wall (s) | docs/sec |
-|---|---|---|
-{rows}
-
-**Scaling efficiency, spec protocol 8→32: {verdict(eff_8_32)}** (target ≥ 0.8)
-**Scaling efficiency, 4→16: {verdict(eff_4_16)}**
-
-Reading the two numbers together: this is a single box, so all local[K]
-workers share one memory controller. The per-image numpy kernels are
-bandwidth-hungry; measured per-image OCR time (the pipeline's own ocr_ms
-metric) inflates as concurrency approaches the core count, i.e. the 32-thread
-end of the 8→32 pair pays a shared-resource tax that real 4N *executors*
-(per-node memory bandwidth) do not. The 4→16 pair keeps both ends well under
-the saturation knee and models cluster behavior more faithfully; the 8→32
-number is reported unmodified as the spec protocol result. Corpus is
-replicated (--multiply) so the job is compute-bound at every level, as a
-10^12-document corpus would be.
-
-Correctness gate: 100% span-sequence equality at sf0.01 via the DuckDB
-oracle (tools/check_oracle.py; driver CORRECTNESS_r*.json).
-"""
-        )
-    return result
+def summarize(rows: list[dict], lo: int, hi: int) -> dict:
+    """Best clean docs/s and n_clean per level; efficiency only from clean
+    runs at both levels."""
+    best, out = {}, {}
+    for c in (lo, hi):
+        clean = [r["docs_per_sec"] for r in rows
+                 if r["cores"] == c and r["status"] == "ok"]
+        best[c] = max(clean, default=None)
+        out[f"local[{c}]"] = {"best_docs_per_sec": best[c], "n_clean": len(clean)}
+    out["efficiency"] = (None if None in best.values()
+                         else round(best[hi] / best[lo] / (hi / lo), 3))
+    out["target"] = 0.8
+    return out
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cores", default="4,8,16,32",
-                    help="comma-separated parallelism levels to measure")
-    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument(
-        "--multiply", type=int, default=32,
-        help="corpus replication factor: makes the job compute-bound (the "
-             "100TB regime) instead of overhead-bound at sandbox scale")
-    ap.add_argument("--write", action="store_true",
-                    help="regenerate BENCH/BASELINE.md (default: print only — "
-                         "the checked-in report carries extra evidence)")
+    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     args = ap.parse_args()
-    cores = sorted({int(c) for c in args.cores.split(",")})
-
-    runs: dict[int, dict] = {}
-    for c in cores:
-        b = run_bench(c, args.sf_dir, args.multiply)
-        t = b["queries"]["ocr_documento_completo"]
-        runs[c] = {"sec": t, "docs_per_sec": round(b["docs"] / t, 2), "docs": b["docs"]}
-
-    if args.write:
-        print(json.dumps(write_report(runs, args.sf_dir)))
-    else:
-        def eff(lo, hi):
-            if lo not in runs or hi not in runs:
-                return None
-            return round(runs[hi]["docs_per_sec"] / runs[lo]["docs_per_sec"] / (hi / lo), 3)
-        print(json.dumps({
-            **{f"local[{c}]": r for c, r in sorted(runs.items())},
-            "efficiency_8_to_32": eff(8, 32), "efficiency_4_to_16": eff(4, 16),
-        }))
+    lo = max(1, (os.cpu_count() or 1) // 4)
+    hi = 4 * lo
+    quiet = gate.quiet_ms()
+    rows = []
+    os.makedirs(os.path.dirname(LOG), exist_ok=True)
+    for i in range(REPS):
+        for cores in (lo, hi) if i % 2 == 0 else (hi, lo):
+            rows.append(run_one(cores, args.sf_dir, quiet))
+            with open(LOG, "a") as f:
+                f.write(json.dumps(rows[-1]) + "\n")
+    print(json.dumps({"sf_dir": args.sf_dir, "multiply": REPLICATE,
+                      "quiet_ms": round(quiet, 1), **summarize(rows, lo, hi)}))
 
 
 if __name__ == "__main__":
