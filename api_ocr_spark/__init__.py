@@ -9,12 +9,12 @@ Layout
 ------
 imaging/    pure-numpy raster stack: PNG codec, bitmap font, renderer
 kernels/    numpy re-implementations of the reference preprocessing kernels
-ocr/        deterministic glyph OCR engine + association + postprocess
-functions/  Spark-native column expressions (JVM-side, no Python in hot path)
+ocr/        deterministic glyph OCR engine + association
+functions/  Spark-native column expressions (JVM-side, no Python in hot path),
+            incl. the postprocess extractors
 sources/    table loaders + interleaved-span synthesis + media store
 operators/  DataFrame pipeline stages (explode/join/ocr/reassemble/dedup/...)
 plans/      session builder, checkpoint/lineage/metrics
-streaming/  Structured Streaming variant of the extraction pipeline
 
 Design rule (BASELINE.json input_hint): pyspark.sql DataFrame + vectorized
 pandas/Arrow UDFs throughout; no per-row Python UDFs.

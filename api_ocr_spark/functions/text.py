@@ -4,8 +4,8 @@ Every function here compiles to Catalyst expressions (whole-stage codegen;
 no Python in the loop). They re-express the reference's postprocess stage
 (/root/reference/ocr/postprocess.py) plus the text-analysis operators a
 training-data pipeline needs (token stats, quality, language ID, simhash,
-fingerprints). The pure-Python twins in api_ocr_spark.ocr.postprocess serve
-fixture building; these serve the 100 TB path.
+fingerprints). They are the only implementation of the postprocess
+extractors; tests evaluate them through Spark (tests/test_ocr.py).
 
 Regex note: patterns use [0-9] (not \\d) and are kept to the common subset of
 Java/RE2/DuckDB syntax so the DuckDB oracle SQL in __spark_entry__ can use

@@ -1,1 +1,1 @@
-from . import engine, association, postprocess  # noqa: F401
+from . import engine, association  # noqa: F401

@@ -25,7 +25,6 @@ from __future__ import annotations
 import time
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -93,11 +92,10 @@ def ocr_span_batch(pdf: pd.DataFrame, mode: str, pid: int = -1) -> pd.DataFrame:
 
     Media rows read their payload from a `bytes` column when the batch has
     one (a media store), else synthesize it from (doc_num, offset, chunk).
-    Rows of kind 'text' (batches without a `kind` column are all media)
-    pass through vectorized — no per-row Python; n_words uses split()
-    semantics, so it agrees with the media rows on multi-space/empty
-    chunks."""
-    is_text = (pdf["kind"].to_numpy() == "text") if "kind" in pdf else np.zeros(len(pdf), bool)
+    Rows of kind 'text' pass through vectorized — no per-row Python; n_words
+    uses split() semantics, so it agrees with the media rows on
+    multi-space/empty chunks."""
+    is_text = pdf["kind"].to_numpy() == "text"
     parts = []
     if is_text.any():
         tp = pdf if is_text.all() else pdf[is_text]
@@ -121,24 +119,10 @@ def ocr_span_batch(pdf: pd.DataFrame, mode: str, pid: int = -1) -> pd.DataFrame:
     return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
 
 
-def _ocr_udf(mode: str):
-    """mapInPandas body: :func:`ocr_span_batch` per batch (SPAN_OUT_SCHEMA)."""
-
-    def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for pdf in batches:
-            yield ocr_span_batch(pdf, mode, pid)
-
-    return ocr_batches
-
-
 def ocr_spans(
     flat: DataFrame,
     mode: str = "documento_completo",
     media: DataFrame | None = None,
-    salt_partitions: int | None = None,
 ) -> DataFrame:
     """The span stage: flat spans (doc_id, offset, kind, media_ref, plus
     chunk for text spans and doc_num for synthesized media) → one
@@ -161,16 +145,23 @@ def ocr_spans(
         flat = flat.filter(is_media).join(
             media.select("media_ref", "bytes"), "media_ref", "left"
         ).unionByName(flat.filter(~is_media), allowMissingColumns=True)
-    if salt_partitions is None:
-        # explicit count: AQE's bytes-based coalescing would fold this small
-        # (by bytes) but compute-heavy shuffle into too few partitions
-        salt_partitions = 2 * flat.sparkSession.sparkContext.defaultParallelism
+    # explicit count: AQE's bytes-based coalescing would fold this small (by
+    # bytes) but compute-heavy shuffle into too few partitions.
     # sortWithinPartitions makes Arrow batches kind-homogeneous, so most
     # batches take the vectorized text path or the media loop whole
     spans = flat.repartition(
-        salt_partitions, F.xxhash64("doc_id", "offset")
+        2 * flat.sparkSession.sparkContext.defaultParallelism,
+        F.xxhash64("doc_id", "offset"),
     ).sortWithinPartitions("kind")
-    return spans.mapInPandas(_ocr_udf(mode), schema=SPAN_OUT_SCHEMA)
+
+    def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
+        for pdf in batches:
+            yield ocr_span_batch(pdf, mode, pid)
+
+    return spans.mapInPandas(ocr_batches, schema=SPAN_OUT_SCHEMA)
 
 
 # Cached relations handed out by the set-join and similarity stages (dedup,
@@ -213,7 +204,13 @@ def _span_rows(out: DataFrame) -> DataFrame:
     )
 
 
-def reassemble_spans(out: DataFrame, salt_buckets: int = 16) -> DataFrame:
+# Level-1 salt of reassemble_spans: a span's salt is its SALT_BLOCK-span
+# offset block modulo SALT_BUCKETS.
+SALT_BLOCK = 32
+SALT_BUCKETS = 16
+
+
+def reassemble_spans(out: DataFrame) -> DataFrame:
     """Skew-proof reassembly (SURVEY.md §4.3.1) of :func:`ocr_spans` output
     → (doc_id, spans, extracted_text): a media-heavy document's collect_list
     would land on ONE reducer (an aggregation key AQE cannot split), so
@@ -221,13 +218,13 @@ def reassemble_spans(out: DataFrame, salt_buckets: int = 16) -> DataFrame:
     partial arrays and sorts once. Output is identical to :func:`reassemble`
     (asserted in tests).
 
-    Salt is OFFSET-BLOCK based (floor(offset/32) % buckets), not a per-span
-    hash: a document with <= 32 spans lands in ONE level-1 group (the
-    two-level pass degenerates to a cheap flatten for the common case),
-    while a media-heavy document spreads one 32-span block per reducer —
-    the skew case that motivates the salting."""
+    Salt is OFFSET-BLOCK based (floor(offset / SALT_BLOCK) % SALT_BUCKETS),
+    not a per-span hash: a document with <= SALT_BLOCK spans lands in ONE
+    level-1 group (the two-level pass degenerates to a cheap flatten for the
+    common case), while a media-heavy document spreads one block per
+    reducer — the skew case that motivates the salting."""
     rows = _span_rows(out).withColumn(
-        "salt", F.pmod(F.floor(F.col("offset") / F.lit(32)), F.lit(salt_buckets)))
+        "salt", F.pmod(F.floor(F.col("offset") / F.lit(SALT_BLOCK)), F.lit(SALT_BUCKETS)))
     partial = rows.groupBy("doc_id", "salt").agg(
         F.collect_list(F.struct("offset", "kind", "text", "media_ref")).alias("part"))
     return partial.groupBy("doc_id").agg(*_ordered_spans(F.flatten(F.collect_list("part"))))
@@ -260,7 +257,6 @@ def extract_documents(
     documents: DataFrame,
     media: DataFrame | None = None,
     mode: str = "documento_completo",
-    salt_partitions: int | None = None,
     strategy: str = "auto",
 ) -> DataFrame:
     """End-to-end: documents(doc_id, text) → interleaved spans →
@@ -272,14 +268,13 @@ def extract_documents(
     persist/unified choice and selects nothing: every value runs this plan."""
     from ..sources.interleave import flat_spans
 
-    return reassemble_spans(ocr_spans(flat_spans(documents), mode, media, salt_partitions))
+    return reassemble_spans(ocr_spans(flat_spans(documents), mode, media))
 
 
 def extract_from_spans(
     documents_spans: DataFrame,
     media: DataFrame,
     mode: str = "documento_completo",
-    salt_partitions: int | None = None,
 ) -> DataFrame:
     """Extraction over the BASELINE.json input_hint shape directly:
     documents_spans(doc_id:string, spans:array<struct<kind,text,media_ref,offset>>)
@@ -297,4 +292,4 @@ def extract_from_spans(
         F.col("s.text").alias("chunk"),
         F.col("s.media_ref").alias("media_ref"),
     )
-    return reassemble_spans(ocr_spans(flat, mode, media, salt_partitions))
+    return reassemble_spans(ocr_spans(flat, mode, media))

@@ -12,9 +12,7 @@ key-level account.
 Shape at 100 TB: fingerprints are computed MAP-SIDE before the join (the
 join carries (key, 32-byte digest), never the payload), then one full
 outer join keyed on doc_id — both sides shuffle once on the same key
-(AQE skew-splittable; with both snapshots written through
-plans/bucketing.write_bucketed on doc_id the join is exchange-free), and
-the status CASE is a pure projection."""
+(AQE skew-splittable), and the status CASE is a pure projection."""
 
 from __future__ import annotations
 

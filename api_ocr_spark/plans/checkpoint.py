@@ -43,11 +43,20 @@ def _bucket_of(col, n_buckets: int):
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
-def completed_buckets(spark: SparkSession, base_dir: str, run_group: str) -> set[int]:
+def _read_lineage_if_any(spark: SparkSession, base_dir: str) -> DataFrame | None:
+    """The lineage table, or None before the first bucket commits. Existence
+    is asked of the path's own Hadoop FileSystem (any scheme), so a missing
+    table is never read — and a table that exists but cannot be read raises
+    instead of passing for "nothing done"."""
     path = os.path.join(base_dir, "lineage")
-    try:
-        lin = spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — first run: no lineage yet
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return spark.read.parquet(path) if fs.exists(jpath) else None
+
+
+def completed_buckets(spark: SparkSession, base_dir: str, run_group: str) -> set[int]:
+    lin = _read_lineage_if_any(spark, base_dir)
+    if lin is None:
         return set()
     rows = (
         lin.filter((F.col("run_group") == run_group) & (F.col("status") == "done"))
@@ -150,9 +159,8 @@ def read_output(spark: SparkSession, base_dir: str, run_group: str | None = None
     committed under an older group whose directory now holds a newer group's
     rows)."""
     out = spark.read.parquet(os.path.join(base_dir, "output"))
-    try:
-        lin = spark.read.parquet(os.path.join(base_dir, "lineage"))
-    except Exception:  # noqa: BLE001 — no lineage: nothing is committed
+    lin = _read_lineage_if_any(spark, base_dir)
+    if lin is None:  # nothing is committed yet
         return out.limit(0)
     lin = lin.filter(F.col("status") == "done")
     if run_group is None:

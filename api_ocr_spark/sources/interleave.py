@@ -45,7 +45,7 @@ MEDIA_SCHEMA = StructType(
 )
 
 
-def flat_spans(documents: DataFrame, partitions: int | None = None) -> DataFrame:
+def flat_spans(documents: DataFrame) -> DataFrame:
     """documents(doc_id:bigint, text) → one row per span with ground truth:
     (doc_id:string, doc_num:bigint, offset:int, kind, chunk, media_ref).
 
@@ -53,9 +53,8 @@ def flat_spans(documents: DataFrame, partitions: int | None = None) -> DataFrame
     concat_ws per span) is the expression-heavy part, and with a single-file
     source it would otherwise run on one partition — a serial stage that
     caps scaling (observed: ~60s serial at 385k media spans)."""
-    if partitions is None:
-        partitions = 2 * documents.sparkSession.sparkContext.defaultParallelism
-    documents = documents.repartition(partitions, F.col("doc_id"))
+    documents = documents.repartition(
+        2 * documents.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
     words = F.split(F.trim(F.col("text")), " ")
     n_chunks = F.ceil(F.size(words) / F.lit(CHUNK_WORDS)).cast("int")
     df = documents.select(
@@ -147,7 +146,7 @@ def _render_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(out)
 
 
-def build_media(documents: DataFrame, partitions: int | None = None) -> DataFrame:
+def build_media(documents: DataFrame) -> DataFrame:
     """Render every media span's ground-truth chunk into an encoded PNG.
     Arrow-batched mapInPandas; deterministic in (doc_id, offset, text).
 
@@ -157,10 +156,8 @@ def build_media(documents: DataFrame, partitions: int | None = None) -> DataFram
     shuffle back to one partition (bytes-based sizing is wrong for
     compute-bound stages)."""
     fs = flat_spans(documents).filter(F.col("kind") == "media")
-    fs = fs.select("doc_num", "offset", "chunk", "media_ref")
-    if partitions is None:
-        partitions = 2 * fs.sparkSession.sparkContext.defaultParallelism
-    fs = fs.repartition(partitions, F.xxhash64("media_ref"))
+    fs = fs.select("doc_num", "offset", "chunk", "media_ref").repartition(
+        2 * fs.sparkSession.sparkContext.defaultParallelism, F.xxhash64("media_ref"))
     return fs.mapInPandas(_render_batches, schema=MEDIA_SCHEMA)
 
 

@@ -1,4 +1,4 @@
-"""Error rows, quarantine flow, streaming window metrics."""
+"""Error rows: corrupt and missing media, the extraction job's --media flag."""
 
 import os
 
@@ -81,86 +81,12 @@ def test_extraction_job_reads_media_flag(spark, tmp_path):
     corrupt.write.parquet(media_dir)
     env = dict(os.environ, PYSPARK_SUBMIT_ARGS="--master local[2] pyspark-shell",
                PYTHONPATH=os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")])))
-    subprocess.run(
+    job = subprocess.run(
         [sys.executable, os.path.join(repo, "jobs", "run_extraction.py"),
          "--documents", docs_dir, "--media", media_dir, "--output", out_dir,
          "--mode", "basico", "--buckets", "2"],
-        check=True, cwd=repo, env=env, timeout=600)
+        cwd=repo, env=env, timeout=600, capture_output=True, text=True)
+    assert job.returncode == 0, job.stderr[-4000:]
+    # a fresh --output has no lineage yet: it is not read, so no read fails
+    assert "FileNotFoundException" not in job.stderr
     assert checkpoint.read_metrics(spark, out_dir).agg(F.sum("n_errors")).first()[0] == 1
-
-
-def test_streaming_window_metrics(spark, sf_dir, tmp_path):
-    from api_ocr_spark.streaming import stream as st
-
-    docs = tables.load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 10)
-    flat = interleave.flat_spans(docs)
-    media = interleave.build_media(docs)
-    joined = (
-        flat.filter(F.col("kind") == "media")
-        .select("doc_id", "offset", "media_ref")
-        .join(media.select("media_ref", "bytes"), "media_ref")
-        .withColumn("event_time", F.to_timestamp(F.lit("2026-01-01 00:00:30")))
-        .select("doc_id", "offset", "media_ref", "bytes", "event_time")
-    )
-    in_dir = os.path.join(str(tmp_path), "win_in")
-    joined.write.parquet(in_dir)
-    q = (
-        st.stream_ocr_with_window_metrics(spark, in_dir, window="1 minute")
-        .writeStream.format("memory")
-        .queryName("t_win")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("t_win").collect()
-    # append mode emits only watermark-closed windows; with availableNow the
-    # single open window may be withheld — accept either closed-row output or
-    # verify through a complete-mode count instead
-    if not got:
-        q2 = (
-            st.stream_ocr_with_window_metrics(spark, in_dir, window="1 minute")
-            .writeStream.format("memory")
-            .queryName("t_win2")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination()
-        got = spark.table("t_win2").collect()
-    assert len(got) == 1
-    assert got[0].n_spans == joined.count()
-
-
-def test_stateful_streaming_dedup(spark, sf_dir, tmp_path):
-    """applyInPandasWithState first-seen dedup: duplicated input rows across
-    files collapse to one output row per doc_id."""
-    from api_ocr_spark.streaming import stream as st
-
-    docs = tables.load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 8)
-    flat = interleave.flat_spans(docs)
-    media = interleave.build_media(docs)
-    joined = (
-        flat.filter(F.col("kind") == "media")
-        .select("doc_id", "offset", "media_ref")
-        .join(media.select("media_ref", "bytes"), "media_ref")
-        .withColumn("event_time", F.current_timestamp())
-        .select("doc_id", "offset", "media_ref", "bytes", "event_time")
-    )
-    dup = joined.unionByName(joined)  # every row twice
-    in_dir = os.path.join(str(tmp_path), "dedup_in")
-    dup.repartition(4).write.parquet(in_dir)
-    q = (
-        st.stream_dedup_first_seen(spark, in_dir)
-        .writeStream.format("memory")
-        .queryName("t_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("t_dedup").collect()
-    doc_ids = [r.doc_id for r in got]
-    assert len(doc_ids) == len(set(doc_ids))  # one row per doc
-    assert set(doc_ids) == {str(i) for i in range(8) if any(
-        (i + off) % 3 == 0 for off in range(20))}

@@ -58,7 +58,7 @@ def test_two_level_reassembly_equals_plain(spark, sf_dir):
     media = interleave.build_media(docs)
     ocr = pipeline.ocr_spans(flat, "basico", media=media).cache()
     a = pipeline.reassemble(ocr)
-    b = pipeline.reassemble_spans(ocr, salt_buckets=8)
+    b = pipeline.reassemble_spans(ocr)
     cols = ["doc_id", "extracted_text"]
     assert a.select(cols).exceptAll(b.select(cols)).count() == 0
     assert a.count() == b.count()
@@ -77,8 +77,8 @@ def test_two_level_reassembly_heavy_doc(spark):
     media = interleave.build_media(docs)
     ocr = pipeline.ocr_spans(flat, "basico", media=media).cache()
     assert pipeline.reassemble(ocr).collect() == \
-        pipeline.reassemble_spans(ocr, salt_buckets=8).collect()
-    out = pipeline.reassemble_spans(ocr, salt_buckets=8).collect()[0]
+        pipeline.reassemble_spans(ocr).collect()
+    out = pipeline.reassemble_spans(ocr).collect()[0]
     assert [s.offset for s in out.spans] == list(range(60))
     assert out.extracted_text == " ".join(heavy.split())
     ocr.unpersist()

@@ -1,13 +1,14 @@
 """Glyph OCR engine: exact roundtrip per scenario, word/line semantics,
-association scoring, postprocess regexes (SURVEY.md §5.2.2-3)."""
+association scoring, the Catalyst postprocess extractors (SURVEY.md §5.2.2-3)."""
 
 import numpy as np
 import pytest
 
+from api_ocr_spark.functions import text as T
 from api_ocr_spark.imaging import png, render
 from api_ocr_spark.kernels import checkbox as cbk
 from api_ocr_spark.kernels import enhance
-from api_ocr_spark.ocr import association, engine, postprocess
+from api_ocr_spark.ocr import association, engine
 
 CORPUS = [
     "the fast key order sort table scan merge part window small hash scan join",
@@ -242,53 +243,52 @@ def test_orphan_checkbox_emits_no_pair():
 
 # ----------------------------------------------------------- postprocess
 
-def test_clean_text():
-    assert postprocess.clean_text("a  b\n\n  \nc\t d ") == "a b\nc d"
+_ESTRUCTURAR = "clase lunes 12:30\nnota: ver 5 de enero de 2024"
+# (expression, input, expected) per extractor of functions/text.py
+_EXTRACTOR_CASES = {
+    # Java \s collapses newlines too: the texto_limpio deviation from the
+    # reference's clean_text, which kept one '\n' per blank-line run
+    "normalize_ws": [(T.normalize_ws, "a  b\n\n  \nc\t d ", "a b c d")],
+    "limpiar_texto_ocr_col": [
+        (T.limpiar_texto_ocr_col, "25* C", "25° C"),
+        (T.limpiar_texto_ocr_col, "30%", "30°"),
+        (T.limpiar_texto_ocr_col, "3,5 | x", "3.5 x"),
+    ],
+    "horarios_str": [(T.horarios_str, "clase 12:30 - 14:45 y 9:00 am",
+                      "12:30,12:30 - 14:45,14:45,9:00 am")],
+    "dias_str": [(T.dias_str, "Lunes y martes 15 vamos", "lunes,martes,martes 15")],
+    # lowercases its input (documented), so MARZO comes back as marzo
+    "fechas_str": [(T.fechas_str, "el 5 de enero de 2024 y el 7 de MARZO de 2025",
+                    "5 de enero de 2024,7 de marzo de 2025")],
+    "materiales_str": [
+        (T.materiales_str, "los alumnos deben traer lapiz, papel y regla. fin",
+         "lapiz,papel y regla"),
+        # faithful reference quirks: the capture stops at a newline, and a
+        # colon right after 'traer' stays in the first item
+        (T.materiales_str, "deben traer lapiz, papel\ny regla.", "lapiz,papel"),
+        (T.materiales_str, "deben traer: a, b", ": a,b"),
+        (T.materiales_str, "no hay lista", ""),
+    ],
+    "notas_str": [(T.notas_str, "linea normal\nNota: traer agua\nasisten el día lunes",
+                   "Nota: traer agua asisten el día lunes")],
+    # the reference's `weekday \d{1,2}` regex also catches 'lunes 12' from
+    # the time '12:30' (\b splits at the colon) — faithful semantics
+    "estructurar_texto": [
+        (T.horarios_str, _ESTRUCTURAR, "12:30"),
+        (T.dias_str, _ESTRUCTURAR, "lunes,lunes 12"),
+        (T.fechas_str, _ESTRUCTURAR, "5 de enero de 2024"),
+    ],
+}
 
 
-def test_limpiar_texto_ocr():
-    assert postprocess.limpiar_texto_ocr("25* C") == "25° C"
-    assert postprocess.limpiar_texto_ocr("30%") == "30°"
-    assert postprocess.limpiar_texto_ocr("3,5 | x") == "3.5 x"
+@pytest.mark.parametrize("cases", _EXTRACTOR_CASES.values(), ids=_EXTRACTOR_CASES.keys())
+def test_text_extractors(spark, cases):
+    """The postprocess extractors the text oracle queries run, evaluated by
+    Spark over column data: row j holds case j's input, column j its
+    expression."""
+    from pyspark.sql import functions as F
 
-
-def test_extraer_horarios():
-    got = postprocess.extraer_horarios("clase 12:30 - 14:45 y 9:00 am")
-    assert "12:30" in got and any("14:45" in h for h in got)
-    assert got == sorted(set(got))
-
-
-def test_extraer_dias():
-    got = postprocess.extraer_dias("Lunes y martes 15 vamos")
-    assert "lunes" in got and "martes" in got and "martes 15" in got
-
-
-def test_extraer_fechas():
-    got = postprocess.extraer_fechas("el 5 de enero de 2024 y el 7 de MARZO de 2025")
-    assert got == ["5 de enero de 2024", "7 de MARZO de 2025"]
-
-
-def test_extraer_materiales():
-    got = postprocess.extraer_materiales("los alumnos deben traer lapiz, papel y regla. fin")
-    assert got == ["lapiz", "papel y regla"]
-    # faithful reference quirks (postprocess.py:91-99): the capture stops at
-    # a newline, and a colon right after 'traer' stays in the first item
-    assert postprocess.extraer_materiales("deben traer lapiz, papel\ny regla.") == [
-        "lapiz", "papel"]
-    assert postprocess.extraer_materiales("deben traer: a, b") == [": a", "b"]
-    assert postprocess.extraer_materiales("no hay lista") == []
-
-
-def test_extraer_notas():
-    t = "linea normal\nNota: traer agua\nasisten el día lunes"
-    assert postprocess.extraer_notas(t) == "Nota: traer agua asisten el día lunes"
-
-
-def test_estructurar_texto_ocr_shape():
-    d = postprocess.estructurar_texto_ocr("clase lunes 12:30\nnota: ver 5 de enero de 2024")
-    assert set(d) == {"texto_limpio", "horarios", "dias", "materiales", "notas", "fechas"}
-    assert d["horarios"] == ["12:30"]
-    # reference's `weekday \d{1,2}` regex also catches 'lunes 12' from the
-    # time '12:30' (\b splits at the colon) — faithful semantics
-    assert d["dias"] == ["lunes", "lunes 12"]
-    assert d["fechas"] == ["5 de enero de 2024"]
+    df = spark.createDataFrame([(s,) for _, s, _ in cases], "s string")
+    rows = df.select(*[fn(F.col("s")).alias(f"c{j}") for j, (fn, _, _) in enumerate(cases)]
+                     ).collect()
+    assert [rows[j][j] for j in range(len(cases))] == [want for _, _, want in cases]

@@ -7,7 +7,7 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from api_ocr_spark.imaging import font, png, render
-from api_ocr_spark.ocr import engine, postprocess
+from api_ocr_spark.ocr import engine
 
 # words over the renderable charset. Punctuation joins only as part of a
 # word with letters/digits: a page whose ONLY ink is a lone 16-px glyph is
@@ -53,18 +53,39 @@ def test_png_codec_fuzz(h, w, seed):
     assert np.array_equal(png.decode_gray(png.encode_gray(img)), img)
 
 
-@settings(max_examples=30, deadline=None)
-@given(st.text(max_size=200))
-def test_clean_text_idempotent(s):
-    once = postprocess.clean_text(s)
-    assert postprocess.clean_text(once) == once
+def _spark_eval(spark, strings, *exprs):
+    """One row per string: each expr of exprs over a one-column DataFrame
+    of `strings`, in row order."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(x,) for x in strings], "s string")
+    return df.select(*[e(F.col("s")) for e in exprs]).collect()
 
 
-@settings(max_examples=30, deadline=None)
-@given(st.text(max_size=200))
-def test_limpiar_idempotent_on_output_whitespace(s):
-    out = postprocess.limpiar_texto_ocr(s)
-    assert "  " not in out and out == out.strip()
+# Java's \s, the whitespace class the Catalyst extractors collapse
+_JAVA_WS = " \t\n\x0b\f\r"
+
+
+@settings(max_examples=5, deadline=None)
+@given(strings=st.lists(st.text(max_size=200), min_size=1, max_size=40))
+def test_clean_text_idempotent(spark, strings):
+    """clean_text's Catalyst form, normalize_ws, is idempotent."""
+    from api_ocr_spark.functions.text import normalize_ws
+
+    for once, twice in _spark_eval(spark, strings, normalize_ws,
+                                   lambda c: normalize_ws(normalize_ws(c))):
+        assert twice == once
+
+
+@settings(max_examples=5, deadline=None)
+@given(strings=st.lists(st.text(max_size=200), min_size=1, max_size=40))
+def test_limpiar_idempotent_on_output_whitespace(spark, strings):
+    """limpiar_texto_ocr's Catalyst form leaves no whitespace run and no
+    leading or trailing whitespace."""
+    from api_ocr_spark.functions.text import limpiar_texto_ocr_col
+
+    for (out,) in _spark_eval(spark, strings, limpiar_texto_ocr_col):
+        assert "  " not in out and out == out.strip(_JAVA_WS)
 
 
 @settings(max_examples=20, deadline=None)

@@ -1,12 +1,12 @@
-"""Every package module and top-level definition is reached from an entry
-point, or is named here.
+"""Every package module is reached from an entry point, and so is every
+top-level definition not named here.
 
 The engine's entry points are the oracle queries (`__spark_entry__.py`),
 the extraction job (`jobs/`), the benchmarks (`bench.py`, `perfbench/`) and
 the operator tools (`tools/`). A module or definition none of them reaches
-is code that only tests run: it gets wired in under an oracle or deleted,
-and the few kept on purpose are listed in KEPT_UNREACHED and
-KEPT_UNREACHED_DEFS with the reason.
+is code that only tests run: it gets wired in under an oracle or deleted.
+The few definitions kept on purpose, as the reference a live path is
+tested against, are listed in KEPT_UNREACHED_DEFS with the reason.
 """
 
 import ast
@@ -17,12 +17,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "api_ocr_spark"
 ENTRY_FILES = ("__spark_entry__.py", "bench.py")
 ENTRY_DIRS = ("jobs", "tools", "perfbench")
-
-KEPT_UNREACHED = {
-    "streaming.stream": "Structured Streaming variant of the span stage; tested against batch",
-    "plans.bucketing": "write-time bucketed co-located join, a COVERAGE feature with its own tests",
-    "ocr.postprocess": "python twins of the Catalyst text extractors in functions/text.py",
-}
 
 KEPT_UNREACHED_DEFS = {
     "operators.pipeline.reassemble": "one-shuffle reassembly the two-level reassemble_spans is checked against",
@@ -100,6 +94,7 @@ def _imported(path, modules):
 
 
 def test_only_named_modules_are_unreached_from_entry_points():
+    """Every package module is reached."""
     modules = _package_modules()
     todo = _entry_paths()
     reached = set()
@@ -107,7 +102,7 @@ def test_only_named_modules_are_unreached_from_entry_points():
         for mod in _imported(todo.pop(), modules) - reached:
             reached.add(mod)
             todo.append(modules[mod])
-    assert set(modules) - reached == set(KEPT_UNREACHED)
+    assert set(modules) - reached == set()
 
 
 def _names(node):
@@ -144,8 +139,6 @@ def test_only_named_definitions_are_unreached_from_entry_points():
     for path in _entry_paths():
         live |= _names(_parse(path))
     for mod, path in _package_modules().items():
-        if mod in KEPT_UNREACHED:
-            continue
         for stmt in _parse(path).body:
             name = _defined_name(stmt)
             if name is None:

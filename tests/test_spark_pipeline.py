@@ -1,6 +1,6 @@
 """Spark-layer tests: span synthesis invariants, per-mode span-sequence
-equality vs golden (FIXTURES.md §3), skew handling, checkpoint/resume,
-streaming parity (SURVEY.md §5.2.3-4)."""
+equality vs golden (FIXTURES.md §3), skew handling, checkpoint/resume
+(SURVEY.md §5.2.3-4)."""
 
 import os
 
@@ -99,13 +99,14 @@ def test_span_sequence_fields(docs, golden):
 
 
 def test_permutation_invariance(spark, docs, golden):
-    """Reassembly is order-insensitive: shuffling span processing order
-    (different salt partition count) must not change output."""
-    a = pipeline.extract_documents(docs, mode="basico", salt_partitions=3)
-    b = pipeline.extract_documents(docs, mode="basico", salt_partitions=17)
-    diff = a.select("doc_id", "extracted_text").exceptAll(
-        b.select("doc_id", "extracted_text"))
-    assert diff.count() == 0
+    """Reassembly is order-insensitive: the same span rows, arriving in two
+    different partitionings and orders, reassemble to the same documents."""
+    out = pipeline.ocr_spans(interleave.flat_spans(docs), "basico").cache()
+    a = pipeline.reassemble_spans(out.repartition(3))
+    b = pipeline.reassemble_spans(out.repartition(17, "offset"))
+    assert a.count() == b.count() == N_DOCS
+    assert a.exceptAll(b).count() == 0
+    out.unpersist()
 
 
 def test_checkpoint_resume_after_kill(spark, docs, golden, tmp_path):
@@ -178,6 +179,34 @@ def test_checkpoint_exactly_once_mid_bucket_kill(spark, docs, golden, tmp_path):
     assert bad.count() == 0
 
 
+def test_lineage_missing_reads_as_none_done_unreadable_raises(spark, tmp_path):
+    """A base_dir with no lineage yet has no completed bucket; a lineage
+    table that exists but cannot be read raises from both completed_buckets
+    and read_output instead of passing for "nothing done"."""
+    import shutil
+
+    from py4j.protocol import Py4JJavaError
+
+    base = os.path.join(str(tmp_path), "ckptl")
+    assert checkpoint.completed_buckets(spark, base, "g") == set()
+    docs = spark.createDataFrame(
+        [(i, "lineage check words all readable here ok") for i in range(2)],
+        "doc_id long, text string")
+    checkpoint.run_with_checkpoint(spark, docs, base, run_group="g", mode="basico",
+                                   n_buckets=1)
+    assert checkpoint.completed_buckets(spark, base, "g") == {0}
+    assert checkpoint.read_output(spark, base).count() == 2
+    lin_path = os.path.join(base, "lineage")
+    shutil.rmtree(lin_path)
+    os.makedirs(lin_path)
+    with open(os.path.join(lin_path, "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="parquet"):
+        checkpoint.completed_buckets(spark, base, "g")
+    with pytest.raises(Py4JJavaError, match="parquet"):
+        checkpoint.read_output(spark, base, run_group="g").count()
+
+
 def test_metrics_error_rows_and_byte_stats(spark, docs, tmp_path):
     """Reference metrics parity (/root/reference/metrics.py:17-35): byte-size
     stats and error rows land in the metrics table — a corrupted media
@@ -200,69 +229,38 @@ def test_metrics_error_rows_and_byte_stats(spark, docs, tmp_path):
     assert met.filter(F.col("mode") != "basico").count() == 0
 
 
-def test_streaming_matches_batch(spark, docs, tmp_path):
-    """Streaming OCR over the same media rows equals the batch stage."""
-    from api_ocr_spark.streaming import stream as st
-
-    flat = interleave.flat_spans(docs)
-    media = interleave.build_media(docs)
-    joined = (
-        flat.filter(F.col("kind") == "media")
-        .select("doc_id", "offset", "media_ref")
-        .join(media.select("media_ref", "bytes"), "media_ref")
-        .withColumn("event_time", F.current_timestamp())
-        .select("doc_id", "offset", "media_ref", "bytes", "event_time")
-    )
-    in_dir = os.path.join(str(tmp_path), "stream_in")
-    joined.write.parquet(in_dir)
-    st.run_stream_to_memory(spark, in_dir, table_name="t_stream", mode="basico")
-    got = spark.table("t_stream").select("doc_id", "offset", "text")
-    batch = pipeline.ocr_spans(flat, "basico", media=media).filter(
-        F.col("kind") == "media").select("doc_id", "offset", "text")
-    assert got.count() == batch.count()
-    assert got.exceptAll(batch).count() == 0
-
-
-def test_streaming_checkboxes_matches_batch(spark, tmp_path):
-    """Mode-independence of the shared kernel: the streaming path with
-    mode='checkboxes' reproduces the batch stage exactly on the same
-    rendered checkbox forms — the second mode proven through streaming
-    (test_streaming_matches_batch covers 'basico'); both paths run the
-    identical _ocr_udf, so a divergence would mean the mode dispatch
-    leaks execution-context state."""
+def test_checkboxes_span_stage_matches_run_mode(spark):
+    """Mode-independence of the shared kernel: the Spark span stage with
+    mode='checkboxes' returns, per rendered checkbox form, exactly what
+    modes.run_mode returns on the same decoded bytes in the driver — a
+    divergence would mean the mode dispatch leaks execution-context state."""
     from api_ocr_spark.imaging import png as png_codec
     from api_ocr_spark.imaging.render import render_form
-    from api_ocr_spark.streaming import stream as st
+    from api_ocr_spark.operators import modes
 
-    media_rows = []
+    payloads = {}
     for i in range(4):
         img, _ = render_form([
             {"label": "opcion uno", "marked": i % 2 == 0, "kind": "square", "y": 0},
             {"label": "opcion dos", "marked": i % 2 == 1, "kind": "circle", "y": 70},
         ])
-        media_rows.append((f"cbx{i}", bytes(png_codec.encode_gray(img))))
-    media = spark.createDataFrame(media_rows, "media_ref string, bytes binary")
+        payloads[f"cbx{i}"] = bytes(png_codec.encode_gray(img))
+    media = spark.createDataFrame(list(payloads.items()), "media_ref string, bytes binary")
     spans = spark.createDataFrame(
         [(str(9000 + i), 0, "media", f"cbx{i}") for i in range(4)],
         "doc_id string, offset int, kind string, media_ref string")
 
-    cmp_cols = ["doc_id", "offset", "text", "route", "n_words", "mean_conf"]
-    batch = pipeline.ocr_spans(spans, "checkboxes", media=media).filter(
-        F.col("kind") == "media").select(*cmp_cols)
-
-    joined = (
-        spans.join(media, "media_ref")
-        .withColumn("event_time", F.current_timestamp())
-        .select("doc_id", "offset", "media_ref", "bytes", "event_time")
-    )
-    in_dir = os.path.join(str(tmp_path), "cbx_stream_in")
-    joined.write.parquet(in_dir)
-    st.run_stream_to_memory(spark, in_dir, table_name="t_cbx_stream", mode="checkboxes")
-    got = spark.table("t_cbx_stream").select(*cmp_cols)
-    assert got.count() == 4
-    assert {r.route for r in got.collect()} == {"checkboxes"}
-    assert got.exceptAll(batch).count() == 0
-    assert batch.exceptAll(got).count() == 0
+    got = pipeline.ocr_spans(spans, "checkboxes", media=media).filter(
+        F.col("kind") == "media").collect()
+    assert sorted((r.doc_id, r.offset, r.media_ref) for r in got) == [
+        (str(9000 + i), 0, f"cbx{i}") for i in range(4)]
+    for r in got:
+        want = modes.run_mode(png_codec.decode_gray_auto(payloads[r.media_ref]), "checkboxes")
+        text = want.get("text", "")
+        assert (r.text, r.route, r.n_words, r.mean_conf) == (
+            text, want.get("route"), len(text.split()),
+            round(float(want.get("mean_conf", 0.0)), 2)), r.media_ref
+    assert {r.route for r in got} == {"checkboxes"}
 
 
 def test_skewed_doc_distribution(spark):
@@ -273,7 +271,7 @@ def test_skewed_doc_distribution(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     flat = interleave.flat_spans(docs)
     media = interleave.build_media(docs)
-    out = pipeline.ocr_spans(flat, "basico", media=media, salt_partitions=8)
+    out = pipeline.ocr_spans(flat, "basico", media=media)
     per_part = out.groupBy("partition_id").count().collect()
     counts = [r["count"] for r in per_part]
     assert len(counts) >= 4  # heavy doc did not collapse into one partition
@@ -285,6 +283,8 @@ def test_reassembly_reducer_balance_on_media_heavy_doc(spark):
     (SURVEY.md §4.3.1 acceptance): a ~500-media document's level-1 partial
     collect_list rows spread over the salt buckets, so no single reducer
     receives the whole document."""
+    from api_ocr_spark.operators.pipeline import SALT_BLOCK, SALT_BUCKETS
+
     # one doc with ~1500 spans (~500 media at MEDIA_MOD=3), a few small docs
     heavy_text = " ".join(["w%d" % i for i in range(1500 * 8)])
     rows = [(777000, heavy_text)] + [(777001 + i, "small doc words here all ok") for i in range(4)]
@@ -293,22 +293,21 @@ def test_reassembly_reducer_balance_on_media_heavy_doc(spark):
     text_rows = flat.filter(F.col("kind") == "text").select(
         "doc_id", "offset", F.lit("text").alias("kind"),
         F.col("chunk").alias("text"), F.col("media_ref"))
-    salt_buckets = 8
     partial = (
-        text_rows.withColumn(
-            "salt", F.pmod(F.floor(F.col("offset") / F.lit(32)), F.lit(salt_buckets)))
+        text_rows.withColumn("salt", F.pmod(
+            F.floor(F.col("offset") / F.lit(SALT_BLOCK)), F.lit(SALT_BUCKETS)))
         .groupBy("doc_id", "salt")
         .agg(F.count("*").alias("n"))
         .filter(F.col("doc_id") == "777000")
         .collect()
     )
     # the heavy doc's level-1 aggregation keys span (nearly) all salt buckets
-    assert len(partial) >= salt_buckets - 1
+    assert len(partial) >= SALT_BUCKETS - 1
     counts = [r["n"] for r in partial]
     assert max(counts) <= 2 * (sum(counts) / len(counts))
     # and the end-to-end default path (extract_documents → two-level
     # reassembly) still reproduces the heavy doc exactly
-    out = pipeline.extract_documents(docs, mode="basico", salt_partitions=8)
+    out = pipeline.extract_documents(docs, mode="basico")
     got = {r["doc_id"]: r["extracted_text"] for r in out.collect()}
     assert got["777000"] == " ".join(heavy_text.lower().split())
     assert len(got) == 5
@@ -344,45 +343,9 @@ def test_extraction_exact_over_jpeg_media_store(spark):
         assert got[str(880000 + i)] == "jpeg media store words here all readable fine ok yes"
 
 
-def test_streaming_checkpoint_restart_exactly_once(spark, tmp_path):
-    """Streaming exactly-once across a kill/restart: the second run of the
-    same query (same checkpointLocation) processes ONLY files that arrived
-    after the first run — no span is OCR'd or appended twice."""
-    from api_ocr_spark.streaming import stream as st
-
-    rows = [(770000 + i, "stream restart words all readable here ok")
-            for i in range(4)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    flat = interleave.flat_spans(docs)
-    media = interleave.build_media(docs)
-    joined = (
-        flat.filter(F.col("kind") == "media")
-        .select("doc_id", "offset", "media_ref")
-        .join(media.select("media_ref", "bytes"), "media_ref")
-        .withColumn("event_time", F.current_timestamp())
-        .select("doc_id", "offset", "media_ref", "bytes", "event_time")
-    ).cache()
-    total = joined.count()
-    first = joined.limit(total // 2).cache()
-    rest = joined.exceptAll(first)
-    in_dir = os.path.join(str(tmp_path), "sin")
-    out_dir = os.path.join(str(tmp_path), "sout")
-    ckpt = os.path.join(str(tmp_path), "sckpt")
-    first.write.mode("append").parquet(in_dir)
-    st.run_stream_to_parquet(spark, in_dir, out_dir, ckpt, mode="basico")
-    n1 = spark.read.parquet(out_dir).count()
-    assert n1 == total // 2
-    # "kill": the query ended; more data arrives; restart on SAME checkpoint
-    rest.write.mode("append").parquet(in_dir)
-    st.run_stream_to_parquet(spark, in_dir, out_dir, ckpt, mode="basico")
-    out = spark.read.parquet(out_dir)
-    assert out.count() == total  # nothing reprocessed, nothing lost
-    assert out.select("doc_id", "offset").distinct().count() == total
-
-
 def test_extraction_strategies_equal(spark, docs, golden):
-    """persist / unified / auto produce identical results (the strategy only
-    changes the physical plan shape)."""
+    """extract_documents accepts `strategy` and ignores it (perfbench still
+    passes it): persist / unified / auto run the one plan and agree."""
     outs = {
         s: pipeline.extract_documents(docs, mode="basico", strategy=s)
              .select("doc_id", "extracted_text")
@@ -428,9 +391,10 @@ def test_span_batch_kernel_payloads_errors_and_passthrough():
         "offset": [o for _, o, _ in spans],
         "chunk": [c for _, _, c in spans],
         "media_ref": [f"m-{d}-{o}" for d, o, _ in spans],
+        "kind": "media",
     })
     store = next(interleave._render_batches(iter([synth])))  # build_media's bytes
-    stored = synth[["doc_id", "offset", "media_ref"]].assign(bytes=store["bytes"])
+    stored = synth[["doc_id", "offset", "kind", "media_ref"]].assign(bytes=store["bytes"])
 
     cols = ["doc_id", "offset", "text", "route", "n_words", "mean_conf"]
     a = pipeline.ocr_span_batch(synth, "documento_completo")
@@ -449,7 +413,7 @@ def test_span_batch_kernel_payloads_errors_and_passthrough():
         "kind": ["text", "text", "text"], "chunk": ["a  scan\tbatch", "", "row"],
         "media_ref": [None, None, None],
     })
-    mixed = pd.concat([text, synth.iloc[:1].assign(kind="media")], ignore_index=True)
+    mixed = pd.concat([text, synth.iloc[:1]], ignore_index=True)
     out = pipeline.ocr_span_batch(mixed, "documento_completo", pid=7)
     passed = out[out["kind"] == "text"]
     assert passed[["doc_id", "offset", "text"]].values.tolist() == \
