@@ -6,23 +6,26 @@ Replaces the reference's in-memory async task store
   output/bucket=<b>/   extracted documents (doc_id, spans, extracted_text,
                        run_id), one directory per bucket, OVERWRITTEN on
                        (re)processing — reprocessing replaces, never appends
-  lineage/             one row per completed (run_group, run_id, bucket):
-                       doc/span counts, wall ms, status (append-only history)
+  lineage/             one LINEAGE_SCHEMA row per completed (run_group,
+                       run_id, bucket): append-only history
   metrics/bucket=<b>/  per OCR-partition rows: span/error counts, conf and
                        byte stats, wall ms — the distributed twin of the
                        reference's SQLite ocr_requests table
                        (/root/reference/metrics.py:17-66)
 
-Resume semantics: work is split into `n_buckets` by pmod(xxhash64(doc_id), B).
-Completed buckets are recorded in lineage; a restarted run anti-joins its
-input against completed buckets and processes only the remainder.
+Resume semantics: work is split into `n_buckets` by pmod(xxhash64(doc_id), B)
+(fixed per run group: resuming with another count raises). Completed buckets
+are recorded in lineage; a restarted run processes only the remainder, in
+waves of WAVE_BUCKETS: one Spark job per wave runs the span stage once
+(cached), one output write, one metrics write, one count aggregate and one
+lineage append. A kill loses at most one wave.
 
-Exactly-once: output and metrics are written per-bucket with dynamic
-directory overwrite, so the kill window BETWEEN the output commit and the
-lineage row landing is safe — the resumed run reprocesses the bucket and
-REPLACES its directory instead of appending duplicates. read_output
-additionally semi-joins on lineage's done buckets, so a bucket whose output
-committed but whose lineage row never landed is invisible until reprocessed.
+Exactly-once: output and metrics are written partitioned by bucket with
+dynamic overwrite, so a wave replaces only its own bucket directories and
+the kill window BETWEEN the output commit and the lineage rows landing is
+safe — the resumed run REPLACES those directories instead of appending
+duplicates. read_output semi-joins on lineage's done buckets, so a bucket
+whose lineage row never landed is invisible until reprocessed.
 
 On a production lakehouse these are Iceberg tables (MERGE / snapshot
 isolation); the sandbox has no Iceberg runtime, so the same protocol runs on
@@ -37,6 +40,11 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# buckets committed per Spark job; a kill loses at most one wave
+WAVE_BUCKETS = 4
+LINEAGE_SCHEMA = ("run_group string, run_id string, bucket int, n_buckets int, "
+                  "n_docs long, n_media long, wall_ms double, status string")
 
 
 def _bucket_of(col, n_buckets: int):
@@ -56,12 +64,8 @@ def _read_lineage_if_any(spark: SparkSession, base_dir: str) -> DataFrame | None
 
 def completed_buckets(spark: SparkSession, base_dir: str, run_group: str) -> set[int]:
     lin = _read_lineage_if_any(spark, base_dir)
-    if lin is None:
-        return set()
-    rows = (
-        lin.filter((F.col("run_group") == run_group) & (F.col("status") == "done"))
-        .select("bucket").distinct().collect()
-    )
+    done = (F.col("run_group") == run_group) & (F.col("status") == "done")
+    rows = [] if lin is None else lin.filter(done).select("bucket").distinct().collect()
     return {r.bucket for r in rows}
 
 
@@ -76,43 +80,44 @@ def run_with_checkpoint(
     max_buckets: int | None = None,
     media: DataFrame | None = None,
 ) -> dict:
-    """Extract `documents` bucket-by-bucket with checkpoint/resume.
+    """Extract `documents` in waves of buckets with checkpoint/resume.
 
     `max_buckets` caps how many *new* buckets this invocation processes —
     the kill-at-50% test uses it to simulate a dying job. `media` is an
     optional external media store (media_ref, bytes) — the production
     shape; when omitted, media spans are rendered inside the span stage.
-    Returns a summary {processed: [...], skipped: [...]}.
+    Raises ValueError, before any work, if the run group's lineage holds
+    another `n_buckets`. Returns a summary {processed: [...], skipped: [...]}.
     """
     from ..operators.pipeline import ocr_spans, reassemble_spans
     from ..sources.interleave import flat_spans
 
     done = completed_buckets(spark, base_dir, run_group)
-    docs_b = documents.withColumn("bucket", _bucket_of(F.col("doc_id").cast("string"), n_buckets))
-    processed, skipped = [], []
-    out_path = os.path.join(base_dir, "output")
-    lineage_path = os.path.join(base_dir, "lineage")
-    metrics_path = os.path.join(base_dir, "metrics")
-    for b in range(n_buckets):
-        if b in done:
-            skipped.append(b)
-            continue
-        if max_buckets is not None and len(processed) >= max_buckets:
-            break
-        subset = docs_b.filter(F.col("bucket") == b).drop("bucket")
+    other = [] if not done else read_lineage(spark, base_dir).filter(
+        (F.col("run_group") == run_group) & (F.col("n_buckets") != n_buckets)).take(1)
+    if other:  # its buckets hold other documents: re-bucketing would duplicate them
+        raise ValueError(f"run_group {run_group!r} in {base_dir} was bucketed with "
+                         f"n_buckets={other[0].n_buckets}, not {n_buckets}")
+    todo = [b for b in range(n_buckets) if b not in done][:max_buckets]
+    bucket = _bucket_of(F.col("doc_id").cast("string"), n_buckets)
+    is_media = F.col("kind") == "media"
+
+    def overwrite(df: DataFrame, table: str) -> None:
+        (df.write.partitionBy("bucket").mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic").parquet(os.path.join(base_dir, table)))
+
+    for i in range(0, len(todo), WAVE_BUCKETS):
+        wave = todo[i:i + WAVE_BUCKETS]
         t0 = time.perf_counter()
-        spans_out = ocr_spans(flat_spans(subset), mode, media).cache()
-        media_out = spans_out.filter(F.col("kind") == "media")
-        result = reassemble_spans(spans_out)
-        # per-bucket directory overwrite: reprocessing REPLACES (exactly-once
-        # even when a previous attempt died between this commit and lineage)
-        bucket_out = os.path.join(out_path, f"bucket={b}")
-        result.withColumn("run_id", F.lit(run_id)).write.mode("overwrite").parquet(bucket_out)
+        subset = flat_spans(documents.filter(bucket.isin(wave)))
+        spans_out = ocr_spans(subset, mode, media).withColumn("bucket", bucket).cache()
+        overwrite(reassemble_spans(spans_out).withColumns(
+            {"bucket": bucket, "run_id": F.lit(run_id)}), "output")
         # per-partition OCR metrics (the reference's metrics.log_request twin,
         # /root/reference/metrics.py:17-35: endpoint→mode+route, image
         # size→byte stats, error→error-route counts, timing→ocr_ms)
-        metrics = (
-            media_out.groupBy("partition_id", "route")
+        overwrite(
+            spans_out.filter(is_media).groupBy("bucket", "partition_id", "route")
             .agg(
                 F.count("*").alias("n_spans"),
                 F.sum(F.when(F.col("route").startswith("error:"), 1).otherwise(0)).alias("n_errors"),
@@ -123,25 +128,19 @@ def run_with_checkpoint(
                 F.sum("n_bytes").alias("sum_bytes"),
                 F.round(F.avg("n_bytes"), 1).alias("avg_bytes"),
             )
-            .withColumn("mode", F.lit(mode))
-            .withColumn("run_group", F.lit(run_group))
-            .withColumn("run_id", F.lit(run_id))
-        )
-        metrics.write.mode("overwrite").parquet(os.path.join(metrics_path, f"bucket={b}"))
-        # count from the committed bucket directory only — O(bucket), not a
-        # rescan of every previous bucket, and no second pipeline execution
-        n_docs = spark.read.parquet(bucket_out).count()
-        n_media = media_out.count()
+            .withColumns({"mode": F.lit(mode), "run_group": F.lit(run_group),
+                          "run_id": F.lit(run_id)}), "metrics")
+        counts = {r.bucket: (r.n_docs, r.n_media) for r in spans_out.groupBy("bucket").agg(
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.count(F.when(is_media, 1)).alias("n_media")).collect()}
         spans_out.unpersist()
         wall_ms = round((time.perf_counter() - t0) * 1e3, 1)
-        lineage = spark.createDataFrame(
-            [(run_group, run_id, b, n_docs, n_media, wall_ms, "done")],
-            "run_group string, run_id string, bucket int, n_docs long, "
-            "n_media long, wall_ms double, status string",
-        )
-        lineage.write.mode("append").parquet(lineage_path)
-        processed.append(b)
-    return {"processed": processed, "skipped": skipped}
+        # after both writes commit; an empty bucket still gets its row
+        spark.createDataFrame(
+            [(run_group, run_id, b, n_buckets, *counts.get(b, (0, 0)), wall_ms, "done")
+             for b in wave], LINEAGE_SCHEMA,
+        ).write.mode("append").parquet(os.path.join(base_dir, "lineage"))
+    return {"processed": todo, "skipped": sorted(done)}
 
 
 def read_output(spark: SparkSession, base_dir: str, run_group: str | None = None) -> DataFrame:

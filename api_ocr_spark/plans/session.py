@@ -72,11 +72,6 @@ def get_spark(
         b = b.config("spark.local.dir", shm)
     except OSError:
         pass
-    # experiment hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overlays any conf
-    for pair in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        if "=" in pair:
-            k, v = pair.split("=", 1)
-            b = b.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

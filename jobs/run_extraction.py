@@ -7,17 +7,23 @@ Launch (cluster):
       --documents s3://bucket/documents/ --output s3://bucket/out \
       --mode documento_completo --buckets 64 --run-id r1
 
-Launch (local smoke):
-  spark-submit --master 'local[8]' --py-files api_ocr_spark.zip \
+Launch (local smoke, 4 cores):
+  spark-submit --master 'local[4]' --py-files api_ocr_spark.zip \
       jobs/run_extraction.py --documents /root/testdata/sf0.001/documents.parquet \
       --output /tmp/extract_out --buckets 4
+
+The documents are hashed into --buckets buckets, and the pending buckets are
+committed four at a time: one Spark job per wave writes their output and
+metrics directories and then their lineage rows, so a kill loses at most one
+wave. --max-buckets caps the buckets one call commits.
 
 With --media, media spans read their bytes from that store (media_ref,
 bytes); a span whose store row is missing or corrupt is an error row in the
 metrics table. Without it, media spans are rendered from the documents.
 
-Resume after a kill: re-run with the same --output and --run-group; completed
-buckets are skipped via the lineage anti-join (plans/checkpoint.py).
+Resume after a kill: re-run with the same --output, --run-group and
+--buckets; completed buckets are skipped via lineage (plans/checkpoint.py).
+Another --buckets for the same run group is refused.
 """
 
 from __future__ import annotations

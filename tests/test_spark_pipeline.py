@@ -163,11 +163,7 @@ def test_checkpoint_exactly_once_mid_bucket_kill(spark, docs, golden, tmp_path):
     lin_path = os.path.join(base, "lineage")
     kept = spark.read.parquet(lin_path).filter(F.col("bucket") != 1).collect()
     shutil.rmtree(lin_path)
-    spark.createDataFrame(
-        kept,
-        "run_group string, run_id string, bucket int, n_docs long, "
-        "n_media long, wall_ms double, status string",
-    ).write.parquet(lin_path)
+    spark.createDataFrame(kept, checkpoint.LINEAGE_SCHEMA).write.parquet(lin_path)
     vis = checkpoint.read_output(spark, base)
     assert vis.filter(F.col("bucket") == 1).count() == 0  # orphan hidden
     r = checkpoint.run_with_checkpoint(spark, docs, base, run_group="g", run_id="b",
@@ -177,6 +173,86 @@ def test_checkpoint_exactly_once_mid_bucket_kill(spark, docs, golden, tmp_path):
     assert out.count() == out.select("doc_id").distinct().count() == N_DOCS
     bad = out.join(golden, "doc_id").filter(F.col("extracted_text") != F.col("want"))
     assert bad.count() == 0
+
+
+def _files(root):
+    """{relative path: mtime_ns} of every file under root."""
+    return {os.path.relpath(os.path.join(d, f), root): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(root) for f in fs}
+
+
+def test_checkpoint_wave_kill_between_commit_and_lineage(spark, docs, golden, tmp_path):
+    """8 buckets commit in two waves of WAVE_BUCKETS. A kill after the second
+    wave's writes but before its lineage append leaves its buckets hidden;
+    the rerun reprocesses exactly those buckets, and the dynamic overwrite
+    leaves the first wave's files untouched."""
+    import shutil
+
+    assert checkpoint.WAVE_BUCKETS == 4
+    base = os.path.join(str(tmp_path), "ckptw")
+    r = checkpoint.run_with_checkpoint(spark, docs, base, run_group="g", run_id="a",
+                                       mode="basico", n_buckets=8)
+    assert r["processed"] == list(range(8))
+    lin_path = os.path.join(base, "lineage")
+    lin = spark.read.parquet(lin_path)
+    assert lin.filter(F.col("bucket") < 4).select("wall_ms").distinct().count() == 1
+    kept = lin.filter(F.col("bucket") < 4).collect()
+    shutil.rmtree(lin_path)
+    spark.createDataFrame(kept, checkpoint.LINEAGE_SCHEMA).write.parquet(lin_path)
+    assert checkpoint.read_output(spark, base).filter(F.col("bucket") >= 4).count() == 0
+
+    def first_wave():
+        return {(t, b): _files(os.path.join(base, t, f"bucket={b}"))
+                for t in ("output", "metrics") for b in range(4)}
+
+    before = first_wave()
+    assert any(before.values())
+    r = checkpoint.run_with_checkpoint(spark, docs, base, run_group="g", run_id="b",
+                                       mode="basico", n_buckets=8)
+    assert r["processed"] == [4, 5, 6, 7] and r["skipped"] == [0, 1, 2, 3]
+    assert first_wave() == before
+    out = checkpoint.read_output(spark, base)
+    assert out.count() == out.select("doc_id").distinct().count() == N_DOCS
+    assert out.filter((F.col("bucket") >= 4) != (F.col("run_id") == "b")).count() == 0
+    bad = out.join(golden, "doc_id").filter(F.col("extracted_text") != F.col("want"))
+    assert bad.count() == 0
+
+
+def test_checkpoint_empty_buckets_get_lineage_rows(spark, tmp_path):
+    """Two documents over 8 buckets: every bucket gets a done lineage row
+    (empty ones with n_docs = 0), so a rerun has nothing left to do."""
+    base = os.path.join(str(tmp_path), "ckpte")
+    docs = spark.createDataFrame(
+        [(i, "empty bucket words all readable here ok") for i in range(2)],
+        "doc_id long, text string")
+    r = checkpoint.run_with_checkpoint(spark, docs, base, run_group="g", mode="basico",
+                                       n_buckets=8)
+    assert r["processed"] == list(range(8))
+    lin = checkpoint.read_lineage(spark, base)
+    assert lin.filter(F.col("status") == "done").select("bucket").distinct().count() == 8
+    assert lin.agg(F.sum("n_docs")).first()[0] == 2
+    r = checkpoint.run_with_checkpoint(spark, docs, base, run_group="g", run_id="r1",
+                                       mode="basico", n_buckets=8)
+    assert r["processed"] == [] and r["skipped"] == list(range(8))
+    assert checkpoint.read_output(spark, base).count() == 2
+
+
+def test_checkpoint_resume_with_other_bucket_count_raises(spark, docs, tmp_path):
+    """A run group's buckets hold the documents of ITS bucket count: resuming
+    with another count would re-bucket and duplicate documents, so it raises
+    before writing anything."""
+    base = os.path.join(str(tmp_path), "ckptn")
+    checkpoint.run_with_checkpoint(spark, docs, base, run_group="g", run_id="a",
+                                   mode="basico", n_buckets=4, max_buckets=2)
+    before = _files(base)
+    with pytest.raises(ValueError, match="n_buckets=4"):
+        checkpoint.run_with_checkpoint(spark, docs, base, run_group="g", run_id="b",
+                                       mode="basico", n_buckets=8)
+    assert _files(base) == before
+    checkpoint.run_with_checkpoint(spark, docs, base, run_group="g", run_id="c",
+                                   mode="basico", n_buckets=4)
+    out = checkpoint.read_output(spark, base)
+    assert out.count() == out.select("doc_id").distinct().count() == N_DOCS
 
 
 def test_lineage_missing_reads_as_none_done_unreadable_raises(spark, tmp_path):
