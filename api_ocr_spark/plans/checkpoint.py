@@ -13,19 +13,17 @@ Replaces the reference's in-memory async task store
                        reference's SQLite ocr_requests table
                        (/root/reference/metrics.py:17-66)
 
-Resume semantics: work is split into `n_buckets` by pmod(xxhash64(doc_id), B)
-(fixed per run group: resuming with another count raises). Completed buckets
-are recorded in lineage; a restarted run processes only the remainder, in
-waves of WAVE_BUCKETS: one Spark job per wave runs the span stage once
-(cached), one output write, one metrics write, one count aggregate and one
-lineage append. A kill loses at most one wave.
+Resume semantics: work is split into `n_buckets` by pmod(xxhash64(doc_id), B),
+fixed per run group. Completed buckets are recorded in lineage; a restarted
+run processes only the remainder, in waves of WAVE_BUCKETS buckets: each wave
+runs the span stage once (cached), then one count aggregate, one output write,
+one metrics write and one lineage append. A kill loses at most one wave.
 
 Exactly-once: output and metrics are written partitioned by bucket with
-dynamic overwrite, so a wave replaces only its own bucket directories and
-the kill window BETWEEN the output commit and the lineage rows landing is
-safe — the resumed run REPLACES those directories instead of appending
-duplicates. read_output semi-joins on lineage's done buckets, so a bucket
-whose lineage row never landed is invisible until reprocessed.
+dynamic overwrite (a bucket without rows gets one empty schema file), so a
+rerun after a kill between the writes and the lineage append REPLACES the
+wave's bucket directories, and read_output semi-joins on lineage's done
+buckets, so those buckets stay invisible until reprocessed.
 
 On a production lakehouse these are Iceberg tables (MERGE / snapshot
 isolation); the sandbox has no Iceberg runtime, so the same protocol runs on
@@ -41,8 +39,10 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# buckets committed per Spark job; a kill loses at most one wave
+# buckets committed per cached span stage; a kill loses at most one wave
 WAVE_BUCKETS = 4
+# wall_ms is the wave's wall, repeated on each of its buckets' rows; read with
+# this schema, rows from before n_buckets was recorded read it as null (unknown)
 LINEAGE_SCHEMA = ("run_group string, run_id string, bucket int, n_buckets int, "
                   "n_docs long, n_media long, wall_ms double, status string")
 
@@ -59,13 +59,21 @@ def _read_lineage_if_any(spark: SparkSession, base_dir: str) -> DataFrame | None
     path = os.path.join(base_dir, "lineage")
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return spark.read.parquet(path) if fs.exists(jpath) else None
+    return read_lineage(spark, base_dir) if fs.exists(jpath) else None
 
 
-def completed_buckets(spark: SparkSession, base_dir: str, run_group: str) -> set[int]:
+def completed_buckets(spark: SparkSession, base_dir: str, run_group: str,
+                      n_buckets: int | None = None) -> set[int]:
+    """The run group's done buckets. Given `n_buckets`, raises ValueError if
+    lineage holds another count for the group (re-bucketing would duplicate
+    documents); rows with a null n_buckets predate it and are not compared."""
     lin = _read_lineage_if_any(spark, base_dir)
     done = (F.col("run_group") == run_group) & (F.col("status") == "done")
-    rows = [] if lin is None else lin.filter(done).select("bucket").distinct().collect()
+    rows = [] if lin is None else lin.filter(done).select("bucket", "n_buckets").distinct().collect()
+    other = {r.n_buckets for r in rows} - {n_buckets, None}
+    if n_buckets is not None and other:
+        raise ValueError(f"run_group {run_group!r} in {base_dir} was bucketed with "
+                         f"n_buckets={min(other)}, not {n_buckets}")
     return {r.bucket for r in rows}
 
 
@@ -87,32 +95,36 @@ def run_with_checkpoint(
     optional external media store (media_ref, bytes) — the production
     shape; when omitted, media spans are rendered inside the span stage.
     Raises ValueError, before any work, if the run group's lineage holds
-    another `n_buckets`. Returns a summary {processed: [...], skipped: [...]}.
+    another `n_buckets` (see completed_buckets). Returns a summary
+    {processed: [...], skipped: [...]}.
     """
     from ..operators.pipeline import ocr_spans, reassemble_spans
     from ..sources.interleave import flat_spans
 
-    done = completed_buckets(spark, base_dir, run_group)
-    other = [] if not done else read_lineage(spark, base_dir).filter(
-        (F.col("run_group") == run_group) & (F.col("n_buckets") != n_buckets)).take(1)
-    if other:  # its buckets hold other documents: re-bucketing would duplicate them
-        raise ValueError(f"run_group {run_group!r} in {base_dir} was bucketed with "
-                         f"n_buckets={other[0].n_buckets}, not {n_buckets}")
+    done = completed_buckets(spark, base_dir, run_group, n_buckets)
     todo = [b for b in range(n_buckets) if b not in done][:max_buckets]
     bucket = _bucket_of(F.col("doc_id").cast("string"), n_buckets)
     is_media = F.col("kind") == "media"
 
-    def overwrite(df: DataFrame, table: str) -> None:
+    def overwrite(df: DataFrame, table: str, empty: list[int]) -> None:
+        path = os.path.join(base_dir, table)
         (df.write.partitionBy("bucket").mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic").parquet(os.path.join(base_dir, table)))
+         .option("partitionOverwriteMode", "dynamic").parquet(path))
+        for b in empty:  # the write above leaves no directory for a bucket without rows
+            df.limit(0).drop("bucket").write.mode("overwrite").parquet(f"{path}/bucket={b}")
 
     for i in range(0, len(todo), WAVE_BUCKETS):
         wave = todo[i:i + WAVE_BUCKETS]
         t0 = time.perf_counter()
         subset = flat_spans(documents.filter(bucket.isin(wave)))
         spans_out = ocr_spans(subset, mode, media).withColumn("bucket", bucket).cache()
+        counts = {r.bucket: (r.n_docs, r.n_media) for r in spans_out.groupBy("bucket").agg(
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.count(F.when(is_media, 1)).alias("n_media")).collect()}
+        counts = [(b, *counts.get(b, (0, 0))) for b in wave]
         overwrite(reassemble_spans(spans_out).withColumns(
-            {"bucket": bucket, "run_id": F.lit(run_id)}), "output")
+            {"bucket": bucket, "run_id": F.lit(run_id)}), "output",
+            [b for b, n_docs, _ in counts if not n_docs])
         # per-partition OCR metrics (the reference's metrics.log_request twin,
         # /root/reference/metrics.py:17-35: endpoint→mode+route, image
         # size→byte stats, error→error-route counts, timing→ocr_ms)
@@ -129,34 +141,24 @@ def run_with_checkpoint(
                 F.round(F.avg("n_bytes"), 1).alias("avg_bytes"),
             )
             .withColumns({"mode": F.lit(mode), "run_group": F.lit(run_group),
-                          "run_id": F.lit(run_id)}), "metrics")
-        counts = {r.bucket: (r.n_docs, r.n_media) for r in spans_out.groupBy("bucket").agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count(F.when(is_media, 1)).alias("n_media")).collect()}
+                          "run_id": F.lit(run_id)}), "metrics",
+            [b for b, _, n_media in counts if not n_media])
         spans_out.unpersist()
         wall_ms = round((time.perf_counter() - t0) * 1e3, 1)
-        # after both writes commit; an empty bucket still gets its row
-        spark.createDataFrame(
-            [(run_group, run_id, b, n_buckets, *counts.get(b, (0, 0)), wall_ms, "done")
-             for b in wave], LINEAGE_SCHEMA,
-        ).write.mode("append").parquet(os.path.join(base_dir, "lineage"))
+        lineage = [(run_group, run_id, b, n_buckets, *c, wall_ms, "done") for b, *c in counts]
+        spark.createDataFrame(lineage, LINEAGE_SCHEMA).write.mode("append").parquet(
+            os.path.join(base_dir, "lineage"))  # after both writes commit
     return {"processed": todo, "skipped": sorted(done)}
 
 
 def read_output(spark: SparkSession, base_dir: str, run_group: str | None = None) -> DataFrame:
-    """Committed output only: semi-join the bucket-partitioned output on
-    lineage's done buckets, so an output directory whose lineage row never
-    landed (kill between commit and lineage) is excluded until its bucket is
-    reprocessed.
+    """Committed output only: the bucket-partitioned output semi-joined on
+    lineage's done buckets, so a bucket whose lineage row never landed (kill
+    between commit and lineage) is hidden until it is reprocessed.
 
-    `run_group` must match the writer's: output bucket directories are
-    overwritten by whichever run_group last processed them, so done-bucket
-    visibility is only exactly-once when reader and writer agree on the
-    group. With run_group=None the group is AUTO-DETECTED from lineage — a
-    base_dir belongs to exactly one run_group, and a base_dir whose lineage
-    shows several groups raises (unioning groups could expose a bucket
-    committed under an older group whose directory now holds a newer group's
-    rows)."""
+    `run_group` must match the writer's, since a bucket directory holds the
+    rows of the group that last processed it. With run_group=None the group
+    is taken from lineage, and a base_dir with several groups raises."""
     out = spark.read.parquet(os.path.join(base_dir, "output"))
     lin = _read_lineage_if_any(spark, base_dir)
     if lin is None:  # nothing is committed yet
@@ -170,13 +172,12 @@ def read_output(spark: SparkSession, base_dir: str, run_group: str | None = None
                 "pass run_group= explicitly (bucket directories hold only the "
                 "LAST group's rows, so unioning groups is not exactly-once)")
         run_group = groups[0] if groups else "default"
-    lin = lin.filter(F.col("run_group") == run_group)
-    done = lin.select("bucket").distinct()
+    done = lin.filter(F.col("run_group") == run_group).select("bucket").distinct()
     return out.join(F.broadcast(done), "bucket", "left_semi")
 
 
 def read_lineage(spark: SparkSession, base_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(base_dir, "lineage"))
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(os.path.join(base_dir, "lineage"))
 
 
 def read_metrics(spark: SparkSession, base_dir: str) -> DataFrame:

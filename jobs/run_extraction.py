@@ -13,9 +13,10 @@ Launch (local smoke, 4 cores):
       --output /tmp/extract_out --buckets 4
 
 The documents are hashed into --buckets buckets, and the pending buckets are
-committed four at a time: one Spark job per wave writes their output and
-metrics directories and then their lineage rows, so a kill loses at most one
-wave. --max-buckets caps the buckets one call commits.
+committed in waves of four: each wave runs the span stage once (cached),
+writes its buckets' output and metrics directories and then their lineage
+rows, so a kill loses at most one wave. --max-buckets caps the buckets one
+call commits.
 
 With --media, media spans read their bytes from that store (media_ref,
 bytes); a span whose store row is missing or corrupt is an error row in the

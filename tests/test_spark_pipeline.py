@@ -237,6 +237,24 @@ def test_checkpoint_empty_buckets_get_lineage_rows(spark, tmp_path):
     assert checkpoint.read_output(spark, base).count() == 2
 
 
+def test_checkpoint_empty_tables_read_back_empty(spark, tmp_path):
+    """No document at all, then documents without a media span (span i of
+    doc d is media iff (d + i) % MEDIA_MOD == 0): every bucket is done, and
+    the tables without a row read back 0 rows instead of failing to infer a
+    schema."""
+    for n, ids in ((0, []), (2, [1, 2])):
+        base = os.path.join(str(tmp_path), f"ckptz{n}")
+        docs = spark.createDataFrame([(i, "one short text span") for i in ids],
+                                     "doc_id long, text string")
+        r = checkpoint.run_with_checkpoint(spark, docs, base, run_group="g", mode="basico",
+                                           n_buckets=2)
+        assert r["processed"] == [0, 1]
+        lin = checkpoint.read_lineage(spark, base)
+        assert lin.agg(F.sum("n_docs"), F.sum("n_media")).first() == (n, 0)
+        assert checkpoint.read_output(spark, base).count() == n
+        assert checkpoint.read_metrics(spark, base).count() == 0
+
+
 def test_checkpoint_resume_with_other_bucket_count_raises(spark, docs, tmp_path):
     """A run group's buckets hold the documents of ITS bucket count: resuming
     with another count would re-bucket and duplicate documents, so it raises
@@ -253,6 +271,33 @@ def test_checkpoint_resume_with_other_bucket_count_raises(spark, docs, tmp_path)
                                    mode="basico", n_buckets=4)
     out = checkpoint.read_output(spark, base)
     assert out.count() == out.select("doc_id").distinct().count() == N_DOCS
+
+
+def test_checkpoint_resumes_from_lineage_without_n_buckets(spark, docs, tmp_path):
+    """Lineage rows written before n_buckets was recorded (7 columns) read
+    n_buckets as null: the run group still resumes, the old rows are not
+    compared, and the rows the resume appends pin the bucket count."""
+    import shutil
+
+    base = os.path.join(str(tmp_path), "ckpto")
+    checkpoint.run_with_checkpoint(spark, docs, base, run_group="g", run_id="a",
+                                   mode="basico", n_buckets=4, max_buckets=2)
+    lin_path = os.path.join(base, "lineage")
+    old = spark.read.parquet(lin_path).drop("n_buckets").collect()
+    shutil.rmtree(lin_path)
+    spark.createDataFrame(old, "run_group string, run_id string, bucket int, n_docs long, "
+                          "n_media long, wall_ms double, status string").write.parquet(lin_path)
+    r = checkpoint.run_with_checkpoint(spark, docs, base, run_group="g", run_id="b",
+                                       mode="basico", n_buckets=4)
+    assert r["processed"] == [2, 3] and r["skipped"] == [0, 1]
+    lin = checkpoint.read_lineage(spark, base)
+    assert sorted((x.bucket, x.n_buckets) for x in lin.collect()) == \
+        [(0, None), (1, None), (2, 4), (3, 4)]
+    out = checkpoint.read_output(spark, base)
+    assert out.count() == out.select("doc_id").distinct().count() == N_DOCS
+    with pytest.raises(ValueError, match="n_buckets=4"):
+        checkpoint.run_with_checkpoint(spark, docs, base, run_group="g", run_id="c",
+                                       mode="basico", n_buckets=8)
 
 
 def test_lineage_missing_reads_as_none_done_unreadable_raises(spark, tmp_path):
