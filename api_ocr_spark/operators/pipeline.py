@@ -1,17 +1,17 @@
 """The distributed extraction pipeline (SURVEY.md §3.1 Spark lifecycle):
 
-  flat spans → salted repartition → mapInPandas(render → encode → decode →
-  route → preprocess → OCR, text rows passed through) → offset-ordered
-  two-level reassembly.
+  flat spans → span spread on xxhash64(doc_id, offset) → mapInPandas(render
+  → encode → decode → route → preprocess → OCR, text rows passed through) →
+  offset-ordered collect_list per doc_id.
 
 Every extraction path runs that one span stage, :func:`ocr_spans`, and one
-reassembly, :func:`reassemble_spans`: extract_documents, extract_from_spans,
-the checkpoint job and caption mining. Without a media store the source is
-scanned once, nothing is cached, and the only shuffles are the span spread
-and the reassembly's two grouped exchanges — level 1 on (doc_id, salt) with
-map-side partial aggregation, level 2 on doc_id over already-collapsed
-partial arrays (skew-proof by construction). With a media store, media spans
-left-join it and text spans are unioned in before the same stage.
+reassembly, :func:`reassemble_spans`: extract_documents, extract_from_spans
+and the checkpoint job (caption mining runs the span stage alone). Without a
+media store the source is scanned once, nothing is cached, and the
+pipeline's own shuffles are the span spread and the reassembly's one
+exchange on doc_id (collect_list partially aggregated map-side). With a
+media store, media spans left-join it and text spans are unioned in before
+the same stage.
 
 Every span, stored or synthesized, goes through one batch function,
 :func:`ocr_span_batch`, and one per-row kernel, :func:`_ocr_row`. The stage
@@ -193,64 +193,31 @@ def _norm(col):
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
-def _span_rows(out: DataFrame) -> DataFrame:
-    """:func:`ocr_spans` output as (doc_id, offset, kind, text, media_ref):
-    media text whitespace-normalized JVM-side, text rows verbatim."""
-    return out.select(
-        "doc_id", "offset", "kind",
+def reassemble_spans(out: DataFrame) -> DataFrame:
+    """:func:`ocr_spans` output → (doc_id, spans, extracted_text): one
+    collect_list per doc_id rebuilds each document as an offset-ordered span
+    array (the engine's signature aggregation, SURVEY.md §2.4) plus the
+    concatenated extracted_text. Media text is whitespace-normalized
+    JVM-side, text rows pass verbatim.
+
+    One exchange: collect_list runs as a map-side partial aggregate, so the
+    shuffle carries at most one partial array per (map task, doc_id). A
+    document's array is still built in one task — its one output row cannot
+    be split — so a media-heavy document's OCR work is spread by the span
+    stage, not here."""
+    ordered = F.array_sort(F.collect_list(F.struct(
+        "offset", "kind",
         F.when(F.col("kind") == "media", _norm(F.col("text")))
          .otherwise(F.col("text")).alias("text"),
         "media_ref",
-    )
-
-
-# Level-1 salt of reassemble_spans: a span's salt is its SALT_BLOCK-span
-# offset block modulo SALT_BUCKETS.
-SALT_BLOCK = 32
-SALT_BUCKETS = 16
-
-
-def reassemble_spans(out: DataFrame) -> DataFrame:
-    """Skew-proof reassembly (SURVEY.md §4.3.1) of :func:`ocr_spans` output
-    → (doc_id, spans, extracted_text): a media-heavy document's collect_list
-    would land on ONE reducer (an aggregation key AQE cannot split), so
-    level 1 partially collects per (doc_id, salt) and level 2 flattens the
-    partial arrays and sorts once. Output is identical to :func:`reassemble`
-    (asserted in tests).
-
-    Salt is OFFSET-BLOCK based (floor(offset / SALT_BLOCK) % SALT_BUCKETS),
-    not a per-span hash: a document with <= SALT_BLOCK spans lands in ONE
-    level-1 group (the two-level pass degenerates to a cheap flatten for the
-    common case), while a media-heavy document spreads one block per
-    reducer — the skew case that motivates the salting."""
-    rows = _span_rows(out).withColumn(
-        "salt", F.pmod(F.floor(F.col("offset") / F.lit(SALT_BLOCK)), F.lit(SALT_BUCKETS)))
-    partial = rows.groupBy("doc_id", "salt").agg(
-        F.collect_list(F.struct("offset", "kind", "text", "media_ref")).alias("part"))
-    return partial.groupBy("doc_id").agg(*_ordered_spans(F.flatten(F.collect_list("part"))))
-
-
-def _ordered_spans(collected):
-    """(spans, extracted_text) aggregate columns from a collected array of
-    (offset, kind, text, media_ref) structs, sorted by offset."""
-    ordered = F.array_sort(collected)
-    spans = F.transform(
-        ordered,
-        lambda s: F.struct(
+    )))
+    return out.groupBy("doc_id").agg(
+        F.transform(ordered, lambda s: F.struct(
             s.kind.alias("kind"), s.text.alias("text"),
-            s.media_ref.alias("media_ref"), s.offset.alias("offset")),
+            s.media_ref.alias("media_ref"), s.offset.alias("offset"),
+        )).alias("spans"),
+        F.concat_ws(" ", F.transform(ordered, lambda s: s.text)).alias("extracted_text"),
     )
-    return (spans.alias("spans"),
-            F.concat_ws(" ", F.transform(ordered, lambda s: s.text)).alias("extracted_text"))
-
-
-def reassemble(out: DataFrame) -> DataFrame:
-    """Single-level reference for :func:`reassemble_spans`: one
-    collect_list per doc_id rebuilds each document as an offset-ordered span
-    array (the engine's signature aggregation, SURVEY.md §2.4) plus the
-    concatenated extracted_text. No plan uses it; tests compare against it."""
-    return _span_rows(out).groupBy("doc_id").agg(*_ordered_spans(
-        F.collect_list(F.struct("offset", "kind", "text", "media_ref"))))
 
 
 def extract_documents(

@@ -94,13 +94,16 @@ def run_with_checkpoint(
     the kill-at-50% test uses it to simulate a dying job. `media` is an
     optional external media store (media_ref, bytes) — the production
     shape; when omitted, media spans are rendered inside the span stage.
-    Raises ValueError, before any work, if the run group's lineage holds
-    another `n_buckets` (see completed_buckets). Returns a summary
-    {processed: [...], skipped: [...]}.
+    Raises ValueError, before any work, if `n_buckets` < 1, `max_buckets`
+    < 0, or the run group's lineage holds another `n_buckets` (see
+    completed_buckets). Returns a summary {processed: [...], skipped: [...]}.
     """
     from ..operators.pipeline import ocr_spans, reassemble_spans
     from ..sources.interleave import flat_spans
 
+    if n_buckets < 1 or (max_buckets is not None and max_buckets < 0):
+        raise ValueError(f"need n_buckets >= 1 and max_buckets >= 0, got "
+                         f"n_buckets={n_buckets}, max_buckets={max_buckets}")
     done = completed_buckets(spark, base_dir, run_group, n_buckets)
     todo = [b for b in range(n_buckets) if b not in done][:max_buckets]
     bucket = _bucket_of(F.col("doc_id").cast("string"), n_buckets)

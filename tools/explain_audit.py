@@ -34,6 +34,8 @@ CHECKS = {
         ("offset-ordered reassembly agg", r"(ObjectHashAggregate|SortAggregate|HashAggregate)"),
         ("source scanned once (unified span stage)", ("single_scan", None)),
         ("no cached relation (nothing persisted)", ("absent", r"InMemoryRelation")),
+        ("three exchanges: doc repartition, span spread, reassembly",
+         ("max_exchanges", 3)),
     ],
     "ann_cosine_topk": [
         ("broadcast of query side", r"Broadcast"),
