@@ -126,16 +126,15 @@ def _argmax_block(scoped: DataFrame, id_col: str,
     )
 
 
-def html_main_content(df: DataFrame, html_col: str = "html",
-                      id_col: str = "doc_id") -> DataFrame:
-    """Per document: (doc_id, main_text, main_score, n_blocks) by pure
-    text-density argmax over the whole page (see _argmax_block)."""
+def html_main_content(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Per document: (id_col, main_text, main_score, n_blocks) by pure
+    text-density argmax over the whole page (see _argmax_block). id_col
+    names the key column: doc_id, or record_id for WARC pages."""
     return _argmax_block(
-        df.select(id_col, strip_noise(F.col(html_col)).alias("scope")), id_col)
+        df.select(id_col, strip_noise(F.col("html")).alias("scope")), id_col)
 
 
-def html_main_content_dom(df: DataFrame, html_col: str = "html",
-                          id_col: str = "doc_id") -> DataFrame:
+def html_main_content_dom(df: DataFrame) -> DataFrame:
     """DOM-priority variant: when the page declares a semantic content
     container (<article> or <main>) with visible text, the block argmax is
     RESTRICTED to that container (strategy='dom'); pages without one fall
@@ -146,19 +145,19 @@ def html_main_content_dom(df: DataFrame, html_col: str = "html",
     Same Catalyst-only shape as html_main_content plus one regexp_extract;
     n_blocks counts blocks within the CHOSEN scope."""
     scoped = (
-        df.select(id_col, strip_noise(F.col(html_col)).alias("h"))
+        df.select("doc_id", strip_noise(F.col("html")).alias("h"))
         .withColumn("article",
                     F.regexp_extract(F.col("h"), ARTICLE_PATTERN, 1))
         .withColumn("use_dom", F.length(visible_text(F.col("article"))) > 0)
         .select(
-            id_col,
+            "doc_id",
             F.when(F.col("use_dom"), F.lit("dom"))
             .otherwise(F.lit("density")).alias("strategy"),
             F.when(F.col("use_dom"), F.col("article"))
             .otherwise(F.col("h")).alias("scope"),
         )
     )
-    return _argmax_block(scoped, id_col, ("strategy",))
+    return _argmax_block(scoped, "doc_id", ("strategy",))
 
 
 # ---------------------------------------------------------------------------
@@ -195,9 +194,8 @@ def anchor_word_count(col: Column) -> Column:
     )
 
 
-def classify_blocks(df: DataFrame, html_col: str = "html",
-                    id_col: str = "doc_id") -> DataFrame:
-    """(id, html) → one row per non-empty block with shallow text features
+def classify_blocks(df: DataFrame) -> DataFrame:
+    """(doc_id, html) → one row per non-empty block with shallow text features
     and the boilerpipe NumWordsRulesClassifier label.
 
     Features per block: numWords (tokens of visible text), link density
@@ -212,7 +210,7 @@ def classify_blocks(df: DataFrame, html_col: str = "html",
       else                               → content iff words > 40
                                             or next_words > 17
 
-    Pure Catalyst: regexp splits + two lag/lead windows on (id, pos). At
+    Pure Catalyst: regexp splits + two lag/lead windows on (doc_id, pos). At
     100 TB this is ONE shuffle on doc_id; the downstream per-doc aggregate
     in html_boilerpipe reuses the same hash partitioning (no second
     exchange). Both engines compute ld as an IEEE-754 double division, so
@@ -221,12 +219,12 @@ def classify_blocks(df: DataFrame, html_col: str = "html",
     from pyspark.sql.window import Window
 
     frags = (
-        df.select(id_col, strip_noise(F.col(html_col)).alias("scope"))
-        .select(id_col,
+        df.select("doc_id", strip_noise(F.col("html")).alias("scope"))
+        .select("doc_id",
                 F.posexplode(F.split(F.col("scope"), BLOCK_SPLIT))
                 .alias("pos", "frag"))
         .select(
-            id_col, "pos",
+            "doc_id", "pos",
             visible_text(F.col("frag")).alias("txt"),
             anchor_word_count(F.col("frag")).alias("a_words"),
         )
@@ -234,7 +232,7 @@ def classify_blocks(df: DataFrame, html_col: str = "html",
         .withColumn("words", word_count(F.col("txt")))
         .withColumn("ld", F.col("a_words").cast("double") / F.col("words"))
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     feats = (
         frags
         .withColumn("prev_words", F.lag("words", 1, 0).over(w))
@@ -254,20 +252,19 @@ def classify_blocks(df: DataFrame, html_col: str = "html",
     return feats.withColumn("is_content", is_content)
 
 
-def html_boilerpipe(df: DataFrame, html_col: str = "html",
-                    id_col: str = "doc_id") -> DataFrame:
+def html_boilerpipe(df: DataFrame) -> DataFrame:
     """Per document: boilerpipe-style extracted content — the concatenation
     (document order) of blocks the NumWordsRulesClassifier keeps — plus
-    block counts. Returns (id, content_text, n_content, n_boiler,
+    block counts. Returns (doc_id, content_text, n_content, n_boiler,
     content_words); content_text is '' when the classifier keeps nothing
     (boilerpipe's documented behavior on very short pages).
 
     The groupBy lands on the window's doc_id hash partitioning —
     exchange-free after the single classify shuffle."""
-    blocks = classify_blocks(df, html_col, id_col)
+    blocks = classify_blocks(df)
     kept = F.when(F.col("is_content"), F.struct("pos", "txt"))
     return (
-        blocks.groupBy(id_col)
+        blocks.groupBy("doc_id")
         .agg(
             F.array_join(
                 F.transform(F.array_sort(F.collect_list(kept)),
@@ -281,8 +278,7 @@ def html_boilerpipe(df: DataFrame, html_col: str = "html",
     )
 
 
-def html_boilerpipe_arrays(df: DataFrame, html_col: str = "html",
-                           id_col: str = "doc_id") -> DataFrame:
+def html_boilerpipe_arrays(df: DataFrame) -> DataFrame:
     """Shuffle-FREE twin of html_boilerpipe: because every feature the
     classifier consumes (prev/curr/next word counts, prev link density) is
     context WITHIN one document, the whole pipeline can stay array-native
@@ -300,7 +296,7 @@ def html_boilerpipe_arrays(df: DataFrame, html_col: str = "html",
     asserted in tests/test_html_extract.py)."""
     blocks = F.filter(
         F.transform(
-            F.split(strip_noise(F.col(html_col)), BLOCK_SPLIT),
+            F.split(strip_noise(F.col("html")), BLOCK_SPLIT),
             lambda p: F.struct(
                 visible_text(p).alias("txt"),
                 anchor_word_count(p).alias("aw"),
@@ -311,7 +307,7 @@ def html_boilerpipe_arrays(df: DataFrame, html_col: str = "html",
     # a doc whose blocks are all empty yields no groupBy row in the
     # windowed form (and no row in the SQL oracle's GROUP BY) — drop it
     # here too so the two forms are row-identical on degenerate input
-    d = df.select(id_col, blocks.alias("b")).filter(F.size("b") > 0)
+    d = df.select("doc_id", blocks.alias("b")).filter(F.size("b") > 0)
     d = d.withColumn(
         "words", F.transform("b", lambda x: word_count(x["txt"])))
     d = d.withColumn(
@@ -336,7 +332,7 @@ def html_boilerpipe_arrays(df: DataFrame, html_col: str = "html",
     )
     d = d.withColumn("lab", lab)
     return d.select(
-        id_col,
+        "doc_id",
         F.array_join(
             F.zip_with("b", "lab", lambda x, l: F.when(l, x["txt"])),
             " ").alias("content_text"),     # array_join drops NULL elements
@@ -350,9 +346,7 @@ def html_boilerpipe_arrays(df: DataFrame, html_col: str = "html",
     )
 
 
-def extract_links(df: DataFrame, html_col: str = "html",
-                  id_col: str = "doc_id",
-                  carry: tuple[str, ...] = ()) -> DataFrame:
+def extract_links(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """Outlink extraction — the link-graph primitive of a web-scale
     pipeline: one row per <a href="…">…</a> with its position, href, visible
     anchor text, and an internal-link flag (path-relative href). `carry`
@@ -362,17 +356,17 @@ def extract_links(df: DataFrame, html_col: str = "html",
     Shape at 100 TB: pure codegen'd map + posexplode, NO shuffle at all —
     link rows stay on the partition that held the page. Both capture groups
     come from the SAME pattern so the zipped arrays always align."""
-    h = df.select(id_col, *carry, strip_noise(F.col(html_col)).alias("h"))
+    h = df.select("doc_id", *carry, strip_noise(F.col("html")).alias("h"))
     return (
         h.withColumn("hrefs",
                      F.regexp_extract_all(F.col("h"), F.lit(LINK_PATTERN), 1))
         .withColumn("texts",
                     F.regexp_extract_all(F.col("h"), F.lit(LINK_PATTERN), 2))
-        .select(id_col, *carry,
+        .select("doc_id", *carry,
                 F.posexplode(F.arrays_zip("hrefs", "texts"))
                 .alias("link_pos", "z"))
         .select(
-            id_col, *carry,
+            "doc_id", *carry,
             F.col("link_pos").cast("long").alias("link_pos"),
             F.col("z.hrefs").alias("href"),
             visible_text(F.col("z.texts")).alias("anchor_text"),
@@ -394,8 +388,7 @@ LANG_PATTERN = r'(?is)<html[^>]* lang="([^"]*)"'
 HEADING_PATTERN = r"(?i)<h[1-6][^>]*>"
 
 
-def extract_metadata(df: DataFrame, html_col: str = "html",
-                     id_col: str = "doc_id") -> DataFrame:
+def extract_metadata(df: DataFrame) -> DataFrame:
     """Per-page metadata — the header-census op of a WARC→WET-style web
     pipeline: visible <title> text, meta description, canonical URL,
     declared language, heading count, and title word count. Absent fields
@@ -404,10 +397,10 @@ def extract_metadata(df: DataFrame, html_col: str = "html",
 
     Pure codegen'd map, ZERO shuffle (plan-asserted): five regexp_extract
     + one regexp_extract_all census per row."""
-    h = df.select(id_col, strip_noise(F.col(html_col)).alias("h"))
+    h = df.select("doc_id", strip_noise(F.col("html")).alias("h"))
     title = visible_text(F.regexp_extract(F.col("h"), TITLE_PATTERN, 1))
     return h.select(
-        id_col,
+        "doc_id",
         title.alias("title"),
         F.regexp_extract(F.col("h"), META_DESC_PATTERN, 1).alias("description"),
         F.regexp_extract(F.col("h"), CANONICAL_PATTERN, 1).alias("canonical"),
@@ -504,8 +497,7 @@ TR_PATTERN = r"(?is)<tr(?:\s[^>]*)?>(.*?)</tr>"
 CELL_PATTERN = r"(?is)<t([dh])(?:\s[^>]*)?>(.*?)</t[dh]>"
 
 
-def extract_tables(df: DataFrame, html_col: str = "html",
-                   id_col: str = "doc_id") -> DataFrame:
+def extract_tables(df: DataFrame) -> DataFrame:
     """HTML <table> → structured cells: one row per cell,
     (doc_id, table_idx, row_idx, col_idx, is_header, cell_text) in
     document order. Header cells are <th>; cell text is the visible-text
@@ -520,9 +512,9 @@ def extract_tables(df: DataFrame, html_col: str = "html",
     html_links pattern), ZERO shuffles end to end. Ragged rows are
     preserved as-is (col_idx is per-row); downstream pivoting chooses its
     own rectangularization."""
-    h = strip_noise(F.col(html_col))
+    h = strip_noise(F.col("html"))
     t = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode(F.regexp_extract_all(h, F.lit(TABLE_PATTERN), 1))
         .alias("table_idx", "tbl"),
     )
@@ -554,8 +546,7 @@ def extract_tables(df: DataFrame, html_col: str = "html",
 HEADING_FULL_PATTERN = r"(?is)<h([1-6])(?:\s[^>]*)?>(.*?)</h[1-6]>"
 
 
-def extract_outline(df: DataFrame, html_col: str = "html",
-                    id_col: str = "doc_id") -> DataFrame:
+def extract_outline(df: DataFrame) -> DataFrame:
     """h1–h6 → hierarchical outline: one row per heading with its
     multi-level section number (the '1.2.1' a table of contents prints),
     visible title, and the word count of its body (visible text from this
@@ -572,10 +563,10 @@ def extract_outline(df: DataFrame, html_col: str = "html",
     six levels share ONE doc-keyed window spec, so the whole outline costs
     a single exchange+sort per document set (plan-asserted); the heading
     explode itself is a zero-shuffle codegen map."""
-    h = strip_noise(F.col(html_col))
+    h = strip_noise(F.col("html"))
     pat = F.lit(HEADING_FULL_PATTERN)
     e = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode(F.regexp_extract_all(h, pat, 1)).alias("pos", "lv"),
         F.regexp_extract_all(h, pat, 2).alias("titles"),
         F.split(h, HEADING_FULL_PATTERN).alias("parts"),

@@ -294,15 +294,14 @@ def split_sentences(col: Column) -> Column:
     )
 
 
-def chunk_pack(df, text_col: str = "text", id_col: str = "doc_id",
-               cap_words: int = 64):
+def chunk_pack(df, cap_words: int = 64):
     """Context-window chunk packing — the sequence-packing op a training
     pipeline runs before tokenization: split each document into sentences,
     then assign consecutive sentences to chunks by the deterministic
     prefix-sum rule chunk_id = floor(words_before_this_sentence /
     cap_words). Sentences are never split; a chunk may overrun cap_words by
     at most one sentence (the standard boundary-respecting tradeoff).
-    Returns (id, chunk_id, chunk_text, n_sentences, n_words).
+    Returns (doc_id, chunk_id, chunk_text, n_sentences, n_words).
 
     Shape at 100 TB: ONE shuffle — the doc_id window partitioning also
     satisfies the (doc_id, chunk_id) groupBy's clustered distribution
@@ -315,19 +314,19 @@ def chunk_pack(df, text_col: str = "text", id_col: str = "doc_id",
     from .html import word_count
 
     sents = (
-        df.select(id_col,
-                  F.posexplode(split_sentences(F.col(text_col)))
+        df.select("doc_id",
+                  F.posexplode(split_sentences(F.col("text")))
                   .alias("pos", "sent"))
         .withColumn("w", word_count(F.col("sent")))
     )
-    w_before = (Window.partitionBy(id_col).orderBy("pos")
+    w_before = (Window.partitionBy("doc_id").orderBy("pos")
                 .rowsBetween(Window.unboundedPreceding, -1))
     chunked = sents.withColumn(
         "chunk_id",
         F.floor(F.coalesce(F.sum("w").over(w_before), F.lit(0))
                 / F.lit(cap_words)).cast("long"))
     return (
-        chunked.groupBy(id_col, "chunk_id")
+        chunked.groupBy("doc_id", "chunk_id")
         .agg(
             F.array_join(
                 F.transform(
@@ -376,8 +375,7 @@ def word_ngrams(col: Column, n: int) -> Column:
     return token_ngrams(tokens(col), n)
 
 
-def repetition_stats(df, text_col: str = "text", id_col: str = "doc_id",
-                     max_dup_sent_frac: float = 0.30,
+def repetition_stats(df, max_dup_sent_frac: float = 0.30,
                      max_top2_char_frac: float = 0.20,
                      max_dup3_char_frac: float = 0.60):
     """Gopher-style repetition quality signals (Rae et al. 2021, table A1)
@@ -411,7 +409,7 @@ def repetition_stats(df, text_col: str = "text", id_col: str = "doc_id",
     aggregates — no higher-order-function folds in the hot path (the
     simhash64 lesson: interpreted lambdas cost ~50x vs codegen'd
     aggregates)."""
-    txt = F.col(text_col)
+    txt = F.col("text")
 
     def unit(kind, arr):
         return F.transform(
@@ -424,16 +422,17 @@ def repetition_stats(df, text_col: str = "text", id_col: str = "doc_id",
         unit("3", word_ngrams(txt, 3)),
     )
     exploded = df.select(
-        id_col, F.length(txt).alias("tot_chars"), F.explode(units).alias("u"),
-    ).select(id_col, "tot_chars", "u.kind", "u.val")
-    counts = exploded.groupBy(id_col, "kind", "val").agg(
+        "doc_id", F.length(txt).alias("tot_chars"),
+        F.explode(units).alias("u"),
+    ).select("doc_id", "tot_chars", "u.kind", "u.val")
+    counts = exploded.groupBy("doc_id", "kind", "val").agg(
         F.count("*").alias("cnt"),
         F.first("tot_chars").alias("tot_chars"),
     )
     k, cnt = F.col("kind"), F.col("cnt")
     chars = cnt * F.length(F.col("val"))
     is_dup = cnt >= 2
-    agg = counts.groupBy(id_col).agg(
+    agg = counts.groupBy("doc_id").agg(
         F.first("tot_chars").alias("tot_chars"),
         F.sum(F.when(k == "s", cnt).otherwise(0)).alias("n_sents"),
         F.sum(F.when((k == "s") & is_dup, cnt).otherwise(0)).alias("n_dup_sents"),
@@ -447,7 +446,7 @@ def repetition_stats(df, text_col: str = "text", id_col: str = "doc_id",
         return F.when(den > 0, num / den).otherwise(F.lit(0.0))
 
     out = agg.select(
-        id_col,
+        "doc_id",
         frac(F.col("n_dup_sents"), F.col("n_sents")).alias("dup_sent_frac"),
         frac(F.col("dup_sent_chars"), F.col("sent_chars")).alias("dup_sent_char_frac"),
         frac(F.col("top2_chars"), F.col("tot_chars")).alias("top2_char_frac"),
@@ -473,7 +472,7 @@ PII_IP_PATTERN = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 PII_PHONE_PATTERN = r"(?:\+[0-9]{1,3} )?\b(?:[0-9]{2,4}[- ]){1,3}[0-9]{2,4}\b"
 
 
-def redact_pii(df, text_col: str = "text", id_col: str = "doc_id"):
+def redact_pii(df):
     """C4-style PII scrub — redact emails, IPv4 addresses, and phone-shaped
     number groups to typed placeholder tokens, reporting per-doc counts.
     The three rules apply IN ORDER (email → ip → phone) and each count is
@@ -486,7 +485,7 @@ def redact_pii(df, text_col: str = "text", id_col: str = "doc_id"):
 
     Pure codegen'd map, zero shuffle: three regexp_replace + three
     regexp_extract_all counts per row."""
-    t0 = F.col(text_col)
+    t0 = F.col("text")
     n_emails = F.size(F.regexp_extract_all(t0, F.lit(PII_EMAIL_PATTERN), 0))
     t1 = F.regexp_replace(t0, PII_EMAIL_PATTERN, "<EMAIL>")
     n_ips = F.size(F.regexp_extract_all(t1, F.lit(PII_IP_PATTERN), 0))
@@ -494,7 +493,7 @@ def redact_pii(df, text_col: str = "text", id_col: str = "doc_id"):
     n_phones = F.size(F.regexp_extract_all(t2, F.lit(PII_PHONE_PATTERN), 0))
     t3 = F.regexp_replace(t2, PII_PHONE_PATTERN, "<PHONE>")
     return df.select(
-        id_col,
+        "doc_id",
         t3.alias("clean_text"),
         n_emails.cast("long").alias("n_emails"),
         n_ips.cast("long").alias("n_ips"),
@@ -507,8 +506,7 @@ def redact_pii(df, text_col: str = "text", id_col: str = "doc_id"):
 # ---------------------------------------------------------------------------
 
 
-def hashed_linear_score(df, text_col: str = "text", id_col: str = "doc_id",
-                        n_buckets: int = 1024, seed: str = "w7",
+def hashed_linear_score(df, n_buckets: int = 1024, seed: str = "w7",
                         threshold: int = 0):
     """Linear text classifier over hashed token features — the SHAPE of the
     fastText-style quality filters every pretraining pipeline runs over
@@ -531,7 +529,7 @@ def hashed_linear_score(df, text_col: str = "text", id_col: str = "doc_id",
     per-token HOF folds are interpreted; explode into a codegen'd aggregate
     instead). Weight derivation is one md5 per token OCCURRENCE; at scale
     derive per DISTINCT (bucket) via the broadcast weight table instead."""
-    t = F.explode(tokens(F.col(text_col))).alias("tok")
+    t = F.explode(tokens(F.col("text"))).alias("tok")
     bucket = md5_bucket(F.col("tok"), n_buckets)
     # swap-in point: replace this expression with a broadcast join against a
     # trained (bucket, weight) table
@@ -540,7 +538,7 @@ def hashed_linear_score(df, text_col: str = "text", id_col: str = "doc_id",
             F.md5(F.concat(F.lit(f"{seed}_"), bucket.cast("string"))), 1, 8),
             16, 10).cast("long") % 2001 - 1000
     )
-    toks = df.select(F.col(id_col).cast("long").alias("doc_id"), t)
+    toks = df.select(F.col("doc_id").cast("long").alias("doc_id"), t)
     return (
         toks.select("doc_id", weight.alias("wt"))
         .groupBy("doc_id")
@@ -558,8 +556,7 @@ TERMINAL_PUNCT_PATTERN = r"[.!?]$"
 C4_BAD_SNIPPETS = ("lorem ipsum", "javascript", "cookie policy")
 
 
-def c4_doc_stats(df, text_col: str = "text", id_col: str = "doc_id",
-                 min_sentences: int = 3):
+def c4_doc_stats(df, min_sentences: int = 3):
     """C4 document-level cleaning heuristics (Raffel et al. 2020 §2.2,
     re-derived at document granularity — the corpus has no line
     structure): sentence census, terminal-punctuation coverage, brace and
@@ -571,9 +568,9 @@ def c4_doc_stats(df, text_col: str = "text", id_col: str = "doc_id",
     Pure codegen'd Catalyst map, ZERO shuffle — every signal is per-row.
     Returns (doc_id, n_sentences, n_terminal, has_brace, has_bad_snippet,
     keep)."""
-    cols = c4_stat_cols(F.col(text_col), min_sentences)
+    cols = c4_stat_cols(F.col("text"), min_sentences)
     return df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         *cols,
     )
 
@@ -602,8 +599,7 @@ def c4_stat_cols(c: Column, min_sentences: int = 3) -> list[Column]:
     ]
 
 
-def readability_stats(df, text_col: str = "text",
-                      id_col: str = "doc_id"):
+def readability_stats(df):
     """Integer Flesch-Kincaid grade surrogate — the classic readability
     quality feature (Kincaid et al. 1975: 0.39*(W/S) + 11.8*(Syl/W) -
     15.59), re-expressed so no IEEE division crosses an engine boundary:
@@ -619,9 +615,9 @@ def readability_stats(df, text_col: str = "text",
     syllables. S floors at 1 (unpunctuated docs are one sentence).
     Pure per-row map, ZERO shuffle. Returns (doc_id, n_words,
     n_sentences, n_syllables, fk_milli)."""
-    c = F.col(text_col)
+    c = F.col("text")
     staged = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         token_count(c).cast("long").alias("n_words"),
         F.greatest(F.lit(1).cast("long"),
                    F.size(split_sentences(c)).cast("long"))

@@ -58,14 +58,13 @@ def path_depth(col: Column) -> Column:
     ).cast("long")
 
 
-def parse_urls(df: DataFrame, url_col: str = "url",
-               id_col: str = "doc_id") -> DataFrame:
+def parse_urls(df: DataFrame) -> DataFrame:
     """Per-doc URL census: scheme/host/registered domain/path depth/query
     flag. Absent components are '' (regexp_extract no-match convention in
     both engines). Pure codegen'd map, zero shuffle."""
-    u = F.col(url_col)
+    u = F.col("url")
     return df.select(
-        id_col,
+        "doc_id",
         url_scheme(u).alias("scheme"),
         url_host(u).alias("host"),
         registered_domain(u).alias("registered_domain"),
@@ -75,8 +74,7 @@ def parse_urls(df: DataFrame, url_col: str = "url",
     )
 
 
-def domain_cap_sample(df: DataFrame, url_col: str = "url",
-                      id_col: str = "doc_id", cap: int = 3,
+def domain_cap_sample(df: DataFrame, cap: int = 3,
                       blocklist: DataFrame | None = None) -> DataFrame:
     """Per-registered-domain document cap with optional blocklist — the
     host-balancing step of a web corpus pipeline: parse URLs, drop
@@ -92,9 +90,9 @@ def domain_cap_sample(df: DataFrame, url_col: str = "url",
     shuffle, not a million: the domain skew is absorbed BEFORE the wire
     (plan-asserted in tools/explain_audit.py, same shape as
     topk_orders_per_customer)."""
-    u = F.col(url_col)
+    u = F.col("url")
     parsed = df.select(
-        id_col,
+        "doc_id",
         url_host(u).alias("host"),
         registered_domain(u).alias("registered_domain"),
         path_depth(u).alias("path_depth"),
@@ -103,13 +101,13 @@ def domain_cap_sample(df: DataFrame, url_col: str = "url",
         parsed = parsed.join(F.broadcast(blocklist), "registered_domain",
                              "left_anti")
     w = Window.partitionBy("registered_domain").orderBy(
-        F.md5(F.concat(F.lit("cap:"), F.col(id_col).cast("string"))),
-        id_col)
+        F.md5(F.concat(F.lit("cap:"), F.col("doc_id").cast("string"))),
+        "doc_id")
     return (
         parsed.withColumn("domain_rank",
                           F.row_number().over(w).cast("long"))
         .where(F.col("domain_rank") <= cap)
-        .select(id_col, "host", "registered_domain", "path_depth",
+        .select("doc_id", "host", "registered_domain", "path_depth",
                 "domain_rank")
     )
 
@@ -159,8 +157,7 @@ def canonicalize_url(col: Column) -> Column:
                F.concat(F.lit("?"), cquery)).otherwise(F.lit("")))
 
 
-def url_dedup(df: DataFrame, url_col: str = "url",
-              id_col: str = "doc_id") -> DataFrame:
+def url_dedup(df: DataFrame) -> DataFrame:
     """Canonical-URL dedup: canonicalize (pure map), then one keeper (min
     doc_id) per canonical form. Returns every input doc with its canonical
     URL, the group keeper, group size, and is_keeper.
@@ -171,8 +168,8 @@ def url_dedup(df: DataFrame, url_col: str = "url",
     one row per map task), and the flag join back is an equi-join AQE can
     skew-split — the exact_dedup shape lifted to the URL layer."""
     c = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        canonicalize_url(F.col(url_col)).alias("canonical_url"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        canonicalize_url(F.col("url")).alias("canonical_url"),
     )
     groups = c.groupBy("canonical_url").agg(
         F.min("doc_id").alias("keeper_doc_id"),
@@ -186,13 +183,12 @@ def url_dedup(df: DataFrame, url_col: str = "url",
     )
 
 
-def host_stats(df: DataFrame, url_col: str = "url",
-               id_col: str = "doc_id") -> DataFrame:
+def host_stats(df: DataFrame) -> DataFrame:
     """Per-registered-domain census: doc count, distinct hosts, docs with a
     query string, max path depth. One shuffle on the domain key with
     map-side partial aggregation; countDistinct plans as Spark's standard
     two-phase expand."""
-    u = F.col(url_col)
+    u = F.col("url")
     return (
         df.select(
             registered_domain(u).alias("registered_domain"),
@@ -210,28 +206,23 @@ def host_stats(df: DataFrame, url_col: str = "url",
     )
 
 
-def parse_robots(robots: DataFrame, host_col: str = "host",
-                 content_col: str = "robots_txt") -> DataFrame:
+def parse_robots(robots: DataFrame) -> DataFrame:
     """robots.txt → (host, prefixes): the non-empty 'Disallow: ' path
     prefixes, in file order. Single-agent simplification (every Disallow
     line counts, whatever User-agent block it sits in) — documented, the
     per-agent split is a grouping refinement, not a shape change. Empty
     'Disallow:' lines (allow-all convention) and non-Disallow lines are
     ignored."""
-    lines = F.split(F.col(content_col), "\n")
+    lines = F.split(F.col("robots_txt"), "\n")
     prefixes = F.filter(
         F.transform(
             F.filter(lines, lambda ln: ln.rlike("^Disallow: ")),
             lambda ln: F.regexp_replace(ln, "^Disallow: ", "")),
         lambda p: F.length(p) > 0)
-    return robots.select(F.col(host_col).alias("host"),
-                         prefixes.alias("prefixes"))
+    return robots.select("host", prefixes.alias("prefixes"))
 
 
-def robots_filter(pages: DataFrame, robots: DataFrame,
-                  url_col: str = "url", id_col: str = "doc_id",
-                  host_col: str = "host",
-                  content_col: str = "robots_txt") -> DataFrame:
+def robots_filter(pages: DataFrame, robots: DataFrame) -> DataFrame:
     """Crawl-policy gate: flag each page whose URL path falls under a
     'Disallow:' prefix of its host's robots.txt (prefix-match rule of the
     original 1994 REP; hosts without a robots row allow everything).
@@ -243,11 +234,11 @@ def robots_filter(pages: DataFrame, robots: DataFrame,
     corpus never shuffles for the policy decision. If the rule table ever
     outgrows broadcast, the same plan degrades gracefully to a host-keyed
     equi-join."""
-    rules = parse_robots(robots, host_col=host_col, content_col=content_col)
+    rules = parse_robots(robots)
     parsed = pages.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        url_host(F.col(url_col)).alias("host"),
-        url_path(F.col(url_col)).alias("path"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        url_host(F.col("url")).alias("host"),
+        url_path(F.col("url")).alias("path"),
     )
     joined = parsed.join(F.broadcast(rules), "host", "left")
     return joined.select(
@@ -261,24 +252,21 @@ def robots_filter(pages: DataFrame, robots: DataFrame,
     )
 
 
-def parse_crawl_delay(robots: DataFrame, host_col: str = "host",
-                      content_col: str = "robots_txt") -> DataFrame:
+def parse_crawl_delay(robots: DataFrame) -> DataFrame:
     """robots.txt → (host, delay_s): the first 'Crawl-delay: N' line
     (seconds, integer). Hosts whose file carries no such line are absent
     from the result (callers coalesce their default). Same single-agent
     simplification as parse_robots."""
-    delay = F.regexp_extract(F.col(content_col),
+    delay = F.regexp_extract(F.col("robots_txt"),
                              r"(?m)^Crawl-delay: ([0-9]+)$", 1)
     return (robots
-            .select(F.col(host_col).alias("host"), delay.alias("d"))
+            .select("host", delay.alias("d"))
             .filter(F.col("d") != "")
             .select("host", F.col("d").cast("long").alias("delay_s")))
 
 
 def crawl_schedule(pages: DataFrame, robots: DataFrame,
-                   default_delay_s: int = 10, url_col: str = "url",
-                   id_col: str = "doc_id", host_col: str = "host",
-                   content_col: str = "robots_txt") -> DataFrame:
+                   default_delay_s: int = 10) -> DataFrame:
     """Politeness-scheduled crawl frontier: per host, URLs are fetched one
     per Crawl-delay window, so fetch k (1-based, deterministic md5 order —
     reproducible without an engine-private RNG) is scheduled at
@@ -292,11 +280,11 @@ def crawl_schedule(pages: DataFrame, robots: DataFrame,
     make long partitions, not hot shuffle keys under AQE skew-split; the
     rank window carries no group limit by design (every URL gets a slot).
     """
-    delays = parse_crawl_delay(robots, host_col, content_col)
+    delays = parse_crawl_delay(robots)
     parsed = pages.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        url_host(F.col(url_col)).alias("host"),
-        F.col(url_col).alias("_url"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        url_host(F.col("url")).alias("host"),
+        F.col("url").alias("_url"),
     )
     w = Window.partitionBy("host").orderBy(
         F.md5(F.concat(F.lit("sched:"), F.col("_url"))), F.col("_url"),

@@ -445,7 +445,7 @@ def decode_gray_jpeg(data: bytes) -> np.ndarray:
                     # (bit cursor or value count hit the C-side bounds guard
                     # — the Python path raises IndexError at the same point)
                     raise ValueError("invalid huffman code")
-                return _reconstruct(dc_arr, pv_buf[:nvals], nblocks, bh, bw_, qt, h, w)
+                return _reconstruct(dc_arr, pv_buf[:nvals], bh, bw_, qt, h, w)
             c = arr.astype(np.uint32)
             words = ((c[:-3] << 24) | (c[1:-2] << 16) | (c[2:-1] << 8) | c[3:]).tolist()
             dc_diffs = [0] * nblocks
@@ -515,13 +515,13 @@ def decode_gray_jpeg(data: bytes) -> np.ndarray:
                 raise ValueError("invalid huffman code") from None
             return _reconstruct(
                 np.asarray(dc_diffs, np.int64),
-                np.asarray(packed_vals, np.int64), nblocks, bh, bw_, qt, h, w)
+                np.asarray(packed_vals, np.int64), bh, bw_, qt, h, w)
         pos += seg_len
     raise ValueError("no SOS segment found")
 
 
-def _reconstruct(dc_diffs: np.ndarray, pv: np.ndarray, nblocks: int,
-                 bh: int, bw_: int, qt: np.ndarray, h: int, w: int) -> np.ndarray:
+def _reconstruct(dc_diffs: np.ndarray, pv: np.ndarray, bh: int, bw_: int,
+                 qt: np.ndarray, h: int, w: int) -> np.ndarray:
     """Packed scan output → pixels. DC-only blocks (the common case on
     document pages: background) reconstruct to a UNIFORM value dc·qt[0,0]/8
     — no IDCT, and the image is written once as uint8 (1 byte/px); batched

@@ -314,7 +314,7 @@ def render_form(rows: list[dict], pad_h: int = 48) -> tuple[np.ndarray, list[dic
 
 
 def render_checkbox_form(
-    questions: list[tuple[str, bool, str]], seed: int = 0, row_pitch: int = 48
+    questions: list[tuple[str, bool, str]], row_pitch: int = 48
 ) -> tuple[np.ndarray, list[dict]]:
     """Render a form of (label, marked, kind) rows; kind ∈ {square, circle}.
     The label sits to the right of its checkbox on the same row.

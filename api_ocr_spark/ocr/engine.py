@@ -115,7 +115,7 @@ def get_text_data(
     skew candidates are tried and the best-confidence result wins. The hot
     path stays single-pass — corpus pages match perfectly on pass one."""
     if binary is not None:
-        return _extract_words(binary > 0, binary)
+        return _extract_words(binary > 0)
     if not preprocess:
         # already-binary ROIs pass through; gray ROIs binarize with Otsu —
         # the engine-wide global-threshold choice: the fixture contract
@@ -123,7 +123,7 @@ def get_text_data(
         # (ink ≤ 90 < 110 ≤ bg, imaging/render.py), and Otsu is exactly
         # invertible there
         b = gray if _is_binary(gray) else enhance.binarize_otsu(gray)
-        return _extract_words(b > 0, b)
+        return _extract_words(b > 0)
     _, _, words = best_deskew(gray)
     return words
 
@@ -139,7 +139,7 @@ def best_deskew(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray, list[dict]]:
     preprocessing (main.py:660-696). All pipeline modes deskew through this,
     so region/table/checkbox paths share the robustness."""
     deskewed0, b0, ink0, deg0 = enhance.deskew_binary_ink(gray)
-    words = _extract_words(ink0, b0)  # ink mask reused — no binary>0 re-pass
+    words = _extract_words(ink0)  # ink mask reused — no binary>0 re-pass
     if _is_perfect(words):
         return deskewed0, b0, words
     best = (deskewed0, b0, words, _mean_conf(words))
@@ -149,7 +149,7 @@ def best_deskew(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray, list[dict]]:
             continue
         sheared = enhance._shear_rows(gray, -deg, int(gray[0, 0])) if deg else gray
         b = enhance.binarize_otsu(sheared)
-        w2 = _extract_words(b > 0, b)
+        w2 = _extract_words(b > 0)
         c2 = _mean_conf(w2)
         if c2 > best[3]:
             best = (sheared, b, w2, c2)
@@ -160,7 +160,7 @@ def best_deskew(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray, list[dict]]:
     # when gradient + noise squeeze the global Otsu margin)
     flat = enhance.remove_shadows(gray)
     b = enhance.binarize_otsu(flat)
-    w2 = _extract_words(b > 0, b)
+    w2 = _extract_words(b > 0)
     if _mean_conf(w2) > best[3]:
         best = (flat, b, w2, _mean_conf(w2))
     return best[:3]
@@ -176,7 +176,7 @@ def _is_perfect(words: list[dict]) -> bool:
     return bool(words) and all(w["conf"] == 100.0 for w in words)
 
 
-def _extract_words(ink: np.ndarray, binary: np.ndarray) -> list[dict]:
+def _extract_words(ink: np.ndarray) -> list[dict]:
     rr = rule_rows(ink)  # bool mask in: no second binary>0 pass
     if rr.any():
         ink = ink.copy()

@@ -56,11 +56,11 @@ END_OF_WORD = "</w>"
 _PAIR_T = "array<struct<lhs:string,rhs:string>>"
 
 
-def word_census(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def word_census(documents: DataFrame) -> DataFrame:
     """(word, cnt) over the corpus — the single pass over corpus tokens."""
     return (
         _fan_out(documents)
-        .select(F.explode(tokens(F.col(text_col))).alias("word"))
+        .select(F.explode(tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
@@ -106,8 +106,8 @@ def adjacent_pairs(symbols: Column) -> Column:
     ).otherwise(F.array().cast(_PAIR_T))
 
 
-def bpe_learn(documents: DataFrame, n_merges: int = 6,
-              text_col: str = "text") -> tuple[list[tuple], DataFrame]:
+def bpe_learn(documents: DataFrame,
+              n_merges: int = 6) -> tuple[list[tuple], DataFrame]:
     """Learn `n_merges` BPE rules. Returns (merges, vocab):
     merges = [(lhs, rhs, merged, pair_count), ...] in learning order;
     vocab = (word, cnt, symbols) with all rules applied.
@@ -120,7 +120,7 @@ def bpe_learn(documents: DataFrame, n_merges: int = 6,
     came to dominate wall clock (14 s at sf0.1 for six rounds); per-round
     checkpointing of the vocab-sized frame makes planning O(1) per round
     (the pagerank_int lineage-cut lesson applied to expressions)."""
-    vocab = word_census(documents, text_col).select(
+    vocab = word_census(documents).select(
         "word", "cnt", init_symbols(F.col("word")).alias("symbols"),
     ).localCheckpoint(eager=True)
     merges: list[tuple] = []
@@ -148,10 +148,10 @@ def bpe_learn(documents: DataFrame, n_merges: int = 6,
 
 
 def merge_table(spark: SparkSession, documents: DataFrame,
-                n_merges: int = 6, text_col: str = "text") -> DataFrame:
+                n_merges: int = 6) -> DataFrame:
     """The learned merge rules as a frame:
     (merge_rank, lhs, rhs, merged, pair_count)."""
-    merges, _ = bpe_learn(documents, n_merges, text_col)
+    merges, _ = bpe_learn(documents, n_merges)
     return spark.createDataFrame(
         [(i + 1, l, r, m, c) for i, (l, r, m, c) in enumerate(merges)],
         "merge_rank long, lhs string, rhs string, merged string, "
@@ -159,13 +159,13 @@ def merge_table(spark: SparkSession, documents: DataFrame,
     )
 
 
-def subword_census(documents: DataFrame, n_merges: int = 6, k: int = 40,
-                   text_col: str = "text") -> DataFrame:
+def subword_census(documents: DataFrame, n_merges: int = 6,
+                   k: int = 40) -> DataFrame:
     """Corpus subword-token census after the learned merges: top-k tokens
     by total occurrences (count desc, token asc). Token counts come from
     the vocab frame weighted by word count — again no second corpus pass.
     sort+limit plans as TakeOrderedAndProject."""
-    _, vocab = bpe_learn(documents, n_merges, text_col)
+    _, vocab = bpe_learn(documents, n_merges)
     return (
         vocab.select(F.explode("symbols").alias("token"), "cnt")
         .groupBy("token")

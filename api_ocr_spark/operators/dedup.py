@@ -555,8 +555,7 @@ def contamination_flags(documents: DataFrame, benchmark: DataFrame, n: int = 8) 
 # ---------------------------------------------------------------------------
 
 
-def line_dedup(documents: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def line_dedup(documents: DataFrame) -> DataFrame:
     """Corpus-WIDE sentence-level dedup — the C4/CCNet "discard any line
     seen elsewhere" pass: every sentence that occurs more than once in the
     whole corpus survives only at its FIRST occurrence (min (doc_id, pos)
@@ -582,8 +581,8 @@ def line_dedup(documents: DataFrame, text_col: str = "text",
     from ..functions.text import split_sentences
 
     sents = _fan_out(documents).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.posexplode(split_sentences(F.col(text_col))).alias("pos", "sent"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.posexplode(split_sentences(F.col("text"))).alias("pos", "sent"),
     )
     keepers = sents.groupBy("sent").agg(
         F.min(F.struct("doc_id", "pos")).alias("keeper"))
@@ -612,9 +611,7 @@ def line_dedup(documents: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------------------
 
 
-def substring_dedup(documents: DataFrame, k: int = 8,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def substring_dedup(documents: DataFrame, k: int = 8) -> DataFrame:
     """Exact substring dedup ("Deduplicating Training Data Makes Language
     Models Better", Lee et al. 2021): any k-token span whose exact word
     sequence occurs more than once ANYWHERE in the corpus survives only at
@@ -649,8 +646,8 @@ def substring_dedup(documents: DataFrame, k: int = 8,
     from ..functions.text import token_ngrams, tokens
 
     base = _fan_out(documents).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        tokens(F.col(text_col)).alias("ts"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        tokens(F.col("text")).alias("ts"),
     )
     grams = base.select(
         "doc_id",
@@ -714,9 +711,7 @@ def _bloom_positions(fp: Column, k: int, m_bits: int) -> list[Column]:
 
 
 def bloom_history_dedup(new_docs: DataFrame, history_docs: DataFrame,
-                        m_bits: int = 4096, k: int = 3,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+                        m_bits: int = 4096, k: int = 3) -> DataFrame:
     """Incremental-crawl dedup via a Bloom filter over the HISTORY corpus:
     yesterday's corpus is summarized into an m-bit filter; today's batch
     tests membership WITHOUT joining the full history — the pattern that
@@ -736,10 +731,10 @@ def bloom_history_dedup(new_docs: DataFrame, history_docs: DataFrame,
     `in_history` is the exact semi-join answer, included for FPR auditing —
     at scale you drop it (it IS the join the filter exists to avoid)."""
     fp_new = new_docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        fingerprint_md5(F.col(text_col)).alias("fingerprint"))
+        F.col("doc_id").cast("long").alias("doc_id"),
+        fingerprint_md5(F.col("text")).alias("fingerprint"))
     fp_hist = history_docs.select(
-        fingerprint_md5(F.col(text_col)).alias("fingerprint")).distinct()
+        fingerprint_md5(F.col("text")).alias("fingerprint")).distinct()
     bits = (
         fp_hist.select(F.explode(F.array(
             *_bloom_positions(F.col("fingerprint"), k, m_bits))).alias("pos"))
@@ -767,9 +762,8 @@ def bloom_history_dedup(new_docs: DataFrame, history_docs: DataFrame,
     )
 
 
-def winnow_fingerprints(documents: DataFrame, k: int = 4, w: int = 4,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def winnow_fingerprints(documents: DataFrame, k: int = 4,
+                        w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003 — the MOSS local fingerprinting algorithm): hash every
     k-token gram, slide a w-gram window, and in each window select the
@@ -800,7 +794,7 @@ def winnow_fingerprints(documents: DataFrame, k: int = 4, w: int = 4,
     embarrassingly parallel over documents."""
     from ..functions.text import tokens
 
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n = F.size(toks)
     # guard: Spark's sequence(1, 0) DESCENDS, so short docs need an
     # explicit empty-array branch, not a clamped bound
@@ -809,7 +803,7 @@ def winnow_fingerprints(documents: DataFrame, k: int = 4, w: int = 4,
         lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
     ).otherwise(F.array().cast("array<string>"))
     g = _fan_out(documents).select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode(grams).alias("pos", "gram"),
     ).select(
         "doc_id", F.col("pos").cast("long").alias("pos"),
@@ -926,9 +920,8 @@ def _attach_sets(cand: DataFrame, sets: DataFrame) -> DataFrame:
 _BROADCAST_SETS_MAX_DOCS = 300_000
 
 
-def setsim_join(documents: DataFrame, t_num: int = 3, t_den: int = 5,
-                text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def setsim_join(documents: DataFrame, t_num: int = 3,
+                t_den: int = 5) -> DataFrame:
     """All-pairs set-similarity join with prefix filtering (Bayardo,
     Ma & Srikant, WWW 2007 "Scaling Up All Pairs Similarity Search" /
     the PPJoin candidate rule): emit every document pair whose distinct
@@ -1032,9 +1025,8 @@ def setsim_join(documents: DataFrame, t_num: int = 3, t_den: int = 5,
     )
 
 
-def containment_join(documents: DataFrame, t_num: int = 4, t_den: int = 5,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def containment_join(documents: DataFrame, t_num: int = 4,
+                     t_den: int = 5) -> DataFrame:
     """Asymmetric set-CONTAINMENT join (Broder 1997's containment
     coefficient; the JOSIE/overlap-join family): emit every ORDERED pair
     (doc_a, doc_b) with |A ∩ B| >= (t_num/t_den) * |A| over distinct
@@ -1115,8 +1107,7 @@ def containment_join(documents: DataFrame, t_num: int = 4, t_den: int = 5,
     )
 
 
-def dedup_weights(documents: DataFrame, pairs: DataFrame,
-                  id_col: str = "doc_id") -> DataFrame:
+def dedup_weights(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     """Soft dedup: per-doc LOSS WEIGHT 1/cluster_size instead of hard
     removal — keep every document but down-weight near-dup clusters so
     a 40x-syndicated article contributes one article's worth of
@@ -1136,7 +1127,7 @@ def dedup_weights(documents: DataFrame, pairs: DataFrame,
     sizes = clusters.groupBy("cluster_id").agg(
         F.count("*").cast("long").alias("csize"))
     labeled = clusters.join(sizes, "cluster_id")
-    d = documents.select(F.col(id_col).cast("long").alias("doc_id"))
+    d = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
     return d.join(labeled, "doc_id", "left").select(
         "doc_id",
         F.coalesce("cluster_id", F.col("doc_id")).cast("long")
@@ -1147,8 +1138,7 @@ def dedup_weights(documents: DataFrame, pairs: DataFrame,
 
 
 def template_lines(documents: DataFrame, urls: DataFrame,
-                   min_pages: int = 2, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+                   min_pages: int = 2) -> DataFrame:
     """DOMAIN-scoped template removal — the boilerplate pass CCNet/C4
     run per SITE, strictly stronger than line_dedup's keep-first rule:
     a sentence appearing on >= min_pages DISTINCT pages of the SAME
@@ -1172,8 +1162,8 @@ def template_lines(documents: DataFrame, urls: DataFrame,
     dom = parse_urls(urls).select(
         F.col("doc_id").cast("long").alias("doc_id"), "registered_domain")
     sents = _fan_out(documents).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.posexplode(split_sentences(F.col(text_col))).alias("pos", "sent"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.posexplode(split_sentences(F.col("text"))).alias("pos", "sent"),
     ).join(dom, "doc_id")
     census = sents.groupBy("registered_domain", "sent").agg(
         F.countDistinct("doc_id").alias("n_pages"))
@@ -1199,9 +1189,7 @@ def template_lines(documents: DataFrame, urls: DataFrame,
     )
 
 
-def stitch_pages(documents: DataFrame, k: int = 6,
-                 text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def stitch_pages(documents: DataFrame, k: int = 6) -> DataFrame:
     """Pagination stitching — find split articles: a crawler stores a
     multi-page article as separate docs whose text overlaps at the seam
     (page N ends with the teaser/paragraph page N+1 starts with). Emit
@@ -1219,8 +1207,8 @@ def stitch_pages(documents: DataFrame, k: int = 6,
     from ..functions.text import tokens
 
     toks = _fan_out(documents).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        tokens(F.col(text_col)).alias("ts"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        tokens(F.col("text")).alias("ts"),
     ).where(F.size("ts") >= k)
     tail = toks.select(
         F.col("doc_id").alias("doc_a"),
@@ -1236,9 +1224,7 @@ def stitch_pages(documents: DataFrame, k: int = 6,
 
 
 def stitch_chains(documents: DataFrame, k: int = 6,
-                  max_chain: int = 64,
-                  text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+                  max_chain: int = 64) -> DataFrame:
     """Assemble stitch_pages seams into ordered article CHAINS: each
     reconstructed multi-page article becomes rows (doc_id, chain_id =
     the head page's doc_id, chain_pos = 0,1,2,...). Disambiguation is
@@ -1253,8 +1239,7 @@ def stitch_chains(documents: DataFrame, k: int = 6,
     oracle. Iterative frontier join, localCheckpoint per hop (the
     neardup_clusters discipline); chains are short, so rounds ~ article
     page counts, not diameter of anything corpus-sized."""
-    pairs = stitch_pages(documents, k=k,
-                         text_col=text_col, id_col=id_col)
+    pairs = stitch_pages(documents, k=k)
     succ0 = pairs.groupBy("doc_a").agg(F.min("doc_b").alias("doc_b"))
     pred_min = succ0.groupBy("doc_b").agg(F.min("doc_a").alias("min_a"))
     succ = (succ0.join(pred_min, "doc_b")

@@ -34,9 +34,7 @@ from ..functions.text import c4_doc_stats, fingerprint_md5, token_count, tokens
 from .dedup import _fan_out as _fan_out_docs
 
 
-def curation_funnel(documents: DataFrame, min_tokens: int = 12,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def curation_funnel(documents: DataFrame, min_tokens: int = 12) -> DataFrame:
     """Per-document funnel verdict:
     (doc_id, stage, n_tokens, n_sentences), stage in
     {exact_dup, too_short, c4_quality, kept}."""
@@ -45,9 +43,7 @@ def curation_funnel(documents: DataFrame, min_tokens: int = 12,
     from ..functions.text import c4_stat_cols
 
     base = documents.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).alias("text"),
-    )
+        F.col("doc_id").cast("long").alias("doc_id"), "text")
     # ONE projection computes every per-row signal (fingerprint, token
     # count, c4 stats — all pure maps of the same row), then one
     # min-over-fingerprint window resolves keepers: single evaluation of
@@ -74,8 +70,7 @@ def curation_funnel(documents: DataFrame, min_tokens: int = 12,
     )
 
 
-def corpus_datasheet(documents: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def corpus_datasheet(documents: DataFrame) -> DataFrame:
     """Dataset-card corpus statistics ("Datasheets for Datasets", Gebru et
     al., CACM 2021 — the composition section's quantitative rows) in one
     frame: document/token/vocabulary counts, exact-duplicate mass, doc
@@ -89,9 +84,9 @@ def corpus_datasheet(documents: DataFrame, text_col: str = "text",
     from ..functions.text import lang_guess, tokens
 
     per_doc = documents.select(
-        token_count(F.col(text_col)).cast("long").alias("n_tokens"),
-        fingerprint_md5(F.col(text_col)).alias("fp"),
-        lang_guess(F.col(text_col)).alias("lang"),
+        token_count(F.col("text")).cast("long").alias("n_tokens"),
+        fingerprint_md5(F.col("text")).alias("fp"),
+        lang_guess(F.col("text")).alias("lang"),
     )
     agg = per_doc.agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -108,13 +103,12 @@ def corpus_datasheet(documents: DataFrame, text_col: str = "text",
         .cast("long").alias("n_other"),
     )
     vocab = (documents
-             .select(F.explode(tokens(F.col(text_col))).alias("w"))
+             .select(F.explode(tokens(F.col("text"))).alias("w"))
              .agg(F.countDistinct("w").cast("long").alias("vocab_size")))
     return agg.crossJoin(vocab)
 
 
-def doclen_histogram(documents: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def doclen_histogram(documents: DataFrame) -> DataFrame:
     """Power-of-two document-length histogram — the length-distribution
     row of the datasheet: bucket [2^(k-1), 2^k - 1] per doc by token
     count, with doc and token mass per bucket. The bucket index is the
@@ -122,7 +116,7 @@ def doclen_histogram(documents: DataFrame, text_col: str = "text",
     both engines, where a float log2 could round differently at bucket
     edges. Zero-token docs get the [0, 0] bucket. Pure map + one tiny
     bucket shuffle."""
-    n = token_count(F.col(text_col)).cast("long")
+    n = token_count(F.col("text")).cast("long")
     k = F.length(F.conv(n.cast("string"), 10, 2)).cast("int")
     per_doc = documents.select(
         n.alias("_n"), k.alias("_k")).select(
@@ -141,9 +135,7 @@ def doclen_histogram(documents: DataFrame, text_col: str = "text",
 
 
 def blocklist_filter(documents: DataFrame, blocklist: DataFrame,
-                     t_num: int = 1, t_den: int = 10,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+                     t_num: int = 1, t_den: int = 10) -> DataFrame:
     """Table-driven blocklist gate — the UT1-style filter of C4 §2.2 /
     RefinedWeb (thousands of terms across weighted categories), distinct
     in shape from c4_doc_stats' three literal snippets: the list is a
@@ -162,8 +154,8 @@ def blocklist_filter(documents: DataFrame, blocklist: DataFrame,
     left join (keep = true). Returns (doc_id, n_tokens, hits,
     weighted_hits, keep)."""
     toks = _fan_out_docs(documents).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     )
     bl = F.broadcast(
         blocklist.select("term", F.col("weight").cast("long").alias("w")))
@@ -174,8 +166,8 @@ def blocklist_filter(documents: DataFrame, blocklist: DataFrame,
              F.sum("w").cast("long").alias("weighted_hits"))
     )
     counts = documents.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        token_count(F.col(text_col)).cast("long").alias("n_tokens"))
+        F.col("doc_id").cast("long").alias("doc_id"),
+        token_count(F.col("text")).cast("long").alias("n_tokens"))
     return counts.join(per_doc, "doc_id", "left").select(
         "doc_id", "n_tokens",
         F.coalesce("hits", F.lit(0)).cast("long").alias("hits"),
@@ -186,9 +178,7 @@ def blocklist_filter(documents: DataFrame, blocklist: DataFrame,
     )
 
 
-def corpus_manifest(documents: DataFrame, n_shards: int = 16,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def corpus_manifest(documents: DataFrame, n_shards: int = 16) -> DataFrame:
     """Dataset integrity manifest — the reproducibility artifact a corpus
     ships with (HF datasets' checksums / TFDS splits file, expressed at
     shard granularity): one row per shard with (n_docs, n_tokens,
@@ -206,18 +196,18 @@ def corpus_manifest(documents: DataFrame, n_shards: int = 16,
     One map-side-partial shuffle to n_shards rows; pure Catalyst."""
     from ..functions.text import fingerprint_md5, md5_bucket
 
-    d = F.col(id_col).cast("long")
+    d = F.col("doc_id").cast("long")
     h = F.conv(
         F.substring(
             F.md5(F.concat(d.cast("string"), F.lit(":"),
-                           fingerprint_md5(F.col(text_col)))),
+                           fingerprint_md5(F.col("text")))),
             1, 15),
         16, 10).cast("long")
     return (
         documents.select(
             md5_bucket(F.concat(F.lit("shard:"), d.cast("string")),
                        n_shards).cast("long").alias("shard"),
-            token_count(F.col(text_col)).cast("long").alias("n_toks"),
+            token_count(F.col("text")).cast("long").alias("n_toks"),
             h.alias("h"),
         )
         .groupBy("shard")

@@ -84,9 +84,7 @@ def pagerank_int(edges: DataFrame, iters: int = 3,
     )
 
 
-def anchor_text_index(pages: DataFrame, url_col: str = "url",
-                      html_col: str = "html",
-                      id_col: str = "doc_id") -> DataFrame:
+def anchor_text_index(pages: DataFrame) -> DataFrame:
     """Anchor-text index — what a page's INBOUND link text says about it,
     the classic off-page relevance/quality signal (Brin & Page 1998 §2.2
     store anchor text with the target, not the source; search and
@@ -108,13 +106,12 @@ def anchor_text_index(pages: DataFrame, url_col: str = "url",
     from ..functions.text import tokens
     from ..functions.url import SCHEME_CI_PATTERN, url_host
 
-    links = extract_links(pages, html_col=html_col, id_col=id_col,
-                          carry=(url_col,))
+    links = extract_links(pages, carry=("url",))
     dst = F.when(F.col("href").rlike(SCHEME_CI_PATTERN), F.col("href")) \
-        .otherwise(F.concat(F.lit("https://"), url_host(F.col(url_col)),
+        .otherwise(F.concat(F.lit("https://"), url_host(F.col("url")),
                             F.col("href")))
     edges = links.select(
-        url_host(F.col(url_col)).alias("src_host"),
+        url_host(F.col("url")).alias("src_host"),
         url_host(dst).alias("dst_host"),
         F.col("anchor_text"),
     ).filter(F.col("dst_host") != F.col("src_host"))

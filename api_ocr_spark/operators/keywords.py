@@ -25,16 +25,15 @@ from ..functions.text import tokens
 from .dedup import _fan_out
 
 
-def doc_term_freqs(documents: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def doc_term_freqs(documents: DataFrame) -> DataFrame:
     """(doc_id, term, tf, doc_len): per-document term counts. doc_len is
     computed BEFORE the explode (size of the token array — one cheap
     expression) and carried through the aggregate as first(), avoiding a
     second pass or a self-join. One shuffle with map-side partial agg."""
-    t = tokens(F.col(text_col))
+    t = tokens(F.col("text"))
     return (
         _fan_out(documents)
-        .select(F.col(id_col).cast("long").alias("doc_id"),
+        .select(F.col("doc_id").cast("long").alias("doc_id"),
                 F.size(t).cast("long").alias("doc_len"),
                 F.explode(t).alias("term"))
         .groupBy("doc_id", "term")
@@ -42,9 +41,7 @@ def doc_term_freqs(documents: DataFrame, text_col: str = "text",
     )
 
 
-def tfidf_top_terms(documents: DataFrame, k: int = 5,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def tfidf_top_terms(documents: DataFrame, k: int = 5) -> DataFrame:
     """Top-k salient terms per document by exact-rational TF-IDF (module
     docstring): score = (tf / doc_len) * (N / df), ranked (score desc,
     term asc — total order, tie-free).
@@ -56,7 +53,7 @@ def tfidf_top_terms(documents: DataFrame, k: int = 5,
     rank<=k per doc plans as partial+final WindowGroupLimit — each map
     task forwards at most k rows per doc. N is one driver-side count
     (a scalar, not a collect of rows)."""
-    tf = doc_term_freqs(documents, text_col, id_col)
+    tf = doc_term_freqs(documents)
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     n_docs = documents.count()
     scored = tf.join(dfreq, "term").select(
@@ -73,15 +70,14 @@ def tfidf_top_terms(documents: DataFrame, k: int = 5,
     )
 
 
-def vocab_topk(documents: DataFrame, k: int = 100,
-               text_col: str = "text") -> DataFrame:
+def vocab_topk(documents: DataFrame, k: int = 100) -> DataFrame:
     """Global top-K vocabulary by corpus term count (count desc, term asc —
     deterministic under ties), with document frequency. The sort+limit
     plans as TakeOrderedAndProject: each partition keeps its local top-K and
     only K rows per partition reach the driver-side merge — the global
     sort never materializes (plan-asserted). Feeds tokenizer training /
     stopword induction."""
-    t = tokens(F.col(text_col))
+    t = tokens(F.col("text"))
     counts = (
         _fan_out(documents)
         .select(F.col("doc_id").cast("long").alias("doc_id"),
@@ -95,8 +91,7 @@ def vocab_topk(documents: DataFrame, k: int = 100,
             .limit(k))
 
 
-def rarity_buckets(documents: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def rarity_buckets(documents: DataFrame) -> DataFrame:
     """CCNet-style head/middle/tail corpus split by language-model fit
     (Wenzek et al. 2020 §4.3 bucket documents by KenLM perplexity into
     corpus thirds). No KenLM exists in this container, so the fit signal
@@ -124,8 +119,8 @@ def rarity_buckets(documents: DataFrame, text_col: str = "text",
     on the distinct-mean frame (small, broadcast). Totals are two scalar
     driver counts, never row collects."""
     toks = _fan_out(documents).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     )
     vocab = toks.groupBy("term").agg(F.count("*").alias("cnt"))
     total = toks.count()
@@ -157,8 +152,7 @@ def rarity_buckets(documents: DataFrame, text_col: str = "text",
 
 
 def collocations_topk(documents: DataFrame, k: int = 100,
-                      min_count: int = 3, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+                      min_count: int = 3) -> DataFrame:
     """Top-K bigram collocations by PMI (Church & Hanks 1990) — the phrase
     mining step before tokenizer/vocab induction merges multiwords. Score
     is the exact-rational PMI argument
@@ -175,7 +169,7 @@ def collocations_topk(documents: DataFrame, k: int = 100,
     the global sort never materializes."""
     from ..functions.text import token_ngrams, tokens
 
-    base = _fan_out(documents).select(tokens(F.col(text_col)).alias("ts"))
+    base = _fan_out(documents).select(tokens(F.col("text")).alias("ts"))
     uni = (base.select(F.explode("ts").alias("w"))
            .groupBy("w").agg(F.count("*").alias("c")))
     total = base.select(F.sum(F.size("ts"))).collect()[0][0]
@@ -204,9 +198,7 @@ def collocations_topk(documents: DataFrame, k: int = 100,
     return scored.orderBy(F.col("score").desc(), "bigram").limit(k)
 
 
-def bigram_lm_score(documents: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    scale: int = 1_000_000) -> DataFrame:
+def bigram_lm_score(documents: DataFrame, scale: int = 1_000_000) -> DataFrame:
     """Bigram language-model likelihood ledger — the sequence-model
     upgrade of rarity_buckets' unigram surrogate (CCNet's actual quality
     signal is a KenLM n-gram LM, Wenzek et al. 2020 §4.3; no KenLM exists
@@ -234,8 +226,8 @@ def bigram_lm_score(documents: DataFrame, text_col: str = "text",
     distinct-count (a corpus constant entering the arithmetic, so the
     HyperLogLog approximation is NOT an admissible swap)."""
     base = _fan_out(documents).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        tokens(F.col(text_col)).alias("ts"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        tokens(F.col("text")).alias("ts"),
     )
     from ..functions.text import token_ngrams
 
@@ -259,7 +251,7 @@ def bigram_lm_score(documents: DataFrame, text_col: str = "text",
              F.sum("m").cast("long").alias("lm_sum"))
     )
     return (
-        documents.select(F.col(id_col).cast("long").alias("doc_id"))
+        documents.select(F.col("doc_id").cast("long").alias("doc_id"))
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",

@@ -62,9 +62,8 @@ def mixture_quotas(census: list[tuple[str, int]], frac_num: int,
     return out
 
 
-def mixture_sample(df: DataFrame, frac_num: int = 2, frac_den: int = 5,
-                   source_col: str = "source",
-                   id_col: str = "doc_id") -> DataFrame:
+def mixture_sample(df: DataFrame, frac_num: int = 2,
+                   frac_den: int = 5) -> DataFrame:
     """Sample a frac_num/frac_den-of-corpus training mix across sources at
     temperature alpha = 1/2. Returns the selected docs only:
     (doc_id, source, n_source, weight, quota, sel_rank), ranked by
@@ -72,7 +71,7 @@ def mixture_sample(df: DataFrame, frac_num: int = 2, frac_den: int = 5,
     reproducible across engines and runs)."""
     spark = df.sparkSession
     census_rows = (
-        df.groupBy(F.col(source_col).alias("source"))
+        df.groupBy("source")
         .agg(F.count("*").cast("long").alias("n"))
         .collect()
     )
@@ -84,16 +83,15 @@ def mixture_sample(df: DataFrame, frac_num: int = 2, frac_den: int = 5,
         "source string, n_source long, weight long, quota long",
     )
     w = Window.partitionBy("source").orderBy(
-        F.md5(F.concat(F.lit("mix:"), F.col(id_col).cast("string"))),
-        id_col)
+        F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))),
+        "doc_id")
     # rank <= LITERAL max quota plans as partial+final WindowGroupLimit
     # (a per-source column bound would not); the exact per-source quota is
     # the broadcast refinement after the group limit — the tier_extract
     # two-step.
     max_quota = max((q["quota"] for q in quotas.values()), default=0)
     return (
-        df.select(F.col(id_col).cast("long").alias("doc_id"),
-                  F.col(source_col).alias("source"))
+        df.select(F.col("doc_id").cast("long").alias("doc_id"), "source")
         .join(F.broadcast(quota_df), "source")
         .withColumn("sel_rank", F.row_number().over(w).cast("long"))
         .where(F.col("sel_rank") <= F.lit(max_quota))
@@ -103,8 +101,7 @@ def mixture_sample(df: DataFrame, frac_num: int = 2, frac_den: int = 5,
     )
 
 
-def grouped_split(df: DataFrame, group_col: str = "registered_domain",
-                  id_col: str = "doc_id", train_slots: int = 12,
+def grouped_split(df: DataFrame, train_slots: int = 12,
                   val_slots: int = 2) -> DataFrame:
     """Leakage-safe train/val/test holdout: the split is a pure function
     of the GROUP key (md5('split:'||group) first hex digit: < train_slots
@@ -118,11 +115,11 @@ def grouped_split(df: DataFrame, group_col: str = "registered_domain",
     and no coordination; expected fractions are train_slots/16 etc. of
     GROUPS (docs follow their group's mass). Exact doc-level ratios are a
     sampling refinement (mixture_sample), not a split property."""
-    g = F.col(group_col)
+    g = F.col("registered_domain")
     hexv = F.conv(F.substring(
         F.md5(F.concat(F.lit("split:"), g)), 1, 1), 16, 10).cast("long")
     return df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         g.alias("group"),
         F.when(hexv < train_slots, "train")
         .when(hexv < train_slots + val_slots, "val")
@@ -130,10 +127,9 @@ def grouped_split(df: DataFrame, group_col: str = "registered_domain",
     )
 
 
-def dsir_select(documents: DataFrame, k: int = 100,
-                n_buckets: int = 10_000, target_mod: int = 17,
-                clip_mult: int = 1_000, scale: int = 1_000_000,
-                text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dsir_select(documents: DataFrame, k: int = 100, n_buckets: int = 10_000,
+                target_mod: int = 17, clip_mult: int = 1_000,
+                scale: int = 1_000_000) -> DataFrame:
     """Data Selection with Importance Resampling (DSIR, Xie et al. 2023,
     arXiv:2302.03169): pick the k raw-corpus documents whose hashed
     n-gram feature distribution is most target-like. Features are hashed
@@ -166,8 +162,8 @@ def dsir_select(documents: DataFrame, k: int = 100,
     from .dedup import _fan_out
 
     toks = _fan_out(documents).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     ).select(
         "doc_id",
         (F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long")
@@ -200,9 +196,7 @@ def dsir_select(documents: DataFrame, k: int = 100,
 
 
 def unimax_sample(documents: DataFrame, epoch_cap: int = 2,
-                  budget_num: int = 1, budget_den: int = 2,
-                  text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+                  budget_num: int = 1, budget_den: int = 2) -> DataFrame:
     """UniMax language-balanced sampling (Chung et al. 2023, ICLR —
     'UniMax: Fairer and More Effective Language Sampling'): spread the
     doc budget as uniformly as possible across languages, but never take
@@ -226,9 +220,9 @@ def unimax_sample(documents: DataFrame, epoch_cap: int = 2,
     back; the remainder pick is rank <= rem over the language window
     (partial+final WindowGroupLimit — map tasks forward at most rem rows
     per language); full epochs are rank-free map-side arithmetic."""
-    lang = lang_guess(F.col(text_col))
+    lang = lang_guess(F.col("text"))
     base = documents.select(
-        F.col(id_col).cast("long").alias("doc_id"), lang.alias("lang"))
+        F.col("doc_id").cast("long").alias("doc_id"), lang.alias("lang"))
     census = sorted(
         ((r["lang"], r["count"]) for r in
          base.groupBy("lang").count().collect()),

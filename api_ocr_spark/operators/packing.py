@@ -43,8 +43,7 @@ from ..functions.text import tokens
 
 
 def pack_sequences(documents: DataFrame, cap: int = 2048,
-                   block_size: int = 4096, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+                   block_size: int = 4096) -> DataFrame:
     """Packing manifest (module docstring): one row per (sequence,
     document) overlap, columns (seq_id, doc_id, doc_tok_start,
     doc_tok_end, seq_tok_start, n_toks); tok ranges are [start, end)
@@ -52,14 +51,14 @@ def pack_sequences(documents: DataFrame, cap: int = 2048,
     slice lands inside the sequence. Empty documents are skipped (they
     occupy no tokens). The final ragged tail sequence is emitted as-is
     (trainers drop or pad it; the manifest stays exact)."""
-    t = F.col(text_col)
+    t = F.col("text")
     # split('') yields [''] (size 1) in Spark and DuckDB alike — count
     # whitespace-only documents as 0 tokens explicitly
     n_tokens = (F.when(F.trim(t) == "", F.lit(0))
                 .otherwise(F.size(tokens(t))))
     lens = (
         documents.select(
-            F.col(id_col).cast("long").alias("doc_id"),
+            F.col("doc_id").cast("long").alias("doc_id"),
             n_tokens.cast("long").alias("n"),
         )
         .filter(F.col("n") > 0)

@@ -53,8 +53,8 @@ from .keywords import doc_term_freqs
 SCALE = 1_000_000
 
 
-def bm25_topk(documents: DataFrame, queries: DataFrame, k: int = 10,
-              text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def bm25_topk(documents: DataFrame, queries: DataFrame,
+              k: int = 10) -> DataFrame:
     """Top-k documents per query by integer-floor BM25 (module docstring).
 
     Output: (query_id, doc_id, score, n_terms_hit, rank) — rank is dense
@@ -69,12 +69,12 @@ def bm25_topk(documents: DataFrame, queries: DataFrame, k: int = 10,
     (query_id, doc_id); rank<=k plans as partial+final WindowGroupLimit so
     each map task forwards at most k rows per query. N and total_len are
     two driver-side scalars (no row collect)."""
-    tf = doc_term_freqs(documents, text_col, id_col)
+    tf = doc_term_freqs(documents)
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
 
     stats = documents.select(
         F.count("*").alias("n"),
-        F.sum(F.size(tokens(F.col(text_col)))).alias("total_len"),
+        F.sum(F.size(tokens(F.col("text")))).alias("total_len"),
     ).collect()[0]
     n_docs, total_len = int(stats["n"]), int(stats["total_len"])
 
@@ -118,9 +118,7 @@ def bm25_topk(documents: DataFrame, queries: DataFrame, k: int = 10,
     )
 
 
-def phrase_match(documents: DataFrame, phrases: DataFrame,
-                 text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def phrase_match(documents: DataFrame, phrases: DataFrame) -> DataFrame:
     """Exact positional phrase retrieval over the inverted index — the
     classic proximity operator (Manning, Raghavan & Schütze, IR ch. 2:
     positional postings): a phrase of length L matches document d at
@@ -138,9 +136,9 @@ def phrase_match(documents: DataFrame, phrases: DataFrame,
     distinct-offset count (each offset must be witnessed at its own
     position). Returns (doc_id, phrase_id, phrase, start) per match.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     postings = documents.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode(toks).alias("pos", "term"),
     ).select("doc_id", F.col("pos").cast("long").alias("pos"), "term")
     pt = tokens(F.col("phrase"))

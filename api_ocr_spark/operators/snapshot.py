@@ -20,8 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """(doc_id, status, fp_old, fp_new) for the union of both snapshots'
     keys. status: 'added' (new only), 'gone' (old only), 'changed' (both,
     md5 fingerprints differ), 'unchanged'. Fingerprint is md5 of the raw
@@ -30,8 +29,8 @@ def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id",
 
     def fps(df: DataFrame, tag: str) -> DataFrame:
         return df.select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.md5(F.col(text_col)).alias(f"fp_{tag}"),
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.md5(F.col("text")).alias(f"fp_{tag}"),
         )
 
     j = fps(old, "old").join(fps(new, "new"), "doc_id", "full_outer")

@@ -31,8 +31,7 @@ from ..functions.text import quality_score
 DEFAULT_QUOTAS = {"high": 100, "mid": 50, "low": 25}
 
 
-def tier_extract(documents: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id",
+def tier_extract(documents: DataFrame,
                  quotas: dict[str, int] | None = None) -> DataFrame:
     """Assign quality tiers and keep a deterministic md5-ranked quota per
     tier. Returns (doc_id, score, tier, tier_rank) for kept docs only.
@@ -52,8 +51,8 @@ def tier_extract(documents: DataFrame, text_col: str = "text",
     """
     quotas = DEFAULT_QUOTAS if quotas is None else quotas
     scored = documents.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        quality_score(F.col(text_col)).alias("score"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        quality_score(F.col("text")).alias("score"),
     )
     n_total = scored.count()
     counts = scored.groupBy("score").agg(F.count("*").alias("n"))

@@ -27,16 +27,15 @@ from ..functions.text import tokens
 from .dedup import _fan_out
 
 
-def topic_tag(documents: DataFrame, lexicon: DataFrame,
-              text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def topic_tag(documents: DataFrame, lexicon: DataFrame) -> DataFrame:
     """(doc_id, topic, n_hits): per-document winning topic by total
     lexicon-term occurrences (every occurrence counts — standard lexicon
     scoring), tie-break topic asc; docs hitting no lexicon term get
     ('none', 0). Lexicon rows are (topic, term), terms in the same
     normalized space as functions.text.tokens."""
     base = _fan_out(documents).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     )
     hits = (
         base.join(F.broadcast(lexicon.select("topic", "term")), "term")
@@ -47,7 +46,7 @@ def topic_tag(documents: DataFrame, lexicon: DataFrame,
         F.col("n_hits").desc(), F.col("topic").asc())
     best = (hits.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1).drop("rn"))
-    ids = documents.select(F.col(id_col).cast("long").alias("doc_id"))
+    ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
     return ids.join(best, "doc_id", "left").select(
         "doc_id",
         F.coalesce(F.col("topic"), F.lit("none")).alias("topic"),

@@ -163,7 +163,7 @@ def test_bbox_containment():
 def test_checkbox_detection_kinds_and_marks():
     img, layout = render.render_checkbox_form(
         [("aaa", True, "square"), ("bbb", False, "circle"), ("ccc", True, "circle"),
-         ("ddd", False, "square")], seed=0)
+         ("ddd", False, "square")])
     got = cbk.detect_checkboxes(enhance.binarize_otsu(img))
     assert len(got) == len(layout)
     for g, want in zip(got, layout):

@@ -164,7 +164,7 @@ def _overlaps(a, b):
 
 def test_checkbox_qa_end_to_end():
     img, layout = render.render_checkbox_form(
-        [("acepta", True, "square"), ("rechaza", False, "circle")], seed=3)
+        [("acepta", True, "square"), ("rechaza", False, "circle")])
     b = enhance.binarize_otsu(img)
     cbs = cbk.detect_checkboxes(b)
     words = [w for w in engine.get_text_data(img)
@@ -176,7 +176,7 @@ def test_checkbox_qa_end_to_end():
 
 def test_radio_form_correction_end_to_end():
     img, _ = render.render_checkbox_form(
-        [("si", True, "circle"), ("no", True, "circle")], seed=4, row_pitch=24)
+        [("si", True, "circle"), ("no", True, "circle")], row_pitch=24)
     b = enhance.binarize_otsu(img)
     cbs = cbk.detect_checkboxes(b)
     words = [w for w in engine.get_text_data(img)

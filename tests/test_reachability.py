@@ -1,5 +1,6 @@
 """Every package module is reached from an entry point, and so is every
-top-level definition not named here.
+top-level definition not named here; every parameter a package function
+takes is read by its body.
 
 The engine's entry points are the oracle queries (`__spark_entry__.py`),
 the extraction job (`jobs/`), the benchmarks (`bench.py`, `perfbench/`) and
@@ -26,6 +27,13 @@ KEPT_UNREACHED_DEFS = {
     "functions.html.html_boilerpipe": "python boilerplate extractor the Catalyst twin is checked against",
     "imaging.render.render_checkbox_form": "renders the checkbox-form fixtures of the checkbox-mode tests",
 }
+
+KEPT_UNREAD_PARAMS = {
+    "operators.pipeline.extract_documents.strategy": "perfbench/run.py passes it; it goes with the next benchmark change",
+}
+
+# operators read fixed input column names; the one key a live caller renames
+KEPT_COLUMN_NAME_PARAMS = {"functions.html.html_main_content.id_col"}
 
 
 def _py_files(d):
@@ -155,6 +163,44 @@ def test_only_named_definitions_are_unreached_from_entry_points():
     unreached = {dotted for name, ds in defs.items() if name not in live
                  for dotted, _ in ds}
     assert unreached == set(KEPT_UNREACHED_DEFS)
+
+
+def _functions(node, prefix):
+    """(dotted name, def node) of every function under node, methods and
+    nested functions included."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            name = f"{prefix}.{child.name}"
+            if not isinstance(child, ast.ClassDef):
+                yield name, child
+            yield from _functions(child, name)
+        else:
+            yield from _functions(child, prefix)
+
+
+def test_every_parameter_is_read():
+    """A parameter its own body never reads is an input the function
+    ignores: a caller who sets it gets the default's behavior anyway.
+    Column names are not parameters either: an operator reads doc_id,
+    text, html, ... and a caller with other names renames them."""
+    unread, column_names = set(), set()
+    for mod, path in _package_modules().items():
+        for name, fn in _functions(_parse(path), mod):
+            a = fn.args
+            params = a.posonlyargs + a.args + a.kwonlyargs \
+                + [p for p in (a.vararg, a.kwarg) if p is not None]
+            read = {n.id for stmt in fn.body for n in ast.walk(stmt)
+                    if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+            unread |= {f"{name}.{p.arg}" for p in params
+                       if p.arg not in read | {"self", "cls"}}
+            positional = a.posonlyargs + a.args
+            defaults = list(zip(positional[len(positional) - len(a.defaults):], a.defaults)) \
+                + list(zip(a.kwonlyargs, a.kw_defaults))
+            column_names |= {f"{name}.{p.arg}" for p, d in defaults
+                             if p.arg.endswith("_col") and isinstance(d, ast.Constant)
+                             and isinstance(d.value, str)}
+    assert unread == set(KEPT_UNREAD_PARAMS)
+    assert column_names == KEPT_COLUMN_NAME_PARAMS
 
 
 DOCUMENTED_IN = ("CLAUDE.md", "README.md", os.path.join(".claude", "skills", "verify", "SKILL.md"))
