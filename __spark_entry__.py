@@ -1234,7 +1234,7 @@ def q_simhash64_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted = docs.filter(F.col("doc_id") % 50 == 0).select(
         (F.col("doc_id") + 10_000_000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zyxq")).alias("text"))
-    return dedup.simhash64_neardup_pairs(docs.unionByName(planted), max_hamming=3)
+    return dedup.simhash64_neardup_pairs(docs.unionByName(planted))
 
 
 ORACLE_SIMHASH64_NEARDUP = f"""
@@ -1285,7 +1285,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared grams — discriminating at both ends."""
     docs = _docs(spark, sf_dir)
     benchmark = docs.filter(F.col("doc_id") % 97 == 0)
-    return dedup.contamination_flags(docs, benchmark, n=8)
+    return dedup.contamination_flags(docs, benchmark)
 
 
 ORACLE_DECONTAMINATE = f"""
@@ -2651,7 +2651,7 @@ def q_template_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(" derechos reservados."),
         ).alias("text"),
     )
-    return dedup.template_lines(fx, _url_fixture(docs), min_pages=2)
+    return dedup.template_lines(fx, _url_fixture(docs))
 
 
 
@@ -2748,7 +2748,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _c4_fixture(_docs(spark, sf_dir))
     planted = base.filter(F.col("doc_id") % 50 == 0).select(
         (F.col("doc_id") + 40_000_000).alias("doc_id"), "text")
-    return funnel.curation_funnel(base.unionByName(planted), min_tokens=12)
+    return funnel.curation_funnel(base.unionByName(planted))
 
 
 ORACLE_CURATION_FUNNEL = rf"""
@@ -2855,7 +2855,7 @@ def q_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5("term"), pos, 1), 16, 10).cast("long")
     bl = vocab.where(h(1) < 1).select(
         "term", (1 + h(2) % 3).alias("weight"))
-    return funnel.blocklist_filter(docs, bl, t_num=1, t_den=10)
+    return funnel.blocklist_filter(docs, bl)
 
 
 ORACLE_BLOCKLIST = rf"""
@@ -3840,7 +3840,7 @@ def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted = docs.filter(F.col("doc_id") % 50 == 0).select(
         (F.col("doc_id") + 40_000_000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zyxq")).alias("text"))
-    return dedup.setsim_join(docs.unionByName(planted), t_num=3, t_den=5)
+    return dedup.setsim_join(docs.unionByName(planted))
 
 
 ORACLE_SETSIM = rf"""
@@ -3903,8 +3903,7 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted = docs.filter(F.col("doc_id") % 50 == 0).select(
         (F.col("doc_id") + 80_000_000).alias("doc_id"),
         quote.alias("text"))
-    return dedup.containment_join(docs.unionByName(planted),
-                                  t_num=4, t_den=5)
+    return dedup.containment_join(docs.unionByName(planted))
 
 
 ORACLE_CONTAINMENT = rf"""
@@ -3975,7 +3974,7 @@ def q_stitch_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("text"),
         )
     )
-    return dedup.stitch_pages(docs.unionByName(planted), k=6)
+    return dedup.stitch_pages(docs.unionByName(planted))
 
 
 ORACLE_STITCH_PAGES = rf"""
@@ -4087,7 +4086,7 @@ def q_stitch_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     return dedup.stitch_chains(
-        docs.unionByName(p2).unionByName(p3), k=6)
+        docs.unionByName(p2).unionByName(p3))
 
 
 ORACLE_STITCH_CHAINS = rf"""
@@ -4791,7 +4790,7 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("dom"), ((d * 7 + 3) % 23).cast("string"), F.lit("."),
                  tld(d + 1)).alias("dst"),
     )
-    return graph.pagerank_int(graph.aggregate_edges(pairs), iters=3)
+    return graph.pagerank_int(graph.aggregate_edges(pairs))
 
 
 def _pr_round_sql(k: int) -> str:
@@ -4858,7 +4857,7 @@ def q_host_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = (edges.select(F.col("src").alias("node"))
              .unionByName(edges.select(F.col("dst").alias("node")))
              .where(F.col("node").endswith(".org")).distinct())
-    return graph.trustrank_int(edges, seeds, iters=3)
+    return graph.trustrank_int(edges, seeds)
 
 
 def _tr_round_sql(k: int) -> str:
@@ -4957,7 +4956,7 @@ def q_host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("dom"), ((d * 7 + 3) % 23).cast("string"), F.lit("."),
                  tld(d + 1)).alias("dst"),
     )
-    return graph.hits_int(graph.aggregate_edges(pairs), iters=2)
+    return graph.hits_int(graph.aggregate_edges(pairs))
 
 
 def _hits_round_sql(k: int, scale: int = 1_000_000) -> str:

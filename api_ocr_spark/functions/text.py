@@ -375,9 +375,7 @@ def word_ngrams(col: Column, n: int) -> Column:
     return token_ngrams(tokens(col), n)
 
 
-def repetition_stats(df, max_dup_sent_frac: float = 0.30,
-                     max_top2_char_frac: float = 0.20,
-                     max_dup3_char_frac: float = 0.60):
+def repetition_stats(df):
     """Gopher-style repetition quality signals (Rae et al. 2021, table A1)
     re-derived for this engine — the repetition filter a training pipeline
     runs after boilerplate stripping: per document,
@@ -396,7 +394,8 @@ def repetition_stats(df, max_dup_sent_frac: float = 0.30,
       chars; overlapping occurrences are NOT merged (each occurrence
       counts its full length — documented deviation from Gopher's
       span-merge, which needs positional interval union),
-    - keep = 1 iff all three thresholds hold.
+    - keep = 1 iff dup_sent_frac <= 0.30, top2_char_frac <= 0.20 and
+      dup3_char_frac <= 0.60.
 
     Documents whose text is empty produce no units and drop out (both
     engines' behavior; the corpus contract has non-empty text).
@@ -454,9 +453,9 @@ def repetition_stats(df, max_dup_sent_frac: float = 0.30,
     )
     return out.withColumn(
         "keep",
-        ((F.col("dup_sent_frac") <= max_dup_sent_frac)
-         & (F.col("top2_char_frac") <= max_top2_char_frac)
-         & (F.col("dup3_char_frac") <= max_dup3_char_frac)).cast("long"),
+        ((F.col("dup_sent_frac") <= 0.30)
+         & (F.col("top2_char_frac") <= 0.20)
+         & (F.col("dup3_char_frac") <= 0.60)).cast("long"),
     )
 
 
@@ -506,23 +505,22 @@ def redact_pii(df):
 # ---------------------------------------------------------------------------
 
 
-def hashed_linear_score(df, n_buckets: int = 1024, seed: str = "w7",
-                        threshold: int = 0):
+def hashed_linear_score(df):
     """Linear text classifier over hashed token features — the SHAPE of the
     fastText-style quality filters every pretraining pipeline runs over
     crawl text (hashing trick, Weinberger et al. 2009: token → bucket via a
-    hash, score = sum of per-bucket weights, threshold decides keep/drop).
+    hash, score = sum of per-bucket weights, its sign decides keep/drop).
 
-    The weights here are md5-derived pinned constants (bucket b →
-    integer in [-1000, 1000] from md5('{seed}_' || b)), NOT trained — this
-    is deliberately the deterministic, oracle-checkable PLUMBING: scoring
-    arithmetic, bucketing, aggregation shape, and threshold gate are
-    production-real; swapping in trained weights is a broadcast
+    The weights here are md5-derived pinned constants (token → one of
+    1024 buckets b → integer in [-1000, 1000] from md5('w7_' || b)), NOT
+    trained — this is deliberately the deterministic, oracle-checkable
+    PLUMBING: scoring arithmetic, bucketing, aggregation shape, and
+    threshold gate are production-real; swapping in trained weights is a broadcast
     (bucket, weight) table join at the marked step, changing no plan shape.
 
     Per doc: score = Σ_tokens weight(md5_bucket(token)), integer-exact;
     norm_score = score / n_tokens (one IEEE division, identical across
-    engines); keep = score > threshold.
+    engines); keep = score > 0.
 
     Shape at 100 TB: explode + codegen'd SUM with map-side partial
     aggregation — one exchange on doc_id (the repetition_stats lesson:
@@ -530,12 +528,12 @@ def hashed_linear_score(df, n_buckets: int = 1024, seed: str = "w7",
     instead). Weight derivation is one md5 per token OCCURRENCE; at scale
     derive per DISTINCT (bucket) via the broadcast weight table instead."""
     t = F.explode(tokens(F.col("text"))).alias("tok")
-    bucket = md5_bucket(F.col("tok"), n_buckets)
+    bucket = md5_bucket(F.col("tok"), 1024)
     # swap-in point: replace this expression with a broadcast join against a
     # trained (bucket, weight) table
     weight = (
         F.conv(F.substring(
-            F.md5(F.concat(F.lit(f"{seed}_"), bucket.cast("string"))), 1, 8),
+            F.md5(F.concat(F.lit("w7_"), bucket.cast("string"))), 1, 8),
             16, 10).cast("long") % 2001 - 1000
     )
     toks = df.select(F.col("doc_id").cast("long").alias("doc_id"), t)
@@ -547,7 +545,7 @@ def hashed_linear_score(df, n_buckets: int = 1024, seed: str = "w7",
         .select(
             "doc_id", "score", "n_tokens",
             F.round(F.col("score") / F.col("n_tokens"), 6).alias("norm_score"),
-            (F.col("score") > threshold).cast("long").alias("keep"),
+            (F.col("score") > 0).cast("long").alias("keep"),
         )
     )
 
@@ -556,7 +554,7 @@ TERMINAL_PUNCT_PATTERN = r"[.!?]$"
 C4_BAD_SNIPPETS = ("lorem ipsum", "javascript", "cookie policy")
 
 
-def c4_doc_stats(df, min_sentences: int = 3):
+def c4_doc_stats(df):
     """C4 document-level cleaning heuristics (Raffel et al. 2020 §2.2,
     re-derived at document granularity — the corpus has no line
     structure): sentence census, terminal-punctuation coverage, brace and
@@ -568,14 +566,14 @@ def c4_doc_stats(df, min_sentences: int = 3):
     Pure codegen'd Catalyst map, ZERO shuffle — every signal is per-row.
     Returns (doc_id, n_sentences, n_terminal, has_brace, has_bad_snippet,
     keep)."""
-    cols = c4_stat_cols(F.col("text"), min_sentences)
+    cols = c4_stat_cols(F.col("text"))
     return df.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         *cols,
     )
 
 
-def c4_stat_cols(c: Column, min_sentences: int = 3) -> list[Column]:
+def c4_stat_cols(c: Column) -> list[Column]:
     """The c4_doc_stats signal COLUMNS (n_sentences, n_terminal, has_brace,
     has_bad_snippet, keep) as reusable expressions, so composed operators
     (curation_funnel) can ride them on an existing projection instead of
@@ -594,7 +592,7 @@ def c4_stat_cols(c: Column, min_sentences: int = 3) -> list[Column]:
         n_term.cast("long").alias("n_terminal"),
         has_brace.alias("has_brace"),
         has_bad.alias("has_bad_snippet"),
-        ((n_sent >= min_sentences) & ~has_brace & ~has_bad
+        ((n_sent >= 3) & ~has_brace & ~has_bad
          & (2 * n_term >= n_sent)).alias("keep"),
     ]
 

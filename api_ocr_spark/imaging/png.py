@@ -26,8 +26,9 @@ def _chunk(tag: bytes, data: bytes) -> bytes:
     )
 
 
-def encode_gray(img: np.ndarray, compress_level: int = 1) -> bytes:
-    """Encode an HxW uint8 array as a grayscale-8 PNG (filter 0 per row)."""
+def encode_gray(img: np.ndarray) -> bytes:
+    """Encode an HxW uint8 array as a grayscale-8 PNG (filter 0 per row,
+    zlib level 1)."""
     if img.ndim != 2:
         raise ValueError(f"expected HxW grayscale array, got shape {img.shape}")
     img = np.ascontiguousarray(img, dtype=np.uint8)
@@ -36,7 +37,7 @@ def encode_gray(img: np.ndarray, compress_level: int = 1) -> bytes:
     raw = np.empty((h, w + 1), dtype=np.uint8)
     raw[:, 0] = 0  # filter type 0 = None
     raw[:, 1:] = img
-    idat = zlib.compress(raw.tobytes(), compress_level)
+    idat = zlib.compress(raw.tobytes(), 1)
     return _SIGNATURE + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 
 

@@ -94,9 +94,12 @@ def _max_run_1d(row: np.ndarray) -> int:
     return int((idx[1::2] - idx[0::2]).max())
 
 
-def rule_rows(binary: np.ndarray, min_frac: float = 0.85) -> np.ndarray:
+RULE_MIN_FRAC = 0.85  # a rule's contiguous ink run spans >= 85% of the page
+
+
+def rule_rows(binary: np.ndarray) -> np.ndarray:
     """Boolean row mask: rows containing a contiguous ink run spanning
-    >= min_frac of the width (full-width horizontal rules; used to drop
+    >= RULE_MIN_FRAC of the width (full-width horizontal rules; used to drop
     ruling before OCR row segmentation). Contiguity matters: fixed-pitch
     text rows can exceed a mean-fraction test but never cross the margins.
 
@@ -107,7 +110,7 @@ def rule_rows(binary: np.ndarray, min_frac: float = 0.85) -> np.ndarray:
     binary>0 pass)."""
     ink = binary if binary.dtype == np.bool_ else binary > 0
     h, w = ink.shape
-    need = min_frac * w
+    need = RULE_MIN_FRAC * w
     counts = ink.sum(axis=1)
     mask = np.zeros(h, dtype=bool)
     for y in np.nonzero(counts >= need)[0]:
@@ -115,13 +118,13 @@ def rule_rows(binary: np.ndarray, min_frac: float = 0.85) -> np.ndarray:
     return mask
 
 
-def rule_cols(ink: np.ndarray, min_frac: float = 0.85, min_px: int = 24) -> np.ndarray:
+def rule_cols(ink: np.ndarray) -> np.ndarray:
     """Boolean column mask for full-height vertical rules (table borders).
-    Same candidate-pruning strategy as rule_rows. `min_px` (~2 glyph
+    Same candidate-pruning strategy as rule_rows. The 24-px floor (~2 glyph
     heights) keeps letter stems from reading as rules on small ROIs — a
     real table border spans multiple text lines; a stem is one glyph tall."""
     h, w = ink.shape
-    need = max(min_frac * h, float(min_px))
+    need = max(RULE_MIN_FRAC * h, 24.0)
     counts = ink.sum(axis=0)
     mask = np.zeros(w, dtype=bool)
     for x in np.nonzero(counts >= need)[0]:
@@ -129,13 +132,14 @@ def rule_cols(ink: np.ndarray, min_frac: float = 0.85, min_px: int = 24) -> np.n
     return mask
 
 
-def count_horizontal_lines(binary: np.ndarray, min_frac: float = 0.6) -> int:
-    """Distinct horizontal rules (consecutive rule-rows = one rule). Mirrors
-    the reference's HoughLinesP census that drives the table route
-    (/root/reference/main.py:272-283: lines with |Δy|<5 and length>100).
+def count_horizontal_lines(binary: np.ndarray) -> int:
+    """Distinct horizontal rules (consecutive rows over 60% ink = one
+    rule). Mirrors the reference's HoughLinesP census that drives the table
+    route (/root/reference/main.py:272-283: lines with |Δy|<5 and
+    length>100).
     Accepts a bool ink mask directly (skips the binary>0 pass)."""
     ink = binary if binary.dtype == np.bool_ else binary > 0
-    rows = ink.mean(axis=1) > min_frac
+    rows = ink.mean(axis=1) > 0.6
     if not rows.any():
         return 0
     d = np.diff(rows.astype(np.int8))
@@ -216,7 +220,7 @@ def dilate_box(mask: np.ndarray, radius: int) -> np.ndarray:
     return run1d(h_sum, 0) > 0
 
 
-def segment_regions(binary: np.ndarray, min_area: int = 500) -> list[dict]:
+def segment_regions(binary: np.ndarray) -> list[dict]:
     """Region proposals: dilate ink to merge words, label, classify.
     Mirrors /root/reference/preprocessing/detection.py:61-92 —
     dilate 5x5 ×3 ≈ box radius 6; classify aspect>3 ∧ h<50 → 'line',
@@ -226,7 +230,7 @@ def segment_regions(binary: np.ndarray, min_area: int = 500) -> list[dict]:
     out = []
     for st in connected_components_stats(merged):
         x, y, w, h = st["bbox"]
-        if w * h < min_area:
+        if w * h < 500:
             continue
         roi = ink[y : y + h, x : x + w]
         density = float(roi.mean())

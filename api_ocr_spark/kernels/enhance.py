@@ -78,12 +78,16 @@ def binarize_otsu(gray: np.ndarray) -> np.ndarray:
     return np.where(gray <= t, _U255, _U0)
 
 
-def remove_shadows(gray: np.ndarray, window: int = 21) -> np.ndarray:
+SHADOW_WINDOW = 21
+
+
+def remove_shadows(gray: np.ndarray) -> np.ndarray:
     """Illumination flattening: estimate background by a large box blur of the
     image with ink suppressed, subtract, renormalize. Functional equivalent of
     the reference's dilate→medianBlur→absdiff→normalize (enhance.py:121-128)."""
     g = gray.astype(np.float64)
-    bg = _box_sum(gray, window) / float(window * window)  # int32 cumsum path
+    # int32 cumsum path
+    bg = _box_sum(gray, SHADOW_WINDOW) / float(SHADOW_WINDOW * SHADOW_WINDOW)
     bg = np.maximum(bg, g)  # background is at least as bright as the pixel
     flat = 255.0 - np.minimum(255.0, bg - g)
     lo, hi = flat.min(), flat.max()
@@ -220,9 +224,7 @@ def estimate_skew(binary: np.ndarray) -> float:
     return best_deg
 
 
-def deskew_binary_ink(
-    gray: np.ndarray, min_abs_deg: float = 0.5
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
+def deskew_binary_ink(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
     """One-pass deskew: (deskewed_gray, binary, ink_mask, angle) with exactly
     one extra binarization when a shear is applied and zero when not — the
     shared primitive behind engine.best_deskew and the pipeline modes. The
@@ -234,8 +236,8 @@ def deskew_binary_ink(
     t = otsu_threshold(gray)
     ink = gray <= t
     binary = np.where(ink, _U255, _U0)
-    deg = estimate_skew(ink)
-    if abs(deg) <= min_abs_deg:
+    deg = estimate_skew(ink)  # 0.0 or a search angle, |deg| >= 2
+    if deg == 0.0:
         return gray, binary, ink, 0.0
     sheared = _shear_rows(gray, -deg, int(gray[0, 0]))
     t2 = otsu_threshold(sheared)
@@ -243,8 +245,8 @@ def deskew_binary_ink(
     return sheared, np.where(ink2, _U255, _U0), ink2, deg
 
 
-def skew_candidates(binary: np.ndarray, k: int = 3) -> list[float]:
-    """Top-k candidate angles by raw column-profile score, WITHOUT the
+def skew_candidates(binary: np.ndarray) -> list[float]:
+    """Every search angle, best raw column-profile score first, WITHOUT the
     margin/asymmetry guards — the OCR retry ladder validates candidates by
     recognition confidence instead (ocr/engine.py get_text_data)."""
     ink = binary > 0
@@ -253,7 +255,7 @@ def skew_candidates(binary: np.ndarray, k: int = 3) -> list[float]:
     if scores is None:
         return [0.0]
     degs = list(scores)
-    order = sorted(range(len(degs)), key=lambda i: (-scores[degs[i]], i))[:k]
+    order = sorted(range(len(degs)), key=lambda i: (-scores[degs[i]], i))
     return [degs[i] for i in order]
 
 

@@ -81,15 +81,11 @@ def _line_bands(ink: np.ndarray) -> list[tuple[int, int]]:
     return _runs_with_gap_merge(ink.any(axis=1), LINE_GAP_ROWS)
 
 
-def _char_runs(
-    band: np.ndarray, colink: np.ndarray | None = None
-) -> list[list[tuple[int, int]]]:
-    """Within a line band: group ink-column runs into words (gap >=
-    WORD_GAP_PX) and chars (gap >= CHAR_GAP_PX). Returns [[(x0,x1)...]...].
-    Vectorized run extraction; python loops touch runs, not pixels.
-    `colink` lets a caller that already computed band.any(axis=0) share it."""
-    if colink is None:
-        colink = band.any(axis=0)
+def _char_runs(colink: np.ndarray) -> list[list[tuple[int, int]]]:
+    """Within a line band, given its column-ink flags band.any(axis=0):
+    group ink-column runs into words (gap >= WORD_GAP_PX) and chars (gap >=
+    CHAR_GAP_PX). Returns [[(x0,x1)...]...]. Vectorized run extraction;
+    python loops touch runs, not pixels."""
     chars = _runs_with_gap_merge(colink, CHAR_GAP_PX)
     words: list[list[tuple[int, int]]] = []
     for c in chars:
@@ -144,7 +140,7 @@ def best_deskew(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray, list[dict]]:
         return deskewed0, b0, words
     best = (deskewed0, b0, words, _mean_conf(words))
     base_binary = b0 if deg0 == 0.0 else enhance.binarize_otsu(gray)
-    for deg in enhance.skew_candidates(base_binary, k=len(enhance.SKEW_SEARCH_DEGREES)):
+    for deg in enhance.skew_candidates(base_binary):
         if deg == deg0:
             continue
         sheared = enhance._shear_rows(gray, -deg, int(gray[0, 0])) if deg else gray
@@ -199,7 +195,7 @@ def _extract_words(ink: np.ndarray) -> list[dict]:
         colink = band.any(axis=0)
         top = np.where(colink, band.argmax(axis=0), hb)
         bot = np.where(colink, hb - 1 - band[::-1].argmax(axis=0), -1)
-        for word in _char_runs(band, colink):
+        for word in _char_runs(colink):
             bounds = np.empty(2 * len(word), np.intp)
             bounds[0::2] = [c[0] for c in word]
             bounds[1::2] = [c[1] for c in word]
@@ -279,19 +275,17 @@ def group_words_into_lines(words: list[dict]) -> list[dict]:
     ]
 
 
-def ocr_image(gray: np.ndarray, preprocess: bool = True, binary: np.ndarray | None = None) -> str:
+def ocr_image(gray: np.ndarray, preprocess: bool = True) -> str:
     """Plain-text OCR: lines joined with '\\n' in emission order — the
     `image_to_string` + join idiom (/root/reference/main.py:484, 552-554)."""
-    words = get_text_data(gray, preprocess=preprocess, binary=binary)
+    words = get_text_data(gray, preprocess=preprocess)
     return "\n".join(ln["text"] for ln in group_words_into_lines(words))
 
 
-def ocr_image_stats(
-    gray: np.ndarray, preprocess: bool = True, binary: np.ndarray | None = None
-) -> dict:
+def ocr_image_stats(gray: np.ndarray) -> dict:
     """OCR + word stats in one pass (text, n_words, mean_conf) — feeds the
     per-partition metrics table without a second recognition pass."""
-    words = get_text_data(gray, preprocess=preprocess, binary=binary)
+    words = get_text_data(gray)
     text = "\n".join(ln["text"] for ln in group_words_into_lines(words))
     mean_conf = (round(sum(w["conf"] for w in words) / len(words), 2)
                  if words else 0.0)

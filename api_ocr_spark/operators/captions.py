@@ -53,10 +53,11 @@ def _tokens(col):
     )
 
 
-def caption_pairs(docs: DataFrame, mode: str = "basico") -> DataFrame:
+def caption_pairs(docs: DataFrame) -> DataFrame:
     """documents -> (doc_id, media_ref, caption_offset, caption,
     score_num, score_den): the best-aligned adjacent text span per media
-    span, scored by exact token-Jaccard against the real OCR output."""
+    span, scored by exact token-Jaccard against the real OCR output of the
+    basico mode."""
     fs = flat_spans(docs)
     w = Window.partitionBy("doc_id").orderBy("offset")
     neighbored = fs.select(
@@ -121,7 +122,7 @@ def caption_pairs(docs: DataFrame, mode: str = "basico") -> DataFrame:
     # crossing the media join's two byte-carrying exchanges (guide §8:
     # don't shuffle heavy payloads to make light decisions).
     media_rows = neighbored.select("doc_id", "doc_num", "offset", "kind", "chunk", "media_ref")
-    ocr = ocr_spans(media_rows, mode).select(
+    ocr = ocr_spans(media_rows, "basico").select(
         "media_ref", _tokens(F.col("text")).alias("ocr_tokens"))
 
     scored = (

@@ -21,15 +21,16 @@ from pyspark.sql.window import Window
 from ..functions.text import fingerprint_md5, normalize_ws
 
 
-def _fan_out(documents: DataFrame, mult: int = 2) -> DataFrame:
+def _fan_out(documents: DataFrame) -> DataFrame:
     """Round-robin repartition of the input before expression-heavy
     projections: a single-file parquet source is ONE input partition, so
     hashing/signature pipelines would otherwise run serially regardless of
     core count (and `df.count()` hides it — column pruning strips the very
     expressions that dominate the real query). Explicit count because AQE's
-    bytes-based coalescing under-partitions compute-heavy stages."""
+    bytes-based coalescing under-partitions compute-heavy stages (two
+    partitions per core)."""
     return documents.repartition(
-        mult * documents.sparkSession.sparkContext.defaultParallelism)
+        2 * documents.sparkSession.sparkContext.defaultParallelism)
 
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
@@ -53,12 +54,12 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def doc_shingles(documents: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id:long, shingle:string) exploded distinct shingles."""
+def doc_shingles(documents: DataFrame) -> DataFrame:
+    """(doc_id:long, shingle:string) exploded distinct 3-gram shingles."""
     documents = _fan_out(documents)
     return documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(word_shingles(F.col("text"), n)).alias("shingle"),
+        F.explode(word_shingles(F.col("text"))).alias("shingle"),
     )
 
 
@@ -79,7 +80,7 @@ def minhash_perm_constants(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def doc_shingle_sets(documents: DataFrame, n: int = 3) -> DataFrame:
+def doc_shingle_sets(documents: DataFrame) -> DataFrame:
     """(doc_id:long, ts:array<bigint>) — each document's DISTINCT 3-gram
     shingle-hash set, un-exploded (doc_shingle_hashes is the explode of
     this). The prefix-filter joins (setsim_join / containment_join) need
@@ -92,17 +93,17 @@ def doc_shingle_sets(documents: DataFrame, n: int = 3) -> DataFrame:
     words = F.split(normalize_ws(F.lower(F.col("text"))), " ")
     staged = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"), words.alias("ws"))
-    starts = F.sequence(F.lit(1), F.greatest(F.size("ws") - (n - 1), F.lit(1)))
+    starts = F.sequence(F.lit(1), F.greatest(F.size("ws") - 2, F.lit(1)))
     grams = F.transform(
         starts,
         lambda i: F.conv(
-            F.substring(F.md5(F.concat_ws(" ", F.slice("ws", i, n))), 1, 8), 16, 10
+            F.substring(F.md5(F.concat_ws(" ", F.slice("ws", i, 3))), 1, 8), 16, 10
         ).cast("long"),
     )
     return staged.select("doc_id", F.array_distinct(grams).alias("ts"))
 
 
-def doc_shingle_hashes(documents: DataFrame, n: int = 3) -> DataFrame:
+def doc_shingle_hashes(documents: DataFrame) -> DataFrame:
     """(doc_id:long, shingle:bigint) — 3-gram shingles hashed to a 32-bit
     base inside the transform (the MinHash path only needs shingle identity;
     collisions are negligible AND identical in the oracle, which uses the
@@ -126,26 +127,26 @@ def doc_shingle_hashes(documents: DataFrame, n: int = 3) -> DataFrame:
     words = F.split(normalize_ws(F.lower(F.col("text"))), " ")
     staged = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"), words.alias("ws"))
-    starts = F.sequence(F.lit(1), F.greatest(F.size("ws") - (n - 1), F.lit(1)))
+    starts = F.sequence(F.lit(1), F.greatest(F.size("ws") - 2, F.lit(1)))
     grams = F.transform(
         starts,
         lambda i: F.conv(
-            F.substring(F.md5(F.concat_ws(" ", F.slice("ws", i, n))), 1, 8), 16, 10
+            F.substring(F.md5(F.concat_ws(" ", F.slice("ws", i, 3))), 1, 8), 16, 10
         ).cast("long"),
     )
     return staged.select("doc_id", F.explode(F.array_distinct(grams)).alias("shingle"))
 
 
 def ngram_jaccard_pairs(
-    documents: DataFrame, threshold: float = 0.5, max_doc_id: int | None = None, n: int = 3
+    documents: DataFrame, threshold: float = 0.5, max_doc_id: int | None = None
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (a < b). Quadratic in shingle
+    """Exact 3-gram Jaccard near-dup pairs (a < b). Quadratic in shingle
     co-occurrence — bound the scope with max_doc_id when used as an oracle;
     use minhash_lsh_pairs for the full corpus."""
     docs = documents
     if max_doc_id is not None:
         docs = docs.filter(F.col("doc_id") < max_doc_id)
-    sh = doc_shingles(docs, n)
+    sh = doc_shingles(docs)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -168,33 +169,35 @@ def ngram_jaccard_pairs(
     return out.select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard")
 
 
-def minhash_signatures(sh: DataFrame, num_hashes: int = 32) -> DataFrame:
+MINHASH_NUM_HASHES = 32
+MINHASH_BANDS = 8
+
+
+def minhash_signatures(sh: DataFrame) -> DataFrame:
     """MinHash signatures of a `doc_shingle_hashes` frame: min over shingles
     of the md5-derived permutation family hᵢ(x) = (aᵢ·x + bᵢ) mod (2³¹−1)
     (minhash_perm_constants) — pure 64-bit integer arithmetic both here and
     in the DuckDB oracle, so the signatures are engine-identical. One
     groupBy (map-side partial min); signature is an array column ordered by
     permutation index."""
-    perms = minhash_perm_constants(num_hashes)
+    perms = minhash_perm_constants(MINHASH_NUM_HASHES)
     mins = [
         F.min(F.pmod(F.lit(a) * F.col("shingle") + F.lit(b), F.lit(MINHASH_PRIME))).alias(f"h{i}")
         for i, (a, b) in enumerate(perms)
     ]
     sig = sh.groupBy("doc_id").agg(*mins)
     return sig.select(
-        "doc_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("signature")
+        "doc_id", F.array(*[F.col(f"h{i}") for i in range(MINHASH_NUM_HASHES)]).alias("signature")
     )
 
 
 def minhash_lsh_pairs(
     documents: DataFrame,
     threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
     verify: bool = True,
 ) -> DataFrame:
-    """MinHash+LSH near-dup candidates: band the signature (rows = hashes/bands
-    per band), meet within (band_id, band_hash) buckets, optionally verify
+    """MinHash+LSH near-dup candidates: band the 32-hash signature into 8
+    bands of 4 rows, meet within (band_id, band_hash) buckets, optionally verify
     with exact Jaccard on candidate pairs only (linear + bucket joins — the
     scale path; no quadratic shingle join).
 
@@ -203,9 +206,9 @@ def minhash_lsh_pairs(
     Spark re-executes the shingle scan per branch otherwise (measured ~40%
     of query wall). The production analogue is checkpointing
     shingles/signatures to cluster storage before the joins."""
-    rows = num_hashes // bands
+    rows = MINHASH_NUM_HASHES // MINHASH_BANDS
     sh = doc_shingle_hashes(documents).localCheckpoint(eager=False)
-    sig = minhash_signatures(sh, num_hashes)
+    sig = minhash_signatures(sh)
 
     def band_key(b: int):
         # polynomial fold of the band's r signature values (each < 2^31, so
@@ -223,7 +226,7 @@ def minhash_lsh_pairs(
                 F.lit(b).alias("band_id"),
                 band_key(b).alias("band_hash"),
             )
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ]
     )
     banded = sig.select("doc_id", F.explode(band_structs).alias("band")).select(
@@ -421,11 +424,11 @@ def _simhash64_arrow(counted: DataFrame) -> DataFrame:
         fn, "doc_id long, b0 int, b1 int, b2 int, b3 int")
 
 
-def simhash64_neardup_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
+def simhash64_neardup_pairs(documents: DataFrame) -> DataFrame:
     """64-bit SimHash near-dup pairs, band-blocked self-join: a pair within
     Hamming distance <= 3 must agree EXACTLY on at least one of the 4
     16-bit bands (pigeonhole — so unlike the 16-bit toy form, this blocking
-    is COMPLETE for the default threshold: recall 1.0 by construction).
+    is COMPLETE: recall 1.0 by construction).
 
     One (band_id, band_value)-exploded self-join — the same shape as the
     MinHash band join. Candidate volume note (measured): simhash band values
@@ -457,12 +460,12 @@ def simhash64_neardup_pairs(documents: DataFrame, max_hamming: int = 3) -> DataF
             "doc_a", "doc_b",
             F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))).cast("int").alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
     )
     return cand.distinct()
 
 
-def neardup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+def neardup_clusters(pairs: DataFrame) -> DataFrame:
     """Resolve near-dup PAIRS into connected-component CLUSTERS —
     (doc_id, cluster_id = min doc_id of the component). The op a dedup
     pipeline actually needs downstream of any pair generator (exact, LSH,
@@ -470,15 +473,17 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
 
     Distributed shape: iterative min-label propagation — each round every
     vertex takes min(own label, neighbors' labels) via one equi-join + one
-    map-side-partial groupBy; converges in graph-diameter rounds (near-dup
-    components are small chains/cliques, so a handful). Each round ends in
-    localCheckpoint(eager) — mandatory for iterative Spark algorithms: it
+    map-side-partial groupBy, until a round changes no label. Each round ends
+    in localCheckpoint(eager) — mandatory for iterative Spark algorithms: it
     cuts the exponentially-growing lineage AND gives the convergence test a
     materialized frame. At 10^12 docs the same loop runs with the labels
     frame persisted on cluster storage.
 
-    Raises RuntimeError if not converged within max_iter (never observed:
-    diameter-bound)."""
+    The loop always stops: a label never increases and never falls below
+    its component's minimum doc_id, and that minimum reaches every vertex
+    of the component along a shortest path, one hop per round — so after
+    at most diameter + 1 rounds (the last one changing nothing) every label
+    is final. Near-dup components are small chains/cliques, so a handful."""
     edges = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     edges = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -489,7 +494,7 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         .withColumn("cluster_id", F.col("doc_id"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    while True:
         nbr_min = (
             edges.join(labels.withColumnRenamed("doc_id", "b"), "b")
             .groupBy("a")
@@ -513,13 +518,12 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         labels = new_labels
         if changed == 0:
             return labels
-    raise RuntimeError(f"neardup_clusters did not converge in {max_iter} rounds")
 
 
-def contamination_flags(documents: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
+def contamination_flags(documents: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark DECONTAMINATION — the training-data op that catches eval-set
     leakage before pretraining: flag every corpus document sharing at least
-    one word n-gram with a benchmark/eval corpus (the published n-gram
+    one word 8-gram with a benchmark/eval corpus (the published n-gram
     overlap rule; n is typically 8-13).
 
     100 TB shape: the benchmark side is SMALL (eval suites are 10^3-10^5
@@ -534,10 +538,10 @@ def contamination_flags(documents: DataFrame, benchmark: DataFrame, n: int = 8) 
     Returns (doc_id, n_hits = number of DISTINCT contaminated grams,
     contaminated: bool) for every corpus document."""
     b = benchmark.select(
-        F.explode(word_shingles(F.col("text"), n)).alias("gram")).distinct()
+        F.explode(word_shingles(F.col("text"), 8)).alias("gram")).distinct()
     d = _fan_out(documents).select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(word_shingles(F.col("text"), n)).alias("gram"))
+        F.explode(word_shingles(F.col("text"), 8)).alias("gram"))
     hits = (
         d.join(F.broadcast(b), "gram")
         .groupBy("doc_id").agg(F.count("*").alias("n_hits"))
@@ -710,6 +714,27 @@ def _bloom_positions(fp: Column, k: int, m_bits: int) -> list[Column]:
     ]
 
 
+def _bloom_member(history: DataFrame, probe: DataFrame, key: Column,
+                  k: int, m_bits: int):
+    """Bloom membership of every probe row against history's filter: the
+    filter is the DISTINCT set of history's set-bit positions of `key`,
+    broadcast and left-joined to each probe row's k positions. Returns the
+    probe grouped by its own columns and the aggregate that is 1 when all k
+    positions are set, else 0."""
+    bits = (
+        history.select(F.explode(F.array(
+            *_bloom_positions(key, k, m_bits))).alias("pos"))
+        .distinct()
+        .withColumn("hit", F.lit(1))
+    )
+    tested = probe.select(
+        *probe.columns,
+        F.explode(F.array(*_bloom_positions(key, k, m_bits))).alias("pos"))
+    return (tested.join(F.broadcast(bits), "pos", "left")
+            .groupBy(*probe.columns),
+            F.min(F.coalesce(F.col("hit"), F.lit(0))))
+
+
 def bloom_history_dedup(new_docs: DataFrame, history_docs: DataFrame,
                         m_bits: int = 4096, k: int = 3) -> DataFrame:
     """Incremental-crawl dedup via a Bloom filter over the HISTORY corpus:
@@ -735,22 +760,8 @@ def bloom_history_dedup(new_docs: DataFrame, history_docs: DataFrame,
         fingerprint_md5(F.col("text")).alias("fingerprint"))
     fp_hist = history_docs.select(
         fingerprint_md5(F.col("text")).alias("fingerprint")).distinct()
-    bits = (
-        fp_hist.select(F.explode(F.array(
-            *_bloom_positions(F.col("fingerprint"), k, m_bits))).alias("pos"))
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    probe = fp_new.select(
-        "doc_id", "fingerprint",
-        F.explode(F.array(
-            *_bloom_positions(F.col("fingerprint"), k, m_bits))).alias("pos"))
-    tested = (
-        probe.join(F.broadcast(bits), "pos", "left")
-        .groupBy("doc_id", "fingerprint")
-        .agg(F.min(F.coalesce(F.col("hit"), F.lit(0)))
-             .cast("long").alias("maybe_in_history"))
-    )
+    grouped, member = _bloom_member(fp_hist, fp_new, F.col("fingerprint"), k, m_bits)
+    tested = grouped.agg(member.cast("long").alias("maybe_in_history"))
     exact = fp_hist.withColumn("exact", F.lit(1))
     return (
         tested.join(F.broadcast(exact), "fingerprint", "left")
@@ -920,14 +931,13 @@ def _attach_sets(cand: DataFrame, sets: DataFrame) -> DataFrame:
 _BROADCAST_SETS_MAX_DOCS = 300_000
 
 
-def setsim_join(documents: DataFrame, t_num: int = 3,
-                t_den: int = 5) -> DataFrame:
+def setsim_join(documents: DataFrame) -> DataFrame:
     """All-pairs set-similarity join with prefix filtering (Bayardo,
     Ma & Srikant, WWW 2007 "Scaling Up All Pairs Similarity Search" /
     the PPJoin candidate rule): emit every document pair whose distinct
     3-gram shingle sets (doc_shingle_hashes — md5-derived 32-bit ids,
-    the MinHash pipeline's base) have Jaccard >= t_num/t_den, EXACTLY —
-    no probabilistic recall gap (the deterministic complement of
+    the MinHash pipeline's base) have Jaccard >= t = t_num/t_den = 3/5,
+    EXACTLY — no probabilistic recall gap (the deterministic complement of
     minhash_lsh_pairs; same guarantees as ngram_jaccard_pairs but
     without its quadratic shingle join).
 
@@ -972,6 +982,7 @@ def setsim_join(documents: DataFrame, t_num: int = 3,
       attached. Only survivors pay the array_intersect verify, and the
       arrays meet them broadcast (see _attach_sets) — the old plan
       shuffled both ~n-element arrays per CANDIDATE pair."""
+    t_num, t_den = 3, 5
     sets = _prefix_filter_sets(documents)
     prefix = _prefix_postings(_sorted_postings(sets), t_num, t_den)
     tsum = t_num + t_den
@@ -1025,12 +1036,11 @@ def setsim_join(documents: DataFrame, t_num: int = 3,
     )
 
 
-def containment_join(documents: DataFrame, t_num: int = 4,
-                     t_den: int = 5) -> DataFrame:
+def containment_join(documents: DataFrame) -> DataFrame:
     """Asymmetric set-CONTAINMENT join (Broder 1997's containment
     coefficient; the JOSIE/overlap-join family): emit every ORDERED pair
-    (doc_a, doc_b) with |A ∩ B| >= (t_num/t_den) * |A| over distinct
-    3-gram shingle sets — doc_a's content substantially inside doc_b.
+    (doc_a, doc_b) with |A ∩ B| >= t * |A|, t = t_num/t_den = 4/5, over
+    distinct 3-gram shingle sets — doc_a's content substantially inside doc_b.
     This is the quotation/subsumption detector that Jaccard misses by
     construction: a 12-token quote inside a 300-token page has Jaccard
     ~0.03 but containment 1.0 (setsim_join and this operator are
@@ -1063,6 +1073,7 @@ def containment_join(documents: DataFrame, t_num: int = 4,
     Pairs whose bound misses ceil(t*n_a) are pruned before the verify, and
     the verify arrays meet the survivors broadcast (_attach_sets) instead
     of shuffling per candidate pair."""
+    t_num, t_den = 4, 5
     sets = _prefix_filter_sets(documents)
     postings = _sorted_postings(sets)
     prefix = _prefix_postings(postings, t_num, t_den)
@@ -1137,11 +1148,10 @@ def dedup_weights(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def template_lines(documents: DataFrame, urls: DataFrame,
-                   min_pages: int = 2) -> DataFrame:
+def template_lines(documents: DataFrame, urls: DataFrame) -> DataFrame:
     """DOMAIN-scoped template removal — the boilerplate pass CCNet/C4
     run per SITE, strictly stronger than line_dedup's keep-first rule:
-    a sentence appearing on >= min_pages DISTINCT pages of the SAME
+    a sentence appearing on >= 2 DISTINCT pages of the SAME
     registered domain is a template (nav, footer, legal notice) and is
     removed from EVERY page of that domain — including the first
     occurrence, which keep-first dedup would preserve. The same
@@ -1167,7 +1177,7 @@ def template_lines(documents: DataFrame, urls: DataFrame,
     ).join(dom, "doc_id")
     census = sents.groupBy("registered_domain", "sent").agg(
         F.countDistinct("doc_id").alias("n_pages"))
-    boiler = census.where(F.col("n_pages") >= min_pages).select(
+    boiler = census.where(F.col("n_pages") >= 2).select(
         "registered_domain", "sent", F.lit(True).alias("is_template"))
     flagged = sents.join(boiler, ["registered_domain", "sent"], "left") \
         .select("doc_id", "registered_domain", "pos", "sent",
@@ -1189,33 +1199,36 @@ def template_lines(documents: DataFrame, urls: DataFrame,
     )
 
 
-def stitch_pages(documents: DataFrame, k: int = 6) -> DataFrame:
+SEAM_TOKENS = 6
+
+
+def stitch_pages(documents: DataFrame) -> DataFrame:
     """Pagination stitching — find split articles: a crawler stores a
     multi-page article as separate docs whose text overlaps at the seam
     (page N ends with the teaser/paragraph page N+1 starts with). Emit
-    every ordered pair (doc_a, doc_b) where doc_a's LAST k tokens equal
-    doc_b's FIRST k tokens (doc_a != doc_b) — the continuation evidence
-    a reconstruction pass chains into full articles (each pair is one
-    edge of the next-page graph; chains follow by the neardup_clusters
-    machinery on demand).
+    every ordered pair (doc_a, doc_b) where doc_a's LAST SEAM_TOKENS (6)
+    tokens equal doc_b's FIRST 6 tokens (doc_a != doc_b) — the
+    continuation evidence a reconstruction pass chains into full articles
+    (each pair is one edge of the next-page graph; chains follow by the
+    neardup_clusters machinery on demand).
 
     Shape at 100 TB: head/tail keys are O(1) per doc (slice of the
     token array — no explode); the meet is ONE equi-join on the seam
-    string keyed map-side by md5 would be overkill: the k-token seam
-    string is already selective. Docs shorter than k tokens emit no
+    string keyed map-side by md5 would be overkill: the 6-token seam
+    string is already selective. Docs shorter than 6 tokens emit no
     keys. Returns (doc_a, doc_b, seam)."""
     from ..functions.text import tokens
 
     toks = _fan_out(documents).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         tokens(F.col("text")).alias("ts"),
-    ).where(F.size("ts") >= k)
+    ).where(F.size("ts") >= SEAM_TOKENS)
     tail = toks.select(
         F.col("doc_id").alias("doc_a"),
-        F.concat_ws(" ", F.slice(F.col("ts"), -k, k)).alias("seam"))
+        F.concat_ws(" ", F.slice(F.col("ts"), -SEAM_TOKENS, SEAM_TOKENS)).alias("seam"))
     head = toks.select(
         F.col("doc_id").alias("doc_b"),
-        F.concat_ws(" ", F.slice(F.col("ts"), 1, k)).alias("seam"))
+        F.concat_ws(" ", F.slice(F.col("ts"), 1, SEAM_TOKENS)).alias("seam"))
     return (
         tail.join(head, "seam")
         .where(F.col("doc_a") != F.col("doc_b"))
@@ -1223,8 +1236,7 @@ def stitch_pages(documents: DataFrame, k: int = 6) -> DataFrame:
     )
 
 
-def stitch_chains(documents: DataFrame, k: int = 6,
-                  max_chain: int = 64) -> DataFrame:
+def stitch_chains(documents: DataFrame) -> DataFrame:
     """Assemble stitch_pages seams into ordered article CHAINS: each
     reconstructed multi-page article becomes rows (doc_id, chain_id =
     the head page's doc_id, chain_pos = 0,1,2,...). Disambiguation is
@@ -1234,12 +1246,12 @@ def stitch_chains(documents: DataFrame, k: int = 6,
     both engines. Chains start at heads (pages that are nobody's
     successor) and walk forward; pure seam CYCLES have no head and are
     deliberately emitted as nothing (pathological boilerplate seams),
-    and the walk caps at max_chain hops so a rho-shaped graph cannot
+    and the walk caps at 64 hops so a rho-shaped graph cannot
     recurse unboundedly — both rules mirrored in the recursive-CTE
     oracle. Iterative frontier join, localCheckpoint per hop (the
     neardup_clusters discipline); chains are short, so rounds ~ article
     page counts, not diameter of anything corpus-sized."""
-    pairs = stitch_pages(documents, k=k)
+    pairs = stitch_pages(documents)
     succ0 = pairs.groupBy("doc_a").agg(F.min("doc_b").alias("doc_b"))
     pred_min = succ0.groupBy("doc_b").agg(F.min("doc_a").alias("min_a"))
     succ = (succ0.join(pred_min, "doc_b")
@@ -1254,7 +1266,7 @@ def stitch_chains(documents: DataFrame, k: int = 6,
         F.lit(0).cast("long").alias("chain_pos"))
     frontier = labels.localCheckpoint(eager=True)
     out = [frontier]
-    for _ in range(max_chain):
+    for _ in range(64):
         nxt = (
             frontier.join(succ, frontier["doc_id"] == succ["doc_a"])
             .select(F.col("doc_b").alias("doc_id"), "chain_id",
@@ -1271,8 +1283,7 @@ def stitch_chains(documents: DataFrame, k: int = 6,
     return acc
 
 
-def novelty_score(new_docs: DataFrame, history_docs: DataFrame,
-                  m_bits: int = 262_144, k: int = 3) -> DataFrame:
+def novelty_score(new_docs: DataFrame, history_docs: DataFrame) -> DataFrame:
     """Continual-pretraining NOVELTY scoring: what fraction of each new
     document's content is genuinely new versus the training history?
     Per new doc, the fraction of its distinct 3-gram shingles NOT
@@ -1282,9 +1293,9 @@ def novelty_score(new_docs: DataFrame, history_docs: DataFrame,
 
     The history is summarized as a Bloom filter over shingle hashes
     (md5-derived positions, the bloom_history_dedup representation:
-    distinct set-bit positions, BROADCAST; membership = all k positions
+    distinct set-bit positions, BROADCAST; membership = all 3 positions
     present). False positives DEFLATE novelty slightly by design (the
-    Bloom trade, sized by m_bits — at the defaults and sf0.01 history
+    Bloom trade, sized by the 262,144-bit filter — at sf0.01 history
     load the FPR is well under 1%); false negatives cannot occur, so
     truly-historical grams never count as new. The oracle derives
     identical positions, so equality holds at ANY false-positive rate.
@@ -1298,22 +1309,9 @@ def novelty_score(new_docs: DataFrame, history_docs: DataFrame,
     grams_new = doc_shingle_hashes(new_docs)
     grams_hist = doc_shingle_hashes(history_docs) \
         .select("shingle").distinct()
-    fp = F.col("shingle").cast("string")
-    bits = (
-        grams_hist.select(F.explode(F.array(
-            *_bloom_positions(fp, k, m_bits))).alias("pos"))
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    probe = grams_new.select(
-        "doc_id", "shingle",
-        F.explode(F.array(
-            *_bloom_positions(fp, k, m_bits))).alias("pos"))
-    per_gram = (
-        probe.join(F.broadcast(bits), "pos", "left")
-        .groupBy("doc_id", "shingle")
-        .agg(F.min(F.coalesce(F.col("hit"), F.lit(0))).alias("known"))
-    )
+    grouped, member = _bloom_member(grams_hist, grams_new, F.col("shingle").cast("string"),
+                                    k=3, m_bits=262_144)
+    per_gram = grouped.agg(member.alias("known"))
     return (
         per_gram.groupBy("doc_id")
         .agg(F.count("*").cast("long").alias("n_grams"),

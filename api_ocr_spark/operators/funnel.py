@@ -34,10 +34,10 @@ from ..functions.text import c4_doc_stats, fingerprint_md5, token_count, tokens
 from .dedup import _fan_out as _fan_out_docs
 
 
-def curation_funnel(documents: DataFrame, min_tokens: int = 12) -> DataFrame:
+def curation_funnel(documents: DataFrame) -> DataFrame:
     """Per-document funnel verdict:
     (doc_id, stage, n_tokens, n_sentences), stage in
-    {exact_dup, too_short, c4_quality, kept}."""
+    {exact_dup, too_short (under 12 tokens), c4_quality, kept}."""
     from pyspark.sql.window import Window
 
     from ..functions.text import c4_stat_cols
@@ -63,7 +63,7 @@ def curation_funnel(documents: DataFrame, min_tokens: int = 12) -> DataFrame:
     return per.select(
         "doc_id",
         F.when(F.col("doc_id") != keeper, "exact_dup")
-        .when(F.col("n_tokens") < min_tokens, "too_short")
+        .when(F.col("n_tokens") < 12, "too_short")
         .when(~F.col("keep"), "c4_quality")
         .otherwise("kept").alias("stage"),
         "n_tokens", "n_sentences",
@@ -134,8 +134,7 @@ def doclen_histogram(documents: DataFrame) -> DataFrame:
                  F.sum("_n").cast("long").alias("n_tokens")))
 
 
-def blocklist_filter(documents: DataFrame, blocklist: DataFrame,
-                     t_num: int = 1, t_den: int = 10) -> DataFrame:
+def blocklist_filter(documents: DataFrame, blocklist: DataFrame) -> DataFrame:
     """Table-driven blocklist gate — the UT1-style filter of C4 §2.2 /
     RefinedWeb (thousands of terms across weighted categories), distinct
     in shape from c4_doc_stats' three literal snippets: the list is a
@@ -148,8 +147,8 @@ def blocklist_filter(documents: DataFrame, blocklist: DataFrame,
     sum), then
         hits          = matched occurrences
         weighted_hits = Σ weight per occurrence
-        keep iff t_den * weighted_hits < t_num * n_tokens
-    — an exact cross-multiplied 'blocked fraction < t_num/t_den' gate,
+        keep iff 10 * weighted_hits < 1 * n_tokens
+    — an exact cross-multiplied 'blocked fraction < 1/10' gate,
     integer end to end. Docs with zero hits keep their row via the
     left join (keep = true). Returns (doc_id, n_tokens, hits,
     weighted_hits, keep)."""
@@ -173,16 +172,16 @@ def blocklist_filter(documents: DataFrame, blocklist: DataFrame,
         F.coalesce("hits", F.lit(0)).cast("long").alias("hits"),
         F.coalesce("weighted_hits", F.lit(0)).cast("long")
         .alias("weighted_hits"),
-        (F.lit(t_den) * F.coalesce("weighted_hits", F.lit(0))
-         < F.lit(t_num) * F.col("n_tokens")).alias("keep"),
+        (F.lit(10) * F.coalesce("weighted_hits", F.lit(0))
+         < F.lit(1) * F.col("n_tokens")).alias("keep"),
     )
 
 
-def corpus_manifest(documents: DataFrame, n_shards: int = 16) -> DataFrame:
+def corpus_manifest(documents: DataFrame) -> DataFrame:
     """Dataset integrity manifest — the reproducibility artifact a corpus
     ships with (HF datasets' checksums / TFDS splits file, expressed at
     shard granularity): one row per shard with (n_docs, n_tokens,
-    content_hash) where shard = md5('shard:'||doc_id) bucket and
+    content_hash) where shard = md5('shard:'||doc_id) bucket of 16 and
 
         content_hash = BIT_XOR over docs of the 60-bit md5 integer of
                        doc_id || ':' || fingerprint_md5(text)
@@ -193,7 +192,7 @@ def corpus_manifest(documents: DataFrame, n_shards: int = 16) -> DataFrame:
     addition, or removal flips its shard's hash. Binding doc_id into the
     hashed string makes swapped ids detectable even when text is
     unchanged; 60 bits keeps the integer positive int64 in both engines.
-    One map-side-partial shuffle to n_shards rows; pure Catalyst."""
+    One map-side-partial shuffle to 16 rows; pure Catalyst."""
     from ..functions.text import fingerprint_md5, md5_bucket
 
     d = F.col("doc_id").cast("long")
@@ -206,7 +205,7 @@ def corpus_manifest(documents: DataFrame, n_shards: int = 16) -> DataFrame:
     return (
         documents.select(
             md5_bucket(F.concat(F.lit("shard:"), d.cast("string")),
-                       n_shards).cast("long").alias("shard"),
+                       16).cast("long").alias("shard"),
             token_count(F.col("text")).cast("long").alias("n_toks"),
             h.alias("h"),
         )

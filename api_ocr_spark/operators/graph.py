@@ -5,10 +5,10 @@ weighted host→host graph, then rank hosts by PageRank power iteration —
 what CommonCrawl-scale crawls use to decide fetch priority (harmonic/
 PageRank host rankings; Brin & Page 1998 for the recurrence).
 
-Arithmetic is INTEGER throughout, deliberately: ranks start at r0, each
-round a node sends `(r * damping_num * w) DIV (damping_den * out_w)` along
+Arithmetic is INTEGER throughout, deliberately: ranks start at R0, each
+round a node sends `(r * 85 * w) DIV (100 * out_w)` (damping 85/100) along
 each out-edge (floored integer division — positive operands, so Spark's
-DIV and DuckDB's // agree bit-for-bit) and collects `base + Σ shares`.
+DIV and DuckDB's // agree bit-for-bit) and collects `BASE + Σ shares`.
 Floating-point PageRank sums in engine-dependent order; the floored-integer
 twin is deterministic across engines, which is what makes the oracle an
 equality check rather than a tolerance check. Dangling mass (hosts with no
@@ -24,7 +24,7 @@ the graph fits one executor or a thousand.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -34,16 +34,43 @@ def aggregate_edges(pairs: DataFrame) -> DataFrame:
     return pairs.groupBy("src", "dst").agg(F.count("*").alias("w"))
 
 
-def pagerank_int(edges: DataFrame, iters: int = 3,
-                 damping_num: int = 85, damping_den: int = 100,
-                 r0: int = 1_000_000, base: int = 150_000) -> DataFrame:
-    """Integer PageRank over a weighted edge frame (src, dst, w) —
-    returns (host, pagerank, out_w, in_w) after `iters` rounds.
+# The recurrence pagerank_int and trustrank_int share: RANK_ROUNDS rounds,
+# damping DAMPING_NUM/DAMPING_DEN, start mass R0 and per-round base mass
+# BASE. R0 * DAMPING_NUM * max(w) stays below 2^63 (~5 orders of magnitude
+# of headroom at corpus scale); DuckDB would raise on overflow while Spark
+# wraps, so the bound is what keeps the twin exact.
+RANK_ROUNDS = 3
+DAMPING_NUM, DAMPING_DEN = 85, 100
+R0 = 1_000_000
+BASE = 150_000
 
-    Keep r0 * damping_num * max(w) below 2^63 (the defaults leave ~5
-    orders of magnitude of headroom at corpus scale); DuckDB would raise
-    on overflow while Spark wraps, so the bound is what keeps the twin
-    exact."""
+
+def _rank_rounds(edges: DataFrame, outw: DataFrame, nodes: DataFrame,
+                 ranks: DataFrame, base: Column) -> DataFrame:
+    """RANK_ROUNDS rounds of the floored-integer rank recurrence: every
+    node sends (r * DAMPING_NUM * w) DIV (DAMPING_DEN * out_w) along each
+    out-edge, then takes `base` plus the shares it received."""
+    for _ in range(RANK_ROUNDS):
+        contrib = (
+            edges.join(ranks, edges["src"] == ranks["node"])
+            .join(outw, "src")
+            .select(
+                F.col("dst").alias("node"),
+                F.expr(f"(r * {DAMPING_NUM} * w) "
+                       f"DIV ({DAMPING_DEN} * out_w)").alias("share"),
+            )
+            .groupBy("node").agg(F.sum("share").alias("s"))
+        )
+        ranks = nodes.join(contrib, "node", "left").select(
+            "node",
+            (base + F.coalesce(F.col("s"), F.lit(0))).cast("long").alias("r"),
+        )
+    return ranks
+
+
+def pagerank_int(edges: DataFrame) -> DataFrame:
+    """Integer PageRank over a weighted edge frame (src, dst, w) —
+    returns (host, pagerank, out_w, in_w) after RANK_ROUNDS rounds."""
     # materialize the aggregated graph ONCE: every rank round and the
     # degree joins reference it, and without the cut each unrolled round
     # would re-run the corpus-wide pair extraction (the minhash shingle-
@@ -55,23 +82,8 @@ def pagerank_int(edges: DataFrame, iters: int = 3,
              .distinct())
     outw = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
     inw = edges.groupBy("dst").agg(F.sum("w").alias("in_w"))
-    ranks = nodes.select("node", F.lit(r0).cast("long").alias("r"))
-    for _ in range(iters):
-        contrib = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .join(outw, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(f"(r * {damping_num} * w) "
-                       f"DIV ({damping_den} * out_w)").alias("share"),
-            )
-            .groupBy("node").agg(F.sum("share").alias("s"))
-        )
-        ranks = nodes.join(contrib, "node", "left").select(
-            "node",
-            (F.lit(base) + F.coalesce(F.col("s"), F.lit(0)))
-            .cast("long").alias("r"),
-        )
+    ranks = nodes.select("node", F.lit(R0).cast("long").alias("r"))
+    ranks = _rank_rounds(edges, outw, nodes, ranks, F.lit(BASE))
     return (
         ranks.join(outw, ranks["node"] == outw["src"], "left")
         .join(inw, ranks["node"] == inw["dst"], "left")
@@ -135,24 +147,27 @@ def anchor_text_index(pages: DataFrame) -> DataFrame:
     )
 
 
-def hits_int(edges: DataFrame, iters: int = 2,
-             scale: int = 1_000_000) -> DataFrame:
+HITS_ROUNDS = 2
+HITS_SCALE = 1_000_000
+
+
+def hits_int(edges: DataFrame) -> DataFrame:
     """Integer HITS (Kleinberg, JACM 1999 — "Authoritative Sources in a
     Hyperlinked Environment") over a weighted host edge frame
     (src, dst, w): authority(j) = Σ_{i→j} w·hub(i) (the I operation),
     then hub(i) = Σ_{i→j} w·authority(j) (the O operation, using the
-    ROUND'S NEW authorities), repeated `iters` rounds. The complement of
+    ROUND'S NEW authorities), repeated HITS_ROUNDS rounds. The complement of
     pagerank_int for crawl prioritization: authorities are where content
     concentrates, hubs are the directory pages that find it.
 
     The paper normalizes by L2 after each half-step; this engine
-    floor-rescales to `scale` (v * scale DIV max(v)) — an exact-integer,
+    floor-rescales to HITS_SCALE (v * HITS_SCALE DIV max(v)) — an exact-integer,
     ranking-equivalent analogue (both are positive scalar multiples
     modulo the floor; pinned vs a float reference in tests), so the
     DuckDB oracle is exact equality like pagerank_int's. max(v) is a
     1-row collect per half-step (centroid pattern). Keep
-    scale * max(w) * max_in_degree below 2^63 — defaults leave ~5 orders
-    of headroom; DuckDB raises on overflow while Spark wraps, so the twin
+    HITS_SCALE * max(w) * max_in_degree below 2^63 — ~5 orders of
+    headroom; DuckDB raises on overflow while Spark wraps, so the twin
     guards the bound.
 
     Shape at 100 TB: rounds are host-keyed equi-joins + map-side-partial
@@ -167,11 +182,11 @@ def hits_int(edges: DataFrame, iters: int = 2,
         mx = df.agg(F.max(col)).collect()[0][0] or 1
         return df.select(
             "node",
-            F.expr(f"{col} * {scale} DIV {max(mx, 1)}").alias(col))
+            F.expr(f"{col} * {HITS_SCALE} DIV {max(mx, 1)}").alias(col))
 
-    hubs = nodes.select("node", F.lit(scale).cast("long").alias("h"))
-    auth = nodes.select("node", F.lit(scale).cast("long").alias("a"))
-    for _ in range(iters):
+    hubs = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("h"))
+    auth = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("a"))
+    for _ in range(HITS_ROUNDS):
         a_in = (
             edges.join(hubs, edges["src"] == hubs["node"])
             .select(F.col("dst").alias("node"),
@@ -199,9 +214,7 @@ def hits_int(edges: DataFrame, iters: int = 2,
     )
 
 
-def trustrank_int(edges: DataFrame, seeds: DataFrame, iters: int = 3,
-                  damping_num: int = 85, damping_den: int = 100,
-                  r0: int = 1_000_000, base: int = 150_000) -> DataFrame:
+def trustrank_int(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """Integer TrustRank (Gyongyi et al., VLDB 2004): PageRank whose
     teleport mass lands ONLY on a curated trusted seed set, so trust
     attenuates with link distance from the seeds — the classic crawl
@@ -211,8 +224,8 @@ def trustrank_int(edges: DataFrame, seeds: DataFrame, iters: int = 3,
 
     Same exact-integer recurrence as pagerank_int (floored shares, the
     oracle is an equality unroll); the only deltas are the seed-indicator
-    initial vector (r0 on seeds, 0 elsewhere) and the per-round base mass
-    (base on seeds, 0 elsewhere). The seed table is broadcast — trusted
+    initial vector (R0 on seeds, 0 elsewhere) and the per-round base mass
+    (BASE on seeds, 0 elsewhere). The seed table is broadcast — trusted
     lists are small by definition (ODP-style curation in the paper).
     Returns (host, trustrank, is_seed)."""
     edges = edges.localCheckpoint(eager=True)
@@ -233,25 +246,11 @@ def trustrank_int(edges: DataFrame, seeds: DataFrame, iters: int = 3,
     outw = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
     ranks = nodes.select(
         "node",
-        F.when(F.col("is_seed"), F.lit(r0)).otherwise(F.lit(0))
+        F.when(F.col("is_seed"), F.lit(R0)).otherwise(F.lit(0))
         .cast("long").alias("r"))
-    for _ in range(iters):
-        contrib = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .join(outw, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(f"(r * {damping_num} * w) "
-                       f"DIV ({damping_den} * out_w)").alias("share"),
-            )
-            .groupBy("node").agg(F.sum("share").alias("s"))
-        )
-        ranks = nodes.join(contrib, "node", "left").select(
-            "node",
-            (F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0))
-             + F.coalesce(F.col("s"), F.lit(0)))
-            .cast("long").alias("r"),
-        )
+    ranks = _rank_rounds(
+        edges, outw, nodes, ranks,
+        F.when(F.col("is_seed"), F.lit(BASE)).otherwise(F.lit(0)))
     return nodes.join(ranks, "node").select(
         F.col("node").alias("host"),
         F.col("r").alias("trustrank"),

@@ -151,8 +151,7 @@ def rarity_buckets(documents: DataFrame) -> DataFrame:
         "doc_id", "n_tokens", "rarity_sum", "mean_rarity", "bucket")
 
 
-def collocations_topk(documents: DataFrame, k: int = 100,
-                      min_count: int = 3) -> DataFrame:
+def collocations_topk(documents: DataFrame, k: int = 100) -> DataFrame:
     """Top-K bigram collocations by PMI (Church & Hanks 1990) — the phrase
     mining step before tokenizer/vocab induction merges multiwords. Score
     is the exact-rational PMI argument
@@ -160,7 +159,7 @@ def collocations_topk(documents: DataFrame, k: int = 100,
     (= p(ab)/(p(a)p(b)); ln of it is PMI — same ranking, and the ln-free
     form is bit-identical across engines: integer products are exact and
     the single divide is correctly rounded, the tfidf_top_terms argument).
-    Bigrams below min_count are dropped (PMI's classic low-count
+    Bigrams seen fewer than 3 times are dropped (PMI's classic low-count
     instability). Total order: (score desc, bigram asc).
 
     Shape at 100 TB: bigram census + unigram census are term-keyed
@@ -175,7 +174,7 @@ def collocations_topk(documents: DataFrame, k: int = 100,
     total = base.select(F.sum(F.size("ts"))).collect()[0][0]
     bi = (base.select(F.explode(token_ngrams(F.col("ts"), 2)).alias("bigram"))
           .groupBy("bigram").agg(F.count("*").alias("c_ab"))
-          .filter(F.col("c_ab") >= min_count))
+          .filter(F.col("c_ab") >= 3))
     parts = bi.select(
         "bigram", "c_ab",
         F.split("bigram", " ")[0].alias("w1"),
@@ -198,7 +197,7 @@ def collocations_topk(documents: DataFrame, k: int = 100,
     return scored.orderBy(F.col("score").desc(), "bigram").limit(k)
 
 
-def bigram_lm_score(documents: DataFrame, scale: int = 1_000_000) -> DataFrame:
+def bigram_lm_score(documents: DataFrame) -> DataFrame:
     """Bigram language-model likelihood ledger — the sequence-model
     upgrade of rarity_buckets' unigram surrogate (CCNet's actual quality
     signal is a KenLM n-gram LM, Wenzek et al. 2020 §4.3; no KenLM exists
@@ -207,7 +206,7 @@ def bigram_lm_score(documents: DataFrame, scale: int = 1_000_000) -> DataFrame:
     documented production upgrade and would downgrade the oracle to
     rows-only). Per bigram occurrence (w1, w2):
 
-        milli(w1,w2) = (scale * (c(w1,w2) + 1)) DIV (c(w1,·) + V)
+        milli(w1,w2) = (1000000 * (c(w1,w2) + 1)) DIV (c(w1,·) + V)
 
     a floored scaled conditional probability P(w2|w1) with add-one
     smoothing over the vocabulary V — integer-exact in both engines, and
@@ -241,7 +240,7 @@ def bigram_lm_score(documents: DataFrame, scale: int = 1_000_000) -> DataFrame:
         bc.withColumn("w1", F.substring_index("bigram", " ", 1))
         .join(pc, "w1")
         .select("bigram", F.expr(
-            f"(CAST({int(scale)} AS BIGINT) * (c_big + 1))"
+            "(CAST(1000000 AS BIGINT) * (c_big + 1))"
             f" DIV (c_pre + CAST({int(vocab_size)} AS BIGINT))").alias("m"))
     )
     per_doc = (

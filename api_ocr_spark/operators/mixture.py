@@ -101,18 +101,17 @@ def mixture_sample(df: DataFrame, frac_num: int = 2,
     )
 
 
-def grouped_split(df: DataFrame, train_slots: int = 12,
-                  val_slots: int = 2) -> DataFrame:
+def grouped_split(df: DataFrame) -> DataFrame:
     """Leakage-safe train/val/test holdout: the split is a pure function
-    of the GROUP key (md5('split:'||group) first hex digit: < train_slots
-    of 16 → train, next val_slots → val, rest → test), so no group — a
+    of the GROUP key (md5('split:'||group) first hex digit: < 12 of 16 →
+    train, next 2 → val, rest → test), so no group — a
     registered domain, an author, a dedup cluster — can ever straddle
     splits (the eval-contamination guarantee grouped holdouts exist for;
     cf. the decontaminate operator for the n-gram complement).
 
     Returns (doc_id, group, split) per doc. Shape at 100 TB: a pure
     codegen'd map over the scan — assignment needs no census, no shuffle,
-    and no coordination; expected fractions are train_slots/16 etc. of
+    and no coordination; expected fractions are 12/16, 2/16, 2/16 of
     GROUPS (docs follow their group's mass). Exact doc-level ratios are a
     sampling refinement (mixture_sample), not a split property."""
     g = F.col("registered_domain")
@@ -121,32 +120,33 @@ def grouped_split(df: DataFrame, train_slots: int = 12,
     return df.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         g.alias("group"),
-        F.when(hexv < train_slots, "train")
-        .when(hexv < train_slots + val_slots, "val")
+        F.when(hexv < 12, "train")
+        .when(hexv < 14, "val")
         .otherwise("test").alias("split"),
     )
 
 
-def dsir_select(documents: DataFrame, k: int = 100, n_buckets: int = 10_000,
-                target_mod: int = 17, clip_mult: int = 1_000,
-                scale: int = 1_000_000) -> DataFrame:
+DSIR_SCALE = 1_000_000
+
+
+def dsir_select(documents: DataFrame, k: int = 100) -> DataFrame:
     """Data Selection with Importance Resampling (DSIR, Xie et al. 2023,
     arXiv:2302.03169): pick the k raw-corpus documents whose hashed
     n-gram feature distribution is most target-like. Features are hashed
-    unigrams — bucket = md5(term) first-8-hex mod n_buckets, the paper's
+    unigrams — bucket = md5(term) first-8-hex mod 10,000, the paper's
     hashing trick with the repo's md5-derived-randomness convention so
     the DuckDB oracle replays it exactly. The target sample is the
-    deterministic doc_id % target_mod == 0 slice (a stand-in for "quality
+    deterministic doc_id % 17 == 0 slice (a stand-in for "quality
     domain sample" — swapping in a real target table changes one filter).
 
     Exactness contract: the paper scores log w(x) = sum_f c_f (log p_f -
     log q_f) — libm logs are not engine-portable, so the weight here is
     the integer sum-of-ratios surrogate
 
-        ratio(b) = least((scale * (c_tgt_b + 1)) DIV (c_raw_b + 1),
-                         scale * clip_mult)
+        ratio(b) = least((DSIR_SCALE * (c_tgt_b + 1)) DIV (c_raw_b + 1),
+                         DSIR_SCALE * 1000)
 
-    per feature occurrence (add-one smoothed, clipped at clip_mult x
+    per feature occurrence (add-one smoothed, clipped at 1000x
     enrichment — the paper clips importance weights too). The global
     N_raw/N_tgt normalizer is a corpus constant, dropped because it is
     ranking-invariant. Monotone per-feature in the true ratio,
@@ -154,8 +154,8 @@ def dsir_select(documents: DataFrame, k: int = 100, n_buckets: int = 10_000,
     swap-in (downgrades the oracle to rows-only).
 
     Shape at 100 TB: ONE corpus token shuffle for the census (conditional
-    partial aggs split target/raw in the same pass, n_buckets rows out);
-    the ratio table is n_buckets rows -> BROADCAST to the scoring join
+    partial aggs split target/raw in the same pass, 10,000 rows out);
+    the ratio table is 10,000 rows -> BROADCAST to the scoring join
     (corpus never shuffles to meet it); per-doc sum is one doc_id
     groupBy; top-k plans as TakeOrderedAndProject (per-partition local
     top-k). Selection ties break by doc_id ascending."""
@@ -167,8 +167,8 @@ def dsir_select(documents: DataFrame, k: int = 100, n_buckets: int = 10_000,
     ).select(
         "doc_id",
         (F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long")
-         % n_buckets).alias("bucket"),
-        (F.col("doc_id") % target_mod == 0).alias("is_tgt"),
+         % 10_000).alias("bucket"),
+        (F.col("doc_id") % 17 == 0).alias("is_tgt"),
     )
     census = toks.groupBy("bucket").agg(
         F.sum(F.when(F.col("is_tgt"), 1).otherwise(0)).alias("c_tgt"),
@@ -177,9 +177,9 @@ def dsir_select(documents: DataFrame, k: int = 100, n_buckets: int = 10_000,
     ratio = census.select(
         "bucket",
         F.least(
-            F.expr(f"(CAST({int(scale)} AS BIGINT) * (c_tgt + 1))"
+            F.expr(f"(CAST({DSIR_SCALE} AS BIGINT) * (c_tgt + 1))"
                    " DIV (c_raw + 1)"),
-            F.lit(int(scale) * int(clip_mult)).cast("long"),
+            F.lit(DSIR_SCALE * 1_000).cast("long"),
         ).alias("ratio"),
     )
     scored = (
@@ -195,23 +195,22 @@ def dsir_select(documents: DataFrame, k: int = 100, n_buckets: int = 10_000,
         F.col("dsir_milli").desc(), F.col("doc_id").asc()).limit(k)
 
 
-def unimax_sample(documents: DataFrame, epoch_cap: int = 2,
-                  budget_num: int = 1, budget_den: int = 2) -> DataFrame:
+def unimax_sample(documents: DataFrame) -> DataFrame:
     """UniMax language-balanced sampling (Chung et al. 2023, ICLR —
     'UniMax: Fairer and More Effective Language Sampling'): spread the
     doc budget as uniformly as possible across languages, but never take
-    more than `epoch_cap` epochs of any language — the published
+    more than 2 epochs of any language — the published
     alternative to temperature sampling (mixture_sample) that avoids
     both starving tail languages and over-repeating them.
 
     Greedy allocation, ascending language size (the paper's algorithm,
     exact integer arithmetic): with R the remaining budget and m the
-    remaining languages, quota_l = min(epoch_cap * n_l, R DIV m). Budget
-    = total_docs * budget_num DIV budget_den. A language's quota maps to
+    remaining languages, quota_l = min(2 * n_l, R DIV m). Budget
+    = total_docs DIV 2. A language's quota maps to
     doc copies: every doc gets quota DIV n_l full epochs, and the
     quota % n_l remainder goes to the lowest md5('unimax:'||doc_id)
     ranks — the mixture_sample draw convention. Returns one row per doc:
-    (doc_id, lang, n_copies), n_copies in [0, epoch_cap].
+    (doc_id, lang, n_copies), n_copies in [0, 2].
 
     Shape at 100 TB: language census is one map-side-partial shuffle to
     a languages-sized frame (collected like mixture_sample's — the
@@ -228,11 +227,11 @@ def unimax_sample(documents: DataFrame, epoch_cap: int = 2,
          base.groupBy("lang").count().collect()),
         key=lambda t: (t[1], t[0]))
     total = sum(n for _, n in census)
-    remaining = (total * budget_num) // budget_den
+    remaining = total // 2
     m = len(census)
     quotas = []
     for lng, n in census:
-        q = min(epoch_cap * n, remaining // m)
+        q = min(2 * n, remaining // m)
         quotas.append((lng, n, q))
         remaining -= q
         m -= 1

@@ -46,9 +46,7 @@ def run_basico(gray: np.ndarray) -> dict:
     return {"text": "", "route": "basico_failed"}
 
 
-def run_segmentado(
-    gray: np.ndarray, detectar_tablas: bool = True, _pre: tuple | None = None
-) -> dict:
+def run_segmentado(gray: np.ndarray, _pre: tuple | None = None) -> dict:
     """best_deskew → segment_regions (+ tables via containment anti-join)
     → sort (y,x) → per-region OCR → re-join (/root/reference/main.py:495-559).
     The reference's bounded 3-way concurrency is superseded by Spark task
@@ -77,16 +75,15 @@ def run_segmentado(
             o is not r and detection.contains(r["bbox"], o["bbox"]) for o in regions
         )
     ]
-    if detectar_tablas:
-        tables = tables_pre if tables_pre is not None else detection.detect_tables(binary)
-        # containment anti-join: add tables not fully inside an existing region
-        # (/root/reference/main.py:148-164). Deviation (documented): regions
-        # fully inside an appended table are dropped — OCRing both the table
-        # and its interior regions would emit the same text twice.
-        for t in tables:
-            if not any(detection.contains(r["bbox"], t["bbox"]) for r in regions):
-                regions = [r for r in regions if not detection.contains(t["bbox"], r["bbox"])]
-                regions.append(t)
+    tables = tables_pre if tables_pre is not None else detection.detect_tables(binary)
+    # containment anti-join: add tables not fully inside an existing region
+    # (/root/reference/main.py:148-164). Deviation (documented): regions
+    # fully inside an appended table are dropped — OCRing both the table
+    # and its interior regions would emit the same text twice.
+    for t in tables:
+        if not any(detection.contains(r["bbox"], t["bbox"]) for r in regions):
+            regions = [r for r in regions if not detection.contains(t["bbox"], r["bbox"])]
+            regions.append(t)
     regions.sort(key=lambda r: (r["bbox"][1], r["bbox"][0]))  # reading order
     if not regions:
         return {"text": engine.ocr_image(deskewed, preprocess=False), "route": "segmentado_empty"}
@@ -142,15 +139,15 @@ def run_tabla(gray: np.ndarray, _pre: tuple | None = None) -> dict:
     }
 
 
-def run_documento_completo(gray: np.ndarray, optimizar_para: str = "auto") -> dict:
+def run_documento_completo(gray: np.ndarray) -> dict:
     """Auto-routing by horizontal-line census (/root/reference/main.py:999-1054):
-    >10 rules or optimizar_para='tablas' → table path (with segmentation
-    fallback); else plain preprocessing path."""
+    >10 rules → table path (with segmentation fallback); else plain
+    preprocessing path."""
     gray = enhance.cap_max_dimension(gray, MAX_DIMENSION_DOCUMENTO)
     gray = enhance.area_budget_resize(gray, MAX_SIZE_MB_DOCUMENTO)
     deskewed, binary, words = engine.best_deskew(gray)
     num_horizontal = detection.count_horizontal_lines(binary)
-    if num_horizontal > TABLE_ROUTE_MIN_HLINES or optimizar_para == "tablas":
+    if num_horizontal > TABLE_ROUTE_MIN_HLINES:
         out = run_tabla(deskewed, _pre=(deskewed, binary))
         out["num_horizontal"] = num_horizontal
         return out

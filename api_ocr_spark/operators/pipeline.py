@@ -222,20 +222,20 @@ def reassemble_spans(out: DataFrame) -> DataFrame:
 
 def extract_documents(
     documents: DataFrame,
-    media: DataFrame | None = None,
     mode: str = "documento_completo",
     strategy: str = "auto",
 ) -> DataFrame:
     """End-to-end: documents(doc_id, text) → interleaved spans →
-    :func:`ocr_spans` → :func:`reassemble_spans`. Without a media table the
-    source is scanned once, nothing is cached and no job runs until the
-    caller's action.
+    :func:`ocr_spans` → :func:`reassemble_spans`, media synthesized inside
+    the span stage. The source is scanned once, nothing is cached and no
+    job runs until the caller's action; stored media go through
+    :func:`extract_from_spans`.
 
     `strategy` is accepted for callers written against the former
     persist/unified choice and selects nothing: every value runs this plan."""
     from ..sources.interleave import flat_spans
 
-    return reassemble_spans(ocr_spans(flat_spans(documents), mode, media))
+    return reassemble_spans(ocr_spans(flat_spans(documents), mode))
 
 
 def extract_from_spans(

@@ -114,12 +114,10 @@ def brute_force_topk(
     )
 
 
-def neardup_pairs(emb: DataFrame, threshold: float = 0.9, max_vec_id: int | None = None) -> DataFrame:
-    """All pairs (a < b) with cosine >= threshold. Bounded scope when used as
-    an oracle; the LSH-bucketed variant is the full-corpus path."""
+def neardup_pairs(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
+    """All pairs (a < b) with cosine >= threshold — quadratic, the exact
+    reference; the LSH-bucketed variant is the full-corpus path."""
     q = quantized(emb)
-    if max_vec_id is not None:
-        q = q.filter(F.col("vec_id") < max_vec_id)
     a = q.select(F.col("vec_id").alias("vec_a"), F.col("qvec").alias("qa"), F.col("norm2").alias("na"))
     b = q.select(F.col("vec_id").alias("vec_b"), F.col("qvec").alias("qb"), F.col("norm2").alias("nb"))
     pairs = a.join(b, F.col("vec_a") < F.col("vec_b")).select(
@@ -128,9 +126,9 @@ def neardup_pairs(emb: DataFrame, threshold: float = 0.9, max_vec_id: int | None
     return pairs.filter(F.col("cos") >= threshold)
 
 
-def lsh_hyperplanes(dim: int = 64, bits: int = LSH_BITS, seed: int = LSH_SEED) -> list[list[int]]:
+def lsh_hyperplanes(dim: int = 64, bits: int = LSH_BITS) -> list[list[int]]:
     """Deterministic ±1 hyperplanes, md5-DERIVED (not RNG-seeded): component
-    (j, i) is +1 iff the first hex digit of md5('p{seed}_{j}_{i}') has its
+    (j, i) is +1 iff the first hex digit of md5('p{LSH_SEED}_{j}_{i}') has its
     high bit set. md5 is the one hash all three engines share (Python
     hashlib here, F.md5 in Spark, md5() in DuckDB), so the ORACLE can
     re-derive the planes in SQL and replicate the whole sign-LSH pipeline —
@@ -141,7 +139,7 @@ def lsh_hyperplanes(dim: int = 64, bits: int = LSH_BITS, seed: int = LSH_SEED) -
 
     return [
         [
-            1 if int(hashlib.md5(f"p{seed}_{j}_{i}".encode()).hexdigest()[0], 16) >= 8
+            1 if int(hashlib.md5(f"p{LSH_SEED}_{j}_{i}".encode()).hexdigest()[0], 16) >= 8
             else -1
             for i in range(dim)
         ]
@@ -308,7 +306,7 @@ def _bucket_arrow(q: DataFrame, planes: list[list[int]]) -> DataFrame:
     return q.mapInArrow(fn, out_schema)
 
 
-def lsh_neardup_pairs(emb: DataFrame, threshold: float = 0.9, dim: int = 64) -> DataFrame:
+def lsh_neardup_pairs(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Scale path: bucket by sign-LSH, meet within buckets, verify exact
     cosine. Misses cross-bucket pairs by design (ANN semantics).
 
@@ -317,7 +315,7 @@ def lsh_neardup_pairs(emb: DataFrame, threshold: float = 0.9, dim: int = 64) -> 
     per-bucket gram matrix emitting a margin-pruned candidate superset that
     the JVM re-filters with the exact 6-dp-rounded cosine — output identical
     to the bucket-equi-join + interpreted-fold plan this replaces."""
-    planes = lsh_hyperplanes(dim)
+    planes = lsh_hyperplanes()
     bucketed = _bucket_arrow(quantized(emb), planes)
     return (
         _group_pair_candidates(bucketed, "bucket", threshold)
@@ -373,8 +371,8 @@ def _assign_arrow(q: DataFrame, book: list[list[int]]) -> DataFrame:
     return q.mapInArrow(fn, out_schema)
 
 
-def ivf_assign_table(emb: DataFrame, n_centroids: int = 16, iters: int = 3,
-                     seed: int = 11) -> tuple[DataFrame, DataFrame]:
+def ivf_assign_table(emb: DataFrame, n_centroids: int = 16,
+                     iters: int = 3) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer with the centroid codebook as a broadcast TABLE
     (vs ivf_assign's literal expressions — same math, plan size independent
     of k·d, so it scales to production codebooks of 256-65536 centroids).
@@ -394,7 +392,7 @@ def ivf_assign_table(emb: DataFrame, n_centroids: int = 16, iters: int = 3,
     spark = emb.sparkSession
     q = quantized(emb).cache()
     _PERSISTED.append(q)
-    seed_rows = _init_rows(q, n_centroids, seed)
+    seed_rows = _init_rows(q, n_centroids, 11)
     # the codebook list stays driver-side across rounds (k rows — tiny), so
     # empty-centroid carry-forward needs no collect of the cents frame
     book = [[int(v) for v in r.qvec] for r in seed_rows]
@@ -509,8 +507,7 @@ def _group_pair_candidates(grouped: DataFrame, key_col: str,
         pairs, schema="vec_a long, vec_b long, dp long, na long, nb long")
 
 
-def semdedup(emb: DataFrame, threshold: float = 0.8, n_centroids: int = 16,
-             iters: int = 3, seed: int = 11) -> DataFrame:
+def semdedup(emb: DataFrame, threshold: float = 0.8, n_centroids: int = 16) -> DataFrame:
     """SemDeDup semantic deduplication (Abbas et al. 2023, arXiv:2303.09540):
     cluster the corpus with the md5-seeded Lloyd coarse quantizer
     (ivf_assign_table — broadcast codebook, so the codebook can grow to
@@ -531,8 +528,7 @@ def semdedup(emb: DataFrame, threshold: float = 0.8, n_centroids: int = 16,
     size) so each list stays executor-sized. The drop set is distinct'd
     BEFORE the flag join, so boilerplate-heavy clusters cannot fan the join
     out."""
-    assigned, _ = ivf_assign_table(emb, n_centroids=n_centroids, iters=iters,
-                                   seed=seed)
+    assigned, _ = ivf_assign_table(emb, n_centroids=n_centroids)
     # per-cluster gram-matrix candidates (exact superset; see
     # _group_pair_candidates), then the SAME exact rounded-cosine filter
     # this operator always applied — on the exact integer (dp, na, nb)
@@ -551,8 +547,7 @@ def semdedup(emb: DataFrame, threshold: float = 0.8, n_centroids: int = 16,
 
 
 def hard_negatives(emb: DataFrame, k: int = 5, n_centroids: int = 16,
-                   iters: int = 3, seed: int = 11,
-                   query_mod: int = 101) -> DataFrame:
+                   iters: int = 3, query_mod: int = 101) -> DataFrame:
     """Hard-negative mining for contrastive retrieval training (the DPR /
     Contriever recipe, Karpukhin et al. 2020 §3.2: negatives that are
     similar but NOT positives train the encoder hardest). For each query
@@ -586,8 +581,7 @@ def hard_negatives(emb: DataFrame, k: int = 5, n_centroids: int = 16,
     import pyarrow as pa
     from pyspark.sql.window import Window
 
-    assigned, _ = ivf_assign_table(emb, n_centroids=n_centroids,
-                                   iters=iters, seed=seed)
+    assigned, _ = ivf_assign_table(emb, n_centroids=n_centroids, iters=iters)
     qrows = (
         assigned.where(F.col("vec_id") % query_mod == 0)
         .select("vec_id", "qvec", "norm2", "centroid_id").collect()

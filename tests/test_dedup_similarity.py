@@ -161,7 +161,7 @@ def test_simhash64_band_completeness_on_planted_dups(spark):
         return sum(bin(a ^ b).count("1") for a, b in zip(x, y))
 
     pairs = {(r.doc_a, r.doc_b): r.hamming
-             for r in dedup.simhash64_neardup_pairs(docs, max_hamming=3).collect()}
+             for r in dedup.simhash64_neardup_pairs(docs).collect()}
     assert pairs[(0, 1)] == 0
     # the banded join result == the exact <=3 pair set (completeness)
     ids = sorted(sh)
@@ -236,7 +236,7 @@ def test_contamination_flags(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     benchmark = docs.filter(F.col("doc_id") == 0)
     got = {r.doc_id: (r.n_hits, r.contaminated)
-           for r in dedup.contamination_flags(docs, benchmark, n=8).collect()}
+           for r in dedup.contamination_flags(docs, benchmark).collect()}
     assert got[0] == (3, True)      # 10 words -> 3 distinct 8-grams, all self-hit
     assert got[1] == (1, True)      # exactly one copied 8-gram window
     assert got[2] == (0, False)
@@ -281,8 +281,8 @@ def test_neardup_clusters_equals_union_find(spark, corpus):
     cases.append([(0, 1), (7, 7)])                      # self-pair-only doc stays
     for edges in cases:
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        # label propagation needs ~diameter rounds (80 covers the path case)
-        got = _clusters(dedup.neardup_clusters(pairs, max_iter=80))
+        # label propagation runs diameter + 1 rounds (61 on the path case)
+        got = _clusters(dedup.neardup_clusters(pairs))
         assert got == _union_find_clusters(edges), edges[:8]
     pairs = dedup.ngram_jaccard_pairs(corpus, threshold=0.3)
     edges = [(r.doc_a, r.doc_b) for r in pairs.collect()]
@@ -551,7 +551,7 @@ def test_setsim_join_equals_bruteforce_exact_jaccard(spark):
     }
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
     got = {(r.doc_a, r.doc_b, r.n_inter, r.n_union)
-           for r in setsim_join(df, t_num=3, t_den=5).collect()}
+           for r in setsim_join(df).collect()}
 
     def shingles(text):
         ws = text.lower().split()
@@ -624,13 +624,13 @@ def test_containment_join_finds_quotes_jaccard_misses(spark):
             (3, "alpha beta gamma delta epsilon")]  # unrelated
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     pairs = {(r.doc_a, r.doc_b): (r.n_inter, r.n_a)
-             for r in containment_join(df, t_num=4, t_den=5).collect()}
+             for r in containment_join(df).collect()}
     assert (2, 1) in pairs and pairs[(2, 1)] == (10, 10)
     assert (1, 2) not in pairs          # asymmetric: A is not inside Q
     assert all(3 not in p for p in pairs)
     # the same pair is invisible to the Jaccard join at its threshold
     jac = {(r.doc_a, r.doc_b)
-           for r in setsim_join(df, t_num=3, t_den=5).collect()}
+           for r in setsim_join(df).collect()}
     assert (1, 2) not in jac and (2, 1) not in jac
 
 
@@ -663,7 +663,7 @@ def test_stitch_pages_seam_match(spark):
     rows = [(1, art1), (2, art2), (3, "corto texto"), (4, art1)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     pairs = {(r.doc_a, r.doc_b): r.seam
-             for r in stitch_pages(df, k=6).collect()}
+             for r in stitch_pages(df).collect()}
     assert (1, 2) in pairs
     assert pairs[(1, 2)] == "tres cuatro cinco seis siete ocho"
     assert (2, 1) not in pairs            # directionality
@@ -688,7 +688,7 @@ def test_stitch_chains_walk_and_cycle(spark):
             (30, "pagina suelta sin relacion alguna con nada")]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     got = {(r.doc_id): (r.chain_id, r.chain_pos)
-           for r in stitch_chains(df, k=6).collect()}
+           for r in stitch_chains(df).collect()}
     assert got == {10: (10, 0), 11: (10, 1), 12: (10, 2)}
 
 

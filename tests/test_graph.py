@@ -22,7 +22,7 @@ def _py_pagerank(edges, iters=3, r0=1_000_000, base=150_000):
 def test_pagerank_int_matches_python_reference(spark):
     edges = [("a", "b", 2), ("b", "c", 1), ("c", "a", 1), ("a", "c", 1)]
     df = spark.createDataFrame(edges, "src string, dst string, w long")
-    got = {x.host: x for x in graph.pagerank_int(df, iters=3).collect()}
+    got = {x.host: x for x in graph.pagerank_int(df).collect()}
     assert {h: x.pagerank for h, x in got.items()} == _py_pagerank(edges)
     assert got["a"].out_w == 3 and got["a"].in_w == 1
     assert got["b"].in_w == 2
@@ -33,7 +33,7 @@ def test_pagerank_dangling_node_keeps_base_plus_inflow(spark):
     # formulation), and it must still appear with base + share each round
     edges = [("a", "d", 1), ("a", "b", 1), ("b", "a", 1)]
     df = spark.createDataFrame(edges, "src string, dst string, w long")
-    got = {x.host: x for x in graph.pagerank_int(df, iters=3).collect()}
+    got = {x.host: x for x in graph.pagerank_int(df).collect()}
     assert set(got) == {"a", "b", "d"}
     assert {h: x.pagerank for h, x in got.items()} == _py_pagerank(edges)
     assert got["d"].out_w == 0
@@ -80,7 +80,7 @@ def test_hits_int_ranking_matches_float_reference(spark):
              ("q", "a", 1), ("q", "b", 1), ("d", "p", 1)]
     df = spark.createDataFrame(edges, "src string, dst string, w long")
     out = {r.host: (r.authority, r.hub)
-           for r in graph.hits_int(df, iters=2).collect()}
+           for r in graph.hits_int(df).collect()}
 
     # float HITS, L2-normalized, same I-then-O schedule
     nodes = sorted({s for s, _, _ in edges} | {d for _, d, _ in edges})
@@ -117,7 +117,7 @@ def test_trustrank_spam_island_gets_zero(spark):
         [("s", "a", 1), ("a", "b", 1), ("c", "d", 5), ("d", "c", 5)],
         "src string, dst string, w long")
     seeds = spark.createDataFrame([("s",)], "node string")
-    got = {r.host: r for r in trustrank_int(edges, seeds, iters=3).collect()}
+    got = {r.host: r for r in trustrank_int(edges, seeds).collect()}
     assert got["s"].is_seed and not got["a"].is_seed
     # t3: s keeps only its per-round base; a = (150000*85)//100;
     # b = (127500*85)//100; the c/d island never receives trust

@@ -116,7 +116,7 @@ def test_unimax_greedy_caps_and_epochs(spark):
     rows += [(200 + i, "zz xx yy") for i in range(2)]  # unknown
     rows += [(i, "the a of words") for i in range(9)]  # en
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = unimax_sample(df, epoch_cap=2, budget_num=1, budget_den=2).collect()
+    got = unimax_sample(df).collect()
     assert len(got) == 12
     by_lang = {}
     for r in got:

@@ -332,7 +332,7 @@ def test_rarity_buckets_ordering(spark):
 
 def test_collocations_pmi_ranking(spark):
     """A bigram whose words appear ONLY together outranks one whose words
-    are common; min_count drops rare pairs."""
+    are common; bigrams seen fewer than 3 times drop out."""
     from api_ocr_spark.operators.keywords import collocations_topk
     phrase = "san francisco is big and the weather " \
              "in san francisco stays mild since san francisco faces sea"
@@ -340,7 +340,7 @@ def test_collocations_pmi_ranking(spark):
     df = spark.createDataFrame(
         [(0, phrase), (1, common), (2, common)],
         "doc_id long, text string")
-    out = collocations_topk(df, k=10, min_count=3).collect()
+    out = collocations_topk(df, k=10).collect()
     by = {r.bigram: r for r in out}
     assert "san francisco" in by and by["san francisco"].c_ab == 3
     top = max(out, key=lambda r: (r.score, r.bigram))

@@ -1,6 +1,7 @@
 """Every package module is reached from an entry point, and so is every
 top-level definition not named here; every parameter a package function
-takes is read by its body.
+takes is read by its body, and every defaulted one is set to another value
+by at least one caller.
 
 The engine's entry points are the oracle queries (`__spark_entry__.py`),
 the extraction job (`jobs/`), the benchmarks (`bench.py`, `perfbench/`) and
@@ -216,3 +217,65 @@ def test_documented_commands_exist():
                 if not os.path.isfile(os.path.join(ROOT, script)):
                     missing.append(f"{doc}: {script}")
     assert missing == []
+
+
+def _caller_paths():
+    """The entry points, the package itself and the tests."""
+    return _entry_paths() + [p for d in (PKG, "tests")
+                             for p in _py_files(os.path.join(ROOT, d))]
+
+
+def _calls(path):
+    """(bare callee name, call node) of every call in one file; a name an
+    `import ... as` renamed is resolved back to the name it imports."""
+    tree = _parse(path)
+    alias = {a.asname: a.name.rsplit(".", 1)[-1] for n in ast.walk(tree)
+             if isinstance(n, (ast.Import, ast.ImportFrom)) for a in n.names if a.asname}
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call):
+            f = n.func
+            name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+            if name is not None:
+                yield alias.get(name, name), n
+
+
+def _passed(call, positional, param):
+    """Source text of the value one call passes for param, "*" when a
+    starred argument may carry it, None when the call leaves the default."""
+    if any(k.arg is None for k in call.keywords):
+        return "*"
+    for k in call.keywords:
+        if k.arg == param.arg:
+            return ast.unparse(k.value)
+    for i, a in enumerate(call.args):
+        if isinstance(a, ast.Starred):
+            return "*"
+        if i < len(positional) and positional[i] is param:
+            return ast.unparse(a)
+    return None
+
+
+def test_every_default_has_another_value():
+    """A defaulted parameter no caller sets to another value is a constant
+    with a second name: it is one configuration nothing runs but the
+    default. Calls are matched by bare name, so a name shared between
+    functions can only over-count the values passed."""
+    defaulted = {}  # bare name -> [(dotted param, positional params, param, default text)]
+    for mod, path in _package_modules().items():
+        for name, fn in _functions(_parse(path), mod):
+            if any(name == k or name.startswith(k + ".") for k in KEPT_UNREACHED_DEFS):
+                continue
+            a = fn.args
+            positional = [p for p in a.posonlyargs + a.args if p.arg not in ("self", "cls")]
+            pairs = list(zip(positional[len(positional) - len(a.defaults):], a.defaults)) \
+                + [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            defaulted.setdefault(fn.name, []).extend(
+                (f"{name}.{p.arg}", positional, p, ast.unparse(d)) for p, d in pairs)
+    varied = set()
+    for path in _caller_paths():
+        for callee, call in _calls(path):
+            for dotted, positional, p, default in defaulted.get(callee, ()):
+                if _passed(call, positional, p) not in (None, default):
+                    varied.add(dotted)
+    one_value = {d for ps in defaulted.values() for d, *_ in ps} - varied
+    assert sorted(one_value) == []

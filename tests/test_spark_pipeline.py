@@ -81,10 +81,17 @@ def test_media_table_schema_and_determinism(spark, docs):
 
 @pytest.mark.parametrize("mode", ["basico", "segmentado", "tabla", "documento_completo"])
 def test_mode_span_equality(docs, golden, mode):
-    out = pipeline.extract_documents(docs, mode=mode)
-    joined = out.join(golden, "doc_id")
+    """extract_documents' two stages, with the span stage's rows cached so
+    that it runs once: no span is an error row (a kernel failure would be
+    an `error:<Type>` row with empty text), and the reassembled documents
+    equal the golden text."""
+    spans = pipeline.ocr_spans(interleave.flat_spans(docs), mode).cache()
+    errors = spans.filter(F.col("route").like("error:%")).count()
+    assert errors == 0, f"mode={mode}"
+    joined = pipeline.reassemble_spans(spans).join(golden, "doc_id")
     assert joined.count() == N_DOCS
     mismatches = joined.filter(F.col("extracted_text") != F.col("want")).count()
+    spans.unpersist()
     assert mismatches == 0, f"mode={mode}"
 
 
